@@ -43,46 +43,6 @@ def l2_normalize(a: ColumnOrName) -> Column:
     return F.when(n > 0, F.transform(v, lambda x: x.cast("double") / n))
 
 
-def random_hyperplane_signature(a: ColumnOrName, n_planes: int, seed: int = 42) -> Column:
-    """SimHash-style LSH signature for cosine: sign pattern of projections
-    onto ``n_planes`` pseudo-random hyperplanes, packed into a string key.
-
-    Hyperplane components are derived deterministically from (seed, plane,
-    dim) via xxhash64 → uniform in [-1, 1]; identical across executors with
-    no broadcast of plane matrices needed.
-
-    .. deprecated:: r16
-        Cold reference implementation only — the fold runs as an
-        interpreted CodegenFallback per (plane, element), which is why its
-        one hot consumer (``dedup.embedding_dup_pairs``) was rewritten in
-        r15 to compute all projections in a single codegen posexplode +
-        aggregate (same xxhash64 weight formula, bit-identical signs). No
-        query path calls this function; new bulk callers should follow the
-        ``embedding_dup_pairs`` shape instead (guide §4.1).
-    """
-    v = _col(a)
-    bits = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                v,
-                F.sequence(F.lit(0), F.size(v) - 1),
-                lambda x, i: x.cast("double")
-                * (
-                    (
-                        F.xxhash64(F.lit(seed), F.lit(p), i)
-                        % F.lit(1_000_003)
-                    ).cast("double")
-                    / F.lit(1_000_003.0)
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def quantization_scale(a: ColumnOrName, bits: int = 8) -> Column:
     """Symmetric scalar-quantization scale: max(|xᵢ|) / (2^(bits-1) - 1).
     Compute this in its OWN projection before the code transform — an

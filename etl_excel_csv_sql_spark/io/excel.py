@@ -15,11 +15,11 @@ Reference behaviors replicated:
 
 Scale note: an .xlsx worksheet is a single compressed XML stream — it
 cannot be split across executors. The scale path is
-:func:`stage_workbook_to_parquet`: parse each configured sheet once on the
-driver (streaming iterparse), write parquet immediately, and let every
-downstream read be a parallel columnar scan. Workbooks are operationally
-small (human-authored); 100 TB arrives as many workbooks, parallelized by
-the runner across files, not within one sheet.
+:func:`stage_workbook_to_parquet`: parse each configured sheet once in its
+own worker process (streaming iterparse), write it as one parquet file with
+pyarrow, and let every downstream read be a parallel columnar scan.
+Workbooks are operationally small (human-authored); 100 TB arrives as many
+workbooks, parallelized by the runner across files, not within one sheet.
 """
 
 from __future__ import annotations
@@ -100,20 +100,7 @@ def _normalize_sheet(
     return header, data
 
 
-def _clear_dest(dest: str) -> None:
-    """Delete whatever currently sits at ``dest`` — a single file (arrow
-    engine layout) or a parquet directory (spark engine layout) — so
-    either engine can overwrite the other's output in place."""
-    import os
-    import shutil
-
-    if os.path.isdir(dest):
-        shutil.rmtree(dest, ignore_errors=True)
-    elif os.path.exists(dest):
-        os.remove(dest)
-
-
-def _stage_sheet_arrow(args: tuple) -> tuple:
+def _stage_sheet(args: tuple) -> tuple:
     """Process-pool worker: parse ONE sheet and write parquet via
     pyarrow — no Spark, no GIL sharing with sibling sheets. Module-level
     for picklability."""
@@ -123,103 +110,59 @@ def _stage_sheet_arrow(args: tuple) -> tuple:
 
     header, data = _normalize_sheet(xlsx.read_rows(path, sheet), header_row)
     if not header:
-        # Parity with the Spark engine, which refuses to write an
-        # empty-schema parquet: a header_row beyond the sheet must fail
-        # loudly, not land a 0-column file Spark cannot read back.
+        # a header_row beyond the sheet must fail loudly, not land a
+        # 0-column file Spark cannot read back
         raise ValueError(
             f"sheet {sheet!r}: header_row {header_row} yields no columns"
         )
     if len(set(header)) != len(header):
-        # Parity with the Spark engine, which fails loudly on duplicate
-        # column names at parquet write. A name-keyed dict would let the
-        # LAST duplicate silently overwrite the first — data loss.
+        # a name-keyed dict would let the LAST duplicate silently
+        # overwrite the first — data loss; Spark's reader would also
+        # reject the file
         dupes = sorted({h for h in header if header.count(h) > 1})
         raise ValueError(f"sheet {sheet!r}: duplicate header names {dupes}")
     arrays = [
         pa.array([r[i] for r in data], type=pa.string())
         for i in range(len(header))
     ]
-    # overwrite semantics must match the Spark engine's mode('overwrite')
-    # even ACROSS engines (ADVICE r9): a prior spark-engine run left a
-    # parquet DIRECTORY here, which pq.write_table can't replace
-    # (IsADirectoryError); the reverse switch left a stale single file.
-    # Cleared only AFTER the parse succeeds — a corrupt sheet or bad
-    # header_row must not destroy the previous good staging output.
-    _clear_dest(dest)
+    # written only AFTER the parse succeeds — a corrupt sheet or bad
+    # header_row must not destroy the previous good staging output
     pq.write_table(pa.Table.from_arrays(arrays, names=header), dest)
     return sheet, dest
 
 
 def stage_workbook_to_parquet(
-    spark: SparkSession,
     path: str,
     out_dir: str,
     sheets: list[str] | None = None,
     header_row: int = 1,
     max_workers: int = 8,
-    engine: str = "spark",
 ) -> dict[str, str]:
     """Parse each (configured or all) sheet once and land it as parquet —
     the scale path: every downstream query then gets a splittable columnar
     scan with pushdown instead of a driver-side XML parse. Returns
     {sheet: parquet_path} in workbook order.
 
-    Sheets stage CONCURRENTLY (VERDICT r7 #7), two engines:
+    Sheets stage CONCURRENTLY: each sheet parses AND writes in its own
+    PROCESS (pyarrow writer, one .parquet file per sheet, all-string
+    columns), so there is no GIL sharing and staging scales with cores.
+    Spark reads the result like any parquet file.
+    Re-staging into the same ``out_dir`` overwrites each sheet's file.
+    ``max_workers=1`` parses in the calling process, serially."""
+    import os
+    from concurrent.futures import ProcessPoolExecutor
 
-    - ``engine="spark"`` (default): each sheet parses on a pool THREAD
-      and lands via the Spark writer (a parquet DIRECTORY with
-      _SUCCESS, the warehouse-native layout). Threads overlap only the
-      GIL-releasing phases — zip inflate of sheet B while sheet A's
-      write waits on the JVM — measured 1.7× on a 16-sheet fixture
-      (XML parsing itself is GIL-bound Python).
-    - ``engine="arrow"``: each sheet parses AND writes in its own
-      PROCESS (pyarrow writer, single .parquet file) — no GIL sharing
-      at all, so staging scales with cores; Spark reads the result
-      identically. The pick for many-sheet drop-folder bursts.
-
-    Each worker opens its own zipfile handle (ZipFile is not
-    thread-safe for concurrent reads); Spark's writer is
-    driver-thread-safe. ``max_workers=1`` restores the serial path.
-    Identical output contract either way: {sheet: path} in workbook
-    order, all-string columns (byte-parity pinned in tests)."""
-    from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor
-
-    # Validate the engine name BEFORE the empty-targets early return: a
-    # typo'd engine on a no-match sheet list must fail loudly, not
-    # "succeed" with {} until a matching workbook happens through.
-    if engine not in ("spark", "arrow"):
-        raise ValueError(f"engine must be 'spark' or 'arrow', got {engine!r}")
     available = excel_sheet_names(path)
     targets = match_sheets(available, sheets) if sheets is not None else available
     if not targets:
         return {}
+    os.makedirs(out_dir, exist_ok=True)
+    jobs = [
+        (path, sheet, header_row, f"{out_dir}/{sheet}.parquet")
+        for sheet in targets
+    ]
     workers = max(1, min(max_workers, len(targets)))
-
-    if engine == "arrow":
-        import os
-
-        os.makedirs(out_dir, exist_ok=True)
-        jobs = [
-            (path, sheet, header_row, f"{out_dir}/{sheet}.parquet")
-            for sheet in targets
-        ]
-        if workers == 1:
-            return dict(_stage_sheet_arrow(j) for j in jobs)
-        with ProcessPoolExecutor(max_workers=workers) as pool:
-            return dict(pool.map(_stage_sheet_arrow, jobs))
-
-    def _stage(sheet: str) -> str:
-        df = read_excel_sheet(spark, path, sheet, header_row)
-        dest = f"{out_dir}/{sheet}.parquet"
-        # a prior arrow-engine run left a single FILE here; Spark's
-        # overwrite handles it, but clear explicitly so both engines
-        # share one overwrite contract (ADVICE r9)
-        _clear_dest(dest)
-        df.write.mode("overwrite").parquet(dest)
-        return dest
-
     if workers == 1:
-        return {sheet: _stage(sheet) for sheet in targets}
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        dests = list(pool.map(_stage, targets))
-    return dict(zip(targets, dests))
+        return dict(_stage_sheet(j) for j in jobs)
+    with ProcessPoolExecutor(max_workers=workers) as pool:
+        return dict(pool.map(_stage_sheet, jobs))

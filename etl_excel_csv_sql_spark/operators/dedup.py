@@ -28,7 +28,6 @@ from etl_excel_csv_sql_spark.functions.text import (
     positional_word_ngrams,
     tokens,
     word_shingle_hashes,
-    word_shingles,
 )
 from etl_excel_csv_sql_spark.functions.vectors import (
     cosine_similarity,
@@ -115,7 +114,6 @@ def shingle_postings(
     text_col: str,
     n: int = 3,
     max_df: int | None = None,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Checkpointed distinct-shingle inverted index: (id, shingle) rows.
 
@@ -127,90 +125,58 @@ def shingle_postings(
     self-join) and the tokenize→shingle explode is the expensive part;
     at scale this trades local-disk I/O for re-shingling the corpus.
 
-    ``hash_shingles=True`` is the 100 TB path (same design as
-    ``duplicate_ngram_spans(hash_grams=True)``): the posting key becomes
-    ``xxhash64(shingle)`` — 8 bytes instead of an n-word string — so the
-    checkpoint, the shuffle, and every join comparison shrink by the
-    average shingle width. Set SIZES and intersection COUNTS are
-    invariant under an injective-in-practice hash (a 64-bit collision
-    inside one document's set or across a pair's intersection has
-    probability ~|shingles|²/2⁶⁵), so downstream Jaccard/containment
-    values are unchanged; only the key column's TYPE differs (long).
+    The posting key is ``xxhash64`` of the shingle's tokens (same design
+    as ``duplicate_ngram_spans(hash_grams=True)``) — 8 bytes instead of
+    an n-word string — so the checkpoint, the shuffle, and every join
+    comparison shrink by the average shingle width. Set SIZES and
+    intersection COUNTS are invariant under an injective-in-practice
+    hash (a 64-bit collision inside one document's set or across a
+    pair's intersection has probability ~|shingles|²/2⁶⁵), so
+    Jaccard/containment values equal the string-keyed DuckDB oracle's.
     """
-    if hash_shingles:
-        # codegen position explode + keys-only distinct aggregate (r15):
-        # identical (id, shingle-hash) row set as the previous
-        # explode(word_shingle_hashes(...)) — per-doc distinct incl. the
-        # NULL row for null-text docs — without the interpreted
-        # transform/slice lambda (the dominant CPU of the posting build).
-        # The distinct's partial aggregate dedups map-side, so its
-        # exchange carries ~16 bytes per distinct shingle.
-        shingled = _exploded_shingle_hash_rows(
-            spread_for_compute(df), id_col, text_col, n
-        ).select("id", F.col("__h").alias("shingle")).distinct()
-    else:
-        shingled = spread_for_compute(df).select(
-            F.col(id_col).alias("id"),
-            F.explode(word_shingles(text_col, n)).alias("shingle"),
-        )
+    # codegen position explode + keys-only distinct aggregate (r15):
+    # identical (id, shingle-hash) row set as the previous
+    # explode(word_shingle_hashes(...)) — per-doc distinct incl. the
+    # NULL row for null-text docs — without the interpreted
+    # transform/slice lambda (the dominant CPU of the posting build).
+    # The distinct's partial aggregate dedups map-side, so its
+    # exchange carries ~16 bytes per distinct shingle.
+    shingled = _exploded_shingle_hash_rows(
+        spread_for_compute(df), id_col, text_col, n
+    ).select("id", F.col("__h").alias("shingle")).distinct()
     if max_df is None:
-        # Partitioning note (ADVICE r15): on the hashed path the r15
-        # keys-only distinct introduced one exchange (hash on (id,
-        # shingle)) that the per-row array_distinct form did not have,
-        # and the checkpointed frame is therefore partitioned by that
-        # hash. localCheckpoint drops outputPartitioning metadata either
-        # way, so no consumer could rely on the old layout; the measured
-        # win (the interpreted transform/slice lambda leaving the posting
-        # build, dedup_keep_first oracle run 40.5s → 11.7s like-for-like)
+        # Partitioning note (ADVICE r15): the r15 keys-only distinct
+        # introduced one exchange (hash on (id, shingle)) that the
+        # per-row array_distinct form did not have, and the checkpointed
+        # frame is therefore partitioned by that hash. localCheckpoint
+        # drops outputPartitioning metadata either way, so no consumer
+        # could rely on the old layout; the measured win (the
+        # interpreted transform/slice lambda leaving the posting build,
+        # dedup_keep_first oracle run 40.5s → 11.7s like-for-like)
         # covers the max_df=None consumers too — the distinct's partial
         # aggregate dedups map-side, so the added exchange carries ~16
         # bytes per DISTINCT shingle, strictly less than the raw
         # positional rows it replaced.
         return shingled.localCheckpoint(eager=True)
-    if hash_shingles:
-        # r16 (guide §2.4 "two operations keyed the same way can share
-        # one exchange"): the hashed path ENDS IN AN EXCHANGE (the
-        # keys-only distinct), and both stop-shingle consumers — the hot
-        # aggregate and the anti-join input — read that one materialized
-        # AQE query stage (stage-level exchange reuse), so the raw
-        # postings are never recomputed and the r9 persist/unpersist was
-        # a full cache-serialization pass of the raw postings on top of
-        # it. Within-session alternating A/B at sf0.1 (4 pairs, warm):
-        # build CPU 8.6-10.4s with the persist vs 6.5-8.3s without, one
-        # fewer job. (Runtime SQL plan at the driver SFs additionally
-        # shows AQE's empty-relation propagation eliding the anti-join
-        # outright when no shingle exceeds max_df; the static shape is in
-        # plans/r16/postings_build_after.txt.)
-        hot = (
-            shingled.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        return shingled.join(
-            F.broadcast(hot), "shingle", "left_anti"
-        ).localCheckpoint(eager=True)
-    # String path: `shingled` is a narrow scan→explode with NO exchange
-    # for ReuseExchange to share, so cache the RAW postings across the
-    # stop-shingle pass — the hot aggregate and the anti-join input would
-    # otherwise both re-run the tokenize→shingle explode (measured 2.56s
-    # → 2.16s full query at sf0.1, r9). persist() + unpersist() (not a
-    # second localCheckpoint) so the raw postings — the strictly larger
-    # frame — release their executor storage as soon as the filtered
-    # checkpoint materializes (code-review r9 catch).
-    raw = shingled.persist()
-    try:
-        hot = (
-            raw.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        return raw.join(
-            F.broadcast(hot), "shingle", "left_anti"
-        ).localCheckpoint(eager=True)
-    finally:
-        raw.unpersist()
+    # r16 (guide §2.4 "two operations keyed the same way can share
+    # one exchange"): the postings END IN AN EXCHANGE (the keys-only
+    # distinct), and both stop-shingle consumers — the hot aggregate
+    # and the anti-join input — read that one materialized AQE query
+    # stage (stage-level exchange reuse), so the raw postings are never
+    # recomputed and no persist is needed. Within-session alternating
+    # A/B at sf0.1 (4 pairs, warm): build CPU 8.6-10.4s with a persist
+    # vs 6.5-8.3s without, one fewer job. (Runtime SQL plan at the
+    # driver SFs additionally shows AQE's empty-relation propagation
+    # eliding the anti-join outright when no shingle exceeds max_df.)
+    hot = (
+        shingled.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > max_df)
+        .select("shingle")
+    )
+    return shingled.join(
+        F.broadcast(hot), "shingle", "left_anti"
+    ).localCheckpoint(eager=True)
 
 
 def ngram_containment_pairs(
@@ -220,7 +186,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    hash_shingles: bool = False,
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """DIRECTED near-dup pairs by shingle-set containment
@@ -241,7 +206,7 @@ def ngram_containment_pairs(
     shingled = (
         postings
         if postings is not None
-        else shingle_postings(df, id_col, text_col, n, max_df, hash_shingles)
+        else shingle_postings(df, id_col, text_col, n, max_df)
     )
     sizes = shingled.groupBy("id").agg(F.count("*").alias("set_size"))
 
@@ -300,7 +265,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    hash_shingles: bool = False,
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted index:
@@ -320,10 +284,9 @@ def ngram_jaccard_pairs(
     Exact (not approximate): use minhash_lsh_pairs when the candidate set
     must stay subquadratic.
 
-    ``hash_shingles=True`` (the 100 TB default for pipeline callers):
-    posting keys are ``xxhash64(shingle)`` longs — the self-join shuffles
-    8-byte keys instead of n-word strings, identical output values (see
-    :func:`shingle_postings`).
+    Posting keys are ``xxhash64(shingle)`` longs — the self-join
+    shuffles 8-byte keys instead of n-word strings, with output values
+    identical to string keys (see :func:`shingle_postings`).
 
     ``postings``: bring-your-own inverted index — a prebuilt (and
     checkpointed) :func:`shingle_postings` frame. The corpus-scale
@@ -331,13 +294,13 @@ def ngram_jaccard_pairs(
     containment, and the connected-components family against the same
     materialization instead of re-shingling the corpus per consumer
     (r10 VERDICT #2). The caller owns the contract that ``postings`` was
-    built with the SAME (n, max_df, hash_shingles) this call names;
+    built with the SAME (n, max_df) this call names;
     ``df``/``text_col`` are ignored when it is given.
     """
     shingled = (
         postings
         if postings is not None
-        else shingle_postings(df, id_col, text_col, n, max_df, hash_shingles)
+        else shingle_postings(df, id_col, text_col, n, max_df)
     )
     sizes = shingled.groupBy("id").agg(F.count("*").alias("set_size"))
 
@@ -693,6 +656,12 @@ class MinHashIndex:
         return {
             "n_rows": int(row["n_rows"]),
             "fingerprint": str(row["fingerprint"]),
+            **self._params(),
+        }
+
+    def _params(self) -> dict:
+        """The manifest fields that shape signatures and bucket keys."""
+        return {
             "num_hashes": self.num_hashes,
             "bands": self.bands,
             "n": self.n,
@@ -731,25 +700,31 @@ class MinHashIndex:
         with open(self._manifest, "w") as f:
             json.dump(manifest, f)
 
-    def _check_signature_algo(self) -> None:
-        """Refuse to QUERY an index whose persisted signatures predate
-        the current shingle→hash mapping: fresh query signatures can
-        never hash-join against old bucket keys, so an unguarded query
-        would return (near-)zero candidates and silently miss every
-        duplicate — the build(skip_if_exists=True) manifest check alone
+    def _check_manifest(self) -> None:
+        """Refuse to QUERY an index whose manifest disagrees with this
+        instance. Stored signatures from an older shingle→hash mapping
+        can never hash-join fresh bucket keys; a different bands or
+        seed bands them differently; a different num_hashes or n makes
+        the lane comparison read missing or foreign lanes. Unguarded,
+        each case silently returns (near-)zero candidates or null lane
+        counts — the build(skip_if_exists=True) manifest check alone
         does not protect the build-once-query-forever contract."""
         import json
 
         try:
             with open(self._manifest) as f:
-                stored = json.load(f).get("sig_algo")
+                stored = json.load(f)
         except (OSError, ValueError):
             return  # unbuilt / unreadable: the parquet read will fail loudly
-        if stored != SIGNATURE_ALGO:
+        mismatched = [
+            f"{key} {stored.get(key)!r} (this instance: {want!r})"
+            for key, want in self._params().items()
+            if stored.get(key) != want
+        ]
+        if mismatched:
             raise ValueError(
-                f"MinHashIndex at {self.path} was built with signature "
-                f"algorithm {stored!r} but this code computes "
-                f"{SIGNATURE_ALGO!r}; rebuild the index "
+                f"MinHashIndex at {self.path} was built with "
+                f"{', '.join(mismatched)}; rebuild the index "
                 "(build(..., skip_if_exists=True) rebuilds on mismatch)"
             )
 
@@ -766,7 +741,7 @@ class MinHashIndex:
         the batch side when small) → distinct candidates → one join to
         the stored signatures for the matching-lane estimate. An id
         present in both spaces never pairs with itself."""
-        self._check_signature_algo()
+        self._check_manifest()
         spark = new_docs.sparkSession
         nsigs = minhash_signatures(
             new_docs, id_col, text_col, self.num_hashes, self.n, self.seed
@@ -1245,76 +1220,6 @@ def duplicate_span_coverage(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 12,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """(id, component) for every node in the pair graph; component = min id
-    reachable — the canonical keeper for a near-dup cluster.
-
-    Iterative min-label propagation: each round every node takes the min of
-    its own label and its neighbors' labels (one shuffle-join per round on
-    the node id), with an early exit when a round changes nothing.
-    Converges in diameter(graph) rounds; near-dup graphs are
-    shallow (clusters, not paths), so the default bound is generous. Each
-    round materializes via localCheckpoint to keep the plan from growing
-    O(iterations) deep — the standard Spark iterative-algorithm pattern.
-    For adversarial trillion-edge graphs swap in large-star/small-star
-    (alternating min-propagation that converges in O(log n) rounds); the
-    per-round join shape below is the same building block.
-    """
-    # r16: the explode-based _symmetrize reads `pairs` ONCE, so the r8
-    # slim pre-checkpoint (which existed only because the symmetrizing
-    # union consumed `pairs` twice) is retired — one fewer job and one
-    # fewer materialization per call.
-    # NOTE (r6, measured): repartition(dst) before this checkpoint does
-    # NOT help — DataFrame.localCheckpoint drops outputPartitioning, so
-    # the per-round join re-shuffles edges regardless (verified by plan
-    # inspection with broadcast off: 2 exchanges either way).
-    edges = (
-        _symmetrize(pairs, id_a, id_b)
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("component").alias("nmin"))
-        )
-        # Carry the previous label in-frame so the change check needs no
-        # self-join, and checkpoint lazily so the limit(1).count() below is
-        # the round's ONLY action: it materializes the checkpoint and probes
-        # for any changed label in one pass (early-exits on the first hit).
-        updated = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("prev"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            updated.filter(F.col("component") != F.col("prev")).limit(1).count()
-        )
-        labels = updated.select("id", "component")
-        if changed == 0:
-            break
-    return labels
-
-
 def _symmetrize(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """Both directions of every edge in ONE pass over ``pairs`` (r16,
     guide §2.4): the previous union form read ``pairs`` twice — for a
@@ -1402,11 +1307,14 @@ def connected_components_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
 ) -> DataFrame:
-    """(id, component) via alternating large-star/small-star rounds —
-    converges in O(log n) rounds regardless of graph diameter (the
-    propagation variant in connected_components needs diameter rounds:
-    right for shallow near-dup clusters, wrong for adversarial chains).
-    Same fixpoint, verified equivalent by tests on chains, clusters, and
+    """(id, component) for every node in the pair graph; component = min
+    id reachable — the canonical keeper for a near-dup cluster.
+
+    Alternating large-star/small-star rounds (Kiveris et al.) converge
+    in O(log n) rounds regardless of graph diameter, where min-label
+    propagation needs diameter rounds (wrong for adversarial chains).
+    Exhausting ``max_rounds`` raises instead of returning unconverged
+    labels. Verified against known components on chains, clusters, and
     random graphs.
 
     Convergence check (r9): a DIRECT star-forest test instead of the r7
@@ -1421,9 +1329,6 @@ def connected_components_star(
     minimum, which is precisely the answer the roots aggregate reads
     off. Measured at sf0.1: 2 rounds + 3 fingerprints → 1 round + 2
     probes on the near-dup graph."""
-    # Same single-materialization guard as connected_components: the
-    # symmetrizing union would compute the upstream pair pipeline twice.
-    #
     # The when(isNotNull) wrappers are load-bearing: Catalyst's Union
     # constraint rewrite crashes ("key not found: u#N") when optimizing
     # the SECOND round's nested star unions over NON-NULLABLE id
@@ -1519,30 +1424,15 @@ def dedup_keep_first(
     pairs: DataFrame,
     id_col: str,
     max_iter: int = 12,
-    algorithm: str = "star",
 ) -> DataFrame:
     """The dedup ACTION: drop every row whose id belongs to a near-dup
     component but is not that component's min-id keeper. Rows never seen in
     ``pairs`` are untouched. One broadcast-friendly anti join against the
-    (small) loser set — the corpus itself never shuffles.
-
-    ``algorithm`` picks the component solver (VERDICT r5: the default
-    should be the bounded-round one): ``"star"`` =
-    :func:`connected_components_star`, O(log n) rounds independent of
-    graph diameter — the scale-safe default; ``"propagation"`` =
-    :func:`connected_components`, diameter-bounded min-label rounds —
-    fine when clusters are known-shallow. Both reach the same fixpoint
-    (proven by the dedup_components_star oracle + property tests), so the
-    kept-row set is identical either way.
+    (small) loser set — the corpus itself never shuffles. Components come
+    from :func:`connected_components_star` (``max_iter`` bounds its
+    rounds), O(log n) rounds independent of graph diameter.
     """
-    if algorithm == "star":
-        comps = connected_components_star(pairs, max_rounds=max_iter)
-    elif algorithm == "propagation":
-        comps = connected_components(pairs, max_iter)
-    else:
-        raise ValueError(
-            f"algorithm must be 'star' or 'propagation', got {algorithm!r}"
-        )
+    comps = connected_components_star(pairs, max_rounds=max_iter)
     losers = comps.filter(F.col("id") != F.col("component")).select("id")
     return df.join(
         losers, df[id_col] == losers.id, "left_anti"
@@ -1582,7 +1472,7 @@ def embedding_dup_pairs(
         #    are ONE aggregate over the posexploded vector — each
         #    (id, dim, x) row updates every projection lane with a
         #    codegen'd xxhash64-derived weight, replacing the previous
-        #    per-table random_hyperplane_signature folds (interpreted
+        #    per-table sign-of-projection folds (interpreted
         #    zip_with/aggregate lambdas: n_tables·n_planes·dim
         #    interpreted steps per ROW — the dominant CPU of this
         #    operator). Projection values are bit-identical: same

@@ -1438,13 +1438,12 @@ def embedding_dim_stats(
     max_val) in ONE aggregation pass — no explode (a posexplode plan
     shuffles n·dim rows; this shuffles ONE row of 4·dim agg columns).
 
-    std is population std computed as sqrt(E[x²] − E[x]²) explicitly so
-    the oracle can run the byte-identical formula; the radicand is
-    clamped at 0 (FP cancellation can drive it epsilon-negative for
-    near-constant dims — Spark sqrt(neg) yields NaN while DuckDB errors,
-    so unclamped engines could diverge; the oracle mirrors the clamp).
-    mean/std rounded to 6dp (double-sum noise ≪ rounding step), min/max
-    exact (floats cast to double are exact).
+    std is ``stddev_pop`` (the oracle runs DuckDB's): a numerically
+    stable central-moment aggregate, exactly 0.0 on a constant dim at
+    any partitioning — the naive sqrt(E[x²] − E[x]²) leaves FP noise
+    whose sign depends on how partitions merge. mean/std rounded to 6dp
+    (double-sum noise ≪ rounding step), min/max exact (floats cast to
+    double are exact).
     """
     if dim is None:
         dim = _infer_dim(df, vec_col)
@@ -1453,7 +1452,7 @@ def embedding_dim_stats(
         x = F.col(vec_col)[i].cast("double")
         aggs += [
             F.avg(x).alias(f"m{i}"),
-            F.avg(x * x).alias(f"s{i}"),
+            F.stddev_pop(x).alias(f"s{i}"),
             F.min(x).alias(f"lo{i}"),
             F.max(x).alias(f"hi{i}"),
         ]
@@ -1463,15 +1462,7 @@ def embedding_dim_stats(
             *[
                 F.struct(
                     F.round(F.col(f"m{i}"), 6).alias("mean"),
-                    F.round(
-                        F.sqrt(
-                            F.greatest(
-                                F.lit(0.0),
-                                F.col(f"s{i}") - F.col(f"m{i}") * F.col(f"m{i}"),
-                            )
-                        ),
-                        6,
-                    ).alias("std"),
+                    F.round(F.col(f"s{i}"), 6).alias("std"),
                     F.col(f"lo{i}").alias("min_val"),
                     F.col(f"hi{i}").alias("max_val"),
                 )
@@ -1494,29 +1485,19 @@ def standardize_embeddings(
     """Z-score each embedding dimension: (x − mean)/std, zero-std dims
     pass through as 0. One stats pass (same single-row aggregate as
     :func:`embedding_dim_stats`) broadcast back as array literals — the
-    transform itself is a narrow map, no shuffle of the corpus. The std
-    radicand is clamped at 0 (FP cancellation on near-constant dims);
-    a clamped-to-zero sigma takes the zero-std passthrough branch.
+    transform itself is a narrow map, no shuffle of the corpus. sigma is
+    ``stddev_pop``, exactly 0.0 on a constant dim, so such a dim takes
+    the zero-std passthrough branch at any partitioning.
     """
     if dim is None:
         dim = _infer_dim(df, vec_col)
     aggs = []
     for i in range(dim):
         x = F.col(vec_col)[i].cast("double")
-        aggs += [F.avg(x).alias(f"m{i}"), F.avg(x * x).alias(f"s{i}")]
+        aggs += [F.avg(x).alias(f"m{i}"), F.stddev_pop(x).alias(f"s{i}")]
     stats = df.agg(*aggs).select(
         F.array(*[F.col(f"m{i}") for i in range(dim)]).alias("mu"),
-        F.array(
-            *[
-                F.sqrt(
-                    F.greatest(
-                        F.lit(0.0),
-                        F.col(f"s{i}") - F.col(f"m{i}") * F.col(f"m{i}"),
-                    )
-                )
-                for i in range(dim)
-            ]
-        ).alias("sigma"),
+        F.array(*[F.col(f"s{i}") for i in range(dim)]).alias("sigma"),
     )
     out_cols = [c for c in df.columns]
     z = F.zip_with(

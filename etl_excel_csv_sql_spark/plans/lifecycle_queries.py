@@ -168,10 +168,9 @@ def q_excel_multisheet(spark, sf_dir):
 @register(
     "excel_arrow_stage_roundtrip",
     _CUSTOMER_ORACLE,
-    doc="S1/S2 scale path, arrow engine: customer subset → .xlsx → "
-    "stage_workbook_to_parquet(engine='arrow') — per-sheet PROCESS-pool "
-    "parse + pyarrow parquet write (42× vs serial on a 16-sheet fixture, "
-    "excel_stage_bench) — → Spark reads the staged parquet; value parity "
+    doc="S1/S2 scale path: customer subset → .xlsx → "
+    "stage_workbook_to_parquet — per-sheet PROCESS-pool parse + pyarrow "
+    "parquet write — → Spark reads the staged parquet; value parity "
     "proves the staged layout byte-equivalent to the driver-side sheet "
     "scan (same oracle as excel_roundtrip)",
 )
@@ -193,8 +192,7 @@ def q_excel_arrow_stage(spark, sf_dir):
         },
     )
     staged = stage_workbook_to_parquet(
-        spark, book, os.path.join(scratch, "staged"), header_row=2,
-        engine="arrow",
+        book, os.path.join(scratch, "staged"), header_row=2
     )
     return spark.read.parquet(staged["Customers"])
 

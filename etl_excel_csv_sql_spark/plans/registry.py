@@ -1626,8 +1626,8 @@ _NGRAM_PAIR_CTES = r"""
 
 
 # One checkpointed shingle inverted index per (session, sf_dir), shared
-# by the whole n=3/max_df=100/hashed dedup family — jaccard, containment,
-# both component solvers, keep-first (r10 VERDICT #2). This is the
+# by the whole n=3/max_df=100 dedup family — jaccard, containment,
+# both component queries, keep-first (r10 VERDICT #2). This is the
 # IvfIndex pattern applied to text dedup: the index is built ONCE per
 # corpus snapshot and every consumer queries the same materialization
 # instead of re-running the tokenize→shingle→stop-shingle pipeline (the
@@ -1645,7 +1645,7 @@ def _postings_012(spark, sf_dir):
         return got
     postings = dedup.shingle_postings(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
-        n=3, max_df=100, hash_shingles=True,
+        n=3, max_df=100,
     )
     _SHARED_POSTINGS[key] = postings
     return postings
@@ -1653,7 +1653,7 @@ def _postings_012(spark, sf_dir):
 
 # The PAIR frame gets the same build-once treatment as the postings
 # (r11): four queries consume the identical n=3/τ=0.12 pair set
-# (jaccard, both component solvers, keep-first), and the posting-list
+# (jaccard, both component queries, keep-first), and the posting-list
 # self-join is the dominant stage of each. One eager localCheckpoint
 # per (session, corpus snapshot) — a few thousand near-dup pairs —
 # turns the downstream consumers into checkpoint scans, the same
@@ -1677,7 +1677,7 @@ def _ngram_pairs_012(spark, sf_dir, fresh: bool = False):
         return got
     pairs = dedup.ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
-        n=3, threshold=0.12, max_df=100, hash_shingles=True,
+        n=3, threshold=0.12, max_df=100,
         postings=_postings_012(spark, sf_dir),
     ).localCheckpoint(eager=True)
     if got is None:
@@ -1695,10 +1695,10 @@ def _ngram_pairs_012(spark, sf_dir, fresh: bool = False):
     + "SELECT id_a, id_b, jaccard FROM jac",
     doc="exact n-gram (3-word shingle) Jaccard near-dup pairs via inverted "
     "index, with the df>100 stop-shingle cutoff mirrored on both engines. "
-    "hash_shingles: posting keys are xxhash64 longs (8 bytes vs ~20-byte "
-    "3-word strings through the checkpoint + self-join shuffle); output "
-    "values identical — the DuckDB oracle stays string-keyed on purpose, "
-    "so the hash gate itself proves the invariance every driver round",
+    "Posting keys are xxhash64 longs (8 bytes vs ~20-byte 3-word strings "
+    "through the checkpoint + self-join shuffle); output values identical "
+    "— the DuckDB oracle stays string-keyed on purpose, so the gate itself "
+    "proves the invariance every driver round",
 )
 def q_ngram_jaccard(spark, sf_dir):
     # fresh=True: this IS the build query — benching or driving it must
@@ -1724,20 +1724,19 @@ def q_ngram_jaccard(spark, sf_dir):
     FROM reach GROUP BY a
     """,
     doc="connected components over the near-dup pair graph (min reachable "
-    "id = canonical keeper). Spark: iterative min-label propagation with "
-    "early exit; oracle: recursive transitive closure — different "
-    "algorithms, identical fixpoint",
+    "id = canonical keeper). Spark: the large-star/small-star solver "
+    "(connected_components_star, same plan as dedup_components_star); "
+    "oracle: recursive transitive closure — different algorithms, "
+    "identical fixpoint",
 )
 def q_dedup_components(spark, sf_dir):
-    return dedup.connected_components(_ngram_pairs_012(spark, sf_dir))
+    return dedup.connected_components_star(_ngram_pairs_012(spark, sf_dir))
 
 
 @register(
     "dedup_components_star",
-    # identical oracle to dedup_components: large-star/small-star must
-    # reach the same fixpoint as min-label propagation — a real value
-    # oracle proving the O(log n) adversarial-graph variant agrees with
-    # the recursive transitive closure on driver data
+    # a real value oracle proving the O(log n) adversarial-graph solver
+    # agrees with the recursive transitive closure on driver data
     "WITH RECURSIVE "
     + _NGRAM_PAIR_CTES
     + """
@@ -1754,9 +1753,9 @@ def q_dedup_components(spark, sf_dir):
     FROM reach GROUP BY a
     """,
     doc="connected components via alternating large-star/small-star "
-    "rounds (Kiveris et al.) — O(log n) rounds on any graph diameter; "
-    "same pair input and same oracle as dedup_components, so the driver "
-    "value-checks that both algorithms reach the identical fixpoint",
+    "rounds (Kiveris et al.) — O(log n) rounds on any graph diameter; an "
+    "exhausted round bound raises. Same pair input, solver and oracle as "
+    "dedup_components",
 )
 def q_dedup_components_star(spark, sf_dir):
     return dedup.connected_components_star(_ngram_pairs_012(spark, sf_dir))
@@ -6886,7 +6885,7 @@ def q_heavy_hitters_phi(spark, sf_dir):
 def q_ngram_containment(spark, sf_dir):
     return dedup.ngram_containment_pairs(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
-        n=3, threshold=0.4, max_df=100, hash_shingles=True,
+        n=3, threshold=0.4, max_df=100,
         postings=_postings_012(spark, sf_dir),
     )
 
@@ -7359,14 +7358,15 @@ def q_multiset_ops(spark, sf_dir):
     )
     SELECT i - 1 AS dim,
            round(avg(v), 6) AS mean,
-           round(sqrt(greatest(0.0, avg(v * v) - avg(v) * avg(v))), 6) AS std,
+           round(stddev_pop(v), 6) AS std,
            min(v) AS min_val, max(v) AS max_val
     FROM e GROUP BY i
     """,
     doc="per-dimension embedding distribution stats (the feature-"
     "scaling fit step): ONE aggregation pass of 4·dim agg columns — no "
-    "posexplode (which would shuffle n·dim rows); population std as "
-    "sqrt(E[x²]−E[x]²) so the oracle runs the identical formula. The "
+    "posexplode (which would shuffle n·dim rows); population std via "
+    "stddev_pop on both engines (numerically stable, exactly 0 on a "
+    "constant dim). The "
     "companion standardize_embeddings transform (z-score, broadcast "
     "stats, narrow map) is value-tested in tests/test_similarity.py",
 )

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from etl_excel_csv_sql_spark.operators.asof import asof_join
 from etl_excel_csv_sql_spark.operators.dedup import (
-    connected_components,
+    connected_components_star,
     dedup_keep_first,
 )
 
@@ -112,7 +112,9 @@ def test_connected_components_chain_and_clusters(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
     )
-    comp = {r.id: r.component for r in connected_components(pairs).collect()}
+    comp = {
+        r.id: r.component for r in connected_components_star(pairs).collect()
+    }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
@@ -127,63 +129,68 @@ def test_dedup_keep_first_drops_losers_only(spark):
     assert kept == [0, 1, 2, 5]  # 3 and 4 fold into keeper 0
 
 
-def test_dedup_keep_first_algorithm_selection(spark):
-    import pytest
-
+def test_dedup_keep_first_chain(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(10)], ["doc_id", "text"]
     )
-    # a chain (worst case for diameter-bounded propagation) + an isolate pair
+    # a chain (worst case for diameter-bounded solvers) + an isolate pair
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8)], ["id_a", "id_b"]
     )
-    kept_star = sorted(
-        r.doc_id
-        for r in dedup_keep_first(docs, pairs, "doc_id", algorithm="star").collect()
+    kept = sorted(
+        r.doc_id for r in dedup_keep_first(docs, pairs, "doc_id").collect()
     )
-    kept_prop = sorted(
-        r.doc_id
-        for r in dedup_keep_first(
-            docs, pairs, "doc_id", algorithm="propagation"
-        ).collect()
-    )
-    assert kept_star == kept_prop == [0, 1, 6, 7, 9]
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup_keep_first(docs, pairs, "doc_id", algorithm="bogus")
+    assert kept == [0, 1, 6, 7, 9]
 
 
 def _comp_map(df):
     return {r.id: r.component for r in df.collect()}
 
 
-def test_star_components_match_propagation(spark):
+def _union_find_components(edges) -> dict:
+    """Reference answer: min node id of each component, by union-find."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_star_components_match_union_find(spark):
     import random
 
-    from etl_excel_csv_sql_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    # r16 (VERDICT r15 #2): the default chain is diameter 29 — still far
-    # beyond the star solver's O(log n) round budget and the propagation
-    # solver pays one join+checkpoint round per diameter step, so the
-    # 59-chain cost was almost entirely this one case (~25s of the
-    # module). Full-length chain under SPARK_GRAFT_FULL_TESTS=1.
+    # the chain is diameter 29 by default — far beyond the solver's
+    # O(log n) round budget; full-length chain under
+    # SPARK_GRAFT_FULL_TESTS=1
     chain_len = 60 if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1" else 30
     cases = {
-        "chain": [(i, i + 1) for i in range(1, chain_len)],
-        "clusters": [(0, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
-        "random": [
-            (random.Random(3).randrange(100), random.Random(3 + i).randrange(100))
-            for i in range(80)
-        ],
+        "chain": (
+            [(i, i + 1) for i in range(1, chain_len)],
+            {i: 1 for i in range(1, chain_len + 1)},
+        ),
+        "clusters": (
+            [(0, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
+            {0: 0, 3: 0, 4: 0, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20},
+        ),
     }
-    for name, raw in cases.items():
-        pairs = spark.createDataFrame(
-            [(a, b) for a, b in raw if a != b], ["id_a", "id_b"]
-        )
-        star = _comp_map(connected_components_star(pairs))
-        prop = _comp_map(connected_components(pairs, max_iter=80))
-        assert star == prop, f"{name}: star != propagation"
+    rand = [
+        (random.Random(3).randrange(100), random.Random(3 + i).randrange(100))
+        for i in range(80)
+    ]
+    rand = [(a, b) for a, b in rand if a != b]
+    cases["random"] = (rand, _union_find_components(rand))
+    for name, (raw, want) in cases.items():
+        pairs = spark.createDataFrame(raw, ["id_a", "id_b"])
+        assert _comp_map(connected_components_star(pairs)) == want, name
 
 
 def test_star_components_max_centered_star_not_accepted(spark):
@@ -193,14 +200,9 @@ def test_star_components_max_centered_star_not_accepted(spark):
     # before any round ran, and the min-centered read-off returned
     # {1:1, 2:2, 5:1} (node 2 stranded). The strengthened probe also
     # requires every down-edge source to have out-degree 1.
-    from etl_excel_csv_sql_spark.operators.dedup import (
-        connected_components_star,
-    )
-
     pairs = spark.createDataFrame([(1, 5), (2, 5)], ["id_a", "id_b"])
     star = _comp_map(connected_components_star(pairs))
-    prop = _comp_map(connected_components(pairs, max_iter=10))
-    assert star == prop == {1: 1, 2: 1, 5: 1}
+    assert star == {1: 1, 2: 1, 5: 1}
 
     # shared-leaf path c1-u-c2 (c1<c2<u): both down-edges target roots,
     # same false-accept shape; out-degree(7) = 2 must reject it too
@@ -208,14 +210,13 @@ def test_star_components_max_centered_star_not_accepted(spark):
     star2 = _comp_map(connected_components_star(pairs2))
     assert star2 == {1: 1, 4: 1, 7: 1}
 
-    # keep-first on the max-centered star: the default (star) algorithm
-    # must drop BOTH dups, not silently keep row 2
+    # keep-first on the max-centered star must drop BOTH dups, not
+    # silently keep row 2
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(6)], ["doc_id", "text"]
     )
     kept = sorted(
-        r.doc_id
-        for r in dedup_keep_first(docs, pairs, "doc_id", algorithm="star").collect()
+        r.doc_id for r in dedup_keep_first(docs, pairs, "doc_id").collect()
     )
     assert kept == [0, 1, 3, 4]
 
@@ -229,10 +230,6 @@ def test_star_components_max_centered_star_not_accepted(spark):
 
 
 def test_star_components_chain_converges_in_log_rounds(spark):
-    from etl_excel_csv_sql_spark.operators.dedup import (
-        connected_components_star,
-    )
-
     # 120-node chain: diameter 119, but log-round convergence must finish
     # well within 10 alternating rounds
     pairs = spark.createDataFrame(
@@ -539,10 +536,6 @@ def test_star_components_non_nullable_ids_long_chain(spark):
     conf. A 2000-node chain needs multiple alternating rounds, and ids
     from range() are non-nullable."""
     from pyspark.sql import functions as F
-
-    from etl_excel_csv_sql_spark.operators.dedup import (
-        connected_components_star,
-    )
 
     pairs = spark.range(1, 2000).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")

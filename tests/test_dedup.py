@@ -61,48 +61,85 @@ def test_minhash_lsh_recall_vs_exact(spark, near_dup_docs):
     assert recall >= 0.8, f"minhash recall {recall:.2f} over {len(exact)} pairs"
 
 
+def _ref_shingle_sets(rows, n=3) -> dict:
+    """Python reference shingle sets: whitespace tokens, n-token tuples;
+    a doc shorter than n tokens is one whole-doc shingle; null text has
+    no set (it can never pair)."""
+    sets = {}
+    for doc_id, text in rows:
+        if text is None:
+            continue
+        toks = text.split()
+        if len(toks) < n:
+            sets[doc_id] = {tuple(toks)}
+        else:
+            sets[doc_id] = {
+                tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)
+            }
+    return sets
+
+
+def _ref_intersections(rows, n=3):
+    """(id_a, id_b, |A ∩ B|, |A|, |B|) for every id_a < id_b sharing a
+    shingle."""
+    sets = _ref_shingle_sets(rows, n)
+    ids = sorted(sets)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            inter = len(sets[a] & sets[b])
+            if inter:
+                yield a, b, inter, len(sets[a]), len(sets[b])
+
+
+def _ref_jaccard(rows, n, threshold) -> dict:
+    out = {}
+    for a, b, inter, sa, sb in _ref_intersections(rows, n):
+        jac = inter / (sa + sb - inter)
+        if jac >= threshold:
+            out[(a, b)] = jac
+    return out
+
+
+def _ref_containment(rows, n, threshold) -> dict:
+    out = {}
+    for a, b, inter, sa, sb in _ref_intersections(rows, n):
+        for src, dst, size in ((a, b, sa), (b, a, sb)):
+            if inter / size >= threshold:
+                out[(src, dst)] = inter / size
+    return out
+
+
 def test_hashed_shingle_postings_value_parity(spark, near_dup_docs):
-    """hash_shingles=True must reproduce the string-key path EXACTLY —
-    same pairs, same Jaccard/containment values — because set sizes and
-    intersection counts are invariant under an injective hash. This is
-    the guard that lets pipeline callers default to the 8-byte-key plan."""
-    jac_str = {
+    """The hashed posting keys must reproduce exact set semantics — same
+    pairs, same Jaccard/containment values as a Python set reference —
+    because set sizes and intersection counts are invariant under an
+    injective hash."""
+    rows = [(r.doc_id, r.text) for r in near_dup_docs.collect()]
+    jac = {
         (r.id_a, r.id_b): r.jaccard
         for r in dedup.ngram_jaccard_pairs(
             near_dup_docs, "doc_id", "text", n=3, threshold=0.5
         ).collect()
     }
-    jac_hash = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(
-            near_dup_docs, "doc_id", "text", n=3, threshold=0.5,
-            hash_shingles=True,
-        ).collect()
-    }
-    assert jac_str and jac_hash == jac_str
-    con_str = {
+    want_jac = _ref_jaccard(rows, 3, 0.5)
+    assert want_jac and jac == want_jac
+    con = {
         (r.id_src, r.id_dst): r.containment
         for r in dedup.ngram_containment_pairs(
             near_dup_docs, "doc_id", "text", n=3, threshold=0.4
         ).collect()
     }
-    con_hash = {
-        (r.id_src, r.id_dst): r.containment
-        for r in dedup.ngram_containment_pairs(
-            near_dup_docs, "doc_id", "text", n=3, threshold=0.4,
-            hash_shingles=True,
-        ).collect()
-    }
-    assert con_str and con_hash == con_str
+    want_con = _ref_containment(rows, 3, 0.4)
+    # the operator rounds containment to 6 decimals
+    assert want_con and con == pytest.approx(want_con, abs=5e-7)
 
 
 def test_hashed_shingles_null_and_empty_docs(spark):
-    """Null text must behave identically under both key engines: the
-    hash path's [null] key never equi-joins (xxhash64 of a null array is
-    a CONSTANT — unguarded, every pair of null docs would score 1.0),
-    while two EMPTY docs legitimately pair (both reduce to the
-    whole-text shingle of zero tokens, matching the string path and the
-    DuckDB oracle's '' shingle)."""
+    """The hashed keys' [null] row for null text never equi-joins
+    (xxhash64 of a null array is a CONSTANT — unguarded, every pair of
+    null docs would score 1.0), while two EMPTY docs legitimately pair
+    (both reduce to the whole-text shingle of zero tokens, matching the
+    set reference and the DuckDB oracle's '' shingle)."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -111,24 +148,21 @@ def test_hashed_shingles_null_and_empty_docs(spark):
             T.StructField("text", T.StringType()),
         ]
     )
-    df = spark.createDataFrame(
-        [
-            (1, None),
-            (2, None),
-            (3, ""),
-            (4, ""),
-            (5, "alpha bravo charlie delta echo"),
-        ],
-        schema,
-    )
-    for hashed in (False, True):
-        pairs = _pairs(
-            dedup.ngram_jaccard_pairs(
-                df, "doc_id", "text", n=3, threshold=0.5,
-                hash_shingles=hashed,
-            )
-        )
-        assert pairs == {(3, 4)}, f"hashed={hashed}: {pairs}"
+    rows = [
+        (1, None),
+        (2, None),
+        (3, ""),
+        (4, ""),
+        (5, "alpha bravo charlie delta echo"),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", n=3, threshold=0.5
+        ).collect()
+    }
+    assert got == _ref_jaccard(rows, 3, 0.5) == {(3, 4): 1.0}
 
 
 def test_simhash_finds_light_edits(spark):
@@ -532,6 +566,16 @@ def test_minhash_index_build_once_and_refingerprint(spark, near_dup_docs, tmp_pa
         corpus.filter(F.col("doc_id") > 10), "doc_id", "text", skip_if_exists=True
     )
     assert os.path.getmtime(idx._manifest) > mtime2
+    # query() must REFUSE an instance whose parameters differ from the
+    # manifest: different bands/seed band signatures into keys the stored
+    # buckets never hold, a different num_hashes/n compares missing or
+    # foreign lanes — all silently short or null lane counts otherwise
+    for param, value in (("num_hashes", 16), ("bands", 4), ("n", 5), ("seed", 7)):
+        other = dedup.MinHashIndex(idx.path, **{param: value})
+        with pytest.raises(
+            ValueError, match=rf"\b{param} \d+ \(this instance: {value}\)"
+        ):
+            other.query(corpus, "doc_id", "text")
     # query() must REFUSE a stale-algo index outright (the build-once
     # contract means nothing forces a build() call before querying):
     # old bucket keys can never hash-join fresh signatures, so an
@@ -565,21 +609,17 @@ def test_stop_shingle_cutoff_bounds_postings(spark):
         edited[5] = rng.choice(WORDS)
         rows.append((2 * g + 1, " ".join(edited) + " " + boiler))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for hashed in (False, True):
-        postings = dedup.shingle_postings(
-            df, "doc_id", "text", n=3, max_df=20, hash_shingles=hashed
-        )
-        max_seen = (
-            postings.groupBy("shingle")
-            .count()
-            .agg(F.max("count"))
-            .collect()[0][0]
-        )
-        assert max_seen <= 20, f"hot shingle survived (hashed={hashed})"
+    postings = dedup.shingle_postings(df, "doc_id", "text", n=3, max_df=20)
+    max_seen = (
+        postings.groupBy("shingle")
+        .count()
+        .agg(F.max("count"))
+        .collect()[0][0]
+    )
+    assert max_seen <= 20, "hot shingle survived"
     pairs = _pairs(
         dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", n=3, threshold=0.5, max_df=20,
-            hash_shingles=True,
+            df, "doc_id", "text", n=3, threshold=0.5, max_df=20
         )
     )
     twins = {(2 * g, 2 * g + 1) for g in range(30)}

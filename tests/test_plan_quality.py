@@ -705,9 +705,9 @@ def test_star_round_is_join_free_window_min(spark):
     exchange + one sort) instead of the r9 groupBy + self-join (two
     exchanges + SMJ sorts, input consumed twice), and self-loops /
     mirrored edges come from explodes instead of union double-reads —
-    one star round's plan must carry NO join at all. Output equivalence
-    is pinned separately (test_asof_components star-vs-propagation
-    fixpoint tests) and by the dedup_components(_star) oracles."""
+    one star round's plan must carry NO join at all. Output correctness
+    is pinned separately (test_asof_components known-component and
+    union-find tests) and by the dedup_components(_star) oracles."""
     from etl_excel_csv_sql_spark.operators.dedup import (
         _large_star,
         _small_star,

@@ -64,7 +64,6 @@ def test_read_sheet_header_offset_all_string(spark, tmp_path):
 
 def test_stage_workbook_to_parquet(spark, tmp_path):
     out = stage_workbook_to_parquet(
-        spark,
         _workbook(tmp_path),
         str(tmp_path / "staged"),
         sheets=["invoices"],
@@ -76,9 +75,9 @@ def test_stage_workbook_to_parquet(spark, tmp_path):
 
 
 def test_stage_workbook_parallel_matches_serial(spark, tmp_path):
-    """VERDICT r7 #7: thread-pooled staging must produce byte-identical
-    sheet contents and the same workbook-ordered mapping as the serial
-    path, on a many-sheet workbook."""
+    """Process-pooled staging must produce byte-identical sheet contents
+    and the same workbook-ordered mapping as the serial path, on a
+    many-sheet workbook."""
     from etl_excel_csv_sql_spark.io import xlsx
 
     n_sheets, n_rows = 10, 300
@@ -89,71 +88,36 @@ def test_stage_workbook_parallel_matches_serial(spark, tmp_path):
     }
     wb = str(tmp_path / "many.xlsx")
     xlsx.write_workbook(wb, sheets)
-    serial = stage_workbook_to_parquet(
-        spark, wb, str(tmp_path / "ser"), max_workers=1
-    )
-    par = stage_workbook_to_parquet(
-        spark, wb, str(tmp_path / "par"), max_workers=8
-    )
-    arrow = stage_workbook_to_parquet(
-        spark, wb, str(tmp_path / "arr"), max_workers=8, engine="arrow"
-    )
-    assert list(serial) == list(par) == list(arrow) == sorted(sheets)
+    serial = stage_workbook_to_parquet(wb, str(tmp_path / "ser"), max_workers=1)
+    par = stage_workbook_to_parquet(wb, str(tmp_path / "par"), max_workers=8)
+    assert list(serial) == list(par) == sorted(sheets)
     for name in sheets:
         a = {tuple(r) for r in spark.read.parquet(serial[name]).collect()}
         b = {tuple(r) for r in spark.read.parquet(par[name]).collect()}
-        c = {tuple(r) for r in spark.read.parquet(arrow[name]).collect()}
-        assert a == b == c and len(a) == n_rows, name
-        # schema parity: all-string columns under both engines
-        sch = spark.read.parquet(arrow[name]).schema
+        assert a == b and len(a) == n_rows, name
+        # all-string columns
+        sch = spark.read.parquet(par[name]).schema
         assert [f.dataType.simpleString() for f in sch.fields] == ["string"] * 2
 
 
-def test_stage_workbook_engine_switch_in_place(spark, tmp_path):
-    """ADVICE r9: re-staging the SAME out_dir with the other engine must
-    overwrite cleanly — spark leaves a parquet DIRECTORY per sheet,
-    arrow a single file; switching used to crash (IsADirectoryError) or
-    leave a stale mixed layout."""
-    from etl_excel_csv_sql_spark.io import xlsx
-    from etl_excel_csv_sql_spark.io.excel import stage_workbook_to_parquet
-
-    wb = str(tmp_path / "sw.xlsx")
-    xlsx.write_workbook(
-        wb, {"S": [["id", "val"], ["a", 1.0], ["b", 2.0]]}
-    )
-    out_dir = str(tmp_path / "staged")
-    # spark → arrow: pq.write_table onto an existing directory
-    m1 = stage_workbook_to_parquet(spark, wb, out_dir, engine="spark")
-    m2 = stage_workbook_to_parquet(spark, wb, out_dir, engine="arrow")
-    assert list(m1) == list(m2) == ["S"]
-    got = {tuple(r) for r in spark.read.parquet(m2["S"]).collect()}
-    assert got == {("a", "1"), ("b", "2")}
-    # arrow → spark: the directory write onto an existing single file
-    m3 = stage_workbook_to_parquet(spark, wb, out_dir, engine="spark")
-    got3 = {tuple(r) for r in spark.read.parquet(m3["S"]).collect()}
-    assert got3 == got
-
-
 def test_stage_workbook_arrow_rejects_empty_header(spark, tmp_path):
-    """Both engines must FAIL on a header_row beyond the sheet: Spark
-    refuses empty-schema parquet; the arrow worker raises the same
-    contract error instead of landing a 0-column file Spark can't read."""
+    """A header_row beyond the sheet must FAIL instead of landing a
+    0-column file Spark can't read — in the calling process and from a
+    pool worker alike."""
     import pytest
 
     from etl_excel_csv_sql_spark.io import xlsx
-    from etl_excel_csv_sql_spark.io.excel import stage_workbook_to_parquet
 
     wb = str(tmp_path / "one.xlsx")
-    xlsx.write_workbook(wb, {"S": [["a", "b"], ["1", "2"]]})
-    with pytest.raises(Exception):
-        stage_workbook_to_parquet(
-            spark, wb, str(tmp_path / "sp"), header_row=99
-        )
-    with pytest.raises(ValueError, match="no columns"):
-        stage_workbook_to_parquet(
-            spark, wb, str(tmp_path / "ar"), header_row=99, engine="arrow",
-            max_workers=1,
-        )
+    xlsx.write_workbook(
+        wb, {"S": [["a", "b"], ["1", "2"]], "T": [["c"], ["3"]]}
+    )
+    for workers in (1, 8):
+        with pytest.raises(ValueError, match="no columns"):
+            stage_workbook_to_parquet(
+                wb, str(tmp_path / f"w{workers}"), header_row=99,
+                max_workers=workers,
+            )
 
 
 def test_xlsx_rless_cells_and_phonetic_runs_and_abs_targets(tmp_path):

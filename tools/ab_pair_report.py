@@ -94,6 +94,8 @@ def main() -> int:
     print(f"{'query':>28} {'h_med':>7} {'b_med':>7} {'ratio':>6}  {'h_min':>7} {'b_min':>7} {'ratio':>6}")
     tot = [0.0, 0.0, 0.0, 0.0]
     for n in names:
+        if not hq[n] or not bq[n]:
+            continue
         hm, bm = statistics.median(hq[n]), statistics.median(bq[n])
         hmin, bmin = min(hq[n]), min(bq[n])
         tot[0] += hm; tot[1] += bm; tot[2] += hmin; tot[3] += bmin

@@ -1,17 +1,35 @@
-"""Dump formatted physical plans of the headline queries → PLANS.md.
+"""Dump formatted physical plans of registered queries.
 
 Evidence artifact: shows pushed filters, pruned schemas, broadcast vs
 shuffle joins, and whole-stage codegen spans per query so plan quality is
-reviewable without running Spark. Usage: python tools/dump_plans.py [sf_dir]
+reviewable without running Spark.
+
+Usage:
+    python tools/dump_plans.py [--sf-dir DIR] [--out-dir DIR] [name ...]
+
+``--sf-dir`` defaults to ``$SPARK_GRAFT_SF_DIR``. Names default to the
+headline set below. Without ``--out-dir`` the default set regenerates
+``PLANS.md`` at the repo root and explicitly named plans print to stdout;
+with it, each plan lands in ``<out-dir>/<name>.txt`` (dump a tree before
+and after a change into two dirs and diff them).
+
+Besides registered queries, names may pick internal frames whose plans
+a registered query hides behind a checkpoint scan: ``minhash_signatures``,
+``simhash_frame``, ``ngram_pairs_lazy`` (the posting self-join of
+``ngram_jaccard_pairs`` at its registered parameters) and
+``minhash_index_query`` (``MinHashIndex.query`` over a throwaway index).
 """
 
 from __future__ import annotations
 
-import io
+import argparse
+import os
 import sys
-from contextlib import redirect_stdout
+import tempfile
+from contextlib import ExitStack
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 QUERIES = (
     "pricing_summary",
@@ -181,31 +199,103 @@ QUERIES = (
 )
 
 
+def _internal_frames(spark, sf_dir: str, stack: ExitStack) -> dict:
+    """name → thunk building a lazy internal frame."""
+    from etl_excel_csv_sql_spark.operators import dedup
+
+    def docs():
+        return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def corpus():
+        ids = docs().select("doc_id")
+        return dedup.synth_shingle_docs(ids).unionByName(
+            dedup.synth_shingle_docs(ids, id_offset=1_000_000, twin=True)
+        )
+
+    def ngram_pairs_lazy():
+        d = docs()
+        postings = dedup.shingle_postings(d, "doc_id", "text", n=3, max_df=100)
+        return dedup.ngram_jaccard_pairs(
+            d, "doc_id", "text", n=3, threshold=0.12, max_df=100,
+            postings=postings,
+        )
+
+    def minhash_index_query():
+        # tiny index: the plan shape is size-independent
+        tmp = stack.enter_context(tempfile.TemporaryDirectory())
+        idx = dedup.MinHashIndex(os.path.join(tmp, "idx"))
+        idx.build(corpus().limit(200), "doc_id", "text")
+        return idx.query(corpus().limit(50), "doc_id", "text", threshold=0.5)
+
+    return {
+        "minhash_signatures": lambda: dedup.minhash_signatures(
+            corpus(), "doc_id", "text", 32, 3
+        ),
+        "simhash_frame": lambda: dedup.simhash_frame(corpus(), "doc_id", "text", 3),
+        "ngram_pairs_lazy": ngram_pairs_lazy,
+        "minhash_index_query": minhash_index_query,
+    }
+
+
+def explain_str(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="queries or internal frames")
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    ap.add_argument("--out-dir", help="write <name>.txt per plan here")
+    args = ap.parse_args()
+    if not args.sf_dir:
+        ap.error("--sf-dir is required when $SPARK_GRAFT_SF_DIR is unset")
+    names = args.names or list(QUERIES)
+
     from etl_excel_csv_sql_spark.plans.registry import _REGISTRY
     from etl_excel_csv_sql_spark.session import get_spark
 
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
+    with ExitStack() as stack:
+        internal = _internal_frames(spark, args.sf_dir, stack)
+        unknown = [n for n in names if n not in _REGISTRY and n not in internal]
+        if unknown:
+            ap.error(f"unknown names: {', '.join(unknown)}")
+        plans = {}
+        for name in names:
+            if name in internal:
+                plans[name] = ("", explain_str(internal[name]()))
+            else:
+                spec = _REGISTRY[name]
+                plans[name] = (spec.doc, explain_str(spec.fn(spark, args.sf_dir)))
+
+    if args.out_dir:
+        os.makedirs(args.out_dir, exist_ok=True)
+        for name, (_, plan) in plans.items():
+            with open(os.path.join(args.out_dir, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
+        print(f"wrote {len(plans)} plans to {args.out_dir}", file=sys.stderr)
+        return 0
+    if args.names:
+        for name, (_, plan) in plans.items():
+            print(f"== {name} ==\n{plan.rstrip()}\n")
+        return 0
     out = [
         "# Physical plans (generated by tools/dump_plans.py)",
         "",
-        f"Scale dir: `{sf_dir}`. `PushedFilters`/`ReadSchema` show scan "
+        f"Scale dir: `{os.path.basename(os.path.normpath(args.sf_dir))}`. "
+        "`PushedFilters`/`ReadSchema` show scan "
         "pushdown; `BroadcastHashJoin`/`SortMergeJoin` the join strategy; "
         "`WholeStageCodegen` the fused JVM spans.",
         "",
     ]
-    for name in QUERIES:
-        spec = _REGISTRY[name]
-        df = spec.fn(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"## {name}\n\n{spec.doc}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    for name, (doc, plan) in plans.items():
+        out.append(f"## {name}\n\n{doc}\n\n```\n{plan.rstrip()}\n```\n")
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(QUERIES)} plans)")
+    print(f"wrote PLANS.md ({len(plans)} plans)")
     return 0
 
 
