@@ -8,6 +8,9 @@ local[$SPARK_GRAFT_CPUS] (default local[*]). Each query is forced end-to-end
 with the noop sink (full execution, zero driver-collect overhead). A history
 line is appended to .benchmarks/history.jsonl for round-over-round
 comparison. All diagnostics go to stderr; stdout carries only the JSON line.
+
+``warm``, ``time_passes`` and ``append_ledger`` are also the warm-up, the
+timed pass loop and the ledger writer of the scripts under tools/.
 """
 
 from __future__ import annotations
@@ -16,6 +19,10 @@ import json
 import os
 import sys
 import time
+from functools import partial
+from urllib.error import URLError
+
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 
 #: Queries timed per round: the heavy relational plans (joins/aggs/windows),
@@ -96,31 +103,63 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def stage_exec_ms(spark) -> dict[tuple[int, int], int] | None:
-    """(stageId, attemptId) → executorRunTime ms for every completed stage,
-    from the Spark UI REST API. Wall-clock on this box swings ±20-30%
-    between identical-code runs (VERDICT r4 #7); summed executor run time
-    is scheduled-CPU, not queue wait, so it is the load-robust series —
-    two same-code runs agree within ~5%. Returns None if the probe fails
-    (callers must drop the sample: a failed *before* probe paired with a
-    working *after* probe would charge the run for every stage since
-    application start — ADVICE r5 #1)."""
-    import json as _json
-    import urllib.request
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM, codegen and catalog so the first timed pass isn't
+    charged for session start-up (~3-5 s otherwise lands on whichever
+    query runs first)."""
+    t0 = time.perf_counter()
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for tbl in ("lineitem", "documents", "embeddings", "events"):
+        try:
+            spark.read.parquet(f"{sf_dir}/{tbl}.parquet").limit(1).collect()
+        except Exception:
+            pass
+    log(f"bench: warmup {time.perf_counter() - t0:.2f}s")
 
+
+def time_passes(spark, stats, label: str, build, passes: int) -> list[dict]:
+    """Run ``build()`` and write its frame to the noop sink ``passes``
+    times. Each pass runs under job group ``f"{label}:{p}"``, set before
+    ``build()`` so jobs an eager build runs count toward its own pass;
+    labels must be unique within the session. Returns one record per
+    pass: ``wall_s`` plus the group's summed stage metrics from
+    ``stats`` (a ``perfbench.sparkstats.SparkStats``: ``cpu_s``,
+    ``executor_run_s``, ``jobs``, ``stages``, shuffle bytes, ...). A
+    failed metrics read keeps only the wall time; a failed query
+    raises."""
+    sc = spark.sparkContext
+    out = []
+    for p in range(passes):
+        group = f"{label}:{p}"
+        sc.setJobGroup(group, group)
+        try:
+            t0 = time.perf_counter()
+            build().write.format("noop").mode("overwrite").save()
+            rec = {"wall_s": round(time.perf_counter() - t0, 3)}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        try:
+            rec |= stats.groups({group})[0][group]
+        except (TimeoutError, URLError) as exc:
+            log(f"bench: stage metrics for {group} unavailable: {exc}")
+        out.append(rec)
+    return out
+
+
+def append_ledger(row: dict) -> None:
+    """Append one JSON row to .benchmarks/history.jsonl."""
+    path = os.path.join(REPO, ".benchmarks", "history.jsonl")
     try:
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        url = f"{base}/api/v1/applications/{app_id}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = _json.load(r)
-        return {
-            (s["stageId"], s["attemptId"]): s.get("executorRunTime", 0)
-            for s in stages
-        }
-    except Exception as exc:
-        log(f"bench: stage metrics unavailable: {exc}")
-        return None
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "a") as fh:
+            fh.write(json.dumps(row) + "\n")
+    except OSError as exc:
+        log(f"bench: history write skipped: {exc}")
+
+
+def _median(values: list[float]) -> float:
+    return sorted(values)[len(values) // 2]
 
 
 def main() -> int:
@@ -132,25 +171,24 @@ def main() -> int:
     except ValueError:
         sf = tail
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, REPO)
     from etl_excel_csv_sql_spark.plans.registry import all_queries
     from etl_excel_csv_sql_spark.session import get_spark
+    from perfbench.run import _source_sha, host_sample
+    from perfbench.sparkstats import SparkStats
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
+    provenance = {
+        "cores": cores,
+        "spark_version": spark.version,
+        "sha": _source_sha(),
+        "host": host_sample(cores),
+    }
     queries = all_queries()
-
-    # Warm the JVM/codegen/catalog so the first timed query isn't charged
-    # for session startup (~3-5s otherwise lands on whichever query is
-    # first in HEADLINE).
-    t_warm = time.perf_counter()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for tbl in ("lineitem", "documents", "embeddings", "events"):
-        try:
-            spark.read.parquet(f"{sf_dir}/{tbl}.parquet").limit(1).collect()
-        except Exception:
-            pass
-    log(f"bench: warmup {time.perf_counter()-t_warm:.2f}s")
+    stats = SparkStats(spark)
+    warm(spark, sf_dir)
 
     # Three passes per query; the HEADLINE number is the per-query MEDIAN
     # (r4+ methodology, VERDICT r3 #9: this box shows ±20-30% load swings
@@ -162,6 +200,7 @@ def main() -> int:
     first: dict[str, float] = {}
     best: dict[str, float] = {}
     exec_sec: dict[str, float] = {}
+    cpu_sec: dict[str, float] = {}
     # host-load attribution (VERDICT r7 #10 / r8 #3): 1-min load average
     # sampled before each query's three passes, so round-over-round
     # per-query deltas are attributable to code vs host noise
@@ -173,42 +212,40 @@ def main() -> int:
             log(f"bench: {name} not registered, skipping")
             continue
         load1_q[name] = round(os.getloadavg()[0], 2)
-        runs = []
-        exec_runs = []
-        for _ in range(3):
-            before = stage_exec_ms(spark)
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # record the failure, keep benching
-                log(f"bench: {name} FAILED: {exc}")
-                runs = None
-                break
-            runs.append(round(time.perf_counter() - t0, 3))
-            after = stage_exec_ms(spark)
-            # Both probes must have succeeded: a None on either side means
-            # the delta is unbounded, not zero (ADVICE r5 #1).
-            if after is not None and before is not None:
-                new_ms = sum(v for k, v in after.items() if k not in before)
-                exec_runs.append(round(new_ms / 1000.0, 3))
-        if runs is None:
+        try:
+            runs = time_passes(spark, stats, name, partial(fn, spark, sf_dir), 3)
+        except Exception as exc:  # record the failure, keep benching
+            log(f"bench: {name} FAILED: {exc}")
             timings[name] = first[name] = best[name] = -1.0
             continue
-        timings[name] = sorted(runs)[1]  # median of 3
-        first[name] = runs[0]
-        best[name] = min(runs)
-        if exec_runs:
-            exec_sec[name] = sorted(exec_runs)[len(exec_runs) // 2]
+        walls = [r["wall_s"] for r in runs]
+        timings[name] = _median(walls)
+        first[name] = walls[0]
+        best[name] = min(walls)
+        for key, series in (("executor_run_s", exec_sec), ("cpu_s", cpu_sec)):
+            got = [r[key] for r in runs if key in r]
+            if got:
+                series[name] = round(_median(got), 3)
         log(
             f"bench: {name}: median {timings[name]:.3f}s "
-            f"(first {runs[0]:.3f}s, best {min(runs):.3f}s, "
-            f"exec {exec_sec.get(name, -1):.3f}s)"
+            f"(first {walls[0]:.3f}s, best {best[name]:.3f}s, "
+            f"exec {exec_sec.get(name, -1):.3f}s, cpu {cpu_sec.get(name, -1):.3f}s)"
         )
 
     ok = {k: v for k, v in timings.items() if v >= 0}
     ok_first = {k: v for k, v in first.items() if v >= 0}
     ok_best = {k: v for k, v in best.items() if v >= 0}
+
+    def covered_total(series: dict[str, float]) -> float | None:
+        # null (not 0.0) when the metrics read failed all round: a 0.0
+        # would read as an impossibly perfect score downstream (ADVICE r5
+        # #2). null ALSO on PARTIAL coverage (r10 review): a sum over 13
+        # of 18 queries read as a big round-over-round improvement; the
+        # per-query map stays for whatever did land.
+        if series and set(series) == set(best):
+            return round(sum(series.values()), 3)
+        return None
+
     # Stdout carries ONLY the compact contract line {metric, value, unit,
     # queries, sf}: r5's full record (four per-query series + methodology
     # text) overflowed the driver's stdout tail buffer and BENCH_r05.json
@@ -225,13 +262,14 @@ def main() -> int:
         "load1": round(os.getloadavg()[0], 2),
         "load1_start": load1_start,
     }
-    detail = {
+    append_ledger({
         "ts": time.time(),
         # optional experiment label (e.g. heap A/B runs) so history
         # entries stay attributable; absent for normal runs
         **({"tag": os.environ["SPARK_GRAFT_BENCH_TAG"]}
            if os.environ.get("SPARK_GRAFT_BENCH_TAG") else {}),
         **headline,
+        **provenance,
         "methodology": "median-of-3 per query (r4+); first-pass series in "
         "queries_first matches the r1-r3 single-shot methodology. "
         "Load protocol (r15, VERDICT r14 #1): a round-over-round "
@@ -243,31 +281,17 @@ def main() -> int:
         "value_first": round(sum(ok_first.values()), 3),
         "queries_best": best,
         "value_best": round(sum(ok_best.values()), 3),
-        # load-robust series (r5+): per-query summed executor run time from
-        # the UI REST API — scheduled-CPU, excludes host-load queue wait.
-        # null (not 0.0) when the UI probe failed all round: a 0.0 would
-        # read as an impossibly perfect score downstream (ADVICE r5 #2).
-        # null ALSO on PARTIAL coverage (r10 review): a sum over 13 of
-        # 18 queries read as a big round-over-round exec improvement;
-        # the per-query map stays for whatever did land.
+        # per-query median of each pass's summed executorRunTime over its
+        # job group's stages: scheduled time, excludes host-load queue wait
         "queries_exec": exec_sec,
-        "value_exec": (
-            round(sum(exec_sec.values()), 3)
-            if exec_sec and set(exec_sec) == set(best)
-            else None
-        ),
+        "value_exec": covered_total(exec_sec),
+        # the same for executorCpuTime: on-CPU time, the statistic that
+        # stays stable under CPU steal; speed claims read this series
+        "queries_cpu": cpu_sec,
+        "value_cpu": covered_total(cpu_sec),
         # per-query load1 sampled just before each query's passes
         "queries_load1": load1_q,
-    }
-    try:
-        os.makedirs(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                 ".benchmarks"), exist_ok=True)
-        hist = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            ".benchmarks", "history.jsonl")
-        with open(hist, "a") as fh:
-            fh.write(json.dumps(detail) + "\n")
-    except OSError as exc:
-        log(f"bench: history write skipped: {exc}")
+    })
 
     print(json.dumps(headline), flush=True)
     return 0

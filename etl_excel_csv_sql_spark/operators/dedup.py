@@ -1256,13 +1256,14 @@ def _with_self_loops(edges: DataFrame) -> DataFrame:
 
 def _closed_nbhd_min() -> Column:
     """min(v) over u's closed neighborhood, attached to every row by a
-    WINDOW over the partition key instead of the r9 groupBy+self-join
-    (guide §2.4): the join shape consumed its input twice (aggregate +
-    probe side) and paid two exchanges and an SMJ sort per round; the
-    window is one exchange + one sort of the same rows, reads its input
-    once, and attaches the identical inner-join result (every u has a
-    group — the caller's frame contains (u,u) — so no rows appear or
-    vanish)."""
+    window partitioned by u: one exchange and one sort per round, and the
+    input is read once. Every u has a group (the caller's frame contains
+    (u,u)), so no rows appear or vanish.
+
+    The tradeoff is hub skew. A hub's whole closed neighbourhood lands in
+    one window partition, and a window has no map-side partial min, so a
+    node with millions of neighbours is one task's work in every round
+    it stays a hub."""
     from pyspark.sql import Window
 
     return F.min("v").over(Window.partitionBy("u"))

@@ -1706,8 +1706,10 @@ def q_ngram_jaccard(spark, sf_dir):
     return _ngram_pairs_012(spark, sf_dir, fresh=True)
 
 
-@register(
-    "dedup_components",
+# Components oracle shared by dedup_components and dedup_components_star:
+# recursive transitive closure over the symmetric near-dup pair graph, min
+# reachable id = component.
+_COMPONENTS_ORACLE = (
     "WITH RECURSIVE "
     + _NGRAM_PAIR_CTES
     + """
@@ -1722,7 +1724,23 @@ def q_ngram_jaccard(spark, sf_dir):
     )
     SELECT a AS id, least(a, min(b)) AS component
     FROM reach GROUP BY a
-    """,
+    """
+)
+
+
+@register(
+    "dedup_components_star",
+    # a real value oracle proving the O(log n) adversarial-graph solver
+    # agrees with the recursive transitive closure on driver data
+    _COMPONENTS_ORACLE,
+    doc="connected components via alternating large-star/small-star "
+    "rounds (Kiveris et al.) — O(log n) rounds on any graph diameter; an "
+    "exhausted round bound raises. Same pair input, solver and oracle as "
+    "dedup_components",
+)
+@register(
+    "dedup_components",
+    _COMPONENTS_ORACLE,
     doc="connected components over the near-dup pair graph (min reachable "
     "id = canonical keeper). Spark: the large-star/small-star solver "
     "(connected_components_star, same plan as dedup_components_star); "
@@ -1730,34 +1748,6 @@ def q_ngram_jaccard(spark, sf_dir):
     "identical fixpoint",
 )
 def q_dedup_components(spark, sf_dir):
-    return dedup.connected_components_star(_ngram_pairs_012(spark, sf_dir))
-
-
-@register(
-    "dedup_components_star",
-    # a real value oracle proving the O(log n) adversarial-graph solver
-    # agrees with the recursive transitive closure on driver data
-    "WITH RECURSIVE "
-    + _NGRAM_PAIR_CTES
-    + """
-    , sym AS (
-      SELECT id_a AS a, id_b AS b FROM jac
-      UNION
-      SELECT id_b AS a, id_a AS b FROM jac
-    ), reach(a, b) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    )
-    SELECT a AS id, least(a, min(b)) AS component
-    FROM reach GROUP BY a
-    """,
-    doc="connected components via alternating large-star/small-star "
-    "rounds (Kiveris et al.) — O(log n) rounds on any graph diameter; an "
-    "exhausted round bound raises. Same pair input, solver and oracle as "
-    "dedup_components",
-)
-def q_dedup_components_star(spark, sf_dir):
     return dedup.connected_components_star(_ngram_pairs_012(spark, sf_dir))
 
 

@@ -5,9 +5,10 @@ Reads one or more history.jsonl ledgers, selects rows by tag prefix pairs
 
 - per-run totals with load1_start (the +-2 matched-load protocol check);
 - per-pair total-wall ratios (head/base), split by run order;
-- per-query median wall per side, min-of-series per side, and the
-  head/base ratios of both statistics;
-- per-query exec (summed executorRunTime) medians and ratios.
+- for wall (``queries``), summed executorRunTime (``queries_exec``) and
+  summed executorCpuTime (``queries_cpu``): per-query median and
+  min-of-series per side and the head/base ratios of both statistics.
+  Queries missing from either side's series are skipped.
 
 Usage:
     python tools/ab_pair_report.py HEAD_PREFIX BASE_PREFIX LEDGER [LEDGER2 ...]
@@ -89,43 +90,26 @@ def main() -> int:
             for n in names
         }
 
-    print("\n== per-query wall: median-of-runs and min-of-series ==")
-    hq, bq = series(head, "queries"), series(base, "queries")
-    print(f"{'query':>28} {'h_med':>7} {'b_med':>7} {'ratio':>6}  {'h_min':>7} {'b_min':>7} {'ratio':>6}")
-    tot = [0.0, 0.0, 0.0, 0.0]
-    for n in names:
-        if not hq[n] or not bq[n]:
-            continue
-        hm, bm = statistics.median(hq[n]), statistics.median(bq[n])
-        hmin, bmin = min(hq[n]), min(bq[n])
-        tot[0] += hm; tot[1] += bm; tot[2] += hmin; tot[3] += bmin
-        print(
-            f"{n:>28} {hm:7.3f} {bm:7.3f} {hm/bm:6.2f}  "
-            f"{hmin:7.3f} {bmin:7.3f} {hmin/bmin:6.2f}"
-        )
-    print(
-        f"{'TOTAL':>28} {tot[0]:7.3f} {tot[1]:7.3f} {tot[0]/tot[1]:6.2f}  "
-        f"{tot[2]:7.3f} {tot[3]:7.3f} {tot[2]/tot[3]:6.2f}"
-    )
-
-    print("\n== per-query exec (executorRunTime) median and min ==")
-    hx, bx = series(head, "queries_exec"), series(base, "queries_exec")
-    print(f"{'query':>28} {'h_med':>7} {'b_med':>7} {'ratio':>6}  {'h_min':>7} {'b_min':>7} {'ratio':>6}")
-    tot = [0.0, 0.0, 0.0, 0.0]
-    for n in names:
-        if not hx[n] or not bx[n]:
-            continue
-        hm, bm = statistics.median(hx[n]), statistics.median(bx[n])
-        hmin, bmin = min(hx[n]), min(bx[n])
-        tot[0] += hm; tot[1] += bm; tot[2] += hmin; tot[3] += bmin
-        print(
-            f"{n:>28} {hm:7.3f} {bm:7.3f} {hm/bm:6.2f}  "
-            f"{hmin:7.3f} {bmin:7.3f} {hmin/bmin:6.2f}"
-        )
-    print(
-        f"{'TOTAL':>28} {tot[0]:7.3f} {tot[1]:7.3f} {tot[0]/tot[1]:6.2f}  "
-        f"{tot[2]:7.3f} {tot[3]:7.3f} {tot[2]/tot[3]:6.2f}"
-    )
+    for key in ("queries", "queries_exec", "queries_cpu"):
+        print(f"\n== {key}: per-query median-of-runs and min-of-series ==")
+        hq, bq = series(head, key), series(base, key)
+        print(f"{'query':>28} {'h_med':>7} {'b_med':>7} {'ratio':>6}  {'h_min':>7} {'b_min':>7} {'ratio':>6}")
+        tot = [0.0, 0.0, 0.0, 0.0]
+        for n in names:
+            if not hq[n] or not bq[n]:
+                continue
+            hm, bm = statistics.median(hq[n]), statistics.median(bq[n])
+            hmin, bmin = min(hq[n]), min(bq[n])
+            tot[0] += hm; tot[1] += bm; tot[2] += hmin; tot[3] += bmin
+            print(
+                f"{n:>28} {hm:7.3f} {bm:7.3f} {hm/bm:6.2f}  "
+                f"{hmin:7.3f} {bmin:7.3f} {hmin/bmin:6.2f}"
+            )
+        if tot[1] and tot[3]:
+            print(
+                f"{'TOTAL':>28} {tot[0]:7.3f} {tot[1]:7.3f} {tot[0]/tot[1]:6.2f}  "
+                f"{tot[2]:7.3f} {tot[3]:7.3f} {tot[2]/tot[3]:6.2f}"
+            )
     return 0
 
 

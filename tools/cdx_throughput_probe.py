@@ -24,6 +24,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import append_ledger  # noqa: E402
+
 
 def main() -> int:
     n_shards = int(sys.argv[1]) if len(sys.argv) > 1 else 8
@@ -87,10 +89,7 @@ def main() -> int:
         "fetch_plan_files": plan_rows,
         "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
     }
-    with open(
-        os.path.join(REPO, ".benchmarks", "history.jsonl"), "a"
-    ) as f:
-        f.write(json.dumps(row) + "\n")
+    append_ledger(row)
     print(json.dumps(row))
     shutil.rmtree(root, ignore_errors=True)
     return 0

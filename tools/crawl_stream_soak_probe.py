@@ -36,19 +36,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import append_ledger  # noqa: E402
+from tools.streaming_soak_probe import _rss_mb  # noqa: E402
+
 RSS_FLAG_MB = 512
-
-
-def _rss_mb(pid: int | None = None) -> float | None:
-    path = f"/proc/{pid or 'self'}/status"
-    try:
-        with open(path) as fh:
-            for line in fh:
-                if line.startswith("VmRSS:"):
-                    return round(int(line.split()[1]) / 1024.0, 1)
-    except OSError:
-        return None
-    return None
 
 
 def main() -> int:
@@ -159,8 +150,7 @@ def main() -> int:
         "jvm_mid_to_end_growth_mb": jvm_growth,
         "flagged": bool(jvm_growth is not None and jvm_growth > RSS_FLAG_MB),
     }
-    with open(os.path.join(REPO, ".benchmarks/history.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
+    append_ledger(row)
     print(json.dumps(row, indent=2))
     shutil.rmtree(scratch, ignore_errors=True)
     return 1 if row["flagged"] else 0

@@ -1,12 +1,12 @@
-"""Per-query executorCpuTime profiler (guide §1; r16).
+"""Per-query Spark metrics profiler.
 
-Wall and executorRunTime on this host are inflated by CPU steal bursts
-(±2-4× swings between identical-code runs — documented since r15);
-summed task executorCpuTime is actual on-CPU nanoseconds and is the only
-statistic two same-code runs agree on. For each named registry query this
-runs N noop-sink passes and reports, per pass, wall seconds, the summed
-executorCpuTime of stages newly completed during the pass, and the count
-of new jobs + stages (the scheduling-overhead lens for low-core walls).
+Summed task executorCpuTime is on-CPU time and stays stable under the
+CPU-steal bursts that inflate wall and executorRunTime, so it is the
+statistic a speed claim reads. For each named registry query this runs N
+noop-sink passes through ``bench.time_passes`` and reports, per pass,
+wall seconds plus the pass's job-group stage metrics (``cpu_s``,
+``executor_run_s``, ``jobs``, ``stages``, shuffle and spill bytes, ...).
+Plans: ``tools/dump_plans.py --out-dir DIR <query> ...``.
 
 Usage:
     python tools/profile_cpu.py <query> [query ...] [--passes N]
@@ -16,97 +16,43 @@ One JSON line per query to stdout; diagnostics to stderr.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def rest(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app_id}/{path}", timeout=10
-    ) as r:
-        return json.load(r)
-
-
-def stage_cpu_ns(spark) -> dict[tuple[int, int], int] | None:
-    try:
-        return {
-            (s["stageId"], s["attemptId"]): s.get("executorCpuTime", 0)
-            for s in rest(spark, "stages?status=complete")
-        }
-    except Exception as exc:  # noqa: BLE001
-        print(f"profile: stage probe failed: {exc}", file=sys.stderr)
-        return None
-
-
-def job_ids(spark) -> set[int] | None:
-    try:
-        return {j["jobId"] for j in rest(spark, "jobs")}
-    except Exception as exc:  # noqa: BLE001
-        print(f"profile: job probe failed: {exc}", file=sys.stderr)
-        return None
+from bench import time_passes, warm  # noqa: E402
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    passes = 3
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--passes":
-            passes = int(args[i + 1]); i += 2
-        else:
-            names.append(args[i]); i += 1
+    ap = argparse.ArgumentParser(description="per-query Spark metrics")
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument("--passes", type=int, default=3)
+    args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from etl_excel_csv_sql_spark.plans.registry import all_queries
     from etl_excel_csv_sql_spark.session import get_spark
+    from perfbench.sparkstats import SparkStats
 
     spark = get_spark("profile-cpu")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for tbl in ("lineitem", "documents", "embeddings", "events"):
-        try:
-            spark.read.parquet(f"{sf_dir}/{tbl}.parquet").limit(1).collect()
-        except Exception:  # noqa: BLE001
-            pass
+    stats = SparkStats(spark)
+    warm(spark, sf_dir)
 
-    for name in names:
+    # once per name: a repeated name would reuse, and sum, its job groups
+    for name in dict.fromkeys(args.names):
         fn = queries.get(name)
         if fn is None:
             print(f"profile: {name} not registered", file=sys.stderr)
             continue
-        out = {"query": name, "passes": []}
-        for _ in range(passes):
-            before = stage_cpu_ns(spark)
-            jobs_before = job_ids(spark)
-            spark.sparkContext.setJobDescription(f"profile: {name}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            after = stage_cpu_ns(spark)
-            jobs_after = job_ids(spark)
-            rec = {"wall_s": round(wall, 3)}
-            if before is not None and after is not None:
-                rec["cpu_s"] = round(
-                    sum(v for k, v in after.items() if k not in before) / 1e9,
-                    3,
-                )
-                rec["new_stages"] = sum(1 for k in after if k not in before)
-            if jobs_before is not None and jobs_after is not None:
-                rec["new_jobs"] = len(jobs_after - jobs_before)
-            out["passes"].append(rec)
-        print(json.dumps(out), flush=True)
+        runs = time_passes(spark, stats, name, partial(fn, spark, sf_dir), args.passes)
+        print(json.dumps({"query": name, "passes": runs}), flush=True)
     return 0
 
 

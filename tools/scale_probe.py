@@ -40,8 +40,13 @@ import os
 import random
 import sys
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import append_ledger, log, time_passes, warm  # noqa: E402
+
 BASE_SF = "/root/testdata/sf0.1"
 PROBES = (
     "minhash_lsh_pairs",
@@ -69,10 +74,6 @@ PROBES = (
     "exact_dup_groups",
 )
 ID_STRIDE = 10_000_000
-
-
-def log(msg: str) -> None:
-    print(msg, file=sys.stderr, flush=True)
 
 
 def build_scaled(mult: int, docs_only: bool = False) -> str:
@@ -350,9 +351,9 @@ def main() -> int:
     if docs_only:
         args.remove("--docs-only")
     mult = int(args[0]) if args else 10
-    sys.path.insert(0, REPO)
     from etl_excel_csv_sql_spark.plans.registry import all_queries
     from etl_excel_csv_sql_spark.session import get_spark
+    from perfbench.sparkstats import SparkStats
 
     scaled_dir = build_scaled(mult, docs_only=docs_only)
     ts_dir = (
@@ -363,10 +364,9 @@ def main() -> int:
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+    stats = SparkStats(spark)
+    warm(spark, BASE_SF)
 
-    hist = os.path.join(REPO, ".benchmarks", "history.jsonl")
-    os.makedirs(os.path.dirname(hist), exist_ok=True)
     results = {}
     for sf_label, sf_dir in (("sf0.1", BASE_SF), (f"sf0.1x{mult}", scaled_dir)):
         for name in probes:
@@ -382,35 +382,27 @@ def main() -> int:
                 if (name in TOKEN_SET_PROBES and sf_dir != BASE_SF)
                 else sf_dir
             )
-            runs = []
             try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    queries[name](spark, qdir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(round(time.perf_counter() - t0, 3))
+                runs = [r["wall_s"] for r in time_passes(
+                    spark, stats, f"{name}@{sf_label}",
+                    partial(queries[name], spark, qdir), passes=2)]
             except Exception as exc:
                 log(f"scale_probe: {name} @ {sf_label} FAILED: "
                     f"{str(exc)[:200]}")
                 continue
             results[(name, sf_label)] = runs
             log(f"scale_probe: {name} @ {sf_label}: run1 {runs[0]}s run2 {runs[1]}s")
-            with open(hist, "a") as fh:
-                fh.write(
-                    json.dumps(
-                        {
-                            "ts": time.time(),
-                            "metric": "scale_probe",
-                            "query": name,
-                            "scale": sf_label,
-                            "multiplier": 1 if sf_dir == BASE_SF else mult,
-                            "run1_sec": runs[0],
-                            "run2_sec": runs[1],
-                        }
-                    )
-                    + "\n"
-                )
+            append_ledger(
+                {
+                    "ts": time.time(),
+                    "metric": "scale_probe",
+                    "query": name,
+                    "scale": sf_label,
+                    "multiplier": 1 if sf_dir == BASE_SF else mult,
+                    "run1_sec": runs[0],
+                    "run2_sec": runs[1],
+                }
+            )
 
     summary = {}
     for name in probes:

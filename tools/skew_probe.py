@@ -40,8 +40,13 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import append_ledger, log, time_passes, warm  # noqa: E402
+
 BASE_SF = "/root/testdata/sf0.1"
 PROBES = (
     "pack_documents_by_lang",
@@ -66,10 +71,6 @@ PROBES = (
     "minhash_lsh_pairs",
 )
 HOT_FRACTION = 10  # 9 of every 10 rows get the hot key
-
-
-def log(msg: str) -> None:
-    print(msg, file=sys.stderr, flush=True)
 
 
 def _mod(pc, arr, k: int):
@@ -176,28 +177,23 @@ def build_skewed() -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, REPO)
     from etl_excel_csv_sql_spark.plans.registry import all_queries
     from etl_excel_csv_sql_spark.session import get_spark
+    from perfbench.sparkstats import SparkStats
 
     skew_dir = build_skewed()
     spark = get_spark("skew_probe")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+    stats = SparkStats(spark)
+    warm(spark, BASE_SF)
 
-    hist = os.path.join(REPO, ".benchmarks", "history.jsonl")
-    os.makedirs(os.path.dirname(hist), exist_ok=True)
     results: dict[tuple[str, str], list[float]] = {}
     for label, sf_dir in (("uniform", BASE_SF), ("skewed", skew_dir)):
         for name in PROBES:
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
+            runs = [r["wall_s"] for r in time_passes(
+                spark, stats, f"{name}@{label}",
+                partial(queries[name], spark, sf_dir), passes=2)]
             results[(name, label)] = runs
             log(f"skew_probe: {name} @ {label}: run1 {runs[0]}s run2 {runs[1]}s")
 
@@ -214,18 +210,14 @@ def main() -> int:
         }
         log(f"skew_probe: {name}: uniform {base}s vs skewed {skew}s "
             f"(x{ratio})")
-        with open(hist, "a") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "ts": time.time(),
-                        "metric": "skew_probe",
-                        "query": name,
-                        **summary[name],
-                    }
-                )
-                + "\n"
-            )
+        append_ledger(
+            {
+                "ts": time.time(),
+                "metric": "skew_probe",
+                "query": name,
+                **summary[name],
+            }
+        )
     print(json.dumps({"metric": "skew_probe_summary", "queries": summary}))
     return 0
 

@@ -39,11 +39,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import append_ledger, log  # noqa: E402
+
 RSS_FLAG_MB = 512
-
-
-def log(msg: str) -> None:
-    print(msg, file=sys.stderr, flush=True)
 
 
 def _rss_mb(pid: int | None = None) -> float | None:
@@ -231,10 +229,7 @@ def main() -> int:
         "rss_flagged": flagged,
         "load1_start": round(os.getloadavg()[0], 2),
     }
-    hist = os.path.join(REPO, ".benchmarks", "history.jsonl")
-    os.makedirs(os.path.dirname(hist), exist_ok=True)
-    with open(hist, "a") as fh:
-        fh.write(json.dumps(row) + "\n")
+    append_ledger(row)
     print(json.dumps(row))
     shutil.rmtree(scratch, ignore_errors=True)
     return 1 if flagged else 0

@@ -30,6 +30,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import append_ledger  # noqa: E402
+
 
 def build_fixture(path: str, n: int, body_kb: int) -> int:
     import zlib
@@ -160,8 +162,7 @@ def main() -> int:
         "bit_identical": True,
         "build_plus_runs_sec": round(time.time() - t0, 1),
     }
-    with open(os.path.join(REPO, ".benchmarks/history.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
+    append_ledger(row)
     print(json.dumps(row, indent=2))
     os.remove(path)
     return 0

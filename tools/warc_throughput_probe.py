@@ -21,6 +21,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import append_ledger  # noqa: E402
+
 from tools.warc_rss_probe import build_fixture  # noqa: E402
 
 
@@ -72,8 +74,7 @@ def main() -> int:
         "decompressed_mb": round(decompressed_mb, 1),
         **{f"{k}_{m}": v for k, d in results.items() for m, v in d.items()},
     }
-    with open(os.path.join(REPO, ".benchmarks/history.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
+    append_ledger(row)
     print(json.dumps(row, indent=2))
     shutil.rmtree(root, ignore_errors=True)
     return 0

@@ -4,8 +4,8 @@ fetch_schedule's per-host window serializes each host into one task;
 fetch_schedule_bucketed bounds per-partition work at whale/n_buckets.
 This probe builds an in-plan frontier with ONE whale host carrying 90%
 of the URLs (the adversarial politeness shape: a single huge site) and
-times both operators end-to-end (noop sink, run twice, steady-state
-run2 reported). Pass bar: the bucketed variant at or under the plain
+times both operators end-to-end (noop sink, run twice; run1 also pays
+the JVM warm-up, steady-state run2 is reported). Pass bar: the bucketed variant at or under the plain
 one on the whale frontier — the point is the per-partition BOUND, but
 it must not cost wall time to get it.
 
@@ -25,6 +25,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import append_ledger, time_passes  # noqa: E402
+
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
@@ -32,6 +34,7 @@ def main() -> int:
 
     from etl_excel_csv_sql_spark.operators import urls
     from etl_excel_csv_sql_spark.session import get_spark
+    from perfbench.sparkstats import SparkStats
 
     spark = get_spark("whale_schedule_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,12 +50,7 @@ def main() -> int:
             F.lit("https://x/p"), F.col("id").cast("string")
         ).alias("url_norm"),
     )
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
-
-    def run(df) -> float:
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+    stats = SparkStats(spark)
 
     walls = {}
     for label, df in (
@@ -60,7 +58,8 @@ def main() -> int:
         ("bucketed", urls.fetch_schedule_bucketed(
             frontier, rate_per_wave=4, n_buckets=64)),
     ):
-        runs = [run(df) for _ in range(2)]
+        runs = [r["wall_s"] for r in time_passes(
+            spark, stats, label, lambda df=df: df, passes=2)]
         walls[label] = runs[1]
         print(f"{label}: run1 {runs[0]}s run2 {runs[1]}s",
               file=sys.stderr)
@@ -73,8 +72,7 @@ def main() -> int:
         "bucketed_run2_sec": walls["bucketed"],
         "speedup": round(walls["plain"] / walls["bucketed"], 2),
     }
-    with open(os.path.join(REPO, ".benchmarks/history.jsonl"), "a") as f:
-        f.write(json.dumps(row) + "\n")
+    append_ledger(row)
     print(json.dumps(row, indent=2))
     return 0
 
