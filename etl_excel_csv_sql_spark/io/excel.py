@@ -7,7 +7,9 @@ Reference behaviors replicated:
   -StartRow $headerRow`` (ExcelToCSVexport.ps1:192, headerRow from settings
   :112) → :func:`read_excel_sheet`: row ``header_row`` (1-based) is the
   header, data starts on the next row, columns are all-string (the
-  reference's untyped model, SURVEY §1.2).
+  reference's untyped model, SURVEY §1.2). The sheet is built column by
+  column into one Arrow table, which Spark takes as a whole: no per-row
+  conversion on the driver and no Python worker in the job that reads it.
 - Sheet-name matching is case-insensitive and trimmed
   (:func:`match_sheets`), fixing the reference's malformed trim
   (ExcelToCSVexport.ps1:111, SURVEY §2.12#2) while preserving the
@@ -25,7 +27,6 @@ workbooks, parallelized by the runner across files, not within one sheet.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
 from etl_excel_csv_sql_spark.io import xlsx
 
@@ -68,36 +69,38 @@ def read_excel_sheet(
     get positional ``_cN`` names), and every later row is a data row padded
     or truncated to the header width.
     """
-    header, normalized = _normalize_sheet(xlsx.read_rows(path, sheet), header_row)
-    schema = StructType(
-        [StructField(name, StringType(), True) for name in header]
-    )
-    return spark.createDataFrame(normalized, schema)
+    return spark.createDataFrame(_sheet_table(path, sheet, header_row))
 
 
-def _normalize_sheet(
-    rows: list[list], header_row: int
-) -> tuple[list[str], list[tuple]]:
-    """Shared header/data normalization for both staging engines: row
+def _sheet_table(path: str, sheet: str, header_row: int):
+    """One worksheet → a ``pa.Table`` of ``pa.string()`` columns, shared by
+    :func:`read_excel_sheet` and the parquet staging worker: row
     ``header_row`` (1-based) names the columns (empty cells → ``_cN``),
     later rows pad/truncate to the header width, every cell stringifies
-    PowerShell-style."""
-    if header_row < 1 or header_row > len(rows):
-        return [], []
-    raw_header = rows[header_row - 1]
+    PowerShell-style. A ``header_row`` that names no columns raises
+    ``ValueError`` before any output is touched: neither the CSV nor the
+    parquet writer can land a 0-column table."""
+    import pyarrow as pa
+
+    rows = xlsx.read_rows(path, sheet)
+    raw_header = rows[header_row - 1] if 0 < header_row <= len(rows) else []
+    if not raw_header:
+        raise ValueError(
+            f"sheet {sheet!r}: header_row {header_row} yields no columns"
+        )
     header = [
         (str(h).strip() if h not in (None, "") else f"_c{i}")
         for i, h in enumerate(raw_header)
     ]
-    width = len(header)
-    data = [
-        tuple(
-            _stringify(row[i]) if i < len(row) else None
-            for i in range(width)
+    data = rows[header_row:]
+    arrays = [
+        pa.array(
+            [_stringify(r[i]) if i < len(r) else None for r in data],
+            type=pa.string(),
         )
-        for row in rows[header_row:]
+        for i in range(len(header))
     ]
-    return header, data
+    return pa.Table.from_arrays(arrays, names=header)
 
 
 def _stage_sheet(args: tuple) -> tuple:
@@ -105,29 +108,19 @@ def _stage_sheet(args: tuple) -> tuple:
     pyarrow — no Spark, no GIL sharing with sibling sheets. Module-level
     for picklability."""
     path, sheet, header_row, dest = args
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    header, data = _normalize_sheet(xlsx.read_rows(path, sheet), header_row)
-    if not header:
-        # a header_row beyond the sheet must fail loudly, not land a
-        # 0-column file Spark cannot read back
-        raise ValueError(
-            f"sheet {sheet!r}: header_row {header_row} yields no columns"
-        )
+    table = _sheet_table(path, sheet, header_row)
+    header = table.column_names
     if len(set(header)) != len(header):
         # a name-keyed dict would let the LAST duplicate silently
         # overwrite the first — data loss; Spark's reader would also
         # reject the file
         dupes = sorted({h for h in header if header.count(h) > 1})
         raise ValueError(f"sheet {sheet!r}: duplicate header names {dupes}")
-    arrays = [
-        pa.array([r[i] for r in data], type=pa.string())
-        for i in range(len(header))
-    ]
     # written only AFTER the parse succeeds — a corrupt sheet or bad
     # header_row must not destroy the previous good staging output
-    pq.write_table(pa.Table.from_arrays(arrays, names=header), dest)
+    pq.write_table(table, dest)
     return sheet, dest
 
 

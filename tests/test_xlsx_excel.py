@@ -120,6 +120,85 @@ def test_stage_workbook_arrow_rejects_empty_header(spark, tmp_path):
             )
 
 
+def test_export_csv_bytes(spark, tmp_path):
+    """read_excel_sheet → write_csv_single gives these exact bytes: blank
+    header → _cN, "" vs a missing cell, kept spaces, quoting, a non-BMP
+    character, PowerShell booleans, integral doubles without exponent or
+    sign, short and long rows, and duplicate header names kept."""
+    from etl_excel_csv_sql_spark.io import csv_io
+
+    wb = str(tmp_path / "parity.xlsx")
+    xlsx.write_workbook(
+        wb,
+        {
+            "Hdr": [["a", "b", "c"]],
+            "Mix": [
+                ["k", None, "e", "s"],
+                ["x", 1, "", "  lead and trail  "],
+                ["y", 2.5, 'q"uote,comma\nnewline'],
+                ["z", True, "\U0001F600", 1e20],
+                ["w", -0.0],
+                ["v", 1, 2, 3, "extra"],
+            ],
+            "Dup": [["a", "a"], [1, 2]],
+        },
+    )
+    expected = {
+        "Hdr": b"a,b,c\n",
+        "Mix": (
+            b"k,_c1,e,s\n"
+            b'x,1,"",  lead and trail  \n'
+            b'y,2.5,"q\\"uote,comma\nnewline",\n'
+            b"z,True,\xf0\x9f\x98\x80,100000000000000000000\n"
+            b"w,0,,\n"
+            b"v,1,2,3\n"
+        ),
+        "Dup": b"a,a\n1,2\n",
+    }
+    for sheet, want in expected.items():
+        out = str(tmp_path / f"{sheet}.csv")
+        csv_io.write_csv_single(read_excel_sheet(spark, wb, sheet), out)
+        with open(out, "rb") as fh:
+            assert fh.read() == want, sheet
+
+
+def test_export_header_row_outside_sheet_fails_before_divert(spark, tmp_path):
+    """A header_row that names no columns raises ValueError before the
+    export touches the drop folder: the previous, unconsumed CSV stays
+    where it is and nothing lands in the Error folder."""
+    import pytest
+
+    from etl_excel_csv_sql_spark.runner.pipeline import (
+        ExcelExportJob,
+        export_excel_to_csv,
+    )
+    from etl_excel_csv_sql_spark.runner.watermark import WatermarkStore
+
+    wb = str(tmp_path / "book.xlsx")
+    xlsx.write_workbook(wb, {"Orders": [["OrderId"], ["O-1"]]})
+    out_dir, err_dir = tmp_path / "out", tmp_path / "Error"
+    out_dir.mkdir()
+    old = out_dir / "Orders.csv"
+    old.write_bytes(b"OrderId\nO-0\n")
+    for header_row in (0, 3):
+        job = ExcelExportJob(
+            source_name="book",
+            workbook_path=wb,
+            sheets=["Orders"],
+            header_row=header_row,
+            csv_out_dir=str(out_dir),
+            error_dir=str(err_dir),
+            watermarks=WatermarkStore(str(tmp_path / "state")),
+        )
+        with pytest.raises(
+            ValueError, match=f"header_row {header_row} yields no columns"
+        ):
+            export_excel_to_csv(spark, job)
+        assert old.read_bytes() == b"OrderId\nO-0\n"
+        assert not err_dir.exists()
+        assert job.watermarks.should_process("book", wb)
+
+
 def test_xlsx_rless_cells_and_phonetic_runs_and_abs_targets(tmp_path):
     """r10 review triplet: (a) cells without r attributes append
     sequentially instead of clobbering column A; (b) <rPh> phonetic
