@@ -6,7 +6,6 @@ WholeStageCodegen and remains visible to Catalyst (pushdown, folding, CSE).
 """
 
 from etl_excel_csv_sql_spark.functions.scalars import (
-    EXCEL_ORIGIN_REFERENCE,
     EXCEL_ORIGIN_TRUE,
     compose_filename,
     excel_serial_to_timestamp,
@@ -21,7 +20,6 @@ from etl_excel_csv_sql_spark.functions.text import (
     stopword_ratio,
     token_count,
     tokens,
-    word_shingle_hashes,
     word_shingles,
 )
 from etl_excel_csv_sql_spark.functions.vectors import (
@@ -31,7 +29,6 @@ from etl_excel_csv_sql_spark.functions.vectors import (
 )
 
 __all__ = [
-    "EXCEL_ORIGIN_REFERENCE",
     "EXCEL_ORIGIN_TRUE",
     "compose_filename",
     "excel_serial_to_timestamp",
@@ -44,7 +41,6 @@ __all__ = [
     "stopword_ratio",
     "token_count",
     "tokens",
-    "word_shingle_hashes",
     "word_shingles",
     "cosine_similarity",
     "dot_product",

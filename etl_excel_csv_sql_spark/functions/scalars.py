@@ -20,11 +20,10 @@ ColumnOrName = Column | str
 
 #: True Excel epoch (accounts for the 1900 leap-year bug): serial 1 is
 #: 1899-12-31, serial 60 is the phantom 1900-02-29 — for serials > 60 the
-#: 1899-12-30 origin yields the dates Excel displays.
+#: 1899-12-30 origin yields the dates Excel displays. The reference
+#: hard-codes 1900-01-01 (CSVtoSQLimport.ps1:84), which stores every date
+#: two days after the one Excel displays; that skew is not reproduced.
 EXCEL_ORIGIN_TRUE = "1899-12-30"
-#: The origin the reference hard-codes (CSVtoSQLimport.ps1:84); off by two
-#: days from Excel's displayed dates. Kept for byte-compat mode.
-EXCEL_ORIGIN_REFERENCE = "1900-01-01"
 
 #: Serial day numbers representable as .NET DateTime from the true
 #: origin ([0001-01-01, 9999-12-31]) — the reference's AddDays throws
@@ -65,18 +64,14 @@ def _col(c: ColumnOrName) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def excel_serial_to_timestamp(
-    serial: ColumnOrName, origin: str = EXCEL_ORIGIN_TRUE
-) -> Column:
-    """Excel serial day number (double) → timestamp.
+def excel_serial_to_timestamp(serial: ColumnOrName) -> Column:
+    """Excel serial day number (double) → timestamp from
+    :data:`EXCEL_ORIGIN_TRUE`.
 
     Mirrors ConvertExcelDateToSQL (CSVtoSQLimport.ps1:80-92): fractional
     days become time-of-day, rounded to the nearest second; non-numeric /
     null input yields null (the reference logs and returns $null — callers
     quarantine nulls, see runner.quarantine_split).
-
-    ``origin`` defaults to the true Excel epoch; pass
-    ``EXCEL_ORIGIN_REFERENCE`` to reproduce the reference's +2-day skew.
     """
     # try_cast: malformed input → null (the reference's log-and-$null),
     # including under Spark 4's default ANSI mode where cast would throw.
@@ -90,7 +85,7 @@ def excel_serial_to_timestamp(
         serial_d <= F.lit(EXCEL_SERIAL_RANGE[1])
     )
     seconds = F.round(serial_d * F.lit(86400.0)).cast("long")
-    base = F.unix_timestamp(F.to_timestamp(F.lit(f"{origin} 00:00:00")))
+    base = F.unix_timestamp(F.to_timestamp(F.lit(f"{EXCEL_ORIGIN_TRUE} 00:00:00")))
     return F.when(
         serial_d.isNotNull() & in_range, F.timestamp_seconds(base + seconds)
     )

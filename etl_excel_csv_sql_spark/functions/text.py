@@ -190,47 +190,6 @@ def word_shingles(text: ColumnOrName, n: int = 3) -> Column:
     return F.array_distinct(F.when(k >= n, shingled).otherwise(whole))
 
 
-def word_shingle_hashes(
-    text: ColumnOrName, n: int = 3, seed: int = 42, distinct: bool = True
-) -> Column:
-    """Array of 64-bit shingle hashes — the key-only twin of
-    :func:`word_shingles` for consumers that never emit the shingle TEXT
-    (inverted-index posting keys, MinHash/SimHash base hashes).
-
-    Hashes each n-token slice DIRECTLY (``xxhash64(seed, slice)`` over
-    the ``array<string>``) instead of materializing the joined shingle
-    string first and hashing that. Interleaved warm A/B at sf0.1: the
-    two folds are cost-par (~0.29s both, best-of-5 ×2 rounds — an early
-    1.4× read was JIT/ordering bias); the value is one shared fold for
-    every key-only consumer and no transient string garbage. Identical
-    set semantics — tokens contain no whitespace, so slice↔string is a
-    bijection and distinct counts match the string path exactly (modulo
-    ~2⁻⁶⁴ collisions).
-
-    ``distinct=False`` skips the dedup pass for min/sign folds where
-    duplicate shingles cannot change the result (MinHash min, posting
-    consumers must keep ``True`` for exact set sizes). Documents shorter
-    than ``n`` tokens yield one whole-token-array hash, mirroring
-    word_shingles' whole-text shingle.
-    """
-    toks = tokens(text)
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), k - n),
-        lambda i: F.xxhash64(F.lit(seed), F.slice(toks, i + 1, n)),
-    )
-    # NULL text must stay a [null] key, mirroring word_shingles'
-    # [null] shingle: xxhash64 of a null array is a CONSTANT long, so
-    # without the guard every null-text doc would share one key and
-    # null-null pairs would score jaccard 1.0 — the string path (and
-    # the DuckDB oracles) never equi-join nulls.
-    whole = F.array(
-        F.when(toks.isNotNull(), F.xxhash64(F.lit(seed), toks))
-    )
-    out = F.when(k >= n, grams).otherwise(whole)
-    return F.array_distinct(out) if distinct else out
-
-
 def positional_word_ngrams(text: ColumnOrName, n: int = 5) -> Column:
     """Array of ALL n-word grams in order (duplicates kept — one entry per
     token position), the unit for exact repeated-span detection (Lee et

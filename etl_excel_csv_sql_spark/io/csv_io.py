@@ -8,8 +8,7 @@
   (ExcelToCSVexport.ps1:210, InvoiceFileSearchFromSQL.ps1:144) overwrites a
   single named CSV file → :func:`write_csv_single` (Spark writes a
   directory of parts; the single-file mirror coalesces to one part and
-  renames it to the exact target path — only for reference-layout parity;
-  the scale path is :func:`write_csv_dir`).
+  renames it to the exact target path).
 - K2: stale-output diversion (ExcelToCSVexport.ps1:195-207): if the target
   CSV still exists, downstream never consumed it — move it to the Error
   folder as ``Unprocessed <name> <yyyy.MM.dd HH.mm>.csv`` and log, then
@@ -17,6 +16,10 @@
 - K3: lock fallback (InvoiceFileSearchFromSQL.ps1:143-151): if the
   write-back fails (file locked), write ``<base>_<yyyyMMdd>.csv`` instead
   → :func:`write_csv_with_lock_fallback`.
+
+Both directions speak RFC 4180, the dialect Export-Csv and Excel write: a
+quote inside a quoted cell is doubled (``""``), and a quoted cell may hold
+a line break (Excel's Alt+Enter text).
 """
 
 from __future__ import annotations
@@ -29,61 +32,35 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_csv_all_string(
-    spark: SparkSession, path: str, header: bool = True
-) -> DataFrame:
+#: The RFC 4180 dialect both directions share: a header line, and ``"``
+#: as the escape of ``"`` (Spark's default escape is a backslash, which
+#: reads a doubled quote as the end of the cell and writes ``\"``).
+_RFC4180 = {"header": "true", "escape": '"'}
+
+
+def read_csv_all_string(spark: SparkSession, path: str) -> DataFrame:
     """S3: header CSV → all-string DataFrame (no inference — the
-    reference's ``Import-Csv`` model; callers opt into typed reads via
-    read_csv_typed)."""
+    reference's ``Import-Csv`` model). ``multiLine`` keeps a quoted line
+    break inside its cell instead of splitting the row."""
     return (
-        spark.read.option("header", str(header).lower())
+        spark.read.options(**_RFC4180)
+        .option("multiLine", "true")
         .option("inferSchema", "false")
         .csv(path)
     )
-
-
-def read_csv_typed(
-    spark: SparkSession, path: str, schema=None, header: bool = True
-) -> DataFrame:
-    """Typed CSV read: explicit StructType when given, else inference.
-    The engine's preferred ingestion (SURVEY §1.3) — the all-string
-    variant exists for reference byte-compat."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        return reader.schema(schema).csv(path)
-    return reader.option("inferSchema", "true").csv(path)
-
-
-#: Spark's CSV WRITER trims cell whitespace by default (ignore*WhiteSpace
-#: default true on write, false on read) — silently corrupting
-#: whitespace-significant cells through a roundtrip. Export-Csv preserves
-#: them; so do we. (Found by the hypothesis roundtrip property.)
-_PRESERVE_WS = {
-    "ignoreLeadingWhiteSpace": "false",
-    "ignoreTrailingWhiteSpace": "false",
-}
-
-
-def write_csv_dir(df: DataFrame, path: str) -> None:
-    """Scale-path CSV sink: parallel multi-part write, UTF-8, header.
-    This is what a 1000-executor job should do; single-file mirroring is
-    a driver bottleneck by construction."""
-    df.write.mode("overwrite").option("header", "true").options(
-        **_PRESERVE_WS
-    ).csv(path)
 
 
 def write_csv_single(df: DataFrame, path: str) -> None:
     """K1: overwrite ONE csv file at ``path`` (reference layout parity).
 
     coalesce(1) → temp dir → rename the single part to the exact target.
-    Only for small frames consumed by downstream desktop tools — the
-    parallel sink is write_csv_dir."""
+    Spark's CSV writer trims cell whitespace by default (ignore*WhiteSpace
+    is true on write, false on read); Export-Csv keeps it, and so do we."""
     tmp = path + ".__tmp__"
     try:
-        df.coalesce(1).write.mode("overwrite").option(
-            "header", "true"
-        ).options(**_PRESERVE_WS).csv(tmp)
+        df.coalesce(1).write.mode("overwrite").options(**_RFC4180).option(
+            "ignoreLeadingWhiteSpace", "false"
+        ).option("ignoreTrailingWhiteSpace", "false").csv(tmp)
         # glob.escape: a target named like 'Q1 [Final].csv' would turn
         # the tmp prefix into a character class and never match the part
         part = next(
@@ -163,16 +140,12 @@ def write_csv_with_lock_fallback(
 
 
 def read_csv_permissive(
-    spark: SparkSession,
-    path: str,
-    ddl_schema: str,
-    header: bool = True,
-    corrupt_col: str = "corrupt_record",
+    spark: SparkSession, path: str, ddl_schema: str
 ) -> DataFrame:
     """Typed CSV ingestion that QUARANTINES instead of failing or
     silently nulling: PERMISSIVE mode with an explicit corrupt-record
-    column — rows that parse land typed with ``corrupt_col`` NULL; rows
-    with any malformed field keep the RAW LINE in ``corrupt_col``
+    column — rows that parse land typed with ``corrupt_record`` NULL; rows
+    with any malformed field keep the RAW LINE in ``corrupt_record``
     (PERMISSIVE nulls the unparseable FIELDS but keeps ones that did
     parse — e.g. a good leading int before a bad column survives), so
     the caller can split good/quarantine with one null-test and never
@@ -191,12 +164,12 @@ def read_csv_permissive(
     from pyspark.sql import types as T
 
     schema = T.StructType.fromDDL(ddl_schema).add(
-        T.StructField(corrupt_col, T.StringType())
+        T.StructField("corrupt_record", T.StringType())
     )
     return (
-        spark.read.option("header", str(header).lower())
+        spark.read.option("header", "true")
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "corrupt_record")
         .schema(schema)
         .csv(path)
     )

@@ -27,7 +27,6 @@ from etl_excel_csv_sql_spark.functions.text import (
     normalize_text,
     positional_word_ngrams,
     tokens,
-    word_shingle_hashes,
 )
 from etl_excel_csv_sql_spark.functions.vectors import (
     cosine_similarity,
@@ -53,24 +52,23 @@ def _exploded_shingle_hash_rows(
     """(id, __h): one row per word-shingle POSITION — duplicates kept,
     consumers dedup where set semantics require it.
 
-    The fully-codegen twin of ``explode(word_shingle_hashes(...))`` (r15
-    optimization, guide §4.1): tokenize once per row, explode the
-    position range, and hash the n consecutive tokens as FLAT xxhash64
-    children (``toks[i] ... toks[i+n-1]``) — GetArrayItem + xxhash64 are
-    whole-stage codegen, where the previous ``transform(sequence(...),
-    i -> xxhash64(seed, slice(toks, i+1, n)))`` ran an interpreted
-    CodegenFallback lambda allocating a fresh slice array per shingle
-    (measured as the dominant CPU of every shingle consumer at sf0.1).
+    Hash i is ``xxhash64(seed, toks[i], ..., toks[i+n-1])`` over the
+    tokens of :func:`functions.text.tokens`, with the n tokens as FLAT
+    xxhash64 children: GetArrayItem + xxhash64 are whole-stage codegen,
+    where a ``transform(sequence(...), i -> xxhash64(seed, slice(toks,
+    i+1, n)))`` lambda runs interpreted and allocates a slice array per
+    shingle. xxhash64 over an array chains element hashes exactly like
+    flat children, so the values equal that slice form's and the
+    MinHash signatures stay those of SIGNATURE_ALGO.
 
-    Hash VALUES are bit-identical to the slice form: xxhash64 over an
-    array chains element hashes exactly like flat children (verified
-    live and pinned by test_dedup), so every downstream artifact —
-    MinHash signatures (SIGNATURE_ALGO unchanged), SimHash bits, posting
-    keys, df counts — is unchanged.
-
-    Contract mirrored from word_shingle_hashes: docs shorter than n
-    tokens yield ONE whole-token-array hash; NULL text yields one NULL
-    hash row (never a constant key nulls would equi-join on).
+    The contract every set consumer relies on: per document, the
+    distinct hashes are exactly as many as the distinct strings of
+    :func:`functions.text.word_shingles` (tokens hold no whitespace, so
+    a token slice and its joined shingle are in bijection, modulo
+    ~2⁻⁶⁴ collisions; tests/test_properties pins it). Docs shorter than
+    n tokens yield ONE whole-token-array hash, the twin of the
+    whole-text shingle; NULL text yields one NULL hash row (never a
+    constant key nulls would equi-join on).
     """
     base = df.select(
         F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
@@ -134,10 +132,9 @@ def shingle_postings(
     pair's intersection has probability ~|shingles|²/2⁶⁵), so
     Jaccard/containment values equal the string-keyed DuckDB oracle's.
     """
-    # codegen position explode + keys-only distinct aggregate (r15):
-    # identical (id, shingle-hash) row set as the previous
-    # explode(word_shingle_hashes(...)) — per-doc distinct incl. the
-    # NULL row for null-text docs — without the interpreted
+    # codegen position explode + keys-only distinct aggregate: one
+    # (id, shingle-hash) row per distinct shingle of each doc, incl. the
+    # NULL row for null-text docs, without an interpreted
     # transform/slice lambda (the dominant CPU of the posting build).
     # The distinct's partial aggregate dedups map-side, so its
     # exchange carries ~16 bytes per distinct shingle.
@@ -535,10 +532,10 @@ def minhash_lsh_pairs(
     # lookups), both bounded by the candidate set — the LeftSemi the
     # plan test pins. Counts are identical (both sides are distinct
     # sets), so jaccard values are bit-identical.
-    # collect_set reproduces word_shingle_hashes' distinct set (order
-    # differs, but only sizes and intersection COUNTS are consumed);
-    # the codegen explode replaces the interpreted transform/slice
-    # lambda that dominated the verify stage's CPU. Null-text docs are
+    # collect_set gives each doc's distinct shingle-hash set, sized
+    # like its word_shingles set (only sizes and intersection COUNTS are
+    # consumed); the codegen explode replaces the interpreted
+    # transform/slice lambda that dominated the verify stage's CPU. Null-text docs are
     # never candidates (no signature row), so the NULL-hash row cannot
     # occur here.
     # Per-doc set-size assumption (ADVICE r15): collect_set buffers one
@@ -800,50 +797,6 @@ class MinHashIndex:
         )
 
 
-def _simhash_tallies(hashes: Column) -> Column:
-    """array<int>[64] of per-bit ±1 tallies, in a SINGLE aggregate pass over
-    the hash array (the shingles are hashed exactly once by the caller).
-    Bit tests use Python-int shift amounts — PySpark's shift builtins
-    require a literal int, not a Column."""
-    zeros = F.array(*[F.lit(0) for _ in range(64)])
-    return F.aggregate(
-        hashes,
-        zeros,
-        lambda acc, h: F.array(
-            *[
-                acc.getItem(i)
-                + F.when(
-                    F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-                for i in range(64)
-            ]
-        ),
-    )
-
-
-def _simhash_from_tallies(tallies: Column) -> Column:
-    """Assemble the signed 64-bit SimHash from the tally array with exact
-    integer arithmetic: bit i set iff tally[i] >= 0. Bits are disjoint, so
-    summing per-bit LONG terms equals the bitwise OR; bit 63's two's-
-    complement weight is -2^63, which keeps every intermediate inside the
-    signed-long range (no doubles, no decimals — cf. ADVICE on F.pow)."""
-    terms = [
-        F.when(tallies.getItem(i) >= 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for i in range(63)
-    ]
-    terms.append(
-        F.when(tallies.getItem(63) >= 0, F.lit(-(1 << 63)).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    )
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return total
-
-
 #: synth_shingle_docs generator constants — shared with the pytest pin
 #: (test_dedup) that recomputes every pairwise SimHash distance over the
 #: real sf id sets and asserts min non-twin distance > the query's
@@ -896,20 +849,6 @@ def synth_shingle_docs(
     if twin:
         text = F.concat(F.lit("  "), text, F.lit("   "))
     return base.select("doc_id", text.alias("text"))
-
-
-def simhash64(text_col: str | Column, n: int = 3, seed: int = 42) -> Column:
-    """64-bit SimHash over word shingles: per bit, sum ±1 weighted by
-    whether xxhash64(shingle) has that bit set; sign → bit.
-
-    One `transform` hashes each shingle exactly once, one `aggregate` pass
-    accumulates all 64 bit-tallies, and the long is assembled bitwise in
-    integer arithmetic. Prefer `simhash_frame` for multi-stage plans — it
-    materializes the intermediate arrays in separate projections so they
-    are provably computed once.
-    """
-    hashes = word_shingle_hashes(text_col, n, seed)
-    return _simhash_from_tallies(_simhash_tallies(hashes))
 
 
 def simhash_frame(

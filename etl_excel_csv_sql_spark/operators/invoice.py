@@ -102,28 +102,20 @@ def found_report(
     )
 
 
-def compose_copy_plan(
-    matches: DataFrame,
-    invoice_col: str = "invnum",
-    subfolder_col: str = "subfolder",
-    filename_col: str = "filename",
-    customer_ref_col: str = "customer_ref",
-) -> DataFrame:
+def compose_copy_plan(matches: DataFrame) -> DataFrame:
     """Build the per-row copy manifest the reference executes imperatively
-    (InvoiceFileSearchFromSQL.ps1:88-110): scrub the customer ref, compose
-    source path and target name. Returns columns (src_path, dst_name);
-    execution happens in runner.execute_copy_plan via foreachPartition."""
+    (InvoiceFileSearchFromSQL.ps1:88-110) from matches with columns
+    ``invnum``, ``subfolder``, ``filename``, ``customer_ref``: scrub the
+    customer ref, compose source path and target name. Returns columns
+    (src_path, dst_name); execution happens in runner.execute_copy_plan
+    via foreachPartition."""
     from etl_excel_csv_sql_spark.functions.scalars import (
         compose_filename,
         scrub_path_chars,
     )
 
-    ref = scrub_path_chars(F.col(customer_ref_col))
+    ref = scrub_path_chars(F.col("customer_ref"))
     return matches.select(
-        F.concat_ws("/", F.col(subfolder_col), F.col(filename_col)).alias(
-            "src_path"
-        ),
-        compose_filename(F.col(invoice_col), ref, F.col(filename_col)).alias(
-            "dst_name"
-        ),
+        F.concat_ws("/", F.col("subfolder"), F.col("filename")).alias("src_path"),
+        compose_filename(F.col("invnum"), ref, F.col("filename")).alias("dst_name"),
     )

@@ -23,13 +23,6 @@ def money_sum(col: str | Column) -> Column:
     return F.sum(c.cast("decimal(18,4)")).cast("double")
 
 
-def money_avg(col: str | Column) -> Column:
-    """Exact-sum / count — deterministic under re-partitioning, unlike
-    avg(double)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return money_sum(c) / F.count(c)
-
-
 def spread_for_compute(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition ONLY when the input is underpartitioned for CPU-heavy
     per-row work (e.g. one small parquet file → one task → a 32-core
@@ -172,19 +165,6 @@ def grouped_bounded_topk(
     return phase2.select(
         *group, F.posexplode("__top").alias("__pos", "item")
     ).select(*group, "item", (F.col("__pos") + 1).alias("rank"))
-
-
-def dedup_exact(df: DataFrame, keys: Sequence[str], order: Sequence[Column]) -> DataFrame:
-    """Exact dedup keeping the first row per key under ``order`` (must be a
-    total order). row_number-over-window: one shuffle on the keys; for a
-    keep-any dedup prefer groupBy/first which enables map-side partial
-    aggregation."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
 
 
 def broadcast_dim_join(

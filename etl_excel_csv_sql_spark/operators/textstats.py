@@ -10,34 +10,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_excel_csv_sql_spark.functions.text import (
-    bpe_ish_token_count,
-    lang_id,
-    punct_ratio,
     quality_score,
-    rolling_hash,
-    stopword_ratio,
     token_count,
     tokens,
 )
-
-
-def doc_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document feature frame: token/char counts, punctuation and
-    stopword ratios, quality score, predicted language, order-sensitive
-    fingerprint."""
-    return df.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_subword_tokens"),
-        F.length(text_col).alias("n_chars_measured"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col).alias("stopword_ratio"),
-        quality_score(text_col).alias("quality"),
-        lang_id(text_col).alias("lang_pred"),
-        rolling_hash(text_col).alias("fingerprint"),
-    )
 
 
 def tfidf_top_terms(

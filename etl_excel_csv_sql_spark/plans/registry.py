@@ -1395,14 +1395,7 @@ def q_doc_stats(spark, sf_dir):
     doc="corpus statistics rollup by language",
 )
 def q_corpus_rollup(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    tc = token_count("text")
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(tc).alias("total_tokens"),
-        (F.sum(tc).cast("double") / F.count("*")).alias("avg_tokens"),
-        F.sum(F.length("text")).alias("total_chars"),
-    )
+    return textstats.corpus_rollup(_t(spark, sf_dir, "documents"))
 
 
 @register(

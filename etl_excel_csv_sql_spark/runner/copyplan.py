@@ -23,13 +23,9 @@ from pyspark.sql import functions as F
 
 
 def execute_copy_plan(
-    plan: DataFrame,
-    src_root: str,
-    dst_root: str,
-    src_col: str = "src_path",
-    dst_col: str = "dst_name",
+    plan: DataFrame, src_root: str, dst_root: str
 ) -> dict[str, int]:
-    """Execute the copy manifest; returns
+    """Execute the (src_path, dst_name) copy manifest; returns
     ``{"found": n, "copied": n, "missing": n, "skipped": n}``.
 
     Counting uses Spark accumulators (the distributed twin of the
@@ -51,9 +47,7 @@ def execute_copy_plan(
     missing = sc.accumulator(0)
     skipped = sc.accumulator(0)
 
-    rows = plan.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    rows = plan.select(F.col("src_path").alias("src"), F.col("dst_name").alias("dst"))
 
     def anchored(root: str, component: str) -> str | None:
         # os.path.join DISCARDS the root when the component is absolute

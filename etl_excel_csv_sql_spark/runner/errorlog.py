@@ -22,11 +22,10 @@ class FatalPipelineError(RuntimeError):
 @dataclass
 class ErrorLog:
     folder: str
-    filename_suffix: str = "FileImportError.txt"
 
     def path_for(self, now: datetime | None = None) -> str:
         stamp = (now or datetime.now()).strftime("%Y%m%d")
-        return os.path.join(self.folder, f"{stamp} {self.filename_suffix}")
+        return os.path.join(self.folder, f"{stamp} FileImportError.txt")
 
     def log(
         self, message: str, fatal: bool = False, now: datetime | None = None

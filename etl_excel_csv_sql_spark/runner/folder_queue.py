@@ -7,6 +7,12 @@ The reference uses folders as a message queue: a source drops
 connection stay in place for the next cycle (:175-180,190-194) — an
 at-least-once queue with archive-on-success.
 
+:meth:`FolderQueue.drain` is the one archive-on-success step: it runs a
+handler over a batch of pending files and archives the batch only when
+the handler returned, all members or none. :meth:`FolderQueue.process_all`
+drains each pending file as its own batch; the CSV import
+(runner.pipeline.import_csv_to_table) drains its unioned batch.
+
 Structured Streaming's file source + ``cleanSource=archive`` is the
 built-in twin (streaming.file_source); this explicit runner provides the
 same semantics for scheduled-batch deployments and for tests.
@@ -36,20 +42,18 @@ class FolderQueue:
     drop_dir: str
     processed_dir: str
     error_dir: str
-    pattern: str = ".csv"
-    errorlog: ErrorLog | None = field(default=None)
-    #: paths the HANDLER quarantined mid-process_all (so the drain can
-    #: report QUARANTINED instead of misfiling the vanished file as
+    errorlog: ErrorLog = field(init=False)
+    #: paths the HANDLER quarantined mid-drain (so the drain can report
+    #: QUARANTINED instead of misfiling the vanished file as
     #: SKIPPED/"left for next cycle" when its archive move fails)
     _quarantined: set = field(default_factory=set, repr=False)
 
     def __post_init__(self) -> None:
-        if self.errorlog is None:
-            self.errorlog = ErrorLog(self.error_dir)
+        self.errorlog = ErrorLog(self.error_dir)
 
     def pending(self) -> list[str]:
-        """Files currently waiting in the drop folder (sorted — stable
-        processing order)."""
+        """``*.csv`` files currently waiting in the drop folder (sorted —
+        stable processing order)."""
         if not os.path.isdir(self.drop_dir):
             return []
         # case-insensitive suffix match: the reference runs on NTFS where
@@ -58,7 +62,7 @@ class FolderQueue:
         return sorted(
             os.path.join(self.drop_dir, f)
             for f in os.listdir(self.drop_dir)
-            if f.lower().endswith(self.pattern.lower())
+            if f.lower().endswith(".csv")
         )
 
     def archive(self, path: str, now: datetime | None = None) -> str:
@@ -85,43 +89,69 @@ class FolderQueue:
         self._quarantined.add(os.path.abspath(path))
         return dest
 
+    def drain(
+        self,
+        paths: list[str],
+        handler: Callable[[list[str]], None],
+        now: datetime | None = None,
+    ) -> dict[str, Outcome]:
+        """Archive-on-success for one batch: run ``handler(paths)`` once;
+        on an exception log NotFatal and leave every path queued
+        (SKIPPED, CSVtoSQLimport.ps1:175-180); members the handler
+        quarantined report QUARANTINED; archive the rest (PROCESSED).
+
+        The archive is all or nothing: a full-refresh batch archived in
+        part would let the next cycle's refresh, built from the leftovers
+        alone, erase the archived members' rows. On a failed move the
+        archived members go back to the drop folder and the batch reports
+        SKIPPED, to be retried together (the refresh is idempotent)."""
+        keys = {p: os.path.abspath(p) for p in paths}
+        # each batch's verdict starts clean: an entry left by a handler
+        # that quarantined a path and then raised must not misreport a
+        # later file dropped at the same path
+        self._quarantined -= set(keys.values())
+        try:
+            handler(paths)
+        except Exception as exc:  # log-and-continue semantics
+            self.errorlog.log(f"{exc} (batch {paths} left for next cycle)")
+            return dict.fromkeys(paths, Outcome.SKIPPED)
+        # the handler moved these to Error/ itself: there is nothing to archive
+        gone = self._quarantined & set(keys.values())
+        self._quarantined -= gone
+        outcome = {
+            p: Outcome.QUARANTINED if keys[p] in gone else Outcome.PROCESSED
+            for p in paths
+        }
+        archived: list[tuple[str, str]] = []  # (original, archived dest)
+        try:
+            for p in paths:
+                if outcome[p] is Outcome.PROCESSED:
+                    archived.append((p, self.archive(p, now)))
+        except OSError as exc:
+            self.errorlog.log(
+                f"{exc} (archive failed; batch {paths} left for next cycle)"
+            )
+            for original, dest in archived:
+                try:
+                    if not os.path.exists(original):
+                        shutil.move(dest, original)
+                except OSError as err:  # best effort; the sink has the data
+                    self.errorlog.log(
+                        f"{err} (could not return {dest} to the drop folder)"
+                    )
+            return {
+                p: Outcome.SKIPPED if o is Outcome.PROCESSED else o
+                for p, o in outcome.items()
+            }
+        return outcome
+
     def process_all(
         self, handler: Callable[[str], None], now: datetime | None = None
     ) -> dict[str, Outcome]:
-        """At-least-once drain: for each pending file run ``handler``;
-        success → archive (consume-once), exception → log NotFatal and
-        LEAVE THE FILE IN PLACE for the next cycle (the reference's
-        skip-and-continue, CSVtoSQLimport.ps1:175-180). Returns
-        {path: outcome}."""
+        """At-least-once drain of every pending file, each its own batch:
+        ``handler(path)`` per file, archived on success, left in place on
+        failure. Returns {path: outcome}."""
         results: dict[str, Outcome] = {}
         for path in self.pending():
-            # a stale entry from a PRIOR iteration must not leak forward
-            # (ADVICE r9): if the handler quarantined this path and THEN
-            # raised, the except branch below never consumed the set
-            # entry, and a later file dropped at the same path would be
-            # misreported QUARANTINED — never archived, side effects
-            # re-run every cycle. Each file's verdict starts clean.
-            self._quarantined.discard(os.path.abspath(path))
-            try:
-                handler(path)
-            except Exception as exc:  # log-and-continue semantics
-                self.errorlog.log(f"{exc} (file {path} left for next cycle)")
-                results[path] = Outcome.SKIPPED
-                continue
-            # handler quarantined the file itself: it is in Error/, not
-            # pending — archiving the vanished path would raise and the
-            # drain used to misreport it SKIPPED/"left for next cycle"
-            if os.path.abspath(path) in self._quarantined:
-                self._quarantined.discard(os.path.abspath(path))
-                results[path] = Outcome.QUARANTINED
-                continue
-            try:
-                self.archive(path, now)
-            except OSError as exc:  # same contract for the move itself
-                self.errorlog.log(
-                    f"{exc} (archive failed; {path} left for next cycle)"
-                )
-                results[path] = Outcome.SKIPPED
-                continue
-            results[path] = Outcome.PROCESSED
+            results |= self.drain([path], lambda ps: handler(ps[0]), now)
         return results

@@ -4,8 +4,10 @@
 Each function is the declarative-plan twin of one PowerShell script: the
 data plane is a single Spark job (scan → column exprs → sink) and the
 control plane (watermarks, folder lifecycle, logging) lives in the runner
-modules. The lifecycle tests in tests/test_pipeline_lifecycle.py drive
-T1-T4 through these functions.
+modules. The CSV import archives its batch through
+``FolderQueue.drain``, the one archive-on-success step: this module moves
+no file itself. The lifecycle tests in tests/test_pipeline_lifecycle.py
+drive T1-T4 through these functions.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_excel_csv_sql_spark.functions.scalars import (
+    EXCEL_SERIAL_RANGE,
     excel_serial_to_timestamp,
     sanitize_sql_string,
 )
@@ -41,11 +44,10 @@ class ExcelExportJob:
     csv_out_dir: str
     error_dir: str
     watermarks: WatermarkStore
-    errorlog: ErrorLog | None = field(default=None)
+    errorlog: ErrorLog = field(init=False)
 
     def __post_init__(self) -> None:
-        if self.errorlog is None:
-            self.errorlog = ErrorLog(self.error_dir)
+        self.errorlog = ErrorLog(self.error_dir)
 
 
 def export_excel_to_csv(spark: SparkSession, job: ExcelExportJob) -> dict:
@@ -91,7 +93,6 @@ class CsvImportJob:
     datetime_fields: list[str]
     sink: FullRefreshSink
     queue: FolderQueue
-    sanitize: bool = True             # byte-compat cell sanitizer (F1)
     quarantine_sink: FullRefreshSink | None = None
     #: the reference imports exactly ``<source>.csv`` per table
     #: (CSVtoSQLimport.ps1:164-168); None drains every pending file as ONE
@@ -101,19 +102,19 @@ class CsvImportJob:
 
 
 def import_csv_to_table(spark: SparkSession, job: CsvImportJob) -> dict[str, Outcome]:
-    """One import cycle: S3 all-string read → F1 sanitize → F2 datetime
-    convert → P3 PK filter → P4 projection → T3 row quarantine → K4 full
-    refresh → K6 archive. With ``source_name`` set, exactly
-    ``<source_name>.csv`` is considered (reference semantics); otherwise
-    every pending file is unioned into a single refresh batch. A failed
-    batch is logged NotFatal and every file stays queued (T2/T3)."""
+    """One import cycle: the pending batch goes through :func:`_refresh`
+    under ``job.queue.drain`` (K6 archive-on-success, all members or
+    none). With ``source_name`` set, exactly ``<source_name>.csv`` is
+    considered (reference semantics); otherwise every pending file is
+    unioned into a single refresh batch. A failed batch is logged
+    NotFatal and every file stays queued (T2/T3)."""
     import os
 
-    # case-insensitive name match (r10 review): FolderQueue.pending()
-    # matches the suffix case-insensitively for exactly this reason —
-    # the reference runs on NTFS where 'Orders.CSV' satisfies
-    # Test-Path 'orders.csv'; a case-sensitive basename compare left
-    # such a file pending forever, never imported and never logged
+    # case-insensitive name match: FolderQueue.pending() matches the
+    # suffix case-insensitively for exactly this reason — the reference
+    # runs on NTFS where 'Orders.CSV' satisfies Test-Path 'orders.csv';
+    # a case-sensitive basename compare left such a file pending
+    # forever, never imported and never logged
     target = f"{job.source_name}.csv".lower() if job.source_name else None
     pending = [
         p
@@ -122,99 +123,54 @@ def import_csv_to_table(spark: SparkSession, job: CsvImportJob) -> dict[str, Out
     ]
     if not pending:
         return {}
+    return job.queue.drain(pending, lambda ps: _refresh(spark, job, ps))
 
+
+def _refresh(spark: SparkSession, job: CsvImportJob, paths: list[str]) -> None:
+    """The data plane of one batch: S3 all-string read → union → F1
+    sanitize every cell → T3 row quarantine → F2 datetime convert → P4
+    projection → K4 full refresh of the sink (and of the quarantine sink,
+    or a logged count of quarantined rows). Raises on any failure."""
+    frames = [csv_io.read_csv_all_string(spark, p) for p in paths]
+    df = frames[0]
+    for extra in frames[1:]:
+        df = df.unionByName(extra)  # header drift across files → fail all
+    cols = job.fields if job.fields is not None else df.columns
+    out = df.select(*[sanitize_sql_string(F.col(c)).alias(c) for c in df.columns])
+    # row-level quarantine BEFORE conversion: a non-null value that is
+    # not a valid Excel serial in a configured datetime field is poison
+    # (the reference logs-and-nulls per cell, CSVtoSQLimport.ps1:85-91).
+    # The range check quarantines serials that CAST fine but exceed the
+    # DateTime domain, which would otherwise land as silent NULLs
+    dt_cols = [c for c in job.datetime_fields if c in df.columns]
+    good, bad = quarantine_split(
+        out,
+        {c: "double" for c in dt_cols},
+        pk=job.pk,
+        range_checks={c: EXCEL_SERIAL_RANGE for c in dt_cols},
+    )
+    good = good.select(
+        *[
+            F.date_format(excel_serial_to_timestamp(F.col(c)), "yyyy-MM-dd HH:mm:ss")
+            .alias(c) if c in dt_cols else F.col(c)
+            for c in good.columns
+        ]
+    ).select(*cols)
+    # pin the shared lineage across the two sink actions: without it the
+    # quarantine count re-reads and re-sanitizes every pending CSV
+    out = out.persist()
     try:
-        frames = [csv_io.read_csv_all_string(spark, p) for p in pending]
-        df = frames[0]
-        for extra in frames[1:]:
-            df = df.unionByName(extra)  # header drift across files → fail all
-        cols = job.fields if job.fields is not None else df.columns
-        out = df
-        if job.sanitize:
-            for c in df.columns:
-                out = out.withColumn(c, sanitize_sql_string(F.col(c)))
-        # row-level quarantine BEFORE conversion: a non-null value that is
-        # not a valid Excel serial in a configured datetime field is poison
-        # (the reference logs-and-nulls per cell, CSVtoSQLimport.ps1:85-91).
-        # The range check quarantines serials that CAST fine but exceed
-        # the DateTime domain — they previously sailed into the sink as
-        # silent NULLs (r10 review)
-        from etl_excel_csv_sql_spark.functions.scalars import (
-            EXCEL_SERIAL_RANGE,
-        )
-
-        dt_cols = [c for c in job.datetime_fields if c in df.columns]
-        good, bad = quarantine_split(
-            out,
-            {c: "double" for c in dt_cols},
-            pk=job.pk,
-            range_checks={c: EXCEL_SERIAL_RANGE for c in dt_cols},
-        )
-        for c in job.datetime_fields:
-            if c in good.columns:
-                good = good.withColumn(
-                    c,
-                    F.date_format(
-                        excel_serial_to_timestamp(F.col(c)),
-                        "yyyy-MM-dd HH:mm:ss",
-                    ),
+        job.sink.full_refresh(good)
+        if job.quarantine_sink is not None:
+            job.quarantine_sink.full_refresh(bad)
+        else:
+            n_bad = bad.count()
+            if n_bad:
+                job.queue.errorlog.log(
+                    f"{n_bad} rows quarantined from batch {paths}", fatal=False
                 )
-        good = good.select(*cols)
-        # pin the shared lineage across the two sink actions (r10
-        # review): with quarantine_sink=None, bad.count() used to
-        # re-read and re-sanitize every pending CSV from scratch — the
-        # whole ingestion scan ran twice per cycle
-        out = out.persist()
-        try:
-            job.sink.full_refresh(good)
-            if job.quarantine_sink is not None:
-                job.quarantine_sink.full_refresh(bad)
-            else:
-                n_bad = bad.count()
-                if n_bad:
-                    job.queue.errorlog.log(
-                        f"{n_bad} rows quarantined from batch {pending}",
-                        fatal=False,
-                    )
-        finally:
-            out.unpersist()
-    except Exception as exc:  # log-and-continue (CSVtoSQLimport.ps1:175-180)
-        job.queue.errorlog.log(f"{exc} (batch {pending} left for next cycle)")
-        return {p: Outcome.SKIPPED for p in pending}
-
-    # Archive under the same log-and-continue contract as processing —
-    # but ATOMICALLY for the batch (r10 review): with a multi-file
-    # full-refresh batch, archiving some files and leaving others
-    # queued means the NEXT cycle's refresh contains only the leftover
-    # files and silently ERASES the archived files' rows from the sink.
-    # On any failed move, already-archived members are moved back into
-    # the drop folder so the whole batch retries together (the refresh
-    # is idempotent, so re-importing it is safe).
-    import shutil
-
-    archived: list[tuple[str, str]] = []  # (original, archived_dest)
-    failed_at: str | None = None
-    for p in pending:
-        try:
-            dest = job.queue.archive(p)
-        except OSError as exc:
-            job.queue.errorlog.log(
-                f"{exc} (archive failed; batch retried next cycle)"
-            )
-            failed_at = p
-            break
-        archived.append((p, dest))
-    if failed_at is None:
-        return {p: Outcome.PROCESSED for p in pending}
-    for original, dest in archived:
-        try:
-            if not os.path.exists(original):
-                shutil.move(dest, original)
-        except OSError as exc:  # best effort; the sink already has the data
-            job.queue.errorlog.log(
-                f"{exc} (could not return {dest} to the drop folder)"
-            )
-    return {p: Outcome.SKIPPED for p in pending}
+    finally:
+        out.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -224,31 +180,28 @@ def import_csv_to_table(spark: SparkSession, job: CsvImportJob) -> dict[str, Out
 @dataclass
 class InvoiceSearchJob:
     invoice_csv: str                 # write-back target (K3 lock fallback)
-    invoice_key: str = "InvoiceNumber"
-    found_col: str = "Found"
     src_root: str = ""
     dst_root: str = ""
 
 
 def invoice_search(
-    spark: SparkSession,
-    job: InvoiceSearchJob,
-    database_rows: DataFrame,
-    match_key: str = "invnum",
+    spark: SparkSession, job: InvoiceSearchJob, database_rows: DataFrame
 ) -> dict:
     """P1 unprocessed filter → J1 semi join (the IN-list pushdown) → K8
     idempotent copies → J2 Found write-back (K3 lock fallback) → A1/A2
-    found-vs-expected report. ``database_rows`` stands in for the JDBC
-    read (spark.read.jdbc in deployment); it must expose ``match_key``,
+    found-vs-expected report. The invoice CSV is keyed by
+    ``InvoiceNumber`` with a ``Found`` flag (InvoiceFileSearchFromSQL.ps1:
+    50-52). ``database_rows`` stands in for the JDBC read
+    (spark.read.jdbc in deployment); it must expose ``invnum``,
     ``SubFolder``, ``FileName``, ``CustomerRef``."""
     invoices = csv_io.read_csv_all_string(spark, job.invoice_csv)
-    pending = invoice_ops.unprocessed(invoices, job.found_col, "yes")
+    pending = invoice_ops.unprocessed(invoices, "Found", "yes")
     matches = invoice_ops.semi_join_matches(
-        database_rows, pending, match_key, job.invoice_key
+        database_rows, pending, "invnum", "InvoiceNumber"
     )
     plan = invoice_ops.compose_copy_plan(
         matches.select(
-            F.col(match_key).alias("invnum"),
+            "invnum",
             F.col("SubFolder").alias("subfolder"),
             F.col("FileName").alias("filename"),
             F.col("CustomerRef").alias("customer_ref"),
@@ -259,10 +212,10 @@ def invoice_search(
     # CSV, which the write below replaces (the reference also reports first,
     # InvoiceFileSearchFromSQL.ps1:136-140 vs :143)
     report = invoice_ops.found_report(
-        pending, matches, job.invoice_key, match_key
+        pending, matches, "InvoiceNumber", "invnum"
     ).first()
     updated = invoice_ops.mark_found(
-        invoices, matches, job.invoice_key, match_key, job.found_col, "Yes"
+        invoices, matches, "InvoiceNumber", "invnum", "Found", "Yes"
     )
     written_to = csv_io.write_csv_with_lock_fallback(updated, job.invoice_csv)
     return {

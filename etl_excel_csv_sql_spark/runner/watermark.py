@@ -32,10 +32,9 @@ MIN_TICKS = 0
 @dataclass
 class WatermarkStore:
     """One ticks file per source under ``folder``:
-    ``<source>_<suffix>`` (reference naming, ExcelToCSVexport.ps1:147)."""
+    ``<source>_lastmod.txt`` (reference naming, ExcelToCSVexport.ps1:147)."""
 
     folder: str
-    suffix: str = "lastmod.txt"
     #: mtime observed by the last should_process per source — committed in
     #: preference to a re-stat, so a file modified MID-RUN keeps a newer
     #: on-disk mtime than the stored watermark and stays pending (the
@@ -44,7 +43,7 @@ class WatermarkStore:
     _observed: dict = field(default_factory=dict, repr=False, compare=False)
 
     def _path(self, source: str) -> str:
-        return os.path.join(self.folder, f"{source}_{self.suffix}")
+        return os.path.join(self.folder, f"{source}_lastmod.txt")
 
     def last_ticks(self, source: str) -> int:
         """Stored watermark, or MinValue when absent/corrupt (the

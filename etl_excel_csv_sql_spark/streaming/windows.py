@@ -20,7 +20,6 @@ from pyspark.sql import types as T
 
 from etl_excel_csv_sql_spark.operators.events import (
     session_window_agg,
-    sliding_window_agg,
     tumbling_window_agg,
 )
 
@@ -65,19 +64,6 @@ def stream_tumbling_agg(
     mode) once the watermark passes their end."""
     return tumbling_window_agg(
         with_watermark(events, ts_col, watermark), ts_col, width, group_cols
-    )
-
-
-def stream_sliding_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    width: str = "30 minutes",
-    slide: str = "10 minutes",
-    watermark: str = "1 hour",
-    group_cols: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    return sliding_window_agg(
-        with_watermark(events, ts_col, watermark), ts_col, width, slide, group_cols
     )
 
 

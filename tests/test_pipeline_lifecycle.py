@@ -137,7 +137,6 @@ def test_t3_row_quarantine_through_import(spark, tmp_path):
         datetime_fields=["when"],
         sink=sink,
         queue=q,
-        sanitize=False,
         quarantine_sink=qsink,
     )
     results = import_csv_to_table(spark, job)
@@ -158,13 +157,78 @@ def test_multi_file_drain_unions_into_one_refresh(spark, tmp_path):
     sink = ParquetFullRefreshSink(str(tmp_path / "table"))
     job = CsvImportJob(
         pk="pk", fields=None, datetime_fields=[], sink=sink, queue=q,
-        sanitize=False,
     )
     results = import_csv_to_table(spark, job)
     assert sorted(results.values()) == [Outcome.PROCESSED] * 2
     rows = sorted(r.pk for r in sink.read(spark).collect())
     assert rows == ["1", "2", "3"]          # both files survived the refresh
     assert len(os.listdir(tmp_path / "Processed")) == 2
+
+
+def test_import_without_quarantine_sink_logs_rejected_rows(spark, tmp_path):
+    # No reject table configured: the poison rows are counted into the
+    # error log, only the good rows reach the sink, and the file is
+    # archived like any processed batch.
+    q = _queue(tmp_path)
+    src = tmp_path / "drop" / "orders.csv"
+    src.write_text("pk,when\n1,44000.5\n2,oops\n,44001\n")
+    sink = ParquetFullRefreshSink(str(tmp_path / "table"))
+    job = CsvImportJob(
+        pk="pk", fields=None, datetime_fields=["when"], sink=sink, queue=q,
+    )
+    assert import_csv_to_table(spark, job) == {str(src): Outcome.PROCESSED}
+    assert [(r.pk, r.when) for r in sink.read(spark).collect()] == [
+        ("1", "2020-06-18 12:00:00")
+    ]
+    assert os.listdir(tmp_path / "drop") == []
+    (archived,) = os.listdir(tmp_path / "Processed")
+    assert archived.endswith(" orders.csv")
+    (log,) = os.listdir(tmp_path / "Error")
+    text = (tmp_path / "Error" / log).read_text()
+    assert f"2 rows quarantined from batch [{str(src)!r}]" in text
+
+
+def test_export_import_keeps_multiline_and_quoted_cells(spark, tmp_path):
+    # RFC 4180 end to end: the export writes an Alt+Enter line break and
+    # a doubled quote inside quoted cells, and the import must read each
+    # back as ONE cell of ONE row (a line-by-line read split the row at
+    # the break; a backslash-escape read split a doubled quote at the
+    # next comma).
+    wb = str(tmp_path / "book.xlsx")
+    xlsx.write_workbook(
+        wb,
+        {
+            "Notes": [
+                ["pk", "note", "when"],
+                ["1", "line one\nline two", 44000.5],
+                ["2", 'say "hi", ok', 44001.25],
+                ["3", 'a "b"\nc, d', 44002],
+            ]
+        },
+    )
+    export = ExcelExportJob(
+        source_name="book",
+        workbook_path=wb,
+        sheets=["Notes"],
+        header_row=1,
+        csv_out_dir=str(tmp_path / "drop"),
+        error_dir=str(tmp_path / "Error"),
+        watermarks=WatermarkStore(str(tmp_path / "state")),
+    )
+    assert export_excel_to_csv(spark, export)["exported"] == ["Notes"]
+    sink = ParquetFullRefreshSink(str(tmp_path / "table"))
+    qsink = ParquetFullRefreshSink(str(tmp_path / "rejects"))
+    job = CsvImportJob(
+        pk="pk", fields=None, datetime_fields=["when"], sink=sink,
+        queue=_queue(tmp_path), quarantine_sink=qsink, source_name="Notes",
+    )
+    assert list(import_csv_to_table(spark, job).values()) == [Outcome.PROCESSED]
+    assert sorted(tuple(r) for r in sink.read(spark).collect()) == [
+        ("1", "line one\nline two", "2020-06-18 12:00:00"),
+        ("2", 'say "hi", ok', "2020-06-19 06:00:00"),
+        ("3", 'a "b"\nc, d', "2020-06-20 00:00:00"),
+    ]
+    assert qsink.read(spark).count() == 0
 
 
 def test_source_name_selects_exactly_one_file(spark, tmp_path):
@@ -176,7 +240,7 @@ def test_source_name_selects_exactly_one_file(spark, tmp_path):
     sink = ParquetFullRefreshSink(str(tmp_path / "table"))
     job = CsvImportJob(
         pk="pk", fields=None, datetime_fields=[], sink=sink, queue=q,
-        sanitize=False, source_name="orders",
+        source_name="orders",
     )
     results = import_csv_to_table(spark, job)
     assert [os.path.basename(p) for p in results] == ["orders.csv"]
@@ -195,7 +259,6 @@ def test_failed_batch_leaves_all_files_queued(spark, tmp_path):
     sink = ParquetFullRefreshSink(str(tmp_path / "table"))
     job = CsvImportJob(
         pk="pk", fields=None, datetime_fields=[], sink=sink, queue=q,
-        sanitize=False,
     )
     results = import_csv_to_table(spark, job)
     assert sorted(results.values()) == [Outcome.SKIPPED] * 2
@@ -424,7 +487,7 @@ def test_import_case_insensitive_source_match(spark, tmp_path):
     sink = ParquetFullRefreshSink(str(tmp_path / "sink"))
     job = CsvImportJob(
         pk="id", fields=None, datetime_fields=[], sink=sink, queue=q,
-        sanitize=False, source_name="orders",
+        source_name="orders",
     )
     got = import_csv_to_table(spark, job)
     assert list(got.values()) == [Outcome.PROCESSED]
@@ -450,7 +513,7 @@ def test_import_quarantines_out_of_range_serial(spark, tmp_path):
     qsink = ParquetFullRefreshSink(str(tmp_path / "qsink"))
     job = CsvImportJob(
         pk="id", fields=None, datetime_fields=["when"], sink=sink, queue=q,
-        sanitize=False, quarantine_sink=qsink,
+        quarantine_sink=qsink,
     )
     import_csv_to_table(spark, job)
     good_ids = {r.id for r in sink.read(spark).collect()}
@@ -485,7 +548,6 @@ def test_import_archive_rollback_keeps_batch_together(spark, tmp_path):
     sink = ParquetFullRefreshSink(str(tmp_path / "sink"))
     job = CsvImportJob(
         pk="id", fields=None, datetime_fields=[], sink=sink, queue=q,
-        sanitize=False,
     )
 
     real_archive = q.archive

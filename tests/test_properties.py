@@ -45,8 +45,20 @@ _cell = st.text(
 )
 
 
+#: CSV cells additionally carry the characters RFC 4180 must quote: the
+#: separator, the quote itself and a line break inside the cell.
+_csv_cell = st.text(
+    alphabet=st.characters(
+        blacklist_categories=("Cs", "Cc"),
+        max_codepoint=0x2FFF,
+        whitelist_characters='\n",',
+    ),
+    max_size=40,
+)
+
+
 @settings(**_SETTINGS_KW)
-@given(st.lists(st.tuples(_cell, _cell), min_size=1, max_size=8))
+@given(st.lists(st.tuples(_csv_cell, _csv_cell), min_size=1, max_size=8))
 def test_csv_roundtrip_preserves_cells(spark, tmp_path_factory, rows):
     path = str(tmp_path_factory.mktemp("csvprop") / "t.csv")
     df = spark.createDataFrame(rows, ["a", "b"])
@@ -446,27 +458,33 @@ def test_jaro_winkler_kernel_invariants(a, b):
         max_size=12,
     )
 )
-def test_word_shingle_hashes_matches_string_shingles(spark, texts):
-    """The key-only hash fold must agree with the string path on SET
-    CARDINALITY for arbitrary unicode text (the invariant every hashed
-    posting consumer relies on for exact Jaccard/containment values),
-    and equal texts must produce equal hash sets. One Spark job per
-    example batch."""
-    from etl_excel_csv_sql_spark.functions.text import (
-        word_shingle_hashes,
-        word_shingles,
+def test_shingle_hash_rows_match_string_shingles(spark, texts):
+    """The production shingle-hash kernel must agree with the string
+    path on SET CARDINALITY for arbitrary unicode text (the invariant
+    every hashed posting consumer relies on for exact Jaccard/containment
+    values), and equal texts must produce equal hash sets. One Spark job
+    per example batch."""
+    from etl_excel_csv_sql_spark.functions.text import word_shingles
+    from etl_excel_csv_sql_spark.operators.dedup import (
+        _exploded_shingle_hash_rows,
     )
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["id", "text"]
     )
-    rows = df.select(
-        "id",
-        F.size(word_shingles("text", 3)).alias("n_str"),
-        F.size(word_shingle_hashes("text", 3)).alias("n_hash"),
-        F.sort_array(word_shingle_hashes("text", 3)).alias("hs"),
-    ).collect()
+    hashes = (
+        _exploded_shingle_hash_rows(df, "id", "text", 3)
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_set("__h")).alias("hs"))
+    )
+    rows = (
+        df.select("id", F.size(word_shingles("text", 3)).alias("n_str"))
+        .join(hashes, "id")
+        .select("id", "n_str", F.size("hs").alias("n_hash"), "hs")
+        .collect()
+    )
     by_id = {r.id: r for r in rows}
+    assert sorted(by_id) == list(range(len(texts)))
     for r in rows:
         assert r.n_str == r.n_hash, (r.id, texts[r.id])
     for i, t in enumerate(texts):

@@ -148,7 +148,7 @@ def test_export_csv_bytes(spark, tmp_path):
         "Mix": (
             b"k,_c1,e,s\n"
             b'x,1,"",  lead and trail  \n'
-            b'y,2.5,"q\\"uote,comma\nnewline",\n'
+            b'y,2.5,"q""uote,comma\nnewline",\n'
             b"z,True,\xf0\x9f\x98\x80,100000000000000000000\n"
             b"w,0,,\n"
             b"v,1,2,3\n"
