@@ -112,20 +112,20 @@ def sanitize_sql_string(value: ColumnOrName) -> Column:
     return F.regexp_replace(cleaned, rf"(?i)\b({keyword_alt})\b", r"[[$1]]")
 
 
-def scrub_path_chars(value: ColumnOrName, replacement: str = " ") -> Column:
+def scrub_path_chars(value: ColumnOrName) -> Column:
     """Replace path separators ``\\`` and ``/`` (user-typed fields used in
     filenames; InvoiceFileSearchFromSQL.ps1:88-90)."""
-    return F.regexp_replace(_col(value), r"[\\/]", replacement)
+    return F.regexp_replace(_col(value), r"[\\/]", " ")
 
 
-def compose_filename(*parts: ColumnOrName, sep: str = " - ") -> Column:
+def compose_filename(*parts: ColumnOrName) -> Column:
     """``"{invnum} - {customerRef} - {fileName}"`` composition
     (InvoiceFileSearchFromSQL.ps1:101-102). Null parts render as EMPTY
     segments (two separators in a row), matching PowerShell's format
     operator — concat_ws would silently SKIP them, composing a filename
     the reference system never wrote (code-review r9 catch)."""
     return F.concat_ws(
-        sep,
+        " - ",
         *[F.coalesce(_col(p).cast("string"), F.lit("")) for p in parts],
     )
 

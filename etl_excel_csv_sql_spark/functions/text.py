@@ -87,13 +87,11 @@ def punct_ratio(text: ColumnOrName) -> Column:
     )
 
 
-def stopword_ratio(
-    text: ColumnOrName, stopwords: tuple[str, ...] = STOPWORDS["en"]
-) -> Column:
+def stopword_ratio(text: ColumnOrName) -> Column:
     """Fraction of tokens that are stopwords (quality signal: natural prose
     has a stable stopword ratio; keyword spam / boilerplate does not)."""
     toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in stopwords])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     # array_intersect would dedup; count actual occurrences
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
@@ -131,7 +129,7 @@ def script_ratio(text: ColumnOrName, ranges: str) -> Column:
     return F.when(non_ws > 0, in_script / non_ws).otherwise(F.lit(0.0))
 
 
-def lang_id(text: ColumnOrName, default: str = "en") -> Column:
+def lang_id(text: ColumnOrName) -> Column:
     """Two-stage heuristic language ID.
 
     Stage 1 — Unicode script detection (:data:`SCRIPT_RANGES`, first
@@ -141,7 +139,7 @@ def lang_id(text: ColumnOrName, default: str = "en") -> Column:
 
     Stage 2 — Latin-script texts fall through to the stopword argmax over
     :data:`STOPWORDS` (en/de/es/fr/it/pt/nl/zh), ties broken by language
-    code order; no hits at all → ``default``.
+    code order; no hits at all → ``"en"``.
 
     Deterministic and oracle-mirrorable by construction (the registry
     generates the matching DuckDB SQL from these same tables); swap in a
@@ -167,7 +165,7 @@ def lang_id(text: ColumnOrName, default: str = "en") -> Column:
         )
     )
     result = F.when(best.getField("neg") < 0, best.getField("lang")).otherwise(
-        F.lit(default)
+        F.lit("en")
     )
     for lang, ranges, threshold in reversed(SCRIPT_RANGES):
         result = F.when(
@@ -226,31 +224,32 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(text: ColumnOrName, kinds: tuple[str, ...] = ("EMAIL", "PHONE", "IPV4")) -> Column:
+def redact_pii(text: ColumnOrName) -> Column:
     """Replace PII-shaped spans with ``<KIND>`` placeholders — the cheap
     regex pass a training-data pipeline runs before anything ships.
     Pattern order matters (emails before phones so digits inside an
     address aren't half-eaten); patterns are intentionally conservative —
     a production pipeline layers an ML pass on top."""
     out = _col(text)
-    for kind in kinds:
+    for kind in ("EMAIL", "PHONE", "IPV4"):
         out = F.regexp_replace(out, PII_PATTERNS[kind], f"<{kind}>")
     return out
 
 
-def rolling_hash(text: ColumnOrName, base: int = 31, mod: int = 2**61 - 1) -> Column:
+def rolling_hash(text: ColumnOrName) -> Column:
     """Polynomial rolling hash over the token stream — an order-sensitive
     document fingerprint (exact-dup detection robust to trailing whitespace
     but not to reordering, unlike set-based shingles).
 
-    h = ((h * base) + token_hash) mod m, folded left over tokens via
+    h = ((h * 31) + token_hash) mod (2**61 - 1), folded left over tokens via
     ``aggregate`` — pure JVM expression.
     """
+    mod = 2**61 - 1
     toks = tokens(text)
     return F.aggregate(
         toks,
         F.lit(0).cast("decimal(38,0)"),
         lambda acc, t: (
-            (acc * base + F.abs(F.xxhash64(t)) % F.lit(mod)) % F.lit(mod)
+            (acc * 31 + F.abs(F.xxhash64(t)) % F.lit(mod)) % F.lit(mod)
         ).cast("decimal(38,0)"),
     ).cast("long")

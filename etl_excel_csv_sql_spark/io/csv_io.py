@@ -17,9 +17,10 @@
   write-back fails (file locked), write ``<base>_<yyyyMMdd>.csv`` instead
   → :func:`write_csv_with_lock_fallback`.
 
-Both directions speak RFC 4180, the dialect Export-Csv and Excel write: a
-quote inside a quoted cell is doubled (``""``), and a quoted cell may hold
-a line break (Excel's Alt+Enter text).
+Every CSV reader and writer of the package speaks one dialect,
+``_RFC4180``, decided here: RFC 4180, the dialect Export-Csv and Excel
+write. A quote inside a quoted cell is doubled (``""``), and a quoted cell
+may hold a line break (Excel's Alt+Enter text).
 """
 
 from __future__ import annotations
@@ -32,8 +33,9 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 
 
-#: The RFC 4180 dialect both directions share: a header line, and ``"``
-#: as the escape of ``"`` (Spark's default escape is a backslash, which
+#: The RFC 4180 dialect every CSV reader and writer shares (batch, the
+#: quarantining reader and the streaming drop folder): a header line, and
+#: ``"`` as the escape of ``"`` (Spark's default escape is a backslash, which
 #: reads a doubled quote as the end of the cell and writes ``\"``).
 _RFC4180 = {"header": "true", "escape": '"'}
 
@@ -167,7 +169,7 @@ def read_csv_permissive(
         T.StructField("corrupt_record", T.StringType())
     )
     return (
-        spark.read.option("header", "true")
+        spark.read.options(**_RFC4180)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "corrupt_record")
         .schema(schema)

@@ -63,11 +63,7 @@ def read_jsonl(
     return df
 
 
-def write_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
-    """Write newline-delimited JSON (one object per row, UTF-8).
-    ``compression``: None, "gzip" (not splittable — see module
-    docstring), "bzip2" (splittable)."""
-    writer = df.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write newline-delimited JSON (one object per row, UTF-8,
+    uncompressed)."""
+    df.write.mode("overwrite").json(path)

@@ -40,9 +40,6 @@ def read_orc(
     return reader.orc(path)
 
 
-def write_orc(
-    df: DataFrame, path: str, compression: str = "zlib"
-) -> None:
-    """Write ORC (overwrite). ``compression``: zlib (hive default),
-    snappy, lzo, zstd, none."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """Write ORC (overwrite, zlib: the hive default)."""
+    df.write.mode("overwrite").option("compression", "zlib").orc(path)

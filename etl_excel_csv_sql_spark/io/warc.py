@@ -417,9 +417,7 @@ def _validate_warc_file(content: bytes) -> None:
         rec["body"] = None
 
 
-def _file_rows(
-    file, content: bytes, head_chars: int
-) -> Iterator[tuple[tuple, int]]:
+def _file_rows(file, content: bytes) -> Iterator[tuple[tuple, int]]:
     """One file's (row_tuple, text_chars) stream — shared by strict
     and (post-validation) lenient emit."""
     for idx, rec in enumerate(iter_warc_records(content)):
@@ -432,7 +430,7 @@ def _file_rows(
             status, headers, http_body = http_response_parts(rec["body"])
             nbytes = len(http_body)
             charset, source, text = decode_body_text(headers, http_body)
-            head = text[:head_chars]
+            head = text[:TEXT_HEAD_CHARS]
             chars = len(text)
         elif rec["warc_type"] == "conversion" and (
             rec["content_type"] or ""
@@ -442,7 +440,7 @@ def _file_rows(
             charset, source, text = decode_body_text(
                 {"content-type": rec["content_type"]}, rec["body"]
             )
-            head = text[:head_chars]
+            head = text[:TEXT_HEAD_CHARS]
             chars = len(text)
         elif rec["warc_type"] == "metadata" and (
             rec["content_type"] or ""
@@ -452,7 +450,7 @@ def _file_rows(
             # side can from_json the text column
             charset, source = "utf-8", "default"
             text = rec["body"].decode("utf-8", "replace")
-            head = text[:head_chars]
+            head = text[:TEXT_HEAD_CHARS]
             chars = len(text)
         rec["body"] = None  # release before next record
         yield (
@@ -465,7 +463,7 @@ def _file_rows(
         )
 
 
-def _record_batches(strict: bool, head_chars: int):
+def _record_batches(strict: bool):
     """The Arrow kernel behind both the batch and the streaming reader
     — one closure so the two paths can never drift.
 
@@ -513,7 +511,7 @@ def _record_batches(strict: bool, head_chars: int):
                 # strict raises straight through (the job dies, no
                 # partial commit); lenient is pre-validated so this
                 # pass cannot raise
-                for row, chars in _file_rows(file, content, head_chars):
+                for row, chars in _file_rows(file, content):
                     append(row)
                     buffered_chars += chars
                     if buffered_chars >= _FRAME_CHARS:
@@ -523,17 +521,12 @@ def _record_batches(strict: bool, head_chars: int):
     return batches
 
 
-def read_warc(
-    spark: SparkSession,
-    path_glob: str,
-    strict: bool = False,
-    head_chars: int = TEXT_HEAD_CHARS,
-) -> DataFrame:
+def read_warc(spark: SparkSession, path_glob: str, strict: bool = False) -> DataFrame:
     """WARC/WARC.gz files → one row per record. For ``response``
     records carrying an embedded HTTP response, ``http_status``,
     ``charset``/``charset_source`` (see ``detect_charset``), ``text``
     (FULL decoded body, charset-aware, errors=replace) and
-    ``text_head`` (first ``head_chars`` chars of ``text``) are
+    ``text_head`` (first ``TEXT_HEAD_CHARS`` chars of ``text``) are
     populated; ``conversion`` records with a text/* Content-Type (the
     WET layout) decode the same way; other record types leave them
     null. ``n_body_bytes`` is the HTTP body size for responses, else
@@ -546,16 +539,13 @@ def read_warc(
     binary = spark.read.format("binaryFile").load(path_glob).select(
         "path", "content"
     )
-    return binary.mapInPandas(
-        _record_batches(strict, head_chars), WARC_SCHEMA
-    )
+    return binary.mapInPandas(_record_batches(strict), WARC_SCHEMA)
 
 
 def stream_warc(
     spark: SparkSession,
     drop_dir: str,
     strict: bool = False,
-    head_chars: int = TEXT_HEAD_CHARS,
     path_glob: str = "*.warc*",
     archive_dir: str | None = None,
     max_files_per_trigger: int | None = None,
@@ -587,9 +577,7 @@ def stream_warc(
             "maxFilesPerTrigger", str(max_files_per_trigger)
         )
     binary = reader.load(drop_dir).select("path", "content")
-    return binary.mapInPandas(
-        _record_batches(strict, head_chars), WARC_SCHEMA
-    )
+    return binary.mapInPandas(_record_batches(strict), WARC_SCHEMA)
 
 
 def encode_warc(records: list[dict], gzip_members: bool = False) -> bytes:
@@ -717,7 +705,7 @@ def encode_warc(records: list[dict], gzip_members: bool = False) -> bytes:
 # the envelope fields the query doesn't touch.
 
 
-def encode_wat(pages: list[dict], gzip_members: bool = True) -> bytes:
+def encode_wat(pages: list[dict]) -> bytes:
     """Fixture writer: one WAT ``metadata`` record per page dict
     (``uri``; optional ``title``, ``links`` [{url, text}], ``metas``
     [{name, content}]) in the Common Crawl envelope shape."""
@@ -756,7 +744,7 @@ def encode_wat(pages: list[dict], gzip_members: bool = True) -> bytes:
             "uri": p["uri"],
             "body_bytes": _json.dumps(env).encode(),
         })
-    return encode_warc(recs, gzip_members=gzip_members)
+    return encode_warc(recs, gzip_members=True)
 
 
 def _wat_schema():
@@ -817,12 +805,12 @@ def parse_wat_metadata(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def wat_page_catalog(df: DataFrame, text_col: str = "text") -> DataFrame:
+def wat_page_catalog(df: DataFrame) -> DataFrame:
     """Scalar per-page WAT catalog: (page_uri, title, n_links,
     n_metas, first_link_url) — the driver-hashable surface."""
     from pyspark.sql import functions as F
 
-    pages = parse_wat_metadata(df, text_col)
+    pages = parse_wat_metadata(df, "text")
     return pages.select(
         "page_uri",
         "title",
@@ -835,13 +823,13 @@ def wat_page_catalog(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def wat_links(df: DataFrame, text_col: str = "text") -> DataFrame:
+def wat_links(df: DataFrame) -> DataFrame:
     """WAT link edges: (src, link_idx, url, anchor_text) — one row per
     outgoing link, position-preserving posexplode; joinable against
     the web_link_graph frame extracted from the raw WARC HTML."""
     from pyspark.sql import functions as F
 
-    pages = parse_wat_metadata(df, text_col)
+    pages = parse_wat_metadata(df, "text")
     return pages.select(
         F.col("page_uri").alias("src"),
         F.posexplode("links").alias("link_idx", "l"),

@@ -62,15 +62,13 @@ def _purge_stale_table(spark: SparkSession, table: str) -> None:
         shutil.rmtree(loc, ignore_errors=True)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Directory-partitioned write; readers filtering on ``partition_cols``
     scan only matching directories (dynamic + static pruning)."""
     (
         df.write.mode("overwrite")
         .partitionBy(*partition_cols)
-        .format(fmt)
+        .format("parquet")
         .save(path)
     )
 

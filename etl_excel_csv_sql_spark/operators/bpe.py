@@ -86,12 +86,7 @@ def _merge_pair_in_array(syms: Column, left: str, right: str) -> Column:
     return F.aggregate(syms, start, step, finish)
 
 
-def train_bpe(
-    word_counts: DataFrame,
-    n_merges: int = 20,
-    word_col: str = "w",
-    count_col: str = "cnt",
-) -> list[tuple[str, str, int]]:
+def train_bpe(word_counts: DataFrame, n_merges: int = 20) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from a (word, count) frame.
     Returns [(left, right, pair_count), ...] in merge order — the
     tokenizer artifact (tiny; ship it to the encode side).
@@ -101,8 +96,8 @@ def train_bpe(
     exact global TakeOrdered.
     """
     vocab = word_counts.select(
-        F.split(F.col(word_col), "").alias("syms"),
-        F.col(count_col).alias("cnt"),
+        F.split(F.col("w"), "").alias("syms"),
+        F.col("cnt"),
     ).localCheckpoint(eager=True)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -177,8 +172,6 @@ def apply_merges_sequential(
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
     engine: str = "auto",
 ) -> DataFrame:
     """Apply a learned merge table to documents. Two engines, identical
@@ -218,9 +211,9 @@ def bpe_encode(
             return out
 
         words = F.transform(
-            tokens(text_col), lambda w: encode_word(F.split(F.lower(w), ""))
+            tokens("text"), lambda w: encode_word(F.split(F.lower(w), ""))
         )
-        return df.withColumn(out_col, F.flatten(words))
+        return df.withColumn("bpe_tokens", F.flatten(words))
     if engine != "arrow":
         raise ValueError(f"engine must be 'auto', 'hof' or 'arrow', got {engine!r}")
 
@@ -231,7 +224,7 @@ def bpe_encode(
     pairs = [(left, right) for left, right, _ in merges]
     out_schema = T.StructType(
         list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.StringType()))]
+        + [T.StructField("bpe_tokens", T.ArrayType(T.StringType()))]
     )
     ws = re.compile(r"\s+")
 
@@ -267,7 +260,7 @@ def bpe_encode(
 
         for pdf in it:
             pdf = pdf.copy()
-            pdf[out_col] = pdf[text_col].map(encode_text)
+            pdf["bpe_tokens"] = pdf["text"].map(encode_text)
             yield pdf
 
     return df.mapInPandas(batches, out_schema)

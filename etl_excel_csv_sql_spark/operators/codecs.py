@@ -200,7 +200,7 @@ ADAM7_PASSES = (
 )
 
 
-def encode_png(arr: np.ndarray, level: int = 6, interlace: bool = False) -> bytes:
+def encode_png(arr: np.ndarray, interlace: bool = False) -> bytes:
     """(H, W, 3) uint8 RGB → PNG bytes (8-bit truecolor, filter type 0 on
     every row — valid PNG; decoders must accept any per-row filter).
     ``interlace=True`` writes Adam7: seven independently-filtered reduced
@@ -226,11 +226,11 @@ def encode_png(arr: np.ndarray, level: int = 6, interlace: bool = False) -> byte
             rows = np.zeros((ph, 1 + 3 * pw), dtype=np.uint8)
             rows[:, 1:] = sub.reshape(ph, 3 * pw)
             parts.append(rows.tobytes())
-        idat = zlib.compress(b"".join(parts), level)
+        idat = zlib.compress(b"".join(parts), 6)
     else:
         raw = np.zeros((h, 1 + 3 * w), dtype=np.uint8)
         raw[:, 1:] = arr.reshape(h, 3 * w)  # leading 0 byte = filter None
-        idat = zlib.compress(raw.tobytes(), level)
+        idat = zlib.compress(raw.tobytes(), 6)
     return (
         PNG_MAGIC
         + chunk(b"IHDR", ihdr)

@@ -454,7 +454,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.5,
-    seed: int = 42,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup pairs, exact-Jaccard verified.
 
@@ -471,7 +470,7 @@ def minhash_lsh_pairs(
     1-(1-j^(num_hashes/bands))^bands — 32 hashes / 8 bands ≈ r=4 rows per
     band, catching j≥0.5 with p≈0.63, j≥0.7 with p≈0.95.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, seed)
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, 42)
     banded = _band_keys(sigs, num_hashes, bands)
 
     a = banded.alias("a")
@@ -810,7 +809,6 @@ _SYNTH_DOC_VOCAB = 99991
 
 def synth_shingle_docs(
     df: DataFrame,
-    id_col: str = "doc_id",
     id_offset: int = 0,
     twin: bool = False,
 ) -> DataFrame:
@@ -831,8 +829,8 @@ def synth_shingle_docs(
     twin (byte-different container, identical content); all expressions
     are JVM-side concat/pmod — no Python in the row path."""
     base = df.select(
-        (F.col(id_col).cast("long") + F.lit(id_offset)).alias("doc_id"),
-        F.col(id_col).cast("long").alias("__seed"),
+        (F.col("doc_id").cast("long") + F.lit(id_offset)).alias("doc_id"),
+        F.col("doc_id").cast("long").alias("__seed"),
     )
     toks = [
         F.concat(
@@ -982,7 +980,6 @@ def simhash_pairs(
     text_col: str,
     n: int = 3,
     max_hamming: int = 3,
-    seed: int = 42,
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ max_hamming.
@@ -1021,14 +1018,14 @@ def simhash_pairs(
         # fully populated in the same job, where the r15 shape paid an
         # eager-checkpoint job AND a count job back to back. One fewer
         # job per call on the benched path.
-        sh = simhash_frame(df, id_col, text_col, n, seed).localCheckpoint(
+        sh = simhash_frame(df, id_col, text_col, n, 42).localCheckpoint(
             eager=False
         )
         n_blocks = (
             max_hamming + 1 if sh.count() <= _ADAPTIVE_DOCS else max_hamming + 3
         )
     else:
-        sh = simhash_frame(df, id_col, text_col, n, seed).localCheckpoint(
+        sh = simhash_frame(df, id_col, text_col, n, 42).localCheckpoint(
             eager=True
         )
     return hamming_pairs(sh, max_hamming, n_blocks)
@@ -1241,12 +1238,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    max_rounds: int = 10,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame, max_rounds: int = 10) -> DataFrame:
     """(id, component) for every node in the pair graph; component = min
     id reachable — the canonical keeper for a near-dup cluster.
 
@@ -1286,8 +1278,8 @@ def connected_components_star(
     # is fully populated within the probe's own job) — 2 fewer jobs per
     # call, and 1 more per round (VERDICT r15 #6).
     slim = pairs.select(
-        F.when(F.col(id_a).isNotNull(), F.col(id_a)).alias("u"),
-        F.when(F.col(id_b).isNotNull(), F.col(id_b)).alias("v"),
+        F.when(F.col("id_a").isNotNull(), F.col("id_a")).alias("u"),
+        F.when(F.col("id_b").isNotNull(), F.col("id_b")).alias("v"),
     )
     edges = _symmetrize(slim, "u", "v").localCheckpoint(eager=False)
     nodes = edges.select(F.col("u").alias("id")).distinct()
@@ -1359,20 +1351,15 @@ def connected_components_star(
     )
 
 
-def dedup_keep_first(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    max_iter: int = 12,
-) -> DataFrame:
+def dedup_keep_first(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """The dedup ACTION: drop every row whose id belongs to a near-dup
     component but is not that component's min-id keeper. Rows never seen in
     ``pairs`` are untouched. One broadcast-friendly anti join against the
     (small) loser set — the corpus itself never shuffles. Components come
-    from :func:`connected_components_star` (``max_iter`` bounds its
-    rounds), O(log n) rounds independent of graph diameter.
+    from :func:`connected_components_star` (at most 12 rounds),
+    O(log n) rounds independent of graph diameter.
     """
-    comps = connected_components_star(pairs, max_rounds=max_iter)
+    comps = connected_components_star(pairs, max_rounds=12)
     losers = comps.filter(F.col("id") != F.col("component")).select("id")
     return df.join(
         losers, df[id_col] == losers.id, "left_anti"
@@ -1386,7 +1373,6 @@ def embedding_dup_pairs(
     threshold: float = 0.95,
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold, exact-cosine verified.
 
@@ -1446,7 +1432,7 @@ def embedding_dup_pairs(
                 x
                 * (
                     (
-                        F.xxhash64(F.lit(seed + t), F.lit(p), F.col("__i"))
+                        F.xxhash64(F.lit(42 + t), F.lit(p), F.col("__i"))
                         % F.lit(1_000_003)
                     ).cast("double")
                     / F.lit(1_000_003.0)
@@ -1640,12 +1626,7 @@ def _setsim_candidates(
     return with_toks, cand
 
 
-def set_similarity_join(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def set_similarity_join(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Exact token-SET Jaccard self-join via pigeonhole signatures
     (PartEnum, Arasu/Ganti/Kaushik VLDB'06 — see
     :func:`_setsim_candidates` for why this replaced the r7 AllPairs
@@ -1668,7 +1649,7 @@ def set_similarity_join(
     arrays (array_intersect/array_union, JVM).
     Output: (id_a, id_b, jaccard) rounded to 6dp, jaccard >= threshold.
     """
-    with_prefix, cand = _setsim_candidates(df, threshold, id_col, text_col)
+    with_prefix, cand = _setsim_candidates(df, threshold, "doc_id", "text")
     a = with_prefix.select(F.col("id").alias("id_a"), F.col("toks").alias("ta"))
     b = with_prefix.select(F.col("id").alias("id_b"), F.col("toks").alias("tb"))
     inter = F.size(F.array_intersect("ta", "tb"))

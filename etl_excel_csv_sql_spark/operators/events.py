@@ -18,68 +18,56 @@ def tumbling_window_agg(
     df: DataFrame,
     ts_col: str = "ts",
     width: str = "1 hour",
-    group_cols: tuple[str, ...] = ("event_type",),
 ) -> DataFrame:
     """Fixed (tumbling) window aggregation via F.window — the same
     expression works under readStream with a watermark. One shuffle on
-    (window, groups); partials are map-side."""
+    (window, event_type); partials are map-side."""
     return (
-        df.groupBy(F.window(F.col(ts_col), width).alias("w"), *group_cols)
+        df.groupBy(F.window(F.col(ts_col), width).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            *group_cols,
+            "event_type",
             "n_events",
             "sum_value",
         )
     )
 
 
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "30 minutes",
-    slide: str = "10 minutes",
-    group_cols: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Sliding windows: each event lands in width/slide windows (explode is
-    handled by F.window itself)."""
+def sliding_window_agg(df: DataFrame) -> DataFrame:
+    """Sliding 30-minute windows every 10 minutes: each event lands in 3
+    windows (explode is handled by F.window itself)."""
     return (
-        df.groupBy(F.window(F.col(ts_col), width, slide).alias("w"), *group_cols)
+        df.groupBy(F.window(F.col("ts"), "30 minutes", "10 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            *group_cols,
+            "event_type",
             "n_events",
         )
     )
 
 
-def sessionize(
-    df: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(df: DataFrame) -> DataFrame:
     """Gap-based sessionization via lag + running sum (the batch equivalent
     of F.session_window): a new session starts when the gap to the previous
-    event of the same user exceeds ``gap_minutes``.
+    event of the same user exceeds 30 minutes.
 
     One shuffle on user_id (both window specs share it — Spark reuses the
     exchange). Skewed power-users are bounded by per-user event counts, not
     corpus size. Output: one row per session with bounds and counts.
     """
-    order = [F.col(ts_col).asc(), F.col("event_id").asc()]
-    w = Window.partitionBy(user_col).orderBy(*order)
-    gap_s = gap_minutes * 60
+    order = [F.col("ts").asc(), F.col("event_id").asc()]
+    w = Window.partitionBy("user_id").orderBy(*order)
+    gap_s = 30 * 60
     # unix_micros rejects TIMESTAMP_NTZ (what Spark 4 infers from parquet
     # written without isAdjustedToUTC); cast to TIMESTAMP first — a no-op
     # for tz-aware inputs, and deterministic (UTC session tz) for NTZ.
-    ts_micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    ts_micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    prev_ts = F.lag(F.col("ts")).over(w)
     prev_micros = F.unix_micros(prev_ts.cast("timestamp"))
     is_new = F.when(
         prev_ts.isNull() | ((ts_micros - prev_micros) > gap_s * 1_000_000),
@@ -87,11 +75,11 @@ def sessionize(
     ).otherwise(0)
     with_sess = df.withColumn("session_seq", F.sum(is_new).over(w))
     return (
-        with_sess.groupBy(user_col, "session_seq")
+        with_sess.groupBy("user_id", "session_seq")
         .agg(
             F.count("*").alias("n_events"),
-            F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format(F.max(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
         )
     )
 
@@ -117,13 +105,7 @@ def session_window_agg(
     )
 
 
-def funnel(
-    df: DataFrame,
-    steps: list[str],
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel(df: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered funnel analysis: per user, the earliest time each step was
     reached GIVEN the previous step had already been reached earlier
     (strictly increasing timestamps step to step).
@@ -136,8 +118,8 @@ def funnel(
     (the shape of every product-analytics funnel report).
     """
     per_user = df.select(
-        F.col(user_col).alias("u"), F.col(type_col).alias("t"),
-        F.col(ts_col).alias("ts"),
+        F.col("user_id").alias("u"), F.col("event_type").alias("t"),
+        F.col("ts"),
     )
     # earliest time of step 0 per user, then iterate: each later step's
     # conditional min depends on the accumulated frame, expressed as a
@@ -172,22 +154,15 @@ def funnel(
     )
 
 
-def extract_props_key(
-    df: DataFrame, key: str = "k", props_col: str = "props"
-) -> DataFrame:
+def extract_props_key(df: DataFrame, key: str = "k") -> DataFrame:
     """JSON prop extraction (get_json_object — JVM-side JSON path)."""
     return df.withColumn(
         f"prop_{key}",
-        F.get_json_object(F.col(props_col), f"$.{key}").cast("int"),
+        F.get_json_object(F.col("props"), f"$.{key}").cast("int"),
     )
 
 
-def multi_resolution_rollup(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    group_cols: tuple[str, ...] = ("event_type",),
-) -> tuple[DataFrame, DataFrame]:
+def multi_resolution_rollup(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Hypertable-style continuous aggregate: an hourly rollup from raw
     events, and a daily rollup derived FROM THE HOURLY PARTIALS (sum of
     sums, sum of counts) — never re-reading raw.
@@ -198,17 +173,17 @@ def multi_resolution_rollup(
     per level. Exact for decomposable aggregates (count/sum/min/max; use
     sketches for distinct counts). Returns (hourly, daily).
     """
-    val = F.col(value_col).cast("decimal(18,4)")
+    val = F.col("value").cast("decimal(18,4)")
     hourly = (
         df.groupBy(
-            F.date_trunc("hour", F.col(ts_col)).alias("hour_start"), *group_cols
+            F.date_trunc("hour", F.col("ts")).alias("hour_start"), "event_type"
         )
         .agg(F.count("*").alias("n_events"), F.sum(val).alias("sum_value"))
     )
     daily = (
         hourly.groupBy(
             F.date_trunc("day", F.col("hour_start")).alias("day_start"),
-            *group_cols,
+            "event_type",
         )
         .agg(
             F.sum("n_events").alias("n_events"),
@@ -351,12 +326,7 @@ def mad_anomalies(
     )
 
 
-def cohort_retention(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    max_weeks: int = 12,
-) -> DataFrame:
+def cohort_retention(df: DataFrame) -> DataFrame:
     """Weekly cohort-retention matrix in long form: users are cohorted by
     the ISO week of their FIRST event; each later active week counts them
     once at its week offset. The product-analytics staple
@@ -370,7 +340,7 @@ def cohort_retention(
     is over (cohort_week, offset) — tiny. Event rows are never joined
     pairwise; everything after shuffle 2 is user-cardinality, not
     event-cardinality. Offsets are whole weeks from the cohort week's
-    Monday (date_trunc 'week'), capped at ``max_weeks``.
+    Monday (date_trunc 'week'), capped at 12.
     """
     # ONE event scan: the deduped (user, week) frame is checkpointed and
     # feeds BOTH the cohort derivation and the activity join (without it
@@ -379,8 +349,8 @@ def cohort_retention(
     # date_trunc is monotone: min(trunc(ts)) == trunc(min(ts)).
     active = (
         df.select(
-            F.col(user_col).alias("u"),
-            F.date_trunc("week", F.col(ts_col)).cast("date").alias("active_week"),
+            F.col("user_id").alias("u"),
+            F.date_trunc("week", F.col("ts")).cast("date").alias("active_week"),
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -399,7 +369,7 @@ def cohort_retention(
         F.count(F.lit(1)).alias("cohort_size")
     )
     matrix = (
-        joined.where(F.col("week_offset") <= max_weeks)
+        joined.where(F.col("week_offset") <= 12)
         .groupBy("cohort_week", "week_offset")
         .agg(F.count(F.lit(1)).alias("active_users"))
     )
@@ -414,13 +384,7 @@ def cohort_retention(
     )
 
 
-def transition_matrix(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def transition_matrix(df: DataFrame) -> DataFrame:
     """First-order Markov transition frequencies between consecutive
     event types within each user's timeline: (from_type, to_type, n,
     probability). The behavioral-model fit step (next-action prediction,
@@ -432,16 +396,16 @@ def transition_matrix(
     second small aggregate joined back — all on type-cardinality frames.
     Ties in ts order break on the event id to keep the sequence total.
     """
-    w = Window.partitionBy(user_col).orderBy(F.col(ts_col), F.col(id_col))
+    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     # checkpoint the tiny (|types|² rows) pair counts: totals and the
     # normalization join both consume them, and without it the lag window
     # over the FULL event stream runs twice
     pairs = (
-        df.withColumn("prev_type", F.lag(type_col).over(w))
+        df.withColumn("prev_type", F.lag("event_type").over(w))
         .where(F.col("prev_type").isNotNull())
         .groupBy(
             F.col("prev_type").alias("from_type"),
-            F.col(type_col).alias("to_type"),
+            F.col("event_type").alias("to_type"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
@@ -457,16 +421,7 @@ def transition_matrix(
     )
 
 
-def attribute_last_touch(
-    df: DataFrame,
-    convert_type: str = "purchase",
-    touch_type: str = "click",
-    window_seconds: int = 7 * 24 * 3600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def attribute_last_touch(df: DataFrame) -> DataFrame:
     """Last-touch attribution: for every conversion event, the most
     recent preceding touch event by the same user, attributed when it
     falls within the lookback window — the marketing-analytics join that
@@ -480,15 +435,15 @@ def attribute_last_touch(
     after the window. (ts, id) tiebreak keeps the sequence total.
     """
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col), F.col(id_col))
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts"), F.col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    touch_ts = F.when(F.col(type_col) == touch_type, F.col(ts_col))
+    touch_ts = F.when(F.col("event_type") == "click", F.col("ts"))
     with_touch = df.withColumn(
         "last_touch_ts", F.last(touch_ts, ignorenulls=True).over(w)
     )
-    conv = with_touch.where(F.col(type_col) == convert_type)
+    conv = with_touch.where(F.col("event_type") == "purchase")
     # exact integer micros, then one division — engine-portable (a
     # double-cast timestamp difference would hinge on each engine's
     # ns-truncation flavor). cast("timestamp") first: unix_micros
@@ -496,33 +451,25 @@ def attribute_last_touch(
     # time_decay/kaplan_meier apply — this was the one call site
     # missing it, code-review r9 catch).
     gap = (
-        F.unix_micros(F.col(ts_col).cast("timestamp"))
+        F.unix_micros(F.col("ts").cast("timestamp"))
         - F.unix_micros(F.col("last_touch_ts").cast("timestamp"))
     ) / F.lit(1_000_000.0)
     return conv.select(
-        F.col(id_col).alias("conversion_id"),
-        F.col(user_col).alias("user_id"),
-        F.date_format(ts_col, "yyyy-MM-dd HH:mm:ss").alias("conversion_ts"),
+        F.col("event_id").alias("conversion_id"),
+        F.col("user_id"),
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("conversion_ts"),
         F.date_format("last_touch_ts", "yyyy-MM-dd HH:mm:ss").alias(
             "last_touch_ts"
         ),
         F.round(gap, 6).alias("seconds_since_touch"),
         (
             F.col("last_touch_ts").isNotNull()
-            & (gap <= F.lit(float(window_seconds)))
+            & (gap <= F.lit(7 * 24 * 3600.0))
         ).alias("attributed"),
     )
 
 
-def seasonal_anomalies(
-    df: DataFrame,
-    z_threshold: float = 3.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def seasonal_anomalies(df: DataFrame) -> DataFrame:
     """Seasonal-baseline anomaly screen: each event's value is judged
     against the mean/stddev of ITS OWN (event_type, hour-of-day) cell —
     the diurnal-pattern complement of the global/grouped MAD screen
@@ -536,11 +483,11 @@ def seasonal_anomalies(
     flagged rows with their z-score.
     """
     dec = "decimal(19,4)"
-    x = F.col(value_col).cast(dec)
-    hour = F.hour(ts_col)
+    x = F.col("value").cast(dec)
+    hour = F.hour("ts")
     base = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(type_col).alias("t"), hour.alias("h"))
+        df.where(F.col("value").isNotNull())
+        .groupBy(F.col("event_type").alias("t"), hour.alias("h"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(x).alias("sx"),
@@ -564,18 +511,18 @@ def seasonal_anomalies(
     )
     joined = df.join(
         F.broadcast(base),
-        (F.col(type_col) == F.col("t")) & (F.hour(ts_col) == F.col("h")),
+        (F.col("event_type") == F.col("t")) & (F.hour("ts") == F.col("h")),
     )
-    zscore = (F.col(value_col) - F.col("mu")) / F.col("sigma")
+    zscore = (F.col("value") - F.col("mu")) / F.col("sigma")
     return (
         joined.where(
-            (F.col("sigma") > 0) & (F.abs(zscore) > F.lit(z_threshold))
+            (F.col("sigma") > 0) & (F.abs(zscore) > F.lit(3.0))
         )
         .select(
-            F.col(id_col).alias("event_id"),
-            F.col(type_col).alias("event_type"),
+            F.col("event_id"),
+            F.col("event_type"),
             F.col("h").alias("hour_of_day"),
-            F.col(value_col).alias("value"),
+            F.col("value"),
             F.round("mu", 6).alias("seasonal_mean"),
             F.round("sigma", 6).alias("seasonal_std"),
             F.round(zscore, 6).alias("zscore"),
@@ -589,7 +536,6 @@ def ewma_by_group(
     ts_col: str,
     value_col: str,
     alpha: float = 0.3,
-    bucket: str = "hour",
 ) -> DataFrame:
     """Exponentially-weighted moving average per series — the classic
     smoothing/monitoring signal, computed as an ORDER-SENSITIVE fold:
@@ -611,7 +557,7 @@ def ewma_by_group(
     b = (
         df.groupBy(
             F.col(group_col).alias("group_key"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("h"),
+            F.date_trunc("hour", F.col(ts_col)).alias("h"),
         )
         .agg(
             (
@@ -636,13 +582,7 @@ def ewma_by_group(
     )
 
 
-def sessionize_bucketed(
-    df: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    gap_minutes: int = 30,
-    bucket_hours: int = 6,
-) -> DataFrame:
+def sessionize_bucketed(df: DataFrame) -> DataFrame:
     """Whale-proof sessionization: IDENTICAL semantics to
     :func:`sessionize` (same gap rule, same (ts, event_id) tie order,
     same session_seq numbering — the driver value-checks both against
@@ -664,20 +604,20 @@ def sessionize_bucketed(
        exact, no approximation.
 
     The only remaining per-user state is the summary window (#active
-    buckets rows). Pick ``bucket_hours`` >> gap; boundary correctness
+    buckets rows). The 6-hour bucket is >> the 30-minute gap; correctness
     does not depend on it (oracle-proven), only the skew bound does.
     """
-    gap_us = gap_minutes * 60 * 1_000_000
-    ts = F.col(ts_col).cast("timestamp")
+    gap_us = 30 * 60 * 1_000_000
+    ts = F.col("ts").cast("timestamp")
     tsu = F.unix_micros(ts)
     base = df.select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col),
+        F.col("user_id").alias("u"),
+        F.col("ts"),
         "event_id",
         tsu.alias("__tsu"),
-        F.floor(tsu / F.lit(bucket_hours * 3600 * 1_000_000)).alias("__b"),
+        F.floor(tsu / F.lit(6 * 3600 * 1_000_000)).alias("__b"),
     )
-    w_in = Window.partitionBy("u", "__b").orderBy(F.col(ts_col).asc(), F.col("event_id").asc())
+    w_in = Window.partitionBy("u", "__b").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     prev = F.lag("__tsu").over(w_in)
     is_new = F.when(
         prev.isNull() | ((F.col("__tsu") - prev) > gap_us), 1
@@ -702,14 +642,14 @@ def sessionize_bucketed(
     )
     offsets = summ.select("u", "__b", base_expr.alias("__base"))
     sessioned = ev.join(offsets, ["u", "__b"]).select(
-        F.col("u").alias(user_col),
-        ts_col,
+        F.col("u").alias("user_id"),
+        "ts",
         (F.col("__base") + F.col("__local")).alias("session_seq"),
     )
-    return sessioned.groupBy(user_col, "session_seq").agg(
+    return sessioned.groupBy("user_id", "session_seq").agg(
         F.count("*").alias("n_events"),
-        F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.date_format(F.max(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
     )
 
 
@@ -718,7 +658,6 @@ def acf_daily(
     value_col: str = "value",
     ts_col: str = "ts",
     max_lag: int = 7,
-    max_spine_days: int = 36_600,
 ) -> DataFrame:
     """Autocorrelation function of the daily metric total at lags
     1..max_lag — the seasonality detector behind every forecasting /
@@ -748,7 +687,7 @@ def acf_daily(
         .cast("double")
         .alias("y")
     )
-    cal = _day_spine(daily, max_spine_days, "acf_daily").select(
+    cal = _day_spine(daily, 36_600, "acf_daily").select(
         "d", F.coalesce("y", F.lit(0.0)).alias("y")
     )
     mean = cal.agg(F.avg("y").alias("m"))
@@ -818,8 +757,7 @@ def _day_spine(
                 span.cast("string"),
                 F.lit(
                     f" days (> max_spine_days={max_spine_days}) — "
-                    "likely corrupt timestamps; filter the input or "
-                    "raise max_spine_days"
+                    "likely corrupt timestamps; filter the input"
                 ),
             )
         ).cast("date"),
@@ -832,8 +770,6 @@ def _day_spine(
 
 def seasonal_decompose_daily(
     df: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
     period: int = 7,
     max_spine_days: int = 36_600,
 ) -> DataFrame:
@@ -860,9 +796,9 @@ def seasonal_decompose_daily(
     the moving-average window, the period-phase aggregate (``period``
     rows) and the final join all run on calendar-bounded frames.
     """
-    day = F.to_date(F.col(ts_col)).alias("d")
+    day = F.to_date(F.col("ts")).alias("d")
     daily = df.groupBy(day).agg(
-        F.sum(F.col(value_col).cast("decimal(18,4)"))
+        F.sum(F.col("value").cast("decimal(18,4)"))
         .cast("double")
         .alias("y")
     )
@@ -921,14 +857,8 @@ def seasonal_decompose_daily(
 
 def attribute_time_decay(
     df: DataFrame,
-    convert_type: str = "purchase",
     window_seconds: int = 24 * 3600,
     half_life_seconds: int = 6 * 3600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Time-decay MULTI-touch attribution: every touch in the lookback
     window shares a conversion's value, weighted exp(−Δt·ln2/half_life)
@@ -949,19 +879,19 @@ def attribute_time_decay(
     Output per channel (touch event_type): n_touches, attributed
     conversions reached, credited value (4dp).
     """
-    tsu = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    tsu = F.unix_micros(F.col("ts").cast("timestamp"))
     w_us = window_seconds * 1_000_000
-    touches = df.where(F.col(type_col) != convert_type).select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("channel"),
+    touches = df.where(F.col("event_type") != "purchase").select(
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("channel"),
         tsu.alias("t_us"),
         F.floor(tsu / w_us).alias("bkt"),
     )
-    convs = df.where(F.col(type_col) == convert_type).select(
-        F.col(user_col).alias("u"),
-        F.col(id_col).alias("conv_id"),
+    convs = df.where(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("u"),
+        F.col("event_id").alias("conv_id"),
         tsu.alias("c_us"),
-        F.col(value_col).cast("double").alias("val"),
+        F.col("value").cast("double").alias("val"),
     )
     conv_b = convs.withColumn(
         "bkt",
@@ -996,11 +926,7 @@ def attribute_time_decay(
     )
 
 
-def daily_user_accounting(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def daily_user_accounting(df: DataFrame) -> DataFrame:
     """Daily new / returning / cumulative-distinct user accounting —
     the growth dashboard's backbone. The naive formulation (COUNT
     DISTINCT over an ever-growing window) needs running set state; the
@@ -1015,15 +941,15 @@ def daily_user_accounting(
 
     Exact (no sketch), every window on the #days summary frame.
     """
-    day = F.to_date(F.col(ts_col))
+    day = F.to_date(F.col("ts"))
     first_day = (
-        df.groupBy(F.col(user_col).alias("u"))
+        df.groupBy(F.col("user_id").alias("u"))
         .agg(F.min(day).alias("d0"))
         .groupBy("d0")
         .agg(F.count(F.lit(1)).alias("n_new"))
     )
     active = (
-        df.select(day.alias("d"), F.col(user_col).alias("u"))
+        df.select(day.alias("d"), F.col("user_id").alias("u"))
         .distinct()
         .groupBy("d")
         .agg(F.count(F.lit(1)).alias("n_active"))

@@ -47,9 +47,7 @@ def is_valid_json(col: Column | str) -> Column:
     return c.isNotNull() & F.try_parse_json(c).isNotNull()
 
 
-def typed_extract(
-    df: DataFrame, json_col: str, ddl_schema: str, prefix: str = ""
-) -> DataFrame:
+def typed_extract(df: DataFrame, json_col: str, ddl_schema: str) -> DataFrame:
     """Project a JSON string column into typed top-level columns.
 
     ``ddl_schema`` is a DDL string (e.g. ``"k INT, tag STRING"``).
@@ -64,7 +62,7 @@ def typed_extract(
     # parameterized types like DECIMAL(10,2)
     names = [f.name for f in StructType.fromDDL(ddl_schema).fields]
     return df.select(
-        "*", *[parsed[n].alias(f"{prefix}{n}") for n in names]
+        "*", *[parsed[n].alias(n) for n in names]
     )
 
 

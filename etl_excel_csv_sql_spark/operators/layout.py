@@ -85,13 +85,7 @@ def zorder_value(bucket_a: Column, bucket_b: Column) -> Column:
     )
 
 
-def with_zorder(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    z_col: str = "zvalue",
-) -> DataFrame:
+def with_zorder(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Attach the z-value of (col_a, col_b) with in-plan min/max
     bucketization — one tiny aggregate + a narrow map, no driver action.
 
@@ -114,10 +108,10 @@ def with_zorder(
     cur = df.crossJoin(bounds).select(
         *orig,
         minmax_bucket(
-            F.col(col_a), F.col("__lo_a"), F.col("__hi_a"), bits
+            F.col(col_a), F.col("__lo_a"), F.col("__hi_a"), 16
         ).alias("__za"),
         minmax_bucket(
-            F.col(col_b), F.col("__lo_b"), F.col("__hi_b"), bits
+            F.col(col_b), F.col("__lo_b"), F.col("__hi_b"), 16
         ).alias("__zb"),
     )
     for shift, mask in _SPREAD_MASKS:
@@ -132,7 +126,7 @@ def with_zorder(
         *orig,
         F.col("__za")
         .bitwiseOR(F.shiftleft(F.col("__zb"), 1))
-        .alias(z_col),
+        .alias("zvalue"),
     )
 
 
@@ -142,14 +136,13 @@ def write_zordered(
     col_a: str,
     col_b: str,
     num_files: int,
-    bits: int = 16,
 ) -> None:
     """Write parquet clustered along the z-curve: range-partition on the
     z-value (each output file owns a contiguous z-interval ≈ a small
     rectangle of the 2-D space) and sort within partitions so row-group
     stats are tight too. Filters on EITHER dimension then prune most
     files at scan time."""
-    zdf = with_zorder(df, col_a, col_b, bits)
+    zdf = with_zorder(df, col_a, col_b)
     (
         zdf.repartitionByRange(num_files, F.col("zvalue"))
         .sortWithinPartitions("zvalue")
@@ -211,13 +204,7 @@ def hilbert_index(x: Column, y: Column, bits: int = 8) -> Column:
     return F.aggregate(levels, init, step).getField("d")
 
 
-def with_hilbert(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    h_col: str = "hvalue",
-    bits: int = 8,
-) -> DataFrame:
+def with_hilbert(df: DataFrame, col_a: str, col_b: str, bits: int = 8) -> DataFrame:
     """Attach the Hilbert clustering key over two numeric columns:
     equal-width ``bits``-bit buckets from in-plan min/max bounds (same
     bucketing as :func:`with_zorder`), then the xy2d fold. Use with
@@ -243,6 +230,6 @@ def with_hilbert(
     )
     return (
         df.crossJoin(F.broadcast(bounds))
-        .withColumn(h_col, hilbert_index(ba, bb, bits=bits))
+        .withColumn("hvalue", hilbert_index(ba, bb, bits=bits))
         .drop("__lo_a", "__hi_a", "__lo_b", "__hi_b")
     )

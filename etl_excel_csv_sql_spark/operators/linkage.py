@@ -89,19 +89,17 @@ def fuzzy_self_pairs(
     block: Column,
     max_dist: int = 2,
     max_block: int | None = None,
-    text_col: str = "text",
-    id_col: str = "rep_id",
 ) -> DataFrame:
     """Blocked approximate-duplicate pairs among distinct strings.
 
     ``distinct_df`` is the output of :func:`canonicalize_exact` (or any
-    frame with a unique ``id_col`` per distinct ``text_col``). Returns
+    frame with a unique ``rep_id`` per distinct ``text``). Returns
     (id_a, id_b, text_a, text_b, dist, similarity) with id_a < id_b,
     dist <= max_dist, similarity = 1 - dist/max(len_a, len_b).
     """
     dist = F.levenshtein("text_a", "text_b")
     return (
-        _blocked_candidate_pairs(distinct_df, block, max_block, text_col, id_col)
+        _blocked_candidate_pairs(distinct_df, block, max_block, "text", "rep_id")
         .where(dist <= F.lit(max_dist))
         .select(
             "id_a",
@@ -127,13 +125,13 @@ def last_token_block(text_col: str = "text") -> Column:
     return F.element_at(F.split(F.col(text_col), " "), -1)
 
 
-def prefix_length_block(text_col: str = "text", prefix: int = 1) -> Column:
-    """Block on (first chars, length band) — the complementary pass that
+def prefix_length_block() -> Column:
+    """Block on (first char, length band) — the complementary pass that
     catches suffix edits last-token blocking misses."""
     return F.concat_ws(
         "|",
-        F.substring(F.col(text_col), 1, prefix),
-        (F.length(text_col) / F.lit(4)).cast("int").cast("string"),
+        F.substring(F.col("text"), 1, 1),
+        (F.length("text") / F.lit(4)).cast("int").cast("string"),
     )
 
 

@@ -122,31 +122,27 @@ def extract_image_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     return df.mapInPandas(batches, MEDIA_META_SCHEMA)
 
 
-def frame_sample_plan(
-    df: DataFrame, every_n_seconds: int = 5, duration_col: str = "byte_len"
-) -> DataFrame:
-    """Video frame-sampling *plan*: explode one row per sampled frame index
-    (video demux has no stdlib decoder — the duration here is derived from
+def frame_sample_plan(df: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: explode one row per frame sampled every
+    5 s (video demux has no stdlib decoder — the duration here is derived from
     byte_len pending one). Shows the scale-correct shape: explode →
     repartition by (media_id % shards) before the heavy decode so long
     videos spread across executors."""
-    n_frames = (F.col(duration_col) / F.lit(1_000_000 * every_n_seconds)).cast("int") + 1
+    n_frames = (F.col("byte_len") / F.lit(5_000_000)).cast("int") + 1
     return df.select(
         "media_id",
         F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-    ).withColumn("sample_ts_s", F.col("frame_idx") * every_n_seconds)
+    ).withColumn("sample_ts_s", F.col("frame_idx") * 5)
 
 
-def audio_frame_plan(
-    df: DataFrame, hop_ms: int = 20, duration_ms_col: str = "duration_ms"
-) -> DataFrame:
+def audio_frame_plan(df: DataFrame, hop_ms: int = 20) -> DataFrame:
     """Audio analysis-frame plan over REAL demuxed durations: one row per
     ``hop_ms`` hop starting inside [0, duration] — the standard
     feature-extraction framing (a 20 ms hop is the classic MFCC stride).
     Integer arithmetic throughout so the plan is externally predictable.
     Same scale shape as ``frame_sample_plan``: a narrow explode whose
     output should be repartitioned before any heavy per-frame decode."""
-    n_hops = (F.col(duration_ms_col) / F.lit(hop_ms)).cast("long")
+    n_hops = (F.col("duration_ms") / F.lit(hop_ms)).cast("long")
     return df.select(
         "media_id",
         F.explode(F.sequence(F.lit(0).cast("long"), n_hops)).alias("frame_idx"),
@@ -400,14 +396,18 @@ def _extract_meta_frame(
     metadata kernel — the one Arrow extraction template behind every
     extract_*_meta family (r12 review: eight byte-identical copies of
     this loop drifted one strict-mode fix away from divergence).
-    Undecodable payloads yield nulls unless ``strict``."""
+    Null or undecodable payloads yield nulls unless ``strict``, which
+    raises on either, as every hand-rolled kernel does."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out: dict[str, list] = {k: [] for k in cols}
             for payload in pdf["payload"]:
                 vals = None
-                if payload is not None:
+                if payload is None:
+                    if strict:
+                        raise ValueError("null payload in strict metadata extract")
+                else:
                     try:
                         vals = kernel(bytes(payload))
                     except ValueError:
@@ -640,9 +640,7 @@ FRAME_AHASH_SCHEMA = StructType(
 )
 
 
-def video_frame_ahash(
-    df: DataFrame, hash_size: int = 8, strict: bool = False
-) -> DataFrame:
+def video_frame_ahash(df: DataFrame, strict: bool = False) -> DataFrame:
     """Per-frame perceptual hash over AVI payloads — REAL pixels
     end-to-end: movi walk → frame decode → grayscale → the same
     block-mean aHash images use. Uncompressed-DIB ('db') frames decode
@@ -692,7 +690,7 @@ def video_frame_ahash(
                     gray = arr.astype(np.float64).mean(axis=2)
                     out["media_id"].append(mid)
                     out["frame_idx"].append(idx)
-                    out["ahash"].append(_ahash_bits(gray, hash_size))
+                    out["ahash"].append(_ahash_bits(gray, 8))
             yield pd.DataFrame(
                 {k: pd.Series(v, dtype="object") for k, v in out.items()}
             )
@@ -863,13 +861,7 @@ def frame_neardup_pairs(
     return out
 
 
-def audio_fingerprints(
-    df: DataFrame,
-    frame_len: int = 2048,
-    hop: int = 1024,
-    n_bands: int = 65,
-    strict: bool = False,
-) -> DataFrame:
+def audio_fingerprints(df: DataFrame, strict: bool = False) -> DataFrame:
     """Per-frame spectral fingerprints over RIFF-WAVE payloads — real
     PCM decode (``codecs.decode_wav``) → channel mean → Haitsma–Kalker
     sub-fingerprints (:func:`_audio_fp_bits`). Output (media_id,
@@ -895,7 +887,7 @@ def audio_fingerprints(
                         raise
                     continue
                 mono = pcm.astype(np.float64).mean(axis=1)
-                fps = _audio_fp_bits(mono, rate, frame_len, hop, n_bands)
+                fps = _audio_fp_bits(mono, rate, 2048, 1024, 65)
                 if not fps and strict:
                     raise ValueError(
                         f"clip {mid}: shorter than two analysis frames"
@@ -918,7 +910,6 @@ def synth_audio_fp_payloads(
     perturb: bool = False,
     remux: bool = False,
     n_samples: int = 8192,
-    rate: int = 8000,
 ) -> DataFrame:
     """(id) → (media_id, payload): mono PCM16 WAV clips purpose-built
     for fingerprint tests — a stack of four id-keyed CHIRPED sinusoids
@@ -939,7 +930,7 @@ def synth_audio_fp_payloads(
             out_ids, payloads = [], []
             for mid in pdf["media_id"]:
                 mid = int(mid)
-                t = np.arange(n_samples, dtype=np.float64) / rate
+                t = np.arange(n_samples, dtype=np.float64) / 8000
                 sig = np.zeros(n_samples)
                 for k in range(4):
                     # md5-keyed base frequency (r11): the old linear
@@ -956,7 +947,7 @@ def synth_audio_fp_payloads(
                         % 2600
                     )
                     freq = f0 * (0.85 + 0.3 * t / t[-1])
-                    phase = 2 * np.pi * np.cumsum(freq) / rate
+                    phase = 2 * np.pi * np.cumsum(freq) / 8000
                     env = 0.6 + 0.4 * np.sin(
                         2 * np.pi
                         * (0.4 + ((mid * 13 + 5 * k) % 9) / 6.0)
@@ -969,7 +960,7 @@ def synth_audio_fp_payloads(
                     sig += rng.uniform(-60.0, 60.0, n_samples)
                 pcm = np.clip(sig, -32768, 32767).astype(np.int16)
                 out_ids.append(mid + id_offset)
-                wav = codecs.encode_wav(pcm, rate, 1)
+                wav = codecs.encode_wav(pcm, 8000, 1)
                 payloads.append(codecs.remux_wav(wav) if remux else wav)
             yield pd.DataFrame(
                 {
@@ -1053,13 +1044,7 @@ def _ahash_bits(gray: np.ndarray, hash_size: int) -> int:
     return val
 
 
-def ahash_images(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    hash_size: int = 8,
-    strict: bool = False,
-) -> DataFrame:
+def ahash_images(df: DataFrame, strict: bool = False) -> DataFrame:
     """Perceptual average-hash (aHash) per image: decode (real stdlib
     BMP/PNG/PPM codecs) → grayscale → block-mean downsample to
     hash_size² → threshold at the mean → 64-bit fingerprint. The image
@@ -1073,8 +1058,8 @@ def ahash_images(
     payloads yield NULL (or raise when ``strict``).
     """
     src = df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
+        F.col("media_id").cast("long").alias("media_id"),
+        F.col("payload"),
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1088,7 +1073,7 @@ def ahash_images(
                         if arr.ndim == 3
                         else arr.astype(np.float64)
                     )
-                    hashes.append(_ahash_bits(gray, hash_size))
+                    hashes.append(_ahash_bits(gray, 8))
                 except Exception:
                     if strict:
                         raise
@@ -1100,14 +1085,12 @@ def ahash_images(
     return src.mapInPandas(batches, AHASH_SCHEMA)
 
 
-def perturbed_image_payloads(
-    df: DataFrame, id_col: str = "doc_id", id_offset: int = 1_000_000
-) -> DataFrame:
+def perturbed_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Near-duplicate twins of :func:`synth_image_payloads`: same synth
     pixels per the id contract, plus ±2 noise on a sparse pixel grid —
     visually the same image (a re-encode/transmission-noise stand-in),
     so each twin must land within a small Hamming ball of its original.
-    Twin ids are original + ``id_offset``."""
+    Twin ids are original + 1,000,000."""
     ids = df.select(F.col(id_col).cast("long").alias("media_id"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1126,7 +1109,7 @@ def perturbed_image_payloads(
                 # ids. Wrapping maps each noisy pixel to family member
                 # (v±2) mod 256, keeping every format encodable.
                 arr = (arr % 256).astype(np.uint8)
-                out_ids.append(mid + id_offset)
+                out_ids.append(mid + 1_000_000)
                 payloads.append(codecs.encode_image(arr, fmt))
             yield pd.DataFrame(
                 {
@@ -1972,14 +1955,13 @@ def _dct_matrix(n: int) -> np.ndarray:
     return c
 
 
-def _phash_bits(gray: np.ndarray, hash_size: int = 8, highfreq: int = 4) -> int:
-    """DCT perceptual hash: block-mean downsample to
-    (hash_size·highfreq)², 2-D DCT-II, keep the top-left hash_size²
-    low-frequency block, threshold at the MEDIAN of the block with the
+def _phash_bits(gray: np.ndarray) -> int:
+    """DCT perceptual hash: block-mean downsample to 32² (8·4), 2-D
+    DCT-II, keep the top-left 8² low-frequency block, threshold at the MEDIAN of the block with the
     DC term excluded (DC is overall brightness — dropping it is what
     makes pHash brightness-invariant, where aHash is not), pack
     row-major MSB-first with the DC bit forced to 0."""
-    n = hash_size * highfreq
+    n = 32
     # reuse the integral-image block-mean from aHash for the downsample
     cells = np.zeros((n, n), dtype=np.float64)
     h, w = gray.shape
@@ -2000,7 +1982,7 @@ def _phash_bits(gray: np.ndarray, hash_size: int = 8, highfreq: int = 4) -> int:
     ) / areas
     c = _dct_matrix(n)
     freq = c @ cells @ c.T
-    block = freq[:hash_size, :hash_size]
+    block = freq[:8, :8]
     flat = block.flatten()
     med = np.median(flat[1:])  # DC excluded from the threshold
     bits = 0
@@ -2015,12 +1997,7 @@ def _phash_bits(gray: np.ndarray, hash_size: int = 8, highfreq: int = 4) -> int:
     return bits
 
 
-def phash_images(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    strict: bool = False,
-) -> DataFrame:
+def phash_images(df: DataFrame, strict: bool = False) -> DataFrame:
     """DCT perceptual hash (pHash) per image — the frequency-domain
     sibling of :func:`ahash_images`: aHash thresholds raw block means
     (cheap, but any global brightness/contrast shift flips bits), pHash
@@ -2030,8 +2007,8 @@ def phash_images(
     same 64-bit output, same downstream ``dedup.hamming_pairs`` banding
     (fingerprint-agnostic); only (id, hash) ever shuffles."""
     src = df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
+        F.col("media_id").cast("long").alias("media_id"),
+        F.col("payload"),
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -49,8 +49,6 @@ PACK_SCHEMA = (
 
 def pack_sequences_ffd(
     df: DataFrame,
-    id_col: str = "doc_id",
-    len_col: str = "n_tokens",
     capacity: int = 4096,
     n_buckets: int = 1024,
     bucket: Column | None = None,
@@ -68,12 +66,12 @@ def pack_sequences_ffd(
         raise ValueError(f"capacity must be positive, got {capacity}")
     if bucket is None:
         bucket = F.pmod(
-            F.xxhash64(F.lit("pack-v1"), F.col(id_col)), F.lit(n_buckets)
+            F.xxhash64(F.lit("pack-v1"), F.col("doc_id")), F.lit(n_buckets)
         )
     base = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         bucket.cast("long").alias("bucket"),
-        F.col(len_col).cast("long").alias("n_tokens"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -682,7 +682,8 @@ class _Document:
             raise ValueError("ObjStm object offset overruns")
         return _Lexer(raw, first + ooff).object()
 
-    def resolve(self, value, depth: int = 0):
+    def resolve(self, value):
+        depth = 0
         while isinstance(value, _Ref):
             if depth > 32:
                 raise ValueError("indirect reference chain too deep")

@@ -63,15 +63,10 @@ def in_range(col: str, lo: float, hi: float) -> Check:
     )
 
 
-def in_set(col: str, values: list[str], name: str | None = None) -> Check:
-    """``name`` disambiguates two same-column set checks in one suite —
-    constraint names become agg aliases, so duplicates would otherwise
-    crash run_checks (which now raises a CLEAR error instead of Spark's
-    AMBIGUOUS_REFERENCE)."""
+def in_set(col: str, values: list[str]) -> Check:
+    """Violated when the value is not in ``values``; NULL passes."""
     c = F.col(col)
-    return Check(
-        name or f"in_set({col})", c.isNotNull() & ~c.isin(values)
-    )
+    return Check(f"in_set({col})", c.isNotNull() & ~c.isin(values))
 
 
 def matches(col: str, pattern: str, name: str | None = None) -> Check:

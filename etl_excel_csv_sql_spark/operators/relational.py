@@ -23,7 +23,7 @@ def money_sum(col: str | Column) -> Column:
     return F.sum(c.cast("decimal(18,4)")).cast("double")
 
 
-def spread_for_compute(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Repartition ONLY when the input is underpartitioned for CPU-heavy
     per-row work (e.g. one small parquet file → one task → a 32-core
     executor running single-threaded). At production scale inputs carry
@@ -55,7 +55,7 @@ def spread_for_compute(df: DataFrame, min_partitions: int | None = None) -> Data
       as-is instead of re-shuffling on every call.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     if _repartition_count(df) >= target:
         return df
     conf = spark._jsparkSession.sessionState().conf()
@@ -168,15 +168,15 @@ def grouped_bounded_topk(
 
 
 def broadcast_dim_join(
-    fact: DataFrame, dim: DataFrame, on: Column | Sequence[str], how: str = "inner"
+    fact: DataFrame, dim: DataFrame, on: Column | Sequence[str]
 ) -> DataFrame:
     """Fact ⋈ dimension with an explicit broadcast hint: the dimension is
     shipped to every executor and the fact table never shuffles. This is
     the join shape for region/nation/supplier/part at any scale factor."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
-def table_fingerprint(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+def table_fingerprint(df: DataFrame) -> DataFrame:
     """One-row order/partition-independent content checksum:
     (n_rows, fingerprint) where fingerprint = Σ xxhash64(row) in
     DECIMAL(38,0) (exact, commutative — any row order, partitioning, or
@@ -191,11 +191,10 @@ def table_fingerprint(df: DataFrame, cols: Sequence[str] | None = None) -> DataF
     identically and NULL-position corruption is invisible (ADVICE r2).
     Each column becomes struct(isnull, value) so null-ness at each
     position feeds the hash explicitly."""
-    use_cols = list(cols) if cols is not None else df.columns
     row_hash = F.xxhash64(
         *[
             F.struct(F.isnull(c).alias("n"), F.col(c).alias("v"))
-            for c in use_cols
+            for c in df.columns
         ]
     )
     return df.agg(
@@ -323,8 +322,6 @@ def scd2_apply(
     key_cols: Sequence[str],
     tracked_cols: Sequence[str],
     effective_ts: Column,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
     close_missing: bool = False,
 ) -> DataFrame:
     """Apply a full snapshot to a type-2 slowly-changing dimension.
@@ -348,8 +345,8 @@ def scd2_apply(
     """
     keys = list(key_cols)
     tracked = list(tracked_cols)
-    cur = dim.filter(F.col(valid_to).isNull())
-    hist = dim.filter(F.col(valid_to).isNotNull())
+    cur = dim.filter(F.col("valid_to").isNull())
+    hist = dim.filter(F.col("valid_to").isNotNull())
 
     snap = snapshot.select(
         *[F.col(k).alias(f"__sk_{k}") for k in keys],
@@ -373,7 +370,7 @@ def scd2_apply(
     in_dim = F.col("__in_dim").isNotNull()
     in_snap = F.col("__in_snap").isNotNull()
 
-    dim_cols = [*keys, *tracked, valid_from, valid_to]
+    dim_cols = [*keys, *tracked, "valid_from", "valid_to"]
     # current rows that survive unchanged
     kept = joined.filter(in_dim & in_snap & same_attrs).select(*dim_cols)
     # current rows closed: attrs changed, or key gone (when close_missing)
@@ -381,14 +378,14 @@ def scd2_apply(
         (in_dim & ~in_snap) if close_missing else F.lit(False)
     )
     closed = joined.filter(close_cond).select(
-        *keys, *tracked, F.col(valid_from), effective_ts.alias(valid_to)
+        *keys, *tracked, F.col("valid_from"), effective_ts.alias("valid_to")
     )
     # new open rows: changed attrs (new version) or brand-new key
     opened = joined.filter(in_snap & (~in_dim | ~same_attrs)).select(
         *[F.col(f"__sk_{k}").alias(k) for k in keys],
         *[F.col(f"__sv_{t}").alias(t) for t in tracked],
-        effective_ts.alias(valid_from),
-        F.lit(None).cast("timestamp").alias(valid_to),
+        effective_ts.alias("valid_from"),
+        F.lit(None).cast("timestamp").alias("valid_to"),
     )
     # keys absent from the snapshot, not closed → stay current
     missing_kept = (
@@ -877,30 +874,11 @@ def apply_cdc(
     return kept.select(*keys, *compare).unionByName(incoming)
 
 
-def _pin_two_consumer_frame(df: DataFrame, reliable: bool) -> DataFrame:
-    """The determinism pin shared by global_row_number /
-    global_prefix_sum: both need the offsets aggregation and the final
-    join to observe ONE materialization of the range-partitioned frame
-    (see the r14 rank-corruption note below). ``localCheckpoint`` is
-    the default — an eager Spark job fires at plan-build time and the
-    blocks live unreplicated on executors (an executor loss after the
-    pin FAILS the query instead of recomputing, and blocks linger until
-    the frame is GC'd; ADVICE r14). Long-lived sessions / cluster
-    deployments pass ``reliable=True`` to use ``checkpoint(eager=True)``
-    instead, which writes to ``spark.sparkContext.setCheckpointDir``
-    storage and survives executor loss at the cost of one HDFS/S3
-    round-trip."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def global_row_number(
     df: DataFrame,
     order: Sequence[Column],
     out_col: str = "rn",
     num_partitions: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Global 1-based row number under a TOTAL order, without the
     single-partition window a plain ``row_number() OVER (ORDER BY ...)``
@@ -948,7 +926,9 @@ def global_row_number(
         )
         .drop("__mid")
     )
-    local = _pin_two_consumer_frame(local, reliable_checkpoint)
+    # the pin's blocks live unreplicated on executors: an executor loss
+    # after it fails the query instead of recomputing
+    local = local.localCheckpoint(eager=True)
     w_pid = Window.orderBy("__pid").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -993,7 +973,6 @@ def global_prefix_sum(
     value_col: str,
     out_col: str = "prefix",
     num_partitions: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Running total of ``value_col`` under a TOTAL order, distributed
     the same way as :func:`global_row_number` (range partition →
@@ -1019,10 +998,9 @@ def global_prefix_sum(
     )
     # same two-consumer materialization pin as global_row_number (r14):
     # offsets and the final join must see ONE range partitioning
-    local = _pin_two_consumer_frame(
-        ranged.withColumn("__lps", F.sum(value_col).over(w_local)),
-        reliable_checkpoint,
-    )
+    local = ranged.withColumn(
+        "__lps", F.sum(value_col).over(w_local)
+    ).localCheckpoint(eager=True)
     w_pid = Window.orderBy("__pid").rowsBetween(
         Window.unboundedPreceding, -1
     )

@@ -179,16 +179,11 @@ def url_path(url) -> Column:
     return F.when(p == "", F.lit("/")).otherwise(p)
 
 
-def filter_crawlable(
-    urls: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url_norm",
-    host_col: str = "host",
-) -> DataFrame:
+def filter_crawlable(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """URLs → URLs + (verdict boolean, winning rule) under the module's
     longest-match semantics.
 
-    ``urls``: any frame carrying ``url_col`` and ``host_col`` (the
+    ``urls``: any frame carrying ``url_norm`` and ``host`` (the
     normalize + host-extract output of operators/urls.py).
     ``rules``: (host, rule in {'allow','disallow'}, path) — one row per
     directive, e.g. exploded from ``parse_robots_text`` over fetched
@@ -213,7 +208,7 @@ def filter_crawlable(
     rows; this one merely shares one verdict per URL)."""
     narrow = (
         urls.select(
-            F.col(url_col).alias("__u"), F.col(host_col).alias("__h")
+            F.col("url_norm").alias("__u"), F.col("host").alias("__h")
         )
         .dropDuplicates(["__u"])
         .withColumn("__path", url_path(F.col("__u")))
@@ -260,7 +255,7 @@ def filter_crawlable(
         )
     )
     return urls.join(
-        verdicts, urls[url_col].eqNullSafe(verdicts["__u"]), "left"
+        verdicts, urls["url_norm"].eqNullSafe(verdicts["__u"]), "left"
     ).drop("__u")
 
 
@@ -271,12 +266,7 @@ ROBOTS_RULES_SCHEMA = (
 _ROBOTS_COLS = tuple(f.split(" ")[0] for f in ROBOTS_RULES_SCHEMA.split(", "))
 
 
-def parse_robots_frame(
-    df,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    agent: str = "*",
-):
+def parse_robots_frame(df):
     """DISTRIBUTED robots.txt parsing (r14): (host, fetched robots
     body) → one tidy row per directive, via one Arrow ``mapInPandas``
     pass — a real frontier holds robots bodies for MILLIONS of hosts,
@@ -286,7 +276,7 @@ def parse_robots_frame(
 
     Output rows by ``kind``:
 
-    - ``rule``: (rule ∈ allow|disallow, path) for the agent's group —
+    - ``rule``: (rule ∈ allow|disallow, path) for the ``*`` group —
       the frame ``filter_crawlable`` consumes directly;
     - ``delay``: (crawl_delay_s) — resolved per
       ``parse_robots_crawl_delay``, feeds ``fetch_schedule_delays``;
@@ -312,19 +302,17 @@ def parse_robots_frame(
                 out["crawl_delay_s"].append(delay)
                 out["sitemap_url"].append(sm)
 
-            for host, text in zip(pdf[host_col], pdf[text_col]):
+            for host, text in zip(pdf["host"], pdf["robots_txt"]):
                 if text is None:
                     continue
                 text = str(text)
-                for rule, path in parse_robots_text(text, agent):
+                for rule, path in parse_robots_text(text, "*"):
                     add(host, "rule", rule=rule, path=path)
-                delay = parse_robots_crawl_delay(text, agent)
+                delay = parse_robots_crawl_delay(text, "*")
                 if delay is not None:
                     add(host, "delay", delay=float(delay))
                 for sm in parse_robots_sitemaps(text):
                     add(host, "sitemap", sm=sm)
             yield pd.DataFrame(out)
 
-    return df.select(
-        F.col(host_col).alias(host_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(batches, ROBOTS_RULES_SCHEMA)
+    return df.select("host", "robots_txt").mapInPandas(batches, ROBOTS_RULES_SCHEMA)

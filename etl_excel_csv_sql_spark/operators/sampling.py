@@ -63,13 +63,11 @@ def group_safe_split(
     df: DataFrame,
     group_col: str,
     test_fraction: float = 0.1,
-    salt: str = "split-v1",
-    split_col: str = "split",
 ) -> DataFrame:
     """hash_split keyed on ``group_col``: every row of a group gets the
     same side. Pair with dedup fingerprints/components so near-duplicates
     cannot leak across the split."""
-    return hash_split(df, group_col, test_fraction, salt, split_col)
+    return hash_split(df, group_col, test_fraction, "split-v1", "split")
 
 
 def stratified_sample(
@@ -310,7 +308,6 @@ def kfold_assignment(
     id_col: str,
     k: int = 5,
     salt: str = "fold-v1",
-    fold_col: str = "fold",
 ) -> DataFrame:
     """Deterministic k-fold cross-validation assignment: fold =
     hash-bucket(id) mod k — engine-portable (md5), partitioning- and
@@ -319,4 +316,4 @@ def kfold_assignment(
     (pass a group id as ``id_col``) when folds must not straddle groups.
     """
     bucket = F.conv(_hash_bucket(F.col(id_col), salt), 16, 10).cast("long")
-    return df.withColumn(fold_col, (bucket % k).cast("int"))
+    return df.withColumn("fold", (bucket % k).cast("int"))

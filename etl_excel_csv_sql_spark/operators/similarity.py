@@ -64,10 +64,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     exclude_self: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine.
@@ -90,14 +86,14 @@ def brute_force_topk(
     # cosines (corpus norm × query norm, exactly as cosine_similarity
     # ordered its operands).
     corpus_n = spread_for_compute(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        l2_norm(F.col("embedding")).alias("__cn"),
     )
     queries_n = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qv"),
-        l2_norm(F.col(query_vec_col)).alias("__qn"),
+        F.col("query_id"),
+        F.col("query_vec").alias("__qv"),
+        l2_norm(F.col("query_vec")).alias("__qn"),
     )
     denom = F.col("__cn") * F.col("__qn")
     sim = F.when(
@@ -259,7 +255,6 @@ def _kmeans_centroids_mllib(
     n_cells: int,
     iters: int,
     vec_col: str,
-    seed: int = 42,
 ) -> DataFrame:
     """MLlib KMeans → (cell_id, centroid) rows. The model's
     clusterCenters() is k·dim floats on the driver — the same tiny
@@ -285,7 +280,7 @@ def _kmeans_centroids_mllib(
     model = KMeans(
         k=n_cells,
         maxIter=max(1, iters),
-        seed=seed,
+        seed=42,
         featuresCol="features",
         distanceMeasure="cosine",
     ).fit(feats)
@@ -694,42 +689,33 @@ SYNTH_CLUSTER_CELLS = 16
 SYNTH_CLUSTER_DIM = 64
 
 
-def synth_cluster_embeddings(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    n_cells: int = SYNTH_CLUSTER_CELLS,
-    dim: int = SYNTH_CLUSTER_DIM,
-) -> DataFrame:
+def synth_cluster_embeddings(df: DataFrame) -> DataFrame:
     """(id) → (vec_id, embedding) planted cluster geometry: vector i is
-    EXACTLY the one-hot axis e_{i mod n_cells} (array<float>). Every
-    cosine is float-exact (1.0 within a cluster, 0.0 across), so IVF
-    top-k over this corpus has a closed-form literal answer: query q's
-    neighbors are the k smallest ids ≡ q (mod n_cells), cosine 1.0,
-    ties broken by id asc (_rank_key). All JVM-side (sequence/
+    EXACTLY the one-hot axis e_{i mod C} (array<float>), C =
+    SYNTH_CLUSTER_CELLS. Every cosine is float-exact (1.0 within a
+    cluster, 0.0 across), so IVF top-k over this corpus has a closed-form
+    literal answer: query q's neighbors are the k smallest ids ≡ q
+    (mod C), cosine 1.0, ties broken by id asc (_rank_key). All JVM-side (sequence/
     transform) — no Python in the row path."""
-    cluster = F.pmod(F.col(id_col).cast("long"), F.lit(n_cells))
+    cluster = F.pmod(F.col("vec_id").cast("long"), F.lit(SYNTH_CLUSTER_CELLS))
     vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(SYNTH_CLUSTER_DIM - 1)),
         lambda i: F.when(i == cluster, F.lit(1.0)).otherwise(F.lit(0.0)),
     ).cast("array<float>")
     return df.select(
-        F.col(id_col).cast("long").alias("vec_id"), vec.alias("embedding")
+        F.col("vec_id").cast("long").alias("vec_id"), vec.alias("embedding")
     )
 
 
-def synth_cluster_centroids(
-    spark,
-    n_cells: int = SYNTH_CLUSTER_CELLS,
-    dim: int = SYNTH_CLUSTER_DIM,
-) -> DataFrame:
-    """(cell_id, centroid): the n_cells one-hot axes — the exact cluster
-    centers of :func:`synth_cluster_embeddings`, for IvfIndex.build's
-    bring-your-own-centroids path. Assignment under these centroids is
-    exactly ``vec_id mod n_cells`` (cosine 1 to the own axis, 0 to every
-    other — no ties)."""
-    cells = spark.range(n_cells).select(F.col("id").alias("cell_id"))
+def synth_cluster_centroids(spark) -> DataFrame:
+    """(cell_id, centroid): the SYNTH_CLUSTER_CELLS one-hot axes — the
+    exact cluster centers of :func:`synth_cluster_embeddings`, for
+    IvfIndex.build's bring-your-own-centroids path. Assignment under
+    these centroids is exactly ``vec_id mod SYNTH_CLUSTER_CELLS`` (cosine
+    1 to the own axis, 0 to every other — no ties)."""
+    cells = spark.range(SYNTH_CLUSTER_CELLS).select(F.col("id").alias("cell_id"))
     vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(SYNTH_CLUSTER_DIM - 1)),
         lambda i: F.when(i == F.col("cell_id"), F.lit(1.0)).otherwise(
             F.lit(0.0)
         ),
@@ -737,11 +723,7 @@ def synth_cluster_centroids(
     return cells.select("cell_id", vec.alias("centroid"))
 
 
-def synth_pq_codebook(
-    spark,
-    n_subspaces: int = 16,
-    ds: int = 4,
-) -> DataFrame:
+def synth_pq_codebook(spark) -> DataFrame:
     """(m, code, centroid): the closed-form PQ codebook for
     :func:`synth_cluster_embeddings` under n_subspaces × ds = dim
     geometry — per subspace, code 0 is the zero sub-vector and code 1+j
@@ -751,6 +733,7 @@ def synth_pq_codebook(
     ADC lookup tables reconstruct exact cosines (1.0 within a planted
     cluster, 0.0 across). The bring-your-own-codebook twin of
     :func:`synth_cluster_centroids`."""
+    n_subspaces, ds = 16, SYNTH_CLUSTER_DIM // 16
     cells = spark.range(n_subspaces * (ds + 1)).select(
         (F.col("id") / (ds + 1)).cast("int").alias("m"),
         F.pmod(F.col("id"), F.lit(ds + 1)).cast("int").alias("code"),
@@ -770,10 +753,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     kmeans_iters: int = 2,
     engine: str = "lloyd",
 ) -> DataFrame:
@@ -788,13 +767,11 @@ def ivf_topk(
     shuffle-free (see ivf_assign); the probe list is |queries|×n_probe
     rows (broadcast); final ranking is the bounded two-phase top-k, so
     the corpus again never shuffles."""
-    cents = kmeans_centroids(
-        corpus, n_cells, kmeans_iters, id_col, vec_col, engine=engine
-    )
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
+    cents = kmeans_centroids(corpus, n_cells, kmeans_iters, engine=engine)
+    assigned = ivf_assign(corpus, cents)
     return _probe_and_rank(
-        cents, queries, k, n_probe, id_col, vec_col,
-        query_id_col, query_vec_col,
+        cents, queries, k, n_probe, "vec_id", "embedding",
+        "query_id", "query_vec",
         index_for=lambda _probes: assigned,
     )
 
@@ -973,9 +950,6 @@ def pq_train(
     n_subspaces: int = 4,
     n_codes: int = 32,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Train a PQ codebook: per subspace m, k-means (squared-L2 Lloyd)
     over the corpus' m-th sub-vectors. Vectors are L2-normalized first so
@@ -990,10 +964,10 @@ def pq_train(
     invariant — ADC indexes the codebook by position).
 
     Output: (m, code, centroid) with code dense in [0, n_codes) per m.
-    ``dim`` is probed from the data when not given (one first() on a
-    1-column projection — index metadata, not a data collect).
+    The dimension is probed from the data (one first() on a 1-column
+    projection — index metadata, not a data collect).
     """
-    nvec = l2_normalize(F.col(vec_col))
+    nvec = l2_normalize(F.col("embedding"))
     # spread BEFORE the M-way explode + per-row n_codes Lloyd scoring: a
     # single-split parquet corpus (the x100 probe's 200k-vector file)
     # otherwise runs the whole exploded train loop on ONE task -- the
@@ -1001,13 +975,12 @@ def pq_train(
     # (same guard brute_force_topk/simhash use; no-op at production
     # partition counts)
     base = spread_for_compute(corpus).select(
-        F.col(id_col).alias("id"), nvec.alias("v")
+        F.col("vec_id").alias("id"), nvec.alias("v")
     ).filter(F.col("v").isNotNull())
-    if dim is None:
-        probe = base.select(F.size("v").alias("d")).first()
-        if probe is None:
-            raise ValueError("pq_train: empty corpus")
-        dim = probe["d"]
+    probe = base.select(F.size("v").alias("d")).first()
+    if probe is None:
+        raise ValueError("pq_train: empty corpus")
+    dim = probe["d"]
     if dim % n_subspaces:
         raise ValueError(
             f"dim {dim} not divisible by n_subspaces {n_subspaces}"
@@ -1075,12 +1048,7 @@ def pq_train(
     return codebook
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebook: DataFrame) -> DataFrame:
     """Encode each vector into its n_subspaces dense codes:
     (id, codes array<int>). Pure narrow map — the packed codebook arrives
     as a broadcast single row and all M nearest-sub-centroid searches run
@@ -1089,14 +1057,14 @@ def pq_encode(
     expression serves any codebook. Zero-norm vectors drop (they have no
     cosine to anyone)."""
     pack = F.broadcast(_pq_pack(codebook))
-    nvec = l2_normalize(F.col(vec_col))
+    nvec = l2_normalize(F.col("embedding"))
     # spread for the same reason as pq_train: nearest-code search is
     # O(n_codes * dim) per row and must not run single-task on a
     # single-split file (no-op when the input already carries >= cores
     # partitions, so the "corpus never shuffles" claim still holds at
     # production partition counts)
     base = spread_for_compute(corpus).select(
-        F.col(id_col).alias("id"), nvec.alias("v")
+        F.col("vec_id").alias("id"), nvec.alias("v")
     ).filter(F.col("v").isNotNull())
     m_count = F.size(F.col("__pack"))
     ds = (F.size(F.col("v")) / m_count).cast("int")
@@ -1115,8 +1083,6 @@ def pq_topk(
     codebook: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """ADC top-k over PQ codes: per query, a LUT of sub-dot-products
     against every sub-centroid is computed ONCE on the (broadcast) query
@@ -1129,7 +1095,7 @@ def pq_topk(
     (no Window). Output: (query_id, neighbor_id, approx_cosine, rank).
     """
     pack = F.broadcast(_pq_pack(codebook))
-    qn = l2_normalize(F.col(query_vec_col))
+    qn = l2_normalize(F.col("query_vec"))
     m_count = F.size(F.col("__pack"))
     qds = (F.size(F.col("q")) / m_count).cast("int")
     lut = F.transform(
@@ -1149,7 +1115,7 @@ def pq_topk(
     )
     qlut = (
         queries.select(
-            F.col(query_id_col).alias("query_id"), qn.alias("q")
+            F.col("query_id"), qn.alias("q")
         )
         .filter(F.col("q").isNotNull())
         .crossJoin(pack)
@@ -1190,10 +1156,6 @@ def pq_search(
     n_subspaces: int = 16,
     n_codes: int = 64,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     rerank_factor: int = 0,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
@@ -1223,24 +1185,20 @@ def pq_search(
     256 B float32 (tests/test_similarity.py measures both).
     """
     if codebook is None:
-        codebook = pq_train(
-            corpus, n_subspaces, n_codes, iters, id_col, vec_col
-        )
-    encoded = pq_encode(corpus, codebook, id_col, vec_col)
+        codebook = pq_train(corpus, n_subspaces, n_codes, iters)
+    encoded = pq_encode(corpus, codebook)
     shortlist_k = k * rerank_factor if rerank_factor > 0 else k
-    adc = pq_topk(
-        encoded, codebook, queries, shortlist_k, query_id_col, query_vec_col
-    )
+    adc = pq_topk(encoded, codebook, queries, shortlist_k)
     if rerank_factor <= 0:
         return adc
     cand = adc.select("query_id", "neighbor_id")
     qvecs = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
+        F.col("query_id"),
+        F.col("query_vec").alias("qv"),
     )
     exact = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
         )
         .join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qvecs), "query_id")
@@ -1333,13 +1291,7 @@ def pca_analysis(
     return mean, comps, ratios
 
 
-def pca_project(
-    df: DataFrame,
-    mean,
-    components,
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
+def pca_project(df: DataFrame, mean, components) -> DataFrame:
     """Project embeddings onto the principal components: the centered dot
     products run as JVM higher-order functions over a broadcast literal
     component matrix — a narrow map, no UDF, no shuffle."""
@@ -1349,7 +1301,7 @@ def pca_project(
     ]
     mean_arr = F.array(*[F.lit(float(v)) for v in mean])
     centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"), mean_arr, lambda a, b: a - b
+        F.col("embedding").cast("array<double>"), mean_arr, lambda a, b: a - b
     )
     proj = F.array(
         *[
@@ -1361,7 +1313,7 @@ def pca_project(
             for i in range(k)
         ]
     )
-    return df.withColumn(out_col, proj)
+    return df.withColumn("pca", proj)
 
 
 def pca_variance_report(
@@ -1519,7 +1471,6 @@ def _split_oversized_cells(
     max_cell: int,
     id_col: str,
     vec_col: str,
-    iters: int = 1,
 ) -> tuple[DataFrame, int | None]:
     """Bound Σ|cell|² for the within-cell pair join by SPLITTING any
     cell larger than ``max_cell`` instead of dropping it (coverage
@@ -1576,7 +1527,7 @@ def _split_oversized_cells(
         )
         k_sub = -(-n // max_cell)
         cents = kmeans_centroids(
-            sub, n_cells=k_sub, iters=iters, id_col=id_col, vec_col=vec_col
+            sub, n_cells=k_sub, iters=1, id_col=id_col, vec_col=vec_col
         )
         sub_assigned = ivf_assign(sub, cents, id_col, vec_col)
         # densify the sub-k-means ids (also sampled vector ids) to
@@ -1621,9 +1572,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     n_cells: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    engine: str = "lloyd",
     max_cell: int | None = None,
     oversize: str = "drop",
     centroids: DataFrame | None = None,
@@ -1636,7 +1584,7 @@ def semantic_dedup(
 
     Plan shape (the paper's design, Spark-first):
 
-    1. k-means cells (:func:`kmeans_centroids`, lloyd or mllib) —
+    1. k-means cells (:func:`kmeans_centroids`, Lloyd) —
        centroids broadcast, assignment a zero-shuffle narrow projection
        (:func:`ivf_assign`).
     2. Pair scoring ONLY within a cell: self-join on cell_id — cost
@@ -1671,14 +1619,11 @@ def semantic_dedup(
         # IvfIndex.build and pq_search have): skip the in-call k-means —
         # for centroids trained on a sample, reused across corpora, or
         # the planted closed-form fixture (synth_cluster_centroids).
-        # n_cells / iters / engine are ignored.
+        # n_cells / iters are ignored.
         cents = centroids.select("cell_id", "centroid")
     else:
-        cents = kmeans_centroids(
-            corpus, n_cells=n_cells, iters=iters, id_col=id_col,
-            vec_col=vec_col, engine=engine,
-        )
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
+        cents = kmeans_centroids(corpus, n_cells=n_cells, iters=iters)
+    assigned = ivf_assign(corpus, cents)
     if max_cell is not None and oversize == "split":
         # skew guard (VERDICT r8 #4): oversized cells SPLIT (k-means
         # sub-level + salt fallback) instead of dropping — coverage
@@ -1687,7 +1632,7 @@ def semantic_dedup(
         # (the Lloyd update step itself), since subcells have no entry
         # in the top-level centroid table.
         assigned, split_floor = _split_oversized_cells(
-            assigned, max_cell, id_col, vec_col
+            assigned, max_cell, "vec_id", "embedding"
         )
         # ranking centroids: intact cells keep the k-means centers;
         # split subcells (ids <= split_floor — strictly below every
@@ -1700,7 +1645,7 @@ def semantic_dedup(
             else F.lit(False)
         )
         split_means = _member_means(
-            assigned.where(is_split), ["cell_id"], vec_col
+            assigned.where(is_split), ["cell_id"], "embedding"
         )
         cents = cents.select(
             "cell_id", F.col("centroid").cast("array<double>")
@@ -1721,9 +1666,9 @@ def semantic_dedup(
     # Same arithmetic, same operand order — bit-identical cosines.
     assigned_n = assigned.select(
         "cell_id",
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("__vn"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        l2_norm(F.col("embedding")).alias("__vn"),
     )
     cents_n = cents.select(
         "cell_id", "centroid", l2_norm("centroid").alias("__ctn")

@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def group_sketches(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
+def group_sketches(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group HLL sketch (binary, mergeable) + its estimate. The
     sketch column is the artifact to persist: any union of groups can be
     estimated later WITHOUT the raw data (hll_union_agg)."""
@@ -36,7 +31,7 @@ def group_sketches(
     # Catalyst deduplicating semantically-equal aggregates and would
     # silently build the sketch twice if the two calls ever drifted
     return df.groupBy(group_col).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch")
+        F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("sketch")
     ).withColumn("approx_distinct", F.hll_sketch_estimate("sketch"))
 
 
@@ -53,7 +48,6 @@ def distinct_count_calibration(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Per-group AND global (sketch-estimate vs exact) distinct counts
     with relative error — one row per group plus a 'total' row whose
@@ -63,7 +57,7 @@ def distinct_count_calibration(
     Output: (scope, approx_distinct, exact_distinct, rel_error).
     """
     per_group = df.groupBy(group_col).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch"),
+        F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("sketch"),
         F.count_distinct(F.col(value_col)).alias("exact_distinct"),
     )
     group_rows = per_group.select(
@@ -95,23 +89,17 @@ def distinct_count_calibration(
     )
 
 
-def quantile_calibration(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    quantiles: list[float] = (0.5, 0.9, 0.99),
-    accuracy: int = 10000,
-) -> DataFrame:
+def quantile_calibration(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group approx_percentile vs exact INTERPOLATED percentiles
     (percentile_cont semantics — F.percentile linearly interpolates
     between data values, so abs_error includes the interpolation gap on
     sparse value ranges, not just sketch error; calibration scale only).
     Output long-form: (scope, quantile, approx_value, exact_value,
     abs_error)."""
-    qs = list(quantiles)
+    qs = [0.5, 0.9, 0.99]
     agg = df.groupBy(group_col).agg(
         F.percentile_approx(
-            F.col(value_col), F.lit(qs), F.lit(accuracy)
+            F.col(value_col), F.lit(qs), F.lit(10000)
         ).alias("approx"),
         F.percentile(F.col(value_col), F.lit(qs)).alias("exact"),
     )
@@ -133,12 +121,7 @@ def quantile_calibration(
     )
 
 
-def set_overlap_estimate(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
+def set_overlap_estimate(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Pairwise set-overlap estimates between groups' value sets from
     sketch ALGEBRA alone: |A∩B| ≈ |A| + |B| − |A∪B| with the union
     estimated by merging the two groups' HLL sketches (hll_union is a
@@ -156,7 +139,7 @@ def set_overlap_estimate(
     """
     per_group = (
         df.groupBy(F.col(group_col).alias("g"))
-        .agg(F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sk"))
+        .agg(F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("sk"))
         .localCheckpoint(eager=True)  # both sides of the pair join
     )
     a = per_group.select(
@@ -226,14 +209,13 @@ def phi_heavy_hitters(
     df: DataFrame,
     key_col: str,
     phi: float,
-    width: int | None = None,
 ) -> DataFrame:
     """EXACT phi-heavy hitters (keys with frequency ≥ phi·n) at
     sketch cost: (key, cnt, freq), counts exact.
 
     Two passes over the data, NEITHER shuffling raw keys:
 
-    1. Misra-Gries partials per partition (width defaults to ceil(2/phi))
+    1. Misra-Gries partials per partition (width = ceil(2/phi))
        merged by key — any key with count > n/(width+1) ≤ phi·n/2
        survives with positive estimate, so the merged summary is a
        guaranteed SUPERSET of the phi-heavy set.
@@ -252,8 +234,7 @@ def phi_heavy_hitters(
     """
     import math
 
-    if width is None:
-        width = int(math.ceil(2.0 / phi))
+    width = int(math.ceil(2.0 / phi))
     keyed = df.select(F.col(key_col).cast("string").alias("key"))
     candidates = (
         misra_gries_partials(df, key_col, width)

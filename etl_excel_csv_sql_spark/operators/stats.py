@@ -225,18 +225,12 @@ def join_cardinality_estimate(
     )
 
 
-def ab_test_report(
-    events: DataFrame,
-    user_col: str = "user_id",
-    convert_expr: Column | None = None,
-    salt: str = "ab-v1",
-    treat_fraction: float = 0.5,
-) -> DataFrame:
+def ab_test_report(events: DataFrame) -> DataFrame:
     """Hash-randomized A/B experiment readout with a two-proportion
     z-test: users assign deterministically to control/treatment by the
     md5 bucket trick (same draw the split/sampling operators pin — the
     assignment is reproducible, engine-portable, and stable as new
-    events arrive), conversion = any event matching ``convert_expr``.
+    events arrive), conversion = any purchase event.
 
     Output (one row per variant + a 'lift' row): variant, n_users,
     n_converted, rate, and on the lift row the absolute lift and the
@@ -250,19 +244,17 @@ def ab_test_report(
         split_threshold,
     )
 
-    if convert_expr is None:
-        convert_expr = F.col("event_type") == "purchase"
-    thr = split_threshold(treat_fraction)
+    thr = split_threshold(0.5)
     per_user = (
         events.select(
-            F.col(user_col).alias("u"),
-            F.when(convert_expr, 1).otherwise(0).alias("c"),
+            F.col("user_id").alias("u"),
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("c"),
         )
         .groupBy("u")
         .agg(F.max("c").alias("converted"))
         .select(
             F.when(
-                _hash_bucket(F.col("u"), salt) < F.lit(thr), F.lit("treatment")
+                _hash_bucket(F.col("u"), "ab-v1") < F.lit(thr), F.lit("treatment")
             )
             .otherwise(F.lit("control"))
             .alias("variant"),
@@ -345,15 +337,7 @@ def benford_report(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-def cuped_ab_report(
-    events: DataFrame,
-    split_ts: str,
-    user_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    salt: str = "ab-v1",
-    treat_fraction: float = 0.5,
-) -> DataFrame:
+def cuped_ab_report(events: DataFrame, split_ts: str) -> DataFrame:
     """CUPED variance-reduced experiment readout (Deng, Xu, Kohavi &
     Walker, WSDM'13): the post-period metric Y is adjusted by the
     pre-period covariate X of the SAME user —
@@ -381,17 +365,17 @@ def cuped_ab_report(
         split_threshold,
     )
 
-    thr = split_threshold(treat_fraction)
+    thr = split_threshold(0.5)
     pre = F.when(
-        F.col(ts_col) < F.lit(split_ts).cast("timestamp"),
-        F.col(value_col).cast("decimal(18,4)"),
+        F.col("ts") < F.lit(split_ts).cast("timestamp"),
+        F.col("value").cast("decimal(18,4)"),
     ).otherwise(F.lit(0).cast("decimal(18,4)"))
     post = F.when(
-        F.col(ts_col) >= F.lit(split_ts).cast("timestamp"),
-        F.col(value_col).cast("decimal(18,4)"),
+        F.col("ts") >= F.lit(split_ts).cast("timestamp"),
+        F.col("value").cast("decimal(18,4)"),
     ).otherwise(F.lit(0).cast("decimal(18,4)"))
     per_user = (
-        events.select(F.col(user_col).alias("u"), pre.alias("pre"), post.alias("post"))
+        events.select(F.col("user_id").alias("u"), pre.alias("pre"), post.alias("post"))
         .groupBy("u")
         .agg(
             F.sum("pre").cast("double").alias("x"),
@@ -399,7 +383,7 @@ def cuped_ab_report(
         )
         .select(
             F.when(
-                _hash_bucket(F.col("u"), salt) < F.lit(thr), F.lit("treatment")
+                _hash_bucket(F.col("u"), "ab-v1") < F.lit(thr), F.lit("treatment")
             )
             .otherwise(F.lit("control"))
             .alias("variant"),
@@ -492,12 +476,7 @@ def cuped_ab_report(
     return variants.unionByName(delta)
 
 
-def kaplan_meier(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    horizon_hours: int = 24,
-) -> DataFrame:
+def kaplan_meier(events: DataFrame, horizon_hours: int = 24) -> DataFrame:
     """Kaplan–Meier survival curve over per-user activity lifetimes
     (Kaplan & Meier, JASA 1958) with right-censoring.
 
@@ -521,8 +500,8 @@ def kaplan_meier(
     rounding); a zero factor (everyone remaining churns at t) is
     clamped to 1e-300 so both engines return a clean 0.0.
     """
-    tsu = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
+    tsu = F.unix_micros(F.col("ts").cast("timestamp"))
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
         F.min(tsu).alias("first_us"), F.max(tsu).alias("last_us")
     )
     gmax = per_user.agg(
@@ -710,15 +689,11 @@ def winsorized_summary(
     )
 
 
-def pareto_abc(
-    lineitem: DataFrame,
-    a_share: float = 0.8,
-    b_share: float = 0.95,
-) -> DataFrame:
+def pareto_abc(lineitem: DataFrame) -> DataFrame:
     """Pareto / ABC revenue classification of parts — the 80/20 working
     set every inventory and caching decision starts from: rank parts by
-    revenue, take the running share of total, tag A (first ``a_share``
-    of revenue), B (to ``b_share``), C (tail).
+    revenue, take the running share of total, tag A (first 80% of
+    revenue), B (to 95%), C (tail).
 
     Scale design: revenue per part is one decimal-exact shuffle; the
     running total uses :func:`relational.global_prefix_sum` (range
@@ -752,8 +727,8 @@ def pareto_abc(
         "double"
     )
     cls = (
-        F.when(share <= a_share, "A")
-        .when(share <= b_share, "B")
+        F.when(share <= 0.8, "A")
+        .when(share <= 0.95, "B")
         .otherwise(F.lit("C"))
     )
     return (

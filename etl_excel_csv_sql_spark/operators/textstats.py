@@ -21,7 +21,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    min_df: int = 1,
     max_df_ratio: float = 1.0,
 ) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF.
@@ -60,7 +59,6 @@ def tfidf_top_terms(
             F.col("df")
             <= F.floor(F.lit(max_df_ratio) * F.col("__n_docs")).cast("long")
         )
-    dfreq = dfreq.filter(F.col("df") >= min_df)
     scored = tf.join(dfreq, "term").select(
         "doc",
         "term",
@@ -130,9 +128,7 @@ def lexical_diversity(
     )
 
 
-def repetition_signals(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Repetition/shape quality signals in the style of the public corpus-
     filtering rules (Gopher / RedPajama / Dolma heuristics):
 
@@ -145,10 +141,10 @@ def repetition_signals(
     Thresholding is the caller's policy (the published rules differ per
     corpus); this operator just measures.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.split(t, r"\n")
     n_lines = F.size(lines)
-    toks = tokens(text_col)
+    toks = tokens("text")
     n_toks = F.size(toks)
     # top-token count: sort then longest-equal-run in ONE pass (the naive
     # per-distinct-token filter is O(distinct×tokens) — quadratic in doc
@@ -172,7 +168,7 @@ def repetition_signals(
     non_space = F.length(F.regexp_replace(t, r"\s", ""))
     digits = F.length(F.regexp_replace(t, r"[^0-9]", ""))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(
             F.when(
                 n_lines > 0,
@@ -229,7 +225,6 @@ def pack_documents(
     id_col: str = "doc_id",
     text_col: str = "text",
     shard_col: str | None = None,
-    bucket_hex_len: int = 2,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing (the GPT-pretraining layout):
     documents are concatenated into one token stream per shard and the
@@ -242,16 +237,16 @@ def pack_documents(
     wants anyway — adjacent ids are usually correlated). That order is
     what makes the prefix sum DISTRIBUTED, as a two-level scan:
 
-      1. window prefix-sum within each (shard, bucket) — 16^bucket_hex_len
+      1. window prefix-sum within each (shard, bucket) — 256
          buckets per shard, so a single-shard (or single-language) corpus
          still fans out across the cluster instead of sorting the whole
          shard in one task;
       2. per-bucket token totals, cumulated across buckets with one tiny
-         window over 16^bucket_hex_len rows per shard, joined back
+         window over 256 rows per shard, joined back
          (broadcast — the bucket-total frame is |shards|·256 rows) and
          added into the bin arithmetic.
 
-    The bucket is the first ``bucket_hex_len`` hex chars of
+    The bucket is the first 2 hex chars of
     md5('pack-v1' || id) — engine-portable (any SQL oracle recomputes it)
     and lexicographically ordered, so the packing order is reproducible
     anywhere. ``shard_col`` (e.g. language) keys independent streams; it
@@ -264,7 +259,7 @@ def pack_documents(
     bucket = F.substring(
         F.md5(F.concat(F.lit("pack-v1"), F.col("id").cast("string"))),
         1,
-        bucket_hex_len,
+        2,
     )
     sized = df.select(
         *([F.col(shard_col).alias("shard")] if shard_col else []),
@@ -311,20 +306,18 @@ def pack_documents(
     )
 
 
-def corpus_rollup(
-    df: DataFrame, group_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
+def corpus_rollup(df: DataFrame) -> DataFrame:
     """Corpus statistics per group: doc count, token totals/means, char
     totals. Map-side partial aggregation → the shuffle carries one partial
     row per (partition, group)."""
-    tc = token_count(text_col)
+    tc = token_count("text")
     return (
-        df.groupBy(group_col)
+        df.groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(tc).alias("total_tokens"),
             (F.sum(tc) / F.count("*")).alias("avg_tokens"),
-            F.sum(F.length(text_col)).alias("total_chars"),
+            F.sum(F.length("text")).alias("total_chars"),
         )
     )
 
@@ -333,7 +326,6 @@ def compression_ratio(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    level: int = 6,
 ) -> DataFrame:
     """Per-document zlib compression ratio: (id, n_bytes, n_compressed,
     compression_ratio = compressed/raw bytes).
@@ -389,7 +381,7 @@ def compression_ratio(
                     n_bytes.append(None), n_comp.append(None), ratio.append(None)
                     continue
                 raw = text.encode("utf-8")
-                comp = zlib.compress(raw, level)
+                comp = zlib.compress(raw, 6)
                 n_bytes.append(len(raw))
                 n_comp.append(len(comp))
                 ratio.append(
@@ -504,8 +496,6 @@ def chunk_windows(
 def tfidf_doc_similarity(
     df: DataFrame,
     query_pred,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     max_df_ratio: float = 1.0,
 ) -> DataFrame:
@@ -538,8 +528,8 @@ def tfidf_doc_similarity(
 
     totals = F.broadcast(df.agg(F.count("*").alias("__n_docs")))
     base = df.select(
-        F.col(id_col).alias("doc"),
-        F.col(text_col).alias("__text"),
+        F.col("doc_id").alias("doc"),
+        F.col("text").alias("__text"),
         query_pred.alias("__is_query"),
     )
     terms = spread_for_compute(base).select(
@@ -812,13 +802,7 @@ def bigram_surprisal(
     )
 
 
-def importance_weights(
-    df: DataFrame,
-    target: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 0.5,
-) -> DataFrame:
+def importance_weights(df: DataFrame, target: Column, k: float = 0.5) -> DataFrame:
     """Data-selection importance score in the DSIR spirit (Xie et al.,
     arXiv 2302.03169): per-document mean log-likelihood ratio between a
     TARGET-domain unigram LM and the general-corpus LM, both estimated
@@ -847,9 +831,9 @@ def importance_weights(
     toks = (
         spread_for_compute(df)
         .select(
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             target.cast("int").alias("is_t"),
-            F.explode(tokens(text_col)).alias("term_raw"),
+            F.explode(tokens("text")).alias("term_raw"),
         )
         .select("doc", "is_t", F.lower("term_raw").alias("term"))
     )
@@ -889,23 +873,13 @@ GOPHER_STOPWORDS: tuple[str, ...] = (
 )
 
 
-def gopher_rules(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 20,
-    max_words: int = 100_000,
-    mean_word_len_range: tuple[float, float] = (2.0, 10.0),
-    max_symbol_ratio: float = 0.1,
-    min_alpha_frac: float = 0.8,
-    min_stopword_hits: int = 1,
-) -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """The Gopher quality-rule battery (Rae et al., arXiv 2112.11446
     §A1.1): named boolean heuristics whose conjunction is the keep/drop
     decision of the classic pre-training text filter — word-count
-    bounds, mean-word-length band, symbol-to-word ratio cap,
-    alphabetic-word fraction floor, and the stopword "natural language"
-    probe. Individual flags are emitted alongside ``keep`` so a
+    bounds [20, 100000], mean-word-length band [2, 10], symbol-to-word
+    ratio cap 0.1, alphabetic-word fraction floor 0.8, and the stopword
+    "natural language" probe (at least one hit). Individual flags are emitted alongside ``keep`` so a
     pipeline can audit WHICH rule killed a document (the operational
     difference between a filter and a black box).
 
@@ -917,7 +891,7 @@ def gopher_rules(
     # the SHARED tokenization contract (functions.text.tokens) — a
     # private re-implementation here could silently drift from every
     # other operator's tokenizer (code-review r9 catch)
-    arr = tokens(F.lower(F.col(text_col)))
+    arr = tokens(F.lower(F.col("text")))
     n = F.size(arr)
     nd = n.cast("double")
     total_len = F.aggregate(
@@ -935,19 +909,18 @@ def gopher_rules(
         F.filter(arr, lambda t: t.isin(*GOPHER_STOPWORDS))
     )
     rules = {
-        "rule_word_count": (n >= min_words) & (n <= max_words),
-        "rule_mean_word_len": (mean_wl >= mean_word_len_range[0])
-        & (mean_wl <= mean_word_len_range[1]),
+        "rule_word_count": (n >= 20) & (n <= 100_000),
+        "rule_mean_word_len": (mean_wl >= 2.0) & (mean_wl <= 10.0),
         "rule_symbol_ratio": F.when(
-            n > 0, n_symbol / nd <= max_symbol_ratio
+            n > 0, n_symbol / nd <= 0.1
         ).otherwise(F.lit(False)),
         "rule_alpha_frac": F.when(
-            n > 0, n_alpha / nd >= min_alpha_frac
+            n > 0, n_alpha / nd >= 0.8
         ).otherwise(F.lit(False)),
-        "rule_stopwords": stop_hits >= min_stopword_hits,
+        "rule_stopwords": stop_hits >= 1,
     }
     out = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         n.cast("bigint").alias("n_words"),
         F.round(mean_wl, 6).alias("mean_word_len"),
         stop_hits.cast("bigint").alias("stopword_hits"),
@@ -959,13 +932,7 @@ def gopher_rules(
     return out.withColumn("keep", keep)
 
 
-def corpus_datacard(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    source_col: str = "source",
-) -> DataFrame:
+def corpus_datacard(df: DataFrame) -> DataFrame:
     """One-stop corpus summary in the datasheets-for-datasets spirit
     (Gebru et al., CACM 2021): the tall (metric, value) frame a corpus
     release ships next to the shards — sizes, token distribution,
@@ -977,13 +944,13 @@ def corpus_datacard(
     count-distinct), one tiny per-language aggregate inlined as extra
     rows. Every value is a double so the frame stays tall and typed.
     """
-    toks = token_count(text_col)  # the shared tokenization contract
+    toks = token_count("text")  # the shared tokenization contract
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         toks.alias("n_tok"),
-        F.md5(F.col(text_col)).alias("fp"),
-        F.col(lang_col).alias("lang"),
-        F.col(source_col).alias("src"),
+        F.md5(F.col("text")).alias("fp"),
+        F.col("lang"),
+        F.col("source").alias("src"),
     )
     one = base.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1035,7 +1002,6 @@ def corpus_datacard(
 def vocab_coverage_report(
     df: DataFrame,
     ks: tuple[int, ...] = (100, 1000, 10000),
-    text_col: str = "text",
 ) -> DataFrame:
     """Vocabulary-budget coverage: for each candidate vocab size K, the
     share of token OCCURRENCES covered by the top-K most frequent
@@ -1056,7 +1022,7 @@ def vocab_coverage_report(
 
     toks = (
         spread_for_compute(df)
-        .select(F.explode(tokens(text_col)).alias("t"))
+        .select(F.explode(tokens("text")).alias("t"))
         .select(F.lower("t").alias("term"))
     )
     vocab = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
@@ -1101,8 +1067,6 @@ def train_quality_classifier(
     labeled: DataFrame,
     feature_cols: list[str],
     label_col: str = "label",
-    max_iter: int = 50,
-    reg_param: float = 0.0,
     model_dir: str | None = None,
 ):
     """Fit the GPT-3/LLaMA-style quality classifier: logistic regression
@@ -1141,8 +1105,8 @@ def train_quality_classifier(
     lr = LogisticRegression(
         featuresCol="__features",
         labelCol=label_col,
-        maxIter=max_iter,
-        regParam=reg_param,
+        maxIter=50,
+        regParam=0.0,
         standardization=True,
     )
     fitted = Pipeline(stages=[assembler, lr]).fit(labeled)

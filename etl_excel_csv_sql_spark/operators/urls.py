@@ -161,14 +161,9 @@ def url_key_dedup(
     )
 
 
-def fetch_schedule(
-    frontier: DataFrame,
-    host_col: str = "host",
-    url_col: str = "url_norm",
-    rate_per_wave: int = 1,
-) -> DataFrame:
+def fetch_schedule(frontier: DataFrame, rate_per_wave: int = 1) -> DataFrame:
     """Politeness scheduling: assign each frontier URL a fetch ``slot``
-    within its host (deterministic ``url_col`` order) and a ``wave`` =
+    within its host (deterministic ``url_norm`` order) and a ``wave`` =
     slot // rate_per_wave — wave w fetches at most ``rate_per_wave``
     URLs per host, so a fetcher that sweeps waves in order never
     exceeds the per-host rate no matter how skewed the frontier is.
@@ -181,26 +176,19 @@ def fetch_schedule(
 
     if rate_per_wave < 1:
         raise ValueError("rate_per_wave must be >= 1")
-    w = Window.partitionBy(host_col).orderBy(url_col)
+    w = Window.partitionBy("host").orderBy("url_norm")
     slot = F.row_number().over(w) - 1
     return frontier.withColumn("slot", slot.cast("int")).withColumn(
         "wave", (F.col("slot") / rate_per_wave).cast("int")
     )
 
 
-def fetch_schedule_delays(
-    frontier: DataFrame,
-    delays: DataFrame,
-    host_col: str = "host",
-    url_col: str = "url_norm",
-    default_delay_s: float = 1.0,
-) -> DataFrame:
+def fetch_schedule_delays(frontier: DataFrame, delays: DataFrame) -> DataFrame:
     """Delay-aware politeness scheduling (r14): ``delays`` carries
     per-host ``crawl_delay_s`` (from ``robots.parse_robots_crawl_delay``
     over fetched robots bodies); each frontier URL gets its host
-    ``slot`` (deterministic ``url_col`` order) and ``eta_s`` = slot ×
-    the host's delay (``default_delay_s`` where the host published
-    none) — a fetcher that dispatches URL u no earlier than eta_s
+    ``slot`` (deterministic ``url_norm`` order) and ``eta_s`` = slot ×
+    the host's delay (1 s where the host published none) — a fetcher that dispatches URL u no earlier than eta_s
     never violates any host's Crawl-delay, no matter how skewed the
     frontier is.
 
@@ -215,25 +203,23 @@ def fetch_schedule_delays(
     variant of the host's policy."""
     from pyspark.sql import Window
 
-    if default_delay_s < 0:
-        raise ValueError("default_delay_s must be >= 0")
     d = F.broadcast(
         delays.select(
-            F.col(host_col).alias("__dhost"),
+            F.col("host").alias("__dhost"),
             F.col("crawl_delay_s").cast("double").alias("__delay"),
         )
         .groupBy("__dhost")
         .agg(F.max("__delay").alias("__delay"))
     )  # hint on the AGGREGATED frame: one row per host rides the broadcast
-    w = Window.partitionBy(host_col).orderBy(url_col)
+    w = Window.partitionBy("host").orderBy("url_norm")
     slot = F.row_number().over(w) - 1
     return (
-        frontier.join(d, frontier[host_col] == d["__dhost"], "left")
+        frontier.join(d, frontier["host"] == d["__dhost"], "left")
         .drop("__dhost")
         .withColumn("slot", slot.cast("int"))
         .withColumn(
             "crawl_delay_s",
-            F.coalesce(F.col("__delay"), F.lit(float(default_delay_s))),
+            F.coalesce(F.col("__delay"), F.lit(1.0)),
         )
         .drop("__delay")
         .withColumn(
@@ -290,8 +276,6 @@ def crawl_revisit_diff(
 
 def fetch_schedule_bucketed(
     frontier: DataFrame,
-    host_col: str = "host",
-    url_col: str = "url_norm",
     rate_per_wave: int = 1,
     n_buckets: int = 32,
     bucket: Column | None = None,
@@ -323,28 +307,28 @@ def fetch_schedule_bucketed(
     b = (
         bucket
         if bucket is not None
-        else F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets))
+        else F.pmod(F.xxhash64(F.col("url_norm")), F.lit(n_buckets))
     )
     df = frontier.withColumn("bucket", b.cast("int"))
-    w_rank = Window.partitionBy(host_col, "bucket").orderBy(url_col)
+    w_rank = Window.partitionBy("host", "bucket").orderBy("url_norm")
     ranked = df.withColumn("__r", F.row_number().over(w_rank))
-    counts = df.groupBy(host_col, "bucket").agg(
+    counts = df.groupBy("host", "bucket").agg(
         F.count(F.lit(1)).alias("__n")
     )
     w_off = (
-        Window.partitionBy(host_col)
+        Window.partitionBy("host")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = counts.select(
-        F.col(host_col).alias("__ohost"),
+        F.col("host").alias("__ohost"),
         F.col("bucket").alias("__obucket"),
         F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
     )
     return (
         ranked.join(
             offsets,
-            (ranked[host_col] == offsets["__ohost"])
+            (ranked["host"] == offsets["__ohost"])
             & (ranked["bucket"] == offsets["__obucket"]),
         )
         .withColumn(

@@ -363,8 +363,6 @@ def extract_main_text(
     df: DataFrame,
     id_col: str = "doc_id",
     html_col: str = "text",
-    min_block_chars: int = 25,
-    max_link_ratio: float = 0.5,
 ) -> DataFrame:
     """Boilerplate-aware main-content extraction via one Arrow pass —
     what a production crawl feeds the text pipeline instead of the
@@ -385,9 +383,7 @@ def extract_main_text(
                               "n_blocks_dropped", "n_chars"):
                         out[k].append(None)
                     continue
-                text, kept, dropped = html_main_text(
-                    str(html), min_block_chars, max_link_ratio
-                )
+                text, kept, dropped = html_main_text(str(html))
                 out["main_text"].append(text)
                 out["n_blocks_kept"].append(kept)
                 out["n_blocks_dropped"].append(dropped)
@@ -399,11 +395,7 @@ def extract_main_text(
     )
 
 
-def anchor_text_profile(
-    edges: DataFrame,
-    url_col: str = "url",
-    anchor_col: str = "anchor_text",
-) -> DataFrame:
+def anchor_text_profile(edges: DataFrame) -> DataFrame:
     """Anchor-text aggregation per link TARGET (r14) — the classic
     crawl quality/relevance signal: what the web calls a page. Input
     is any link edge list (``extract_web_links`` with a base column,
@@ -417,8 +409,8 @@ def anchor_text_profile(
     second shuffle reuses the first's url partitioning."""
     per = (
         edges.select(
-            F.col(url_col).alias("url"),
-            F.coalesce(F.col(anchor_col), F.lit("")).alias("__anchor"),
+            F.col("url"),
+            F.coalesce(F.col("anchor_text"), F.lit("")).alias("__anchor"),
         )
         .groupBy("url", "__anchor")
         .agg(F.count(F.lit(1)).alias("__n"))

@@ -87,18 +87,18 @@ class QuerySpec:
     # re-entering only on an err row). With 219 queries and 50 slots per
     # round the ≤3-round freshness target is structurally unsatisfiable
     # without this split (see ROUND6_NOTES demotion policy).
-    tier: str = "op"
+    tier: str = field(default="op", init=False)
     # Sanctioned-Python-kernel reason (None → the plan must be JVM-only).
     # Set centrally via PYTHON_KERNELS and applied in _validate_registry;
     # tests/test_plan_quality.py derives its exception set from THIS
     # field so WINDOW_ORDER rotations can never desynchronize the guard
     # (the r8 rotation broke a hand-maintained per-test allowlist).
-    python_kernel: str | None = None
+    python_kernel: str | None = field(default=None, init=False)
     # True → constructing the frame runs jobs / side effects (streaming
     # memory-sink scans, io roundtrips, lifecycle pipelines); plan-shape
     # guards skip these instead of re-running the work. Set centrally
     # via EAGER_QUERIES.
-    eager: bool = False
+    eager: bool = field(default=False, init=False)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -6146,17 +6146,17 @@ def q_dp_noisy_event_counts(spark, sf_dir):
 # Embedding drift (similarity.embedding_drift_report)
 # ---------------------------------------------------------------------------
 
-def _drift_oracle(dim: int = 64) -> str:
+def _drift_oracle() -> str:
     ma = ", ".join(
-        f"avg(CAST(embedding[{i+1}] AS DOUBLE)) AS ma{i}" for i in range(dim)
+        f"avg(CAST(embedding[{i+1}] AS DOUBLE)) AS ma{i}" for i in range(64)
     )
     mb = ", ".join(
-        f"avg(CAST(embedding[{i+1}] AS DOUBLE)) AS mb{i}" for i in range(dim)
+        f"avg(CAST(embedding[{i+1}] AS DOUBLE)) AS mb{i}" for i in range(64)
     )
-    dot = " + ".join(f"ma{i} * mb{i}" for i in range(dim))
-    na = " + ".join(f"ma{i} * ma{i}" for i in range(dim))
-    nb = " + ".join(f"mb{i} * mb{i}" for i in range(dim))
-    shift = " + ".join(f"(ma{i} - mb{i}) * (ma{i} - mb{i})" for i in range(dim))
+    dot = " + ".join(f"ma{i} * mb{i}" for i in range(64))
+    na = " + ".join(f"ma{i} * ma{i}" for i in range(64))
+    nb = " + ".join(f"mb{i} * mb{i}" for i in range(64))
+    shift = " + ".join(f"(ma{i} - mb{i}) * (ma{i} - mb{i})" for i in range(64))
     return f"""
     WITH a AS (
       SELECT count(*) AS n_a, {ma}
@@ -9977,13 +9977,13 @@ def q_corpus_datacard(spark, sf_dir):
     return textstats.corpus_datacard(_t(spark, sf_dir, "documents"))
 
 
-def _vocab_coverage_oracle(ks=(100, 1000, 10000)) -> str:
+def _vocab_coverage_oracle() -> str:
     rows = "\n    UNION ALL ".join(
         f"SELECT {k} AS vocab_size, "
         f"CAST(count(CASE WHEN rank <= {k} THEN 1 END) AS BIGINT) AS types_used, "
         f"round(coalesce(sum(CASE WHEN rank <= {k} THEN c END), 0) "
         f"/ (SELECT total FROM t), 6) AS occurrence_coverage FROM ranked"
-        for k in ks
+        for k in (100, 1000, 10000)
     )
     return rf"""
     WITH toks AS (

@@ -46,7 +46,7 @@ class FolderQueue:
     #: paths the HANDLER quarantined mid-drain (so the drain can report
     #: QUARANTINED instead of misfiling the vanished file as
     #: SKIPPED/"left for next cycle" when its archive move fails)
-    _quarantined: set = field(default_factory=set, repr=False)
+    _quarantined: set = field(default_factory=set, init=False, repr=False)
 
     def __post_init__(self) -> None:
         self.errorlog = ErrorLog(self.error_dir)

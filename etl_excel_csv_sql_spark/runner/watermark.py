@@ -40,7 +40,9 @@ class WatermarkStore:
     #: on-disk mtime than the stored watermark and stays pending (the
     #: reference captures LastWriteTime before processing,
     #: ExcelToCSVexport.ps1:165,222).
-    _observed: dict = field(default_factory=dict, repr=False, compare=False)
+    _observed: dict = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def _path(self, source: str) -> str:
         return os.path.join(self.folder, f"{source}_lastmod.txt")
@@ -80,17 +82,16 @@ class WatermarkStore:
         self._observed[(source, path)] = mtime
         return mtime > self.last_unix_seconds(source)
 
-    def commit(self, source: str, path: str, mtime: float | None = None) -> int:
+    def commit(self, source: str, path: str) -> int:
         """K7/T1: persist the processed file's mtime as ticks — the value
-        captured by should_process (or an explicit ``mtime``), NOT a fresh
-        stat: re-statting after processing would commit a mid-run
-        modification's timestamp and silently skip that modification.
+        captured by should_process, NOT a fresh stat: re-statting after
+        processing would commit a mid-run modification's timestamp and
+        silently skip that modification.
         Callers must invoke this only after the batch succeeded (the
         reference updates only when matchCounter > 0,
         ExcelToCSVexport.ps1:222-225) — the at-least-once guarantee: a
         crash before commit re-processes, never skips."""
-        if mtime is None:
-            mtime = self._observed.get((source, path))
+        mtime = self._observed.get((source, path))
         if mtime is None:
             mtime = os.stat(path).st_mtime
         os.makedirs(self.folder, exist_ok=True)

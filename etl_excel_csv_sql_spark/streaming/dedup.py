@@ -42,18 +42,13 @@ def dedupe_stream_within_watermark(
     return with_watermark(stream, ts_col, delay).dropDuplicatesWithinWatermark(keys)
 
 
-def dedupe_document_stream(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    delay: str = "1 hour",
-) -> DataFrame:
+def dedupe_document_stream(stream: DataFrame, delay: str = "1 hour") -> DataFrame:
     """Content-dedup a document stream: fingerprint with the SAME
     normalization as the batch exact dedup, then keep the first sighting
     of each fingerprint within the watermark window."""
     with_fp = stream.withColumn(
-        "fingerprint", F.md5(normalize_text(text_col))
+        "fingerprint", F.md5(normalize_text("text"))
     )
     return dedupe_stream_within_watermark(
-        with_fp, ["fingerprint"], ts_col, delay
+        with_fp, ["fingerprint"], "ts", delay
     )

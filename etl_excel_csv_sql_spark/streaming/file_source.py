@@ -10,6 +10,10 @@ folder queue + watermark (T1/T2, SURVEY §2.8).
 - watermark commit ordering: the checkpoint commits AFTER each batch's
   sink write succeeds — the reference's update-state-only-on-success
   invariant (ExcelToCSVexport.ps1:222-225) without hand-rolled tick files.
+
+The drop folder is read in the one CSV dialect ``io.csv_io`` decides
+(RFC 4180: a header line, ``""`` inside a quoted cell), so a file the
+batch writer produced streams back cell for cell.
 """
 
 from __future__ import annotations
@@ -18,31 +22,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from etl_excel_csv_sql_spark.io.csv_io import _RFC4180
+
 
 def stream_csv_drop_folder(
     spark: SparkSession,
     drop_dir: str,
     schema: StructType,
     archive_dir: str | None = None,
-    header: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming read of a CSV drop folder. With ``archive_dir`` set,
     consumed files move there after their batch commits (T2's
-    archive-on-success). ``max_files_per_trigger`` bounds batch size for
-    steady-state ingestion at scale."""
-    reader = (
-        spark.readStream.format("csv")
-        .schema(schema)
-        .option("header", str(header).lower())
-    )
+    archive-on-success)."""
+    reader = spark.readStream.format("csv").schema(schema).options(**_RFC4180)
     if archive_dir is not None:
         reader = (
             reader.option("cleanSource", "archive")
             .option("sourceArchiveDir", archive_dir)
         )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(drop_dir)
 
 
@@ -50,21 +47,19 @@ def write_stream_parquet(
     df: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    output_mode: str = "append",
 ) -> StreamingQuery:
-    """Checkpointed parquet sink. ``available_now=True`` processes the
-    current backlog then stops — the scheduled-batch deployment mode
-    matching the reference's cron cadence with exactly-once file tracking."""
-    writer = (
+    """Checkpointed parquet sink (append). It processes the current
+    backlog then stops (``availableNow``) — the scheduled-batch deployment
+    mode matching the reference's cron cadence with exactly-once file
+    tracking."""
+    return (
         df.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_available_now_to_memory(

@@ -69,7 +69,6 @@ def stream_static_enrich(
     dim: DataFrame,
     stream_key: str,
     dim_key: str,
-    how: str = "inner",
 ) -> DataFrame:
     """Stream-static dimension enrichment: join each micro-batch against
     a batch dimension table — the lookup/enrichment side of streaming
@@ -89,5 +88,5 @@ def stream_static_enrich(
     from pyspark.sql import functions as F
 
     return stream.join(
-        F.broadcast(dim), stream[stream_key] == dim[dim_key], how
+        F.broadcast(dim), stream[stream_key] == dim[dim_key], "inner"
     )

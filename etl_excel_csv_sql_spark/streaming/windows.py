@@ -58,13 +58,10 @@ def stream_tumbling_agg(
     ts_col: str = "ts",
     width: str = "1 hour",
     watermark: str = "2 hours",
-    group_cols: tuple[str, ...] = ("event_type",),
 ) -> DataFrame:
     """Tumbling windows over a streaming frame; windows finalize (append
     mode) once the watermark passes their end."""
-    return tumbling_window_agg(
-        with_watermark(events, ts_col, watermark), ts_col, width, group_cols
-    )
+    return tumbling_window_agg(with_watermark(events, ts_col, watermark), ts_col, width)
 
 
 def stream_session_agg(

@@ -1,5 +1,6 @@
 """CSV source/sink lifecycle: S3 all-string read, K1 single-file write,
-K2 stale-output diversion, K3 lock fallback."""
+K2 stale-output diversion, K3 lock fallback; every reader reads back what
+the writer wrote."""
 
 from __future__ import annotations
 
@@ -172,3 +173,45 @@ def test_fixed_width_rejects_line_breaks_and_nulls_strings(spark, tmp_path):
     got = {r["id"]: r for r in fw.read_fixed_width(spark, path, spec).collect()}
     assert got[1]["name"] is None
     assert got[2]["name"] == "x"
+
+
+# a doubled quote and a comma inside one quoted cell: the RFC 4180 line
+# write_csv_single produces is 1,"say ""hi"", ok"
+_QUOTED_ROWS = [(1, 'say "hi", ok'), (2, "plain")]
+
+
+def test_read_csv_permissive_reads_what_the_writer_wrote(spark, tmp_path):
+    path = str(tmp_path / "quoted.csv")
+    csv_io.write_csv_single(
+        spark.createDataFrame(_QUOTED_ROWS, "id bigint, s string"), path
+    )
+    out = csv_io.read_csv_permissive(spark, path, "id bigint, s string")
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 'say "hi", ok', None),
+        (2, "plain", None),
+    ]
+
+
+def test_drop_folder_stream_reads_what_the_writer_wrote(spark, tmp_path):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from etl_excel_csv_sql_spark.streaming.file_source import (
+        run_available_now_to_memory,
+        stream_csv_drop_folder,
+    )
+
+    schema = StructType(
+        [StructField("id", LongType()), StructField("s", StringType())]
+    )
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    csv_io.write_csv_single(
+        spark.createDataFrame(_QUOTED_ROWS, schema), str(drop / "quoted.csv")
+    )
+    run_available_now_to_memory(
+        stream_csv_drop_folder(spark, str(drop), schema),
+        "drop_folder_quoted",
+        str(tmp_path / "ckpt"),
+    )
+    got = spark.sql("SELECT id, s FROM drop_folder_quoted").collect()
+    assert sorted(tuple(r) for r in got) == sorted(_QUOTED_ROWS)

@@ -53,6 +53,16 @@ def test_strict_mode_raises_on_undecodable(spark):
         multimodal.extract_image_meta(media, strict=True).collect()
 
 
+def test_strict_meta_extract_raises_on_null_payload(media):
+    # the shared metadata template answers a null payload the way every
+    # hand-rolled kernel does: null fields when lax, an error when strict
+    null_only = media.where("media_id = 3")
+    (lax,) = multimodal.extract_mp3_meta(null_only).collect()
+    assert lax.duration_ms is None
+    with pytest.raises(Exception, match="null payload in strict"):
+        multimodal.extract_mp3_meta(null_only, strict=True).collect()
+
+
 def test_frame_sample_plan_explodes_by_duration(media):
     plan = multimodal.frame_sample_plan(media.filter(F.col("payload").isNotNull()))
     rows = plan.groupBy("media_id").count().collect()

@@ -89,7 +89,7 @@ elif mode == "kernel":
     # consumed and dropped — peak RSS must be O(record + frame bound),
     # independent of file size
     import pandas as pd
-    batches = warc._record_batches(False, 120)
+    batches = warc._record_batches(False)
     frames = batches(iter([pd.DataFrame({{"path": [path],
                                           "content": [payload]}})]))
     for frame in frames:
