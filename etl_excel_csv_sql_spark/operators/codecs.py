@@ -1232,14 +1232,14 @@ def _riff_chunks(payload: bytes, pos: int, end: int):
 
 
 @_malformed_as_valueerror
-def avi_meta(payload: bytes) -> tuple[int, int, int, int]:
-    """(width, height, fps, n_frames) from the AVI headers only.
+def avi_header(payload: bytes) -> tuple[int, int, int, int, int]:
+    """(width, height, rate, scale, n_frames) from the AVI headers only.
 
-    width/height/n_frames come from avih; fps from the 'vids' stream's
-    strh dwRate/dwScale (the exact rational — dwMicroSecPerFrame is a
-    rounded duplicate). Raises ValueError on non-AVI payloads, missing
-    headers, or out-of-range fields (the lenient-mode quarantine
-    contract, same as wav_meta)."""
+    width/height/n_frames come from avih; the frame rate is the 'vids'
+    stream's strh dwRate/dwScale, kept as the exact rational
+    (dwMicroSecPerFrame is a rounded duplicate). Raises ValueError on
+    non-AVI payloads, missing headers, or out-of-range fields (the
+    lenient-mode quarantine contract, same as wav_meta)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not a RIFF-AVI payload")
     width = height = n_frames = None
@@ -1265,6 +1265,14 @@ def avi_meta(payload: bytes) -> tuple[int, int, int, int]:
             f"AVI header out of range (w={width}, h={height}, "
             f"rate={rate}, scale={scale})"
         )
+    return width, height, rate, scale, n_frames
+
+
+@_malformed_as_valueerror
+def avi_meta(payload: bytes) -> tuple[int, int, int, int]:
+    """(width, height, fps, n_frames) from the AVI headers only; fps is
+    the floored rate // scale (:func:`avi_header` has the exact pair)."""
+    width, height, rate, scale, n_frames = avi_header(payload)
     return width, height, rate // scale, n_frames
 
 

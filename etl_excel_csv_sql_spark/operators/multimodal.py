@@ -11,6 +11,18 @@ frames decode to real pixels for frame-level aHash near-dup
 that set (non-AVI containers, header-only fixtures) raise in strict
 mode and degrade otherwise; that boundary is documented per kernel.
 
+Every kernel is one of three Arrow templates, each the module's only
+``mapInPandas`` call of its shape:
+
+- ``_synth_payload_frame``: id → one synthetic payload (fixtures);
+- ``_extract_meta_frame``: payload → exactly one row (metadata, resize,
+  hashes) — a null or undecodable payload gives an all-null row;
+- ``_explode_frame``: payload → zero or more rows (frames, per-frame
+  hashes, audio sub-fingerprints) — a null or undecodable payload gives
+  no row.
+
+Under ``strict=True`` the last two raise ``ValueError`` instead.
+
 Design for 100 TB of media:
 - binary payloads stay in parquet/iceberg columns; never collect() them;
 - mapInPandas streams Arrow batches → bounded executor memory regardless
@@ -76,6 +88,86 @@ def to_media_column(
     )
 
 
+def _extract_meta_frame(
+    df: DataFrame, kernel, cols: tuple, schema, strict: bool
+) -> DataFrame:
+    """(media_id, payload, ...) → one row per payload via a bytes → tuple
+    kernel that fills ``cols`` — the Arrow template behind every
+    one-row-per-payload kernel. The schema's other columns (media_id,
+    and e.g. the image kernel's media_type/byte_len/magic) carry over
+    from the input unchanged. A null or undecodable (``ValueError``)
+    payload gives an all-null row unless ``strict``, which raises.
+    Columns build as object Series: a 64-bit hash next to a null would
+    otherwise become float64 and lose its low bits. Plain select + map,
+    so it runs on streaming frames too."""
+    out_schema = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    carried = [c for c in out_schema.names if c not in cols]
+    empty = (None,) * len(cols)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out: dict[str, list] = {k: [] for k in cols}
+            for payload in pdf["payload"]:
+                vals = empty
+                if payload is None:
+                    if strict:
+                        raise ValueError("null payload in strict decode")
+                else:
+                    try:
+                        vals = kernel(bytes(payload))
+                    except ValueError:
+                        if strict:
+                            raise
+                for k, v in zip(cols, vals):
+                    out[k].append(v)
+            yield pd.DataFrame(
+                {k: pdf[k] for k in carried}
+                | {k: pd.Series(v, dtype="object") for k, v in out.items()}
+            )
+
+    src = df.select(
+        F.col("media_id").cast("long").alias("media_id"),
+        "payload",
+        *(c for c in carried if c != "media_id"),
+    )
+    return src.mapInPandas(batches, out_schema)
+
+
+def _explode_frame(
+    df: DataFrame, kernel, schema: StructType, strict: bool
+) -> DataFrame:
+    """(media_id, payload) → zero or more (media_id, ...) rows per
+    payload via a (bytes, strict) → rows kernel — the Arrow template
+    behind every exploding kernel. A null or undecodable payload raises
+    under ``strict`` and otherwise gives ZERO rows: per-row nulls would
+    fabricate a frame count of 1. Per-frame failures are the kernel's
+    (it sees ``strict``)."""
+    names = schema.names
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out: dict[str, list] = {k: [] for k in names}
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                if payload is None:
+                    if strict:
+                        raise ValueError("null payload in strict decode")
+                    continue
+                try:
+                    rows = list(kernel(bytes(payload), strict))
+                except ValueError:
+                    if strict:
+                        raise
+                    continue
+                for row in rows:
+                    for k, v in zip(names, (mid, *row)):
+                        out[k].append(v)
+            yield pd.DataFrame(
+                {k: pd.Series(v, dtype="object") for k, v in out.items()}
+            )
+
+    return df.select("media_id", "payload").mapInPandas(batches, schema)
+
+
 def extract_image_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     """REAL image metadata extraction: (media_id, media_type, byte_len,
     magic, fmt, width, height) via mapInPandas (Arrow-batched; payload
@@ -88,46 +180,19 @@ def extract_image_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     parser accepts; default maps undecodable/null payloads to null
     fmt/dims (quarantine-friendly).
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            fmts: list[str | None] = []
-            widths: list[int | None] = []
-            heights: list[int | None] = []
-            for payload in pdf["payload"]:
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict image decode")
-                    fmts.append(None), widths.append(None), heights.append(None)
-                    continue
-                try:
-                    fmt, w, h = codecs.image_meta(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    fmt, w, h = None, None, None
-                fmts.append(fmt), widths.append(w), heights.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "byte_len": pdf["byte_len"],
-                    "magic": pdf["magic"],
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    "width": pd.Series(widths, dtype="object"),
-                    "height": pd.Series(heights, dtype="object"),
-                }
-            )
-
-    return df.mapInPandas(batches, MEDIA_META_SCHEMA)
+    return _extract_meta_frame(
+        df, codecs.image_meta, ("fmt", "width", "height"),
+        MEDIA_META_SCHEMA, strict,
+    )
 
 
 def frame_sample_plan(df: DataFrame) -> DataFrame:
     """Video frame-sampling *plan*: explode one row per frame sampled every
-    5 s (video demux has no stdlib decoder — the duration here is derived from
-    byte_len pending one). Shows the scale-correct shape: explode →
-    repartition by (media_id % shards) before the heavy decode so long
-    videos spread across executors."""
+    5 s, with the duration estimated from byte_len alone (5 MB per 5 s),
+    so the plan reads no container; ``extract_video_frames`` demuxes the
+    real AVI frames (``codecs.avi_frames``). Shows the scale-correct
+    shape: explode → repartition by (media_id % shards) before the heavy
+    decode so long videos spread across executors."""
     n_frames = (F.col("byte_len") / F.lit(5_000_000)).cast("int") + 1
     return df.select(
         "media_id",
@@ -135,18 +200,22 @@ def frame_sample_plan(df: DataFrame) -> DataFrame:
     ).withColumn("sample_ts_s", F.col("frame_idx") * 5)
 
 
-def audio_frame_plan(df: DataFrame, hop_ms: int = 20) -> DataFrame:
+#: audio analysis-frame hop (the classic 20 ms MFCC stride)
+_AUDIO_HOP_MS = 20
+
+
+def audio_frame_plan(df: DataFrame) -> DataFrame:
     """Audio analysis-frame plan over REAL demuxed durations: one row per
-    ``hop_ms`` hop starting inside [0, duration] — the standard
+    20 ms hop starting inside [0, duration] — the standard
     feature-extraction framing (a 20 ms hop is the classic MFCC stride).
     Integer arithmetic throughout so the plan is externally predictable.
     Same scale shape as ``frame_sample_plan``: a narrow explode whose
     output should be repartitioned before any heavy per-frame decode."""
-    n_hops = (F.col("duration_ms") / F.lit(hop_ms)).cast("long")
+    n_hops = (F.col("duration_ms") / F.lit(_AUDIO_HOP_MS)).cast("long")
     return df.select(
         "media_id",
         F.explode(F.sequence(F.lit(0).cast("long"), n_hops)).alias("frame_idx"),
-    ).withColumn("start_ms", F.col("frame_idx") * hop_ms)
+    ).withColumn("start_ms", F.col("frame_idx") * _AUDIO_HOP_MS)
 
 
 RESIZED_SCHEMA = StructType(
@@ -192,40 +261,19 @@ def resize_images(
     after.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "payload": [], "fmt": [], "src_width": [], "src_height": [],
-                "dst_width": [], "dst_height": [],
-            }
-            for payload in pdf["payload"]:
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict resize")
-                    for k in out:
-                        out[k].append(None)
-                    continue
-                try:
-                    fmt, arr = codecs.decode_image(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    for k in out:
-                        out[k].append(None)
-                    continue
-                sh, sw = arr.shape[:2]
-                dw, dh = _bounded_dims(sw, sh, max_side)
-                resized = arr if (dw, dh) == (sw, sh) else codecs.resize_nearest(arr, dw, dh)
-                out["payload"].append(codecs.encode_image(resized, fmt))
-                out["fmt"].append(fmt)
-                out["src_width"].append(sw), out["src_height"].append(sh)
-                out["dst_width"].append(dw), out["dst_height"].append(dh)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 **{k: pd.Series(v, dtype="object") for k, v in out.items()}}
-            )
+    def resize(payload: bytes) -> tuple:
+        fmt, arr = codecs.decode_image(payload)
+        sh, sw = arr.shape[:2]
+        dw, dh = _bounded_dims(sw, sh, max_side)
+        resized = arr if (dw, dh) == (sw, sh) else codecs.resize_nearest(arr, dw, dh)
+        return codecs.encode_image(resized, fmt), fmt, sw, sh, dw, dh
 
-    return df.mapInPandas(batches, RESIZED_SCHEMA)
+    return _extract_meta_frame(
+        df, resize,
+        ("payload", "fmt", "src_width", "src_height", "dst_width",
+         "dst_height"),
+        RESIZED_SCHEMA, strict,
+    )
 
 
 AUDIO_META_SCHEMA = StructType(
@@ -241,6 +289,13 @@ AUDIO_META_SCHEMA = StructType(
 )
 
 
+def _wav_row(payload: bytes) -> tuple:
+    """(sample_rate, n_channels, bits_per_sample, n_frames, duration_ms);
+    ``codecs.wav_meta`` rejects a zero rate."""
+    rate, ch, bits, frames = codecs.wav_meta(payload)
+    return rate, ch, bits, frames, frames * 1000 // rate
+
+
 def extract_audio_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     """REAL audio metadata extraction: RIFF-WAVE chunk walk
     (``codecs.wav_meta``) → (sample_rate, n_channels, bits_per_sample,
@@ -249,39 +304,12 @@ def extract_audio_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     uses integer floor arithmetic (n_frames * 1000 // rate) for external
     predictability. Non-WAVE containers raise under ``strict=True`` and
     yield nulls otherwise."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict[str, list] = {
-                "sample_rate": [], "n_channels": [], "bits_per_sample": [],
-                "n_frames": [], "duration_ms": [],
-            }
-            for payload in pdf["payload"]:
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict audio demux")
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                try:
-                    rate, ch, bits, frames = codecs.wav_meta(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                cols["sample_rate"].append(rate)
-                cols["n_channels"].append(ch)
-                cols["bits_per_sample"].append(bits)
-                cols["n_frames"].append(frames)
-                cols["duration_ms"].append(frames * 1000 // rate if rate else 0)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "byte_len": pdf["byte_len"],
-                 **{k: pd.Series(v, dtype="object") for k, v in cols.items()}}
-            )
-
-    return df.mapInPandas(batches, AUDIO_META_SCHEMA)
+    return _extract_meta_frame(
+        df, _wav_row,
+        ("sample_rate", "n_channels", "bits_per_sample", "n_frames",
+         "duration_ms"),
+        AUDIO_META_SCHEMA, strict,
+    )
 
 
 VIDEO_META_SCHEMA = StructType(
@@ -297,48 +325,32 @@ VIDEO_META_SCHEMA = StructType(
 )
 
 
+def _avi_row(payload: bytes) -> tuple:
+    """(width, height, fps, n_frames, duration_ms) of an AVI: ``fps`` is
+    the floored strh rate / scale, while the duration uses the exact
+    rational, n_frames * 1000 * scale // rate (floored once), so NTSC
+    29.97 fps and sub-1 fps clips get their true length."""
+    width, height, rate, scale, n_frames = codecs.avi_header(payload)
+    return (
+        width, height, rate // scale, n_frames,
+        n_frames * 1000 * scale // rate,
+    )
+
+
 def extract_video_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     """REAL video container metadata: AVI RIFF header walk
-    (``codecs.avi_meta``) → (width, height, fps, n_frames, duration_ms)
+    (``codecs.avi_header``) → (width, height, fps, n_frames, duration_ms)
     per payload. Header-only — the movi frame data is never read, so the
     kernel is a cheap narrow map no matter how large the videos are.
-    ``duration_ms = n_frames * 1000 // fps`` (integer floor, externally
-    predictable). Non-AVI containers raise under ``strict=True`` and
-    yield nulls otherwise — same lenient/quarantine contract as the
-    image and audio kernels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict[str, list] = {
-                "width": [], "height": [], "fps": [],
-                "n_frames": [], "duration_ms": [],
-            }
-            for payload in pdf["payload"]:
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict video demux")
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                try:
-                    w, h, fps, frames = codecs.avi_meta(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["fps"].append(fps)
-                cols["n_frames"].append(frames)
-                cols["duration_ms"].append(frames * 1000 // fps if fps else 0)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "byte_len": pdf["byte_len"],
-                 **{k: pd.Series(v, dtype="object") for k, v in cols.items()}}
-            )
-
-    return df.mapInPandas(batches, VIDEO_META_SCHEMA)
+    ``fps`` is the floored frame rate; ``duration_ms`` is exact to the
+    millisecond (``_avi_row``). Non-AVI containers raise under
+    ``strict=True`` and yield nulls otherwise — same lenient/quarantine
+    contract as the image and audio kernels."""
+    return _extract_meta_frame(
+        df, _avi_row,
+        ("width", "height", "fps", "n_frames", "duration_ms"),
+        VIDEO_META_SCHEMA, strict,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -352,7 +364,7 @@ def extract_video_meta(df: DataFrame, strict: bool = False) -> DataFrame:
 # every decoded width/height/rate, which upgrades the media queries from
 # rows-only to full value parity. The generation itself runs distributed
 # (mapInPandas over ids — payloads are born on executors, never on the
-# driver).
+# driver). Every builder reads the input's ``doc_id`` column.
 
 SYNTH_IMAGE_SCHEMA = StructType(
     [
@@ -362,20 +374,18 @@ SYNTH_IMAGE_SCHEMA = StructType(
 )
 
 
-def _synth_payload_frame(df: DataFrame, id_col: str, build) -> DataFrame:
-    """(id) → (media_id, payload) via a per-id payload builder — the one
-    Arrow generation kernel behind every synth_*_payloads family
+def _synth_payload_frame(df: DataFrame, build) -> DataFrame:
+    """(doc_id) → (media_id, payload) via a per-id payload builder — the
+    one Arrow generation kernel behind every synth_*_payloads family
     (payloads are born on executors, never on the driver). The input
     spreads first: a single-split parquet id column would otherwise run
-    EVERY payload build + downstream parse on one task (the r13 ×10
-    probe read 2/32 tasks for pdf_text_extract; same class as the r12
-    PQ-train finding)."""
+    EVERY payload build + downstream parse on one task."""
     from etl_excel_csv_sql_spark.operators.relational import (
         spread_for_compute,
     )
 
     ids = spread_for_compute(df).select(
-        F.col(id_col).cast("long").alias("media_id")
+        F.col("doc_id").cast("long").alias("media_id")
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -388,40 +398,6 @@ def _synth_payload_frame(df: DataFrame, id_col: str, build) -> DataFrame:
 
     return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
 
-
-def _extract_meta_frame(
-    df: DataFrame, kernel, cols: tuple, schema: str, strict: bool
-) -> DataFrame:
-    """(media_id, payload) → (media_id, *cols) via a bytes → tuple
-    metadata kernel — the one Arrow extraction template behind every
-    extract_*_meta family (r12 review: eight byte-identical copies of
-    this loop drifted one strict-mode fix away from divergence).
-    Null or undecodable payloads yield nulls unless ``strict``, which
-    raises on either, as every hand-rolled kernel does."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k: [] for k in cols}
-            for payload in pdf["payload"]:
-                vals = None
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict metadata extract")
-                else:
-                    try:
-                        vals = kernel(bytes(payload))
-                    except ValueError:
-                        if strict:
-                            raise
-                if vals is None:
-                    for k in out:
-                        out[k].append(None)
-                else:
-                    for k, v in zip(out, vals):
-                        out[k].append(v)
-            yield pd.DataFrame({"media_id": pdf["media_id"], **out})
-
-    return df.select("media_id", "payload").mapInPandas(batches, schema)
 
 _SYNTH_FMTS = ("bmp", "png", "ppm", "gif", "tiff")
 
@@ -450,23 +426,15 @@ def _synth_pixels(media_id: int, w: int, h: int) -> np.ndarray:
     )
 
 
-def synth_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _image_payload(mid: int) -> bytes:
+    fmt, w, h = synth_image_dims(mid)
+    return codecs.encode_image(_synth_pixels(mid, w, h), fmt)
+
+
+def synth_image_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload) with REAL encoded BMP/PNG/PPM bytes per
     the ``synth_image_dims`` contract."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                fmt, w, h = synth_image_dims(int(mid))
-                payloads.append(codecs.encode_image(_synth_pixels(int(mid), w, h), fmt))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "payload": pd.Series(payloads, dtype="object")}
-            )
-
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, _image_payload)
 
 
 _SYNTH_FPS = (10, 12, 24, 25, 30, 50)
@@ -484,24 +452,13 @@ def synth_video_params(media_id: int) -> tuple[int, int, int, int]:
     )
 
 
-def synth_video_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_video_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload) with REAL AVI container bytes per the
     ``synth_video_params`` contract (headers exact; empty frame chunks —
     avi_meta never reads frame data)."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                w, h, fps, frames = synth_video_params(int(mid))
-                payloads.append(codecs.encode_avi(w, h, fps, frames))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "payload": pd.Series(payloads, dtype="object")}
-            )
-
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(
+        df, lambda mid: codecs.encode_avi(*synth_video_params(mid))
+    )
 
 
 def synth_mjpeg_params(media_id: int) -> tuple[int, int, int, int]:
@@ -527,32 +484,22 @@ def synth_mjpeg_frame_dims(media_id: int, frame_idx: int) -> tuple[int, int]:
     )
 
 
-def synth_mjpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _mjpeg_payload(mid: int) -> bytes:
+    w, h, fps, frames = synth_mjpeg_params(mid)
+    jpegs = [
+        codecs.encode_jpeg_header_only(*synth_mjpeg_frame_dims(mid, f))
+        for f in range(frames)
+    ]
+    return codecs.encode_mjpeg_avi(w, h, fps, jpegs)
+
+
+def synth_mjpeg_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload) with REAL MJPEG-in-AVI bytes: each
     '00dc' chunk is a structurally-valid JPEG marker stream whose SOF
     dims follow :func:`synth_mjpeg_frame_dims` — every field the frame
     walker reads is an integer function of (id, frame_idx), so the
     DuckDB oracle value-checks the whole exploded frame table."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                w, h, fps, frames = synth_mjpeg_params(int(mid))
-                jpegs = [
-                    codecs.encode_jpeg_header_only(
-                        *synth_mjpeg_frame_dims(int(mid), f)
-                    )
-                    for f in range(frames)
-                ]
-                payloads.append(codecs.encode_mjpeg_avi(w, h, fps, jpegs))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "payload": pd.Series(payloads, dtype="object")}
-            )
-
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, _mjpeg_payload)
 
 
 VIDEO_FRAMES_SCHEMA = StructType(
@@ -567,68 +514,40 @@ VIDEO_FRAMES_SCHEMA = StructType(
 )
 
 
+def _video_frame_rows(payload: bytes, strict: bool) -> Iterator[tuple]:
+    """(frame_idx, kind, frame_bytes, width, height) per movi chunk."""
+    cw, ch, _, _ = codecs.avi_meta(payload)
+    for idx, kind, body in codecs.avi_frames(payload):
+        w = h = None
+        try:
+            if kind == "dc":
+                w, h = codecs.jpeg_meta(body)
+            elif kind == "db" and body:
+                codecs.decode_dib_frame(body, cw, ch)
+                w, h = cw, ch
+        except ValueError:
+            if strict:
+                raise
+        yield idx, kind, len(body), w, h
+
+
 def extract_video_frames(df: DataFrame, strict: bool = False) -> DataFrame:
-    """REAL per-frame video demux (VERDICT r9 #5 — the movi walk the
-    frame-sample *plan* was waiting for): one output row per video frame
-    chunk with its codec kind, byte size, and dimensions — MJPEG ('dc')
-    frames get per-frame dims from their own JPEG SOF header
-    (``codecs.jpeg_meta``); uncompressed-DIB ('db') frames carry the
+    """REAL per-frame video demux (the movi walk the frame-sample *plan*
+    only estimates): one output row per video frame chunk with its codec
+    kind, byte size, and dimensions — MJPEG ('dc') frames get per-frame
+    dims from their own JPEG SOF header (``codecs.jpeg_meta``);
+    uncompressed-DIB ('db') frames carry the
     container's strf dims (validated against the chunk's byte size).
     Frame BYTES never leave the kernel — only (id, idx, kind, size,
     dims) shuffle, so the op stays cheap at any video size. Empty 'db'
-    chunks (the metadata-only fixtures) yield null dims.
+    chunks (the metadata-only fixtures) and frames whose header fails
+    to parse yield null dims (raise under ``strict``).
 
     For real pixels (DIB and baseline-MJPEG frames both decode) use
     :func:`video_frame_ahash`. Non-AVI / malformed payloads raise under
-    ``strict`` and are skipped otherwise (zero rows — the quarantine
-    contract for an EXPLODING kernel, where per-row nulls would fabricate
-    a frame count of 1)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "kind": [],
-                "frame_bytes": [], "frame_width": [], "frame_height": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict frame demux")
-                    continue
-                try:
-                    raw = bytes(payload)
-                    cw, ch, _, _ = codecs.avi_meta(raw)
-                    frames = codecs.avi_frames(raw)
-                except ValueError:
-                    if strict:
-                        raise
-                    continue
-                for idx, kind, body in frames:
-                    w = h = None
-                    if kind == "dc":
-                        try:
-                            w, h = codecs.jpeg_meta(body)
-                        except ValueError:
-                            if strict:
-                                raise
-                    elif kind == "db" and body:
-                        try:
-                            codecs.decode_dib_frame(body, cw, ch)
-                            w, h = cw, ch
-                        except ValueError:
-                            if strict:
-                                raise
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(idx)
-                    out["kind"].append(kind)
-                    out["frame_bytes"].append(len(body))
-                    out["frame_width"].append(w)
-                    out["frame_height"].append(h)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
-
-    return df.mapInPandas(batches, VIDEO_FRAMES_SCHEMA)
+    ``strict`` and are skipped otherwise (zero rows, see
+    ``_explode_frame``)."""
+    return _explode_frame(df, _video_frame_rows, VIDEO_FRAMES_SCHEMA, strict)
 
 
 FRAME_AHASH_SCHEMA = StructType(
@@ -640,106 +559,79 @@ FRAME_AHASH_SCHEMA = StructType(
 )
 
 
+def _frame_ahash_rows(payload: bytes, strict: bool) -> Iterator[tuple]:
+    """(frame_idx, ahash) per decodable movi frame; the others raise
+    under ``strict`` and are skipped otherwise."""
+    cw, ch, _, _ = codecs.avi_meta(payload)
+    for idx, kind, body in codecs.avi_frames(payload):
+        try:
+            if not body or kind not in ("db", "dc"):
+                raise ValueError(
+                    f"frame {idx}: no pixel decode for kind {kind!r}"
+                )
+            if kind == "db":
+                arr = codecs.decode_dib_frame(body, cw, ch)
+            else:
+                arr = codecs.decode_jpeg(body)
+        except ValueError:
+            if strict:
+                raise
+            continue
+        yield idx, _ahash_bits(_gray(arr))
+
+
 def video_frame_ahash(df: DataFrame, strict: bool = False) -> DataFrame:
     """Per-frame perceptual hash over AVI payloads — REAL pixels
     end-to-end: movi walk → frame decode → grayscale → the same
     block-mean aHash images use. Uncompressed-DIB ('db') frames decode
     via the BMP pixel-array layout; MJPEG ('dc') frames via the JPEG
-    entropy decoder (``codecs.decode_jpeg`` — baseline AND progressive;
-    r10 VERDICT missing-#1 closed). Output (media_id, frame_idx, ahash)
-    feeds ``dedup.hamming_pairs`` for video near-dup (shot duplication,
-    re-encoded clips) with the banded plan text SimHash uses.
+    entropy decoder (``codecs.decode_jpeg`` — baseline AND progressive).
+    Output (media_id, frame_idx, ahash) feeds ``dedup.hamming_pairs``
+    for video near-dup (shot duplication, re-encoded clips) with the
+    banded plan text SimHash uses.
     Undecodable frames (truncated bodies, arithmetic-coded JPEG) are
     skipped (raise under ``strict``)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "ahash": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict frame hash")
-                    continue
-                try:
-                    raw = bytes(payload)
-                    cw, ch, _, _ = codecs.avi_meta(raw)
-                    frames = codecs.avi_frames(raw)
-                except ValueError:
-                    if strict:
-                        raise
-                    continue
-                for idx, kind, body in frames:
-                    if not body or kind not in ("db", "dc"):
-                        if strict:
-                            raise ValueError(
-                                f"frame {idx}: no pixel decode for "
-                                f"kind {kind!r}"
-                            )
-                        continue
-                    try:
-                        if kind == "db":
-                            arr = codecs.decode_dib_frame(body, cw, ch)
-                        else:
-                            arr = codecs.decode_jpeg(body)
-                    except ValueError:
-                        if strict:
-                            raise
-                        continue
-                    gray = arr.astype(np.float64).mean(axis=2)
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(idx)
-                    out["ahash"].append(_ahash_bits(gray, 8))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
-
-    return df.mapInPandas(batches, FRAME_AHASH_SCHEMA)
+    return _explode_frame(df, _frame_ahash_rows, FRAME_AHASH_SCHEMA, strict)
 
 
-def _audio_fp_bits(
-    mono: np.ndarray,
-    rate: int,
-    frame_len: int,
-    hop: int,
-    n_bands: int,
-) -> list[int]:
+# Haitsma–Kalker analysis framing: Hann window and hop in samples, and
+# band count (n_bands - 1 = 64 bits per sub-fingerprint, one signed long)
+_FP_FRAME_LEN = 2048
+_FP_HOP = 1024
+_FP_BANDS = 65
+
+
+def _audio_fp_bits(mono: np.ndarray, rate: int) -> list[int]:
     """Haitsma–Kalker robust audio fingerprint (ISMIR 2002): Hann-
-    windowed frames → power spectrum → ``n_bands`` log-spaced band
+    windowed frames → power spectrum → ``_FP_BANDS`` log-spaced band
     energies → bit b of frame t is the sign of the band/time double
-    difference (E[t,b]−E[t,b+1]) − (E[t−1,b]−E[t−1,b+1]). n_bands−1 =
-    64 bits per sub-fingerprint, packed into a signed long so the same
+    difference (E[t,b]−E[t,b+1]) − (E[t−1,b]−E[t−1,b+1]). 64 bits per
+    sub-fingerprint, packed into a signed long so the same
     Manku-banded ``dedup.hamming_pairs`` plan pairs audio, images, and
     text. One deviation from the paper: the sign test uses a small
     energy floor (1e−4 of the frame pair's total energy) instead of a
     strict >0 — bands with no signal would otherwise emit noise-random
     bits and a clip's re-encode could land far outside the Hamming
     ball."""
-    if not 2 <= n_bands <= 65:
-        # n_bands-1 bits must fit the signed 64-bit fp column; a larger
-        # value would overflow the single two's-complement wrap below
-        # and crash (or silently corrupt) at the Arrow boundary
-        raise ValueError(f"n_bands must be in [2, 65], got {n_bands}")
     n = len(mono)
-    if n < 2 * frame_len:
+    if n < 2 * _FP_FRAME_LEN:
         return []
-    window = np.hanning(frame_len)
-    starts = range(0, n - frame_len + 1, hop)
+    window = np.hanning(_FP_FRAME_LEN)
+    starts = range(0, n - _FP_FRAME_LEN + 1, _FP_HOP)
     spec = np.stack(
         [
-            np.abs(np.fft.rfft(mono[s : s + frame_len] * window)) ** 2
+            np.abs(np.fft.rfft(mono[s : s + _FP_FRAME_LEN] * window)) ** 2
             for s in starts
         ]
     )
     f_lo, f_hi = 100.0, min(rate / 2.0, 3000.0)
-    edges = np.geomspace(f_lo, f_hi, n_bands + 1)
-    bin_hz = rate / frame_len
+    edges = np.geomspace(f_lo, f_hi, _FP_BANDS + 1)
+    bin_hz = rate / _FP_FRAME_LEN
     idx = np.clip((edges / bin_hz).astype(int), 0, spec.shape[1] - 1)
     bands = np.stack(
         [
             spec[:, idx[b] : max(idx[b + 1], idx[b] + 1)].sum(axis=1)
-            for b in range(n_bands)
+            for b in range(_FP_BANDS)
         ],
         axis=1,
     )  # (n_frames, n_bands)
@@ -749,15 +641,7 @@ def _audio_fp_bits(
         bands[1:].sum(axis=1) + bands[:-1].sum(axis=1)
     )
     bits = dd > floor[:, None]
-    fps = []
-    for row in bits:
-        val = 0
-        for bit in row:
-            val = (val << 1) | int(bit)
-        if val >= 1 << 63:
-            val -= 1 << 64
-        fps.append(val)
-    return fps
+    return [_pack_signed64(row) for row in bits]
 
 
 AUDIO_FP_SCHEMA = StructType(
@@ -861,6 +745,15 @@ def frame_neardup_pairs(
     return out
 
 
+def _audio_fp_rows(payload: bytes, strict: bool) -> Iterator[tuple]:
+    """(frame_idx, fp) per sub-fingerprint of the channel-mean PCM."""
+    pcm, rate = codecs.decode_wav(payload)
+    fps = _audio_fp_bits(pcm.astype(np.float64).mean(axis=1), rate)
+    if not fps and strict:
+        raise ValueError("clip shorter than two analysis frames")
+    return enumerate(fps)
+
+
 def audio_fingerprints(df: DataFrame, strict: bool = False) -> DataFrame:
     """Per-frame spectral fingerprints over RIFF-WAVE payloads — real
     PCM decode (``codecs.decode_wav``) → channel mean → Haitsma–Kalker
@@ -871,45 +764,19 @@ def audio_fingerprints(df: DataFrame, strict: bool = False) -> DataFrame:
     PCM never leaves the Arrow kernel; only (id, idx, 64-bit fp)
     shuffle. Non-WAV / non-PCM16 payloads and clips shorter than two
     analysis frames yield zero rows (raise under ``strict``)."""
+    return _explode_frame(df, _audio_fp_rows, AUDIO_FP_SCHEMA, strict)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "fp": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    if strict:
-                        raise ValueError("null payload in strict audio fp")
-                    continue
-                try:
-                    pcm, rate = codecs.decode_wav(bytes(payload))
-                except ValueError:
-                    if strict:
-                        raise
-                    continue
-                mono = pcm.astype(np.float64).mean(axis=1)
-                fps = _audio_fp_bits(mono, rate, 2048, 1024, 65)
-                if not fps and strict:
-                    raise ValueError(
-                        f"clip {mid}: shorter than two analysis frames"
-                    )
-                for i, fp in enumerate(fps):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["fp"].append(fp)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
 
-    return df.mapInPandas(batches, AUDIO_FP_SCHEMA)
+#: samples per synth_audio_fp_payloads clip (8 kHz mono)
+_FP_FIXTURE_SAMPLES = 8192
 
 
 def synth_audio_fp_payloads(
     df: DataFrame,
-    id_col: str = "doc_id",
     id_offset: int = 0,
     perturb: bool = False,
     remux: bool = False,
-    n_samples: int = 8192,
+    n_samples: int = _FP_FIXTURE_SAMPLES,
 ) -> DataFrame:
     """(id) → (media_id, payload): mono PCM16 WAV clips purpose-built
     for fingerprint tests — a stack of four id-keyed CHIRPED sinusoids
@@ -923,53 +790,41 @@ def synth_audio_fp_payloads(
     byte-different container (codecs.remux_wav) — fingerprints exactly
     equal, the closed-form twin the oracled near-dup query uses. Twin
     ids are original + ``id_offset``."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, payloads = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                t = np.arange(n_samples, dtype=np.float64) / 8000
-                sig = np.zeros(n_samples)
-                for k in range(4):
-                    # md5-keyed base frequency (r11): the old linear
-                    # keying (mid*991 + 631k) % 2600 COLLIDED for ids
-                    # 2600 apart — 2600 is a multiple of the query's
-                    # id % 50 stride, so at sf0.1 two different docs
-                    # shared every chirp and their fingerprints matched
-                    # at every aligned frame (a false clip pair)
-                    f0 = 150.0 + (
-                        int.from_bytes(
-                            hashlib.md5(f"afp:{mid}:{k}".encode()).digest()[:4],
-                            "big",
-                        )
-                        % 2600
-                    )
-                    freq = f0 * (0.85 + 0.3 * t / t[-1])
-                    phase = 2 * np.pi * np.cumsum(freq) / 8000
-                    env = 0.6 + 0.4 * np.sin(
-                        2 * np.pi
-                        * (0.4 + ((mid * 13 + 5 * k) % 9) / 6.0)
-                        * t
-                    )
-                    sig += env * np.sin(phase)
-                sig *= 6000.0
-                if perturb:
-                    rng = np.random.default_rng(mid)
-                    sig += rng.uniform(-60.0, 60.0, n_samples)
-                pcm = np.clip(sig, -32768, 32767).astype(np.int16)
-                out_ids.append(mid + id_offset)
-                wav = codecs.encode_wav(pcm, 8000, 1)
-                payloads.append(codecs.remux_wav(wav) if remux else wav)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
+    def build(mid: int) -> bytes:
+        t = np.arange(n_samples, dtype=np.float64) / 8000
+        sig = np.zeros(n_samples)
+        for k in range(4):
+            # md5-keyed base frequency: a linear keying
+            # (mid*991 + 631k) % 2600 COLLIDES for ids 2600 apart —
+            # 2600 is a multiple of the query's id % 50 stride, so at
+            # sf0.1 two different docs would share every chirp and
+            # their fingerprints match at every aligned frame (a false
+            # clip pair)
+            f0 = 150.0 + (
+                int.from_bytes(
+                    hashlib.md5(f"afp:{mid}:{k}".encode()).digest()[:4],
+                    "big",
+                )
+                % 2600
             )
+            freq = f0 * (0.85 + 0.3 * t / t[-1])
+            phase = 2 * np.pi * np.cumsum(freq) / 8000
+            env = 0.6 + 0.4 * np.sin(
+                2 * np.pi * (0.4 + ((mid * 13 + 5 * k) % 9) / 6.0) * t
+            )
+            sig += env * np.sin(phase)
+        sig *= 6000.0
+        if perturb:
+            rng = np.random.default_rng(mid)
+            sig += rng.uniform(-60.0, 60.0, n_samples)
+        pcm = np.clip(sig, -32768, 32767).astype(np.int16)
+        wav = codecs.encode_wav(pcm, 8000, 1)
+        return codecs.remux_wav(wav) if remux else wav
 
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, build).withColumn(
+        "media_id", F.col("media_id") + id_offset
+    )
 
 
 def synth_audio_params(media_id: int) -> tuple[int, int, int]:
@@ -979,25 +834,17 @@ def synth_audio_params(media_id: int) -> tuple[int, int, int]:
     return 8000 * (1 + media_id % 6), 1 + media_id % 2, 256 + (media_id % 64) * 16
 
 
-def synth_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _audio_payload(mid: int) -> bytes:
+    rate, ch, frames = synth_audio_params(mid)
+    n = np.arange(frames * ch, dtype=np.int64)
+    pcm = ((n * (3 + mid % 17)) % 251 - 125).astype(np.int16)
+    return codecs.encode_wav(pcm.reshape(frames, ch), rate, ch)
+
+
+def synth_audio_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload) with REAL RIFF-WAVE PCM16 bytes per the
     ``synth_audio_params`` contract (deterministic int16 sawtooth)."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                rate, ch, frames = synth_audio_params(int(mid))
-                n = np.arange(frames * ch, dtype=np.int64)
-                pcm = ((n * (3 + int(mid) % 17)) % 251 - 125).astype(np.int16)
-                payloads.append(codecs.encode_wav(pcm.reshape(frames, ch), rate, ch))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "payload": pd.Series(payloads, dtype="object")}
-            )
-
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, _audio_payload)
 
 
 AHASH_SCHEMA = StructType(
@@ -1008,21 +855,21 @@ AHASH_SCHEMA = StructType(
 )
 
 
-def _ahash_bits(gray: np.ndarray, hash_size: int) -> int:
-    """Block-mean average hash of a 2-D grayscale array: downsample to
-    hash_size² cells by BLOCK MEAN (integral image — robust to per-pixel
-    noise, unlike nearest-neighbor picking), threshold at the global cell
-    mean, pack row-major MSB-first."""
+def _gray(arr: np.ndarray) -> np.ndarray:
+    """Decoded pixels → float64 2-D grayscale (channel mean)."""
+    arr = arr.astype(np.float64)
+    return arr.mean(axis=2) if arr.ndim == 3 else arr
+
+
+def _block_means(gray: np.ndarray, n: int) -> np.ndarray:
+    """n×n block means of a 2-D array via an integral image (robust to
+    per-pixel noise, unlike nearest-neighbor picking); when a dim is
+    below n, degenerate cells borrow the next boundary."""
     h, w = gray.shape
     ii = np.zeros((h + 1, w + 1), dtype=np.float64)
     ii[1:, 1:] = gray.astype(np.float64).cumsum(axis=0).cumsum(axis=1)
-    ys = (np.arange(hash_size + 1) * h) // hash_size
-    xs = (np.arange(hash_size + 1) * w) // hash_size
-    # degenerate cells (dim < hash_size) borrow the next boundary
-    ys = np.maximum(ys, np.arange(hash_size + 1))
-    xs = np.maximum(xs, np.arange(hash_size + 1))
-    ys = np.minimum(ys, h)
-    xs = np.minimum(xs, w)
+    ys = np.minimum(np.maximum((np.arange(n + 1) * h) // n, np.arange(n + 1)), h)
+    xs = np.minimum(np.maximum((np.arange(n + 1) * w) // n, np.arange(n + 1)), w)
     y0, y1 = ys[:-1], ys[1:]
     x0, x1 = xs[:-1], xs[1:]
     areas = np.maximum(
@@ -1034,91 +881,66 @@ def _ahash_bits(gray: np.ndarray, hash_size: int) -> int:
         - ii[y1[:, None], x0[None, :]]
         + ii[y0[:, None], x0[None, :]]
     )
-    cells = sums / areas
-    bits = (cells > cells.mean()).ravel()
+    return sums / areas
+
+
+def _pack_signed64(bits) -> int:
+    """Up to 64 bits, MSB first → a two's-complement Spark LongType."""
     val = 0
     for bit in bits:
         val = (val << 1) | int(bit)
-    if val >= 1 << 63:
-        val -= 1 << 64  # two's-complement into a Spark LongType
-    return val
+    return val - (1 << 64) if val >= 1 << 63 else val
+
+
+def _ahash_bits(gray: np.ndarray) -> int:
+    """Block-mean average hash of a 2-D grayscale array: 8×8 block means,
+    thresholded at the global cell mean, packed row-major MSB-first."""
+    cells = _block_means(gray, 8)
+    return _pack_signed64((cells > cells.mean()).ravel())
 
 
 def ahash_images(df: DataFrame, strict: bool = False) -> DataFrame:
     """Perceptual average-hash (aHash) per image: decode (real stdlib
-    BMP/PNG/PPM codecs) → grayscale → block-mean downsample to
-    hash_size² → threshold at the mean → 64-bit fingerprint. The image
+    BMP/PNG/PPM codecs) → grayscale → block-mean downsample to 8×8 →
+    threshold at the mean → 64-bit fingerprint. The image
     twin of text SimHash: visually-near-identical images (re-encodes,
     slight noise, small edits) land within a small Hamming distance, so
     ``dedup.hamming_pairs`` finds image near-duplicates with the SAME
     banded plan text dedup uses — no new shuffle machinery.
 
     Arrow-batched mapInPandas (never per-row Python UDF); payloads stay
-    in executors, only (id, 64-bit hash) ever shuffles. Undecodable
-    payloads yield NULL (or raise when ``strict``).
+    in executors, only (id, 64-bit hash) ever shuffles. Null or
+    undecodable payloads yield NULL (or raise when ``strict``).
     """
-    src = df.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("payload"),
+    return _extract_meta_frame(
+        df, lambda b: (_ahash_bits(_gray(codecs.decode_image(b)[1])),),
+        ("ahash",), AHASH_SCHEMA, strict,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes: list[int | None] = []
-            for payload in pdf["payload"]:
-                try:
-                    _, arr = codecs.decode_image(bytes(payload))
-                    gray = (
-                        arr.astype(np.float64).mean(axis=2)
-                        if arr.ndim == 3
-                        else arr.astype(np.float64)
-                    )
-                    hashes.append(_ahash_bits(gray, 8))
-                except Exception:
-                    if strict:
-                        raise
-                    hashes.append(None)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "ahash": pd.Series(hashes, dtype="object")}
-            )
 
-    return src.mapInPandas(batches, AHASH_SCHEMA)
+def _perturbed_image_payload(mid: int) -> bytes:
+    fmt, w, h = synth_image_dims(mid)
+    arr = _synth_pixels(mid, w, h).astype(np.int16)
+    arr[::5, ::7, :] += 2
+    arr[1::6, 2::5, :] -= 2
+    # Wrap (mod 256), do NOT clip: _synth_pixels colors are the
+    # 256-member family (v, v+31, v+62) mod 256, and a clipped channel
+    # leaves that family — encode_gif (exact 256-color palette) would
+    # then reject the twin for GIF-designated ids. Wrapping maps each
+    # noisy pixel to family member (v±2) mod 256, keeping every format
+    # encodable.
+    return codecs.encode_image((arr % 256).astype(np.uint8), fmt)
 
 
-def perturbed_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def perturbed_image_payloads(df: DataFrame) -> DataFrame:
     """Near-duplicate twins of :func:`synth_image_payloads`: same synth
     pixels per the id contract, plus ±2 noise on a sparse pixel grid —
     visually the same image (a re-encode/transmission-noise stand-in),
     so each twin must land within a small Hamming ball of its original.
     Twin ids are original + 1,000,000."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, payloads = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                fmt, w, h = synth_image_dims(mid)
-                arr = _synth_pixels(mid, w, h).astype(np.int16)
-                arr[::5, ::7, :] += 2
-                arr[1::6, 2::5, :] -= 2
-                # Wrap (mod 256), do NOT clip: _synth_pixels colors are the
-                # 256-member family (v, v+31, v+62) mod 256, and a clipped
-                # channel leaves that family — encode_gif (exact 256-color
-                # palette) would then reject the twin for GIF-designated
-                # ids. Wrapping maps each noisy pixel to family member
-                # (v±2) mod 256, keeping every format encodable.
-                arr = (arr % 256).astype(np.uint8)
-                out_ids.append(mid + 1_000_000)
-                payloads.append(codecs.encode_image(arr, fmt))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, _perturbed_image_payload).withColumn(
+        "media_id", F.col("media_id") + 1_000_000
+    )
 
 
 def synth_dib_video_params(media_id: int) -> tuple[int, int, int, int]:
@@ -1136,7 +958,6 @@ def synth_dib_video_params(media_id: int) -> tuple[int, int, int, int]:
 
 def synth_dib_video_payloads(
     df: DataFrame,
-    id_col: str = "doc_id",
     id_offset: int = 0,
     perturb: bool = False,
 ) -> DataFrame:
@@ -1149,36 +970,26 @@ def synth_dib_video_payloads(
     so the clip is harmless, while the image twins must wrap to stay
     inside the GIF-encodable color family. Twin ids are original +
     ``id_offset``."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, payloads = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h, fps, n = synth_dib_video_params(mid)
-                frames = []
-                for f in range(n):
-                    arr = _synth_pixels(mid * 100 + f, w, h)
-                    if perturb:
-                        arr = arr.astype(np.int16)
-                        arr[::5, ::7, :] += 2
-                        arr[1::6, 2::5, :] -= 2
-                        arr = np.clip(arr, 0, 255).astype(np.uint8)
-                    frames.append(arr)
-                out_ids.append(mid + id_offset)
-                payloads.append(codecs.encode_dib_avi(w, h, fps, frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def build(mid: int) -> bytes:
+        w, h, fps, n = synth_dib_video_params(mid)
+        frames = []
+        for f in range(n):
+            arr = _synth_pixels(mid * 100 + f, w, h)
+            if perturb:
+                arr = arr.astype(np.int16)
+                arr[::5, ::7, :] += 2
+                arr[1::6, 2::5, :] -= 2
+                arr = np.clip(arr, 0, 255).astype(np.uint8)
+            frames.append(arr)
+        return codecs.encode_dib_avi(w, h, fps, frames)
 
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, build).withColumn(
+        "media_id", F.col("media_id") + id_offset
+    )
 
 
-# --- closed-form perceptual-hash fixtures (r10 VERDICT #3) ----------------
+# --- closed-form perceptual-hash fixtures ---------------------------------
 #
 # The gradient+noise twins prove ROBUSTNESS (kept in pytest), but their
 # hash distances are not closed-form, so the near-dup queries were
@@ -1238,7 +1049,6 @@ def _grid_pixels(pattern: int) -> np.ndarray:
 
 def synth_grid_image_payloads(
     df: DataFrame,
-    id_col: str = "doc_id",
     id_offset: int = 0,
     flip_bits: int = 0,
     key: str = "gridimg",
@@ -1249,30 +1059,18 @@ def synth_grid_image_payloads(
     note above. ``fmt_shift`` rotates the codec cycle (same pixels,
     different container = the re-encode twin for pHash); ``flip_bits``
     makes aHash twins at exact Hamming distance flip_bits."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, payloads = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                arr = _grid_pixels(grid_pattern64(mid, key, flip_bits))
-                fmt = _SYNTH_FMTS[(mid + fmt_shift) % 5]
-                out_ids.append(mid + id_offset)
-                payloads.append(codecs.encode_image(arr, fmt))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def build(mid: int) -> bytes:
+        arr = _grid_pixels(grid_pattern64(mid, key, flip_bits))
+        return codecs.encode_image(arr, _SYNTH_FMTS[(mid + fmt_shift) % 5])
 
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, build).withColumn(
+        "media_id", F.col("media_id") + id_offset
+    )
 
 
 def synth_grid_dib_video_payloads(
     df: DataFrame,
-    id_col: str = "doc_id",
     id_offset: int = 0,
     flip_bits: int = 0,
 ) -> DataFrame:
@@ -1283,34 +1081,21 @@ def synth_grid_dib_video_payloads(
     twin flips the same designated cells in EVERY frame, so each aligned
     frame pair is at exact distance flip_bits and the clip rollup's
     n_matched is exactly the frame count."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, payloads = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                fps = _SYNTH_FPS[mid % 6]
-                n = 3 + mid % 4
-                frames = [
-                    _grid_pixels(grid_pattern64(mid, f"gridvid:{f}", flip_bits))
-                    for f in range(n)
-                ]
-                out_ids.append(mid + id_offset)
-                payloads.append(codecs.encode_dib_avi(64, 64, fps, frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def build(mid: int) -> bytes:
+        frames = [
+            _grid_pixels(grid_pattern64(mid, f"gridvid:{f}", flip_bits))
+            for f in range(3 + mid % 4)
+        ]
+        return codecs.encode_dib_avi(64, 64, _SYNTH_FPS[mid % 6], frames)
 
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, build).withColumn(
+        "media_id", F.col("media_id") + id_offset
+    )
 
 
 def synth_grid_mjpeg_video_payloads(
     df: DataFrame,
-    id_col: str = "doc_id",
     id_offset: int = 0,
     flip_bits: int = 0,
 ) -> DataFrame:
@@ -1328,45 +1113,30 @@ def synth_grid_mjpeg_video_payloads(
     path. Same n_frames / fps / twin-flip contracts as the DIB variant,
     so the two queries share one value oracle while covering the two
     decode branches of ``video_frame_ahash``."""
-    ids = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, payloads = [], []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                fps = _SYNTH_FPS[mid % 6]
-                n = 3 + mid % 4
-                quality = (75, 85, 90)[mid % 3]
-                sub = ("4:4:4", "4:2:2", "4:2:0")[(mid // 3) % 3]
-                # keyed by mid // 9, not mid % 2: the registry query
-                # samples doc_id % 50 == 0 (all even), which under a
-                # parity key would NEVER exercise restart markers in
-                # the driver-evidenced corpus (r11 review catch); // 9
-                # cycles for both the pytest ids (0..17) and the
-                # 50-strided driver ids
-                restart = (0, 2)[(mid // 9) % 2]
-                frames = [
-                    codecs.encode_jpeg_baseline(
-                        _grid_pixels(
-                            grid_pattern64(mid, f"gridvid:{f}", flip_bits)
-                        ),
-                        quality=quality,
-                        subsampling=sub,
-                        restart_interval=restart,
-                    )
-                    for f in range(n)
-                ]
-                out_ids.append(mid + id_offset)
-                payloads.append(codecs.encode_mjpeg_avi(64, 64, fps, frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out_ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
+    def build(mid: int) -> bytes:
+        quality = (75, 85, 90)[mid % 3]
+        sub = ("4:4:4", "4:2:2", "4:2:0")[(mid // 3) % 3]
+        # keyed by mid // 9, not mid % 2: the registry query samples
+        # doc_id % 50 == 0 (all even), which under a parity key would
+        # NEVER exercise restart markers in the registered query's
+        # corpus; // 9 cycles for both the pytest ids (0..17) and the
+        # 50-strided registry ids
+        restart = (0, 2)[(mid // 9) % 2]
+        frames = [
+            codecs.encode_jpeg_baseline(
+                _grid_pixels(grid_pattern64(mid, f"gridvid:{f}", flip_bits)),
+                quality=quality,
+                subsampling=sub,
+                restart_interval=restart,
             )
+            for f in range(3 + mid % 4)
+        ]
+        return codecs.encode_mjpeg_avi(64, 64, _SYNTH_FPS[mid % 6], frames)
 
-    return ids.mapInPandas(batches, SYNTH_IMAGE_SCHEMA)
+    return _synth_payload_frame(df, build).withColumn(
+        "media_id", F.col("media_id") + id_offset
+    )
 
 
 _MP3_SYNTH_BITRATES = (
@@ -1395,13 +1165,13 @@ def _mp3_payload(mid: int) -> bytes:
     )
 
 
-def synth_mp3_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_mp3_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): structurally valid MPEG-1 Layer III
     streams per the ``synth_mp3_params`` contract (real frame headers
     and lengths, zeroed main data — the metadata surface is real; audio
     ENCODING is out of scope by design, like image psychovisual
     tuning)."""
-    return _synth_payload_frame(df, id_col, _mp3_payload)
+    return _synth_payload_frame(df, _mp3_payload)
 
 
 MP3_META_SCHEMA = (
@@ -1461,12 +1231,12 @@ def _mp4_payload(mid: int) -> bytes:
     return codecs.encode_mp4_headers(brand, ts, dur, tracks)
 
 
-def synth_mp4_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_mp4_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): structurally valid ISO-BMFF files per
     the ``synth_mp4_params`` contract (real ftyp/moov/trak box tree,
     empty mdat — the container-metadata surface is real; H.264 sample
     ENCODING is out of scope by design, like MP3 main data)."""
-    return _synth_payload_frame(df, id_col, _mp4_payload)
+    return _synth_payload_frame(df, _mp4_payload)
 
 
 MP4_META_SCHEMA = (
@@ -1517,11 +1287,11 @@ def _flac_payload(mid: int) -> bytes:
     )
 
 
-def synth_flac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_flac_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): real fLaC metadata chains per the
     ``synth_flac_params`` contract (STREAMINFO bitfields + optional
     VORBIS_COMMENT; Rice-coded audio frames out of scope by design)."""
-    return _synth_payload_frame(df, id_col, _flac_payload)
+    return _synth_payload_frame(df, _flac_payload)
 
 
 FLAC_META_SCHEMA = (
@@ -1566,12 +1336,12 @@ def _adts_payload(mid: int) -> bytes:
     return codecs.encode_adts_frames(nf, rate, ch, profile=prof, crc=crc)
 
 
-def synth_aac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_aac_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): structurally valid ADTS streams per
     the ``synth_aac_params`` contract (real frame headers with correct
     lengths; raw AAC payload encoding out of scope by design, like MP3
     main data)."""
-    return _synth_payload_frame(df, id_col, _adts_payload)
+    return _synth_payload_frame(df, _adts_payload)
 
 
 AAC_META_SCHEMA = (
@@ -1629,12 +1399,12 @@ def _webm_payload(mid: int) -> bytes:
     return codecs.encode_webm_headers(dt, ts, ticks, tracks)
 
 
-def synth_webm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_webm_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): structurally valid EBML trees per the
     ``synth_webm_params`` contract (real EBML header/Segment/Info/Tracks
     vint encoding; Clusters — VP8/VP9 frame data — out of scope by
     design, like the empty mdat in the MP4 fixture)."""
-    return _synth_payload_frame(df, id_col, _webm_payload)
+    return _synth_payload_frame(df, _webm_payload)
 
 
 WEBM_META_SCHEMA = (
@@ -1679,11 +1449,11 @@ def _webp_payload(mid: int) -> bytes:
     return codecs.encode_webp_headers(fmt, w, h, alpha=alpha, animation=anim)
 
 
-def synth_webp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_webp_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): structurally valid WebP RIFF headers
     per the ``synth_webp_params`` contract (VP8/VP8L bitstream payload
     out of scope by design)."""
-    return _synth_payload_frame(df, id_col, _webp_payload)
+    return _synth_payload_frame(df, _webp_payload)
 
 
 WEBP_META_SCHEMA = (
@@ -1725,12 +1495,12 @@ def _ogg_payload(mid: int) -> bytes:
     return codecs.encode_ogg_opus(ch, ps, ir, npg, samp)
 
 
-def synth_ogg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_ogg_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): real Ogg page chains carrying an
     OpusHead/OpusTags header pair and granule-positioned audio pages
     per the ``synth_ogg_params`` contract (Opus frame encoding out of
     scope by design)."""
-    return _synth_payload_frame(df, id_col, _ogg_payload)
+    return _synth_payload_frame(df, _ogg_payload)
 
 
 OGG_META_SCHEMA = (
@@ -1766,14 +1536,12 @@ def _mixed_payload(mid: int) -> bytes:
     return build(mid)
 
 
-def synth_mixed_media_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_mixed_media_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): a MIXED corpus cycling all seven
     header-walk container families by id % 7 — the fixture for the
     sniff-and-dispatch catalog (what a real unlabeled 100 TB media dump
     looks like: you don't get told which container each blob is)."""
-    return _synth_payload_frame(df, id_col, _mixed_payload)
+    return _synth_payload_frame(df, _mixed_payload)
 
 
 CATALOG_SCHEMA = (
@@ -1786,7 +1554,7 @@ _CATALOG_KIND = {
     "wav": "audio", "mp4": "video", "webm": "video", "avi": "video",
     "webp": "image", "bmp": "image", "png": "image", "gif": "image",
     "jpeg": "image", "tiff": "image", "ppm": "image",
-    "pdf": "doc",  # r13: documents route to the operators/pdf.py lane
+    "pdf": "doc",  # documents route to the operators/pdf.py lane
 }
 
 
@@ -1809,13 +1577,11 @@ def _catalog_row(payload: bytes) -> tuple:
     elif container == "webp":
         _, width, height, _, _ = codecs.webp_meta(payload)
     elif container == "wav":
-        rate, _ch, _bits, frames = codecs.wav_meta(payload)
-        duration = frames * 1000 // rate
+        duration = _wav_row(payload)[4]
     elif container == "pdf":
         pass  # documents carry no dims/duration; text lane extracts
     elif container == "avi":
-        width, height, fps, n_frames = codecs.avi_meta(payload)
-        duration = n_frames * 1000 // fps if fps else None
+        width, height, _, _, duration = _avi_row(payload)
     else:  # pure image formats share the image_meta surface
         _fmt, width, height = codecs.image_meta(payload)
     return container, kind, width, height, duration
@@ -1838,7 +1604,7 @@ def extract_media_catalog(df: DataFrame, strict: bool = False) -> DataFrame:
 # analysis sub-fingerprints per synth_audio_fp_payloads clip: frames =
 # (n_samples - frame_len)//hop + 1 Hann windows, minus 1 for the time
 # double-difference — shared with the SQL oracle rendering
-AUDIO_FP_FIXTURE_SUBFPS = (8192 - 2048) // 1024  # = 6
+AUDIO_FP_FIXTURE_SUBFPS = (_FP_FIXTURE_SAMPLES - _FP_FRAME_LEN) // _FP_HOP  # = 6
 
 
 EXIF_META_SCHEMA = (
@@ -1847,55 +1613,33 @@ EXIF_META_SCHEMA = (
 )
 
 
+def _exif_row(payload: bytes) -> tuple:
+    """SOF dims + the EXIF fields; a JPEG without EXIF is undecodable."""
+    w, h = codecs.jpeg_meta(payload)
+    m = codecs.exif_meta(payload)
+    return (
+        w, h, m["orientation"], m["make"], m["model"], m["datetime"],
+        m["exif_width"], m["exif_height"],
+    )
+
+
 def extract_exif_meta(df: DataFrame, strict: bool = False) -> DataFrame:
     """REAL EXIF extraction from JPEG payloads: SOF dims + the APP1 TIFF
     IFD walk (``codecs.exif_meta`` — byte-order aware, offset values).
     Arrow mapInPandas narrow map; payloads without EXIF (or undecodable)
-    yield null EXIF fields unless ``strict``.
+    yield an all-null row unless ``strict``.
 
     The typed-metadata side of the multimodal contract: camera fields
     become real columns a curation pipeline can filter/group on
     (orientation-based rotation routing, per-device sampling, capture-
     time range filters).
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "width", "height", "orientation", "make", "model",
-                    "taken_at", "exif_width", "exif_height",
-                )
-            }
-            for payload in pdf["payload"]:
-                meta = dims = None
-                if payload is not None:
-                    try:
-                        b = bytes(payload)
-                        dims = codecs.jpeg_meta(b)
-                        meta = codecs.exif_meta(b)
-                    except ValueError:
-                        if strict:
-                            raise
-                        meta = dims = None
-                elif strict:
-                    raise ValueError("null payload in strict EXIF decode")
-                cols["width"].append(dims[0] if dims else None)
-                cols["height"].append(dims[1] if dims else None)
-                m = meta or {}
-                cols["orientation"].append(m.get("orientation"))
-                cols["make"].append(m.get("make"))
-                cols["model"].append(m.get("model"))
-                cols["taken_at"].append(m.get("datetime"))
-                cols["exif_width"].append(m.get("exif_width"))
-                cols["exif_height"].append(m.get("exif_height"))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"]}
-                | {k: pd.Series(v, dtype="object") for k, v in cols.items()}
-            )
-
-    return df.mapInPandas(batches, EXIF_META_SCHEMA)
+    return _extract_meta_frame(
+        df, _exif_row,
+        ("width", "height", "orientation", "make", "model", "taken_at",
+         "exif_width", "exif_height"),
+        EXIF_META_SCHEMA, strict,
+    )
 
 
 def synth_exif_params(media_id: int) -> tuple[int, str, str, str, int, int]:
@@ -1913,29 +1657,20 @@ def synth_exif_params(media_id: int) -> tuple[int, str, str, str, int, int]:
     return orientation, make, model, dt, w, h
 
 
-def synth_exif_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _exif_jpeg_payload(mid: int) -> bytes:
+    o, mk, md, dt, w, h = synth_exif_params(mid)
+    app1 = codecs.build_exif_app1(
+        o, mk, md, dt, w, h, byte_order="<" if mid % 2 == 0 else ">"
+    )
+    return codecs.encode_jpeg_header_only(w, h, app1)
+
+
+def synth_exif_jpeg_payloads(df: DataFrame) -> DataFrame:
     """(media_id, payload): REAL JPEG marker streams with REAL APP1 EXIF
     segments following ``synth_exif_params``; byte order alternates per
     id (II/MM both exercised). No entropy data (documented stdlib
     boundary, like video frames — headers are exact)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for mid in pdf[id_col]:
-                o, mk, md, dt, w, h = synth_exif_params(int(mid))
-                app1 = codecs.build_exif_app1(
-                    o, mk, md, dt, w, h,
-                    byte_order="<" if int(mid) % 2 == 0 else ">",
-                )
-                payloads.append(codecs.encode_jpeg_header_only(w, h, app1))
-            yield pd.DataFrame(
-                {"media_id": pdf[id_col], "payload": payloads}
-            )
-
-    return df.select(id_col).mapInPandas(
-        batches, f"media_id long, payload binary"
-    )
+    return _synth_payload_frame(df, _exif_jpeg_payload)
 
 
 PHASH_SCHEMA = StructType(
@@ -1957,44 +1692,19 @@ def _dct_matrix(n: int) -> np.ndarray:
 
 def _phash_bits(gray: np.ndarray) -> int:
     """DCT perceptual hash: block-mean downsample to 32² (8·4), 2-D
-    DCT-II, keep the top-left 8² low-frequency block, threshold at the MEDIAN of the block with the
-    DC term excluded (DC is overall brightness — dropping it is what
-    makes pHash brightness-invariant, where aHash is not), pack
-    row-major MSB-first with the DC bit forced to 0."""
+    DCT-II, keep the top-left 8² low-frequency block, threshold at the
+    MEDIAN of the block with the DC term excluded (DC is overall
+    brightness — dropping it is what makes pHash brightness-invariant,
+    where aHash is not), pack row-major MSB-first with the DC bit forced
+    to 0."""
     n = 32
-    # reuse the integral-image block-mean from aHash for the downsample
-    cells = np.zeros((n, n), dtype=np.float64)
-    h, w = gray.shape
-    ii = np.zeros((h + 1, w + 1), dtype=np.float64)
-    ii[1:, 1:] = gray.astype(np.float64).cumsum(axis=0).cumsum(axis=1)
-    ys = np.clip(np.maximum((np.arange(n + 1) * h) // n, np.arange(n + 1)), 0, h)
-    xs = np.clip(np.maximum((np.arange(n + 1) * w) // n, np.arange(n + 1)), 0, w)
-    y0, y1 = ys[:-1], ys[1:]
-    x0, x1 = xs[:-1], xs[1:]
-    areas = np.maximum((y1 - y0)[:, None] * (x1 - x0)[None, :], 1).astype(
-        np.float64
-    )
-    cells = (
-        ii[y1[:, None], x1[None, :]]
-        - ii[y0[:, None], x1[None, :]]
-        - ii[y1[:, None], x0[None, :]]
-        + ii[y0[:, None], x0[None, :]]
-    ) / areas
     c = _dct_matrix(n)
-    freq = c @ cells @ c.T
-    block = freq[:8, :8]
-    flat = block.flatten()
+    flat = (c @ _block_means(gray, n) @ c.T)[:8, :8].flatten()
     med = np.median(flat[1:])  # DC excluded from the threshold
-    bits = 0
     # epsilon guard: a (near-)constant image has all-~0 AC coefficients
     # whose 1e-13 FP residue would otherwise threshold into random bits;
     # real DCT energy is orders of magnitude above 1e-9
-    eps = 1e-9
-    for idx, v in enumerate(flat):
-        if idx == 0:
-            continue  # DC bit forced 0
-        bits = (bits << 1) | (1 if v > med + eps else 0)
-    return bits
+    return _pack_signed64(flat[1:] > med + 1e-9)  # 63 bits: DC bit is 0
 
 
 def phash_images(df: DataFrame, strict: bool = False) -> DataFrame:
@@ -2006,39 +1716,14 @@ def phash_images(df: DataFrame, strict: bool = False) -> DataFrame:
     image-dedup literature actually deploys. Same Arrow kernel shape,
     same 64-bit output, same downstream ``dedup.hamming_pairs`` banding
     (fingerprint-agnostic); only (id, hash) ever shuffles."""
-    src = df.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("payload"),
+    return _extract_meta_frame(
+        df, lambda b: (_phash_bits(_gray(codecs.decode_image(b)[1])),),
+        ("phash",), PHASH_SCHEMA, strict,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes: list[int | None] = []
-            for payload in pdf["payload"]:
-                try:
-                    _, arr = codecs.decode_image(bytes(payload))
-                    gray = (
-                        arr.astype(np.float64).mean(axis=2)
-                        if arr.ndim == 3
-                        else arr.astype(np.float64)
-                    )
-                    hashes.append(_phash_bits(gray))
-                except Exception:
-                    if strict:
-                        raise
-                    hashes.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash": pd.Series(hashes, dtype="object"),
-                }
-            )
-
-    return src.mapInPandas(batches, PHASH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# PDF text — the post-HTML corpus source (r13, VERDICT r12 #4)
+# PDF text — the post-HTML corpus source
 # ---------------------------------------------------------------------------
 
 
@@ -2064,11 +1749,11 @@ def _pdf_payload(mid: int) -> bytes:
     return pdf.encode_pdf(shows)
 
 
-def synth_pdf_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_pdf_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): real classic-xref PDFs (FlateDecode
     content streams, TJ/Tj shows, escaped parens) per the
     ``synth_pdf_pages`` contract."""
-    return _synth_payload_frame(df, id_col, _pdf_payload)
+    return _synth_payload_frame(df, _pdf_payload)
 
 
 PDF_TEXT_SCHEMA = (
@@ -2114,15 +1799,13 @@ def _pdf_unicode_payload(mid: int) -> bytes:
     return pdf.encode_pdf_unicode([shows], fonts)
 
 
-def synth_pdf_unicode_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id) → (media_id, payload): the r14 Unicode lane — each PDF
+def synth_pdf_unicode_payloads(df: DataFrame) -> DataFrame:
+    """(id) → (media_id, payload): the Unicode lane — each PDF
     carries a 2-byte /ToUnicode CMap font (Greek/CJK/Cyrillic), a
     simple font with /Encoding /Differences (AGL glyph names), and a
     UTF-16BE BOM literal, so extraction exercises every decode path
     of pdf._page_text. Text is closed-form in the id."""
-    return _synth_payload_frame(df, id_col, _pdf_unicode_payload)
+    return _synth_payload_frame(df, _pdf_unicode_payload)
 
 
 def _pdf15_payload(mid: int) -> bytes:
@@ -2135,12 +1818,12 @@ def _pdf15_payload(mid: int) -> bytes:
     return pdf.encode_pdf(shows, xref_stream=True, objstm=True)
 
 
-def synth_pdf15_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_pdf15_payloads(df: DataFrame) -> DataFrame:
     """(id) → (media_id, payload): the PDF 1.5 twin of
     ``synth_pdf_payloads`` — cross-reference STREAM + every non-stream
     object packed into an ObjStm (the mass-produced real-world layout),
     same ``synth_pdf_pages`` text contract."""
-    return _synth_payload_frame(df, id_col, _pdf15_payload)
+    return _synth_payload_frame(df, _pdf15_payload)
 
 
 def _pdf_lzw_payload(mid: int) -> bytes:
@@ -2153,13 +1836,13 @@ def _pdf_lzw_payload(mid: int) -> bytes:
     return pdf.encode_pdf(shows, lzw=True)
 
 
-def synth_pdf_lzw_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id) → (media_id, payload): the r15 LZWDecode lane — same
+def synth_pdf_lzw_payloads(df: DataFrame) -> DataFrame:
+    """(id) → (media_id, payload): the LZWDecode lane — same
     ``synth_pdf_pages`` text contract as the Flate lane, but content
     streams carry /Filter /LZWDecode (MSB-first variable 9..12-bit
     codes per PDF 32000-1 §7.4.4), so extraction exercises
     ``pdf._lzw_decode`` end to end."""
-    return _synth_payload_frame(df, id_col, _pdf_lzw_payload)
+    return _synth_payload_frame(df, _pdf_lzw_payload)
 
 
 def _pdf_rc4_payload(mid: int) -> bytes:
@@ -2187,15 +1870,15 @@ def _pdf_rc4_payload(mid: int) -> bytes:
     )
 
 
-def synth_pdf_rc4_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id) → (media_id, payload): the r15 decryption lane —
+def synth_pdf_rc4_payloads(df: DataFrame) -> DataFrame:
+    """(id) → (media_id, payload): the decryption lane —
     standard-security-handler RC4 with an EMPTY user password (the
     permissions-only encryption most "encrypted" crawl PDFs carry),
     alternating R=2/40-bit and R=3/128-bit by id parity, with an
     encrypted /Info /Title and (id % 3 == 0) an LZW content filter
     stacked under the cipher. Same ``synth_pdf_pages`` text
     contract."""
-    return _synth_payload_frame(df, id_col, _pdf_rc4_payload)
+    return _synth_payload_frame(df, _pdf_rc4_payload)
 
 
 def _pdf_filter_chain_payload(mid: int) -> bytes:
@@ -2213,13 +1896,11 @@ def _pdf_filter_chain_payload(mid: int) -> bytes:
     return pdf.encode_pdf(shows, filters=chain)
 
 
-def synth_pdf_filter_chain_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id) → (media_id, payload): the r15 multi-filter lane — content
+def synth_pdf_filter_chain_payloads(df: DataFrame) -> DataFrame:
+    """(id) → (media_id, payload): the multi-filter lane — content
     streams rotate /Filter chains by id % 3: [ASCII85 Flate] (the
     classic 7-bit-safe stacking), [ASCIIHex LZW], and bare RunLength,
     so extraction exercises the filter-LIST decode path (first-to-last
     order) plus all three stdlib ASCII/RLE codecs. Same
     ``synth_pdf_pages`` text contract."""
-    return _synth_payload_frame(df, id_col, _pdf_filter_chain_payload)
+    return _synth_payload_frame(df, _pdf_filter_chain_payload)

@@ -1186,7 +1186,7 @@ def q_media_streaming_meta_rollup(spark, sf_dir):
     )
     src = os.path.join(scratch, "in")
     docs = load_table(spark, sf_dir, "documents")
-    payloads = multimodal.synth_image_payloads(docs, "doc_id")
+    payloads = multimodal.synth_image_payloads(docs)
     payloads.write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
@@ -1264,10 +1264,10 @@ def q_media_streaming_audio_rollup(spark, sf_dir):
     src = os.path.join(scratch, "in")
     docs = load_table(spark, sf_dir, "documents")
     mp3 = multimodal.synth_mp3_payloads(
-        docs.where(F.col("doc_id") % 2 == 0), "doc_id"
+        docs.where(F.col("doc_id") % 2 == 0)
     ).withColumn("codec", F.lit("mp3"))
     flac = multimodal.synth_flac_payloads(
-        docs.where(F.col("doc_id") % 2 == 1), "doc_id"
+        docs.where(F.col("doc_id") % 2 == 1)
     ).withColumn("codec", F.lit("flac"))
     mp3.unionByName(flac).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema

@@ -2907,7 +2907,7 @@ def q_media_meta(spark, sf_dir):
 )
 def q_media_image_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    imgs = multimodal.synth_image_payloads(docs, "doc_id")
+    imgs = multimodal.synth_image_payloads(docs)
     media = multimodal.to_media_column(imgs, "media_id", "payload", "image")
     meta = multimodal.extract_image_meta(media, strict=True)
     return meta.select("media_id", "fmt", "width", "height")
@@ -2939,7 +2939,7 @@ def q_media_image_meta(spark, sf_dir):
 )
 def q_media_resize(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    imgs = multimodal.synth_image_payloads(docs, "doc_id")
+    imgs = multimodal.synth_image_payloads(docs)
     media = multimodal.to_media_column(imgs, "media_id", "payload", "image")
     resized = multimodal.resize_images(media, max_side=32, strict=True)
     return resized.select(
@@ -2967,7 +2967,7 @@ def q_media_resize(spark, sf_dir):
 )
 def q_media_audio_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_audio_payloads(docs, "doc_id")
+    clips = multimodal.synth_audio_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "audio")
     meta = multimodal.extract_audio_meta(media, strict=True)
     return meta.select(
@@ -3001,7 +3001,7 @@ def q_media_audio_meta(spark, sf_dir):
 )
 def q_media_video_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_video_payloads(docs, "doc_id")
+    clips = multimodal.synth_video_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "video")
     meta = multimodal.extract_video_meta(media, strict=True)
     return meta.select(
@@ -3038,7 +3038,7 @@ def q_media_video_meta(spark, sf_dir):
 )
 def q_media_video_frames(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_mjpeg_payloads(docs, "doc_id")
+    clips = multimodal.synth_mjpeg_payloads(docs)
     frames = multimodal.extract_video_frames(clips, strict=True)
     return frames.select(
         "media_id", "frame_idx", "kind", "frame_width", "frame_height"
@@ -3075,9 +3075,9 @@ def q_media_video_frames(spark, sf_dir):
 )
 def q_media_video_ahash_neardup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 50 == 0)
-    originals = multimodal.synth_grid_dib_video_payloads(docs, "doc_id")
+    originals = multimodal.synth_grid_dib_video_payloads(docs)
     twins = multimodal.synth_grid_dib_video_payloads(
-        docs, "doc_id", id_offset=1_000_000,
+        docs, id_offset=1_000_000,
         flip_bits=multimodal.GRID_FLIP_BITS,
     )
     corpus = originals.unionByName(twins)
@@ -3118,9 +3118,9 @@ def q_media_video_ahash_neardup(spark, sf_dir):
 )
 def q_media_video_mjpeg_neardup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 50 == 0)
-    originals = multimodal.synth_grid_mjpeg_video_payloads(docs, "doc_id")
+    originals = multimodal.synth_grid_mjpeg_video_payloads(docs)
     twins = multimodal.synth_grid_mjpeg_video_payloads(
-        docs, "doc_id", id_offset=1_000_000,
+        docs, id_offset=1_000_000,
         flip_bits=multimodal.GRID_FLIP_BITS,
     )
     corpus = originals.unionByName(twins)
@@ -3164,9 +3164,9 @@ def q_media_video_mjpeg_neardup(spark, sf_dir):
 )
 def q_media_audio_fp_neardup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 50 == 0)
-    originals = multimodal.synth_audio_fp_payloads(docs, "doc_id")
+    originals = multimodal.synth_audio_fp_payloads(docs)
     twins = multimodal.synth_audio_fp_payloads(
-        docs, "doc_id", id_offset=1_000_000, remux=True
+        docs, id_offset=1_000_000, remux=True
     )
     corpus = originals.unionByName(twins)
     fps = multimodal.audio_fingerprints(corpus)
@@ -3201,7 +3201,7 @@ def q_media_audio_fp_neardup(spark, sf_dir):
 )
 def q_media_mp3_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_mp3_payloads(docs, "doc_id")
+    clips = multimodal.synth_mp3_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "audio")
     meta = multimodal.extract_mp3_meta(media, strict=True)
     return meta.select(
@@ -3245,7 +3245,7 @@ def q_media_mp3_meta(spark, sf_dir):
 )
 def q_media_mp4_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_mp4_payloads(docs, "doc_id")
+    clips = multimodal.synth_mp4_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "video")
     meta = multimodal.extract_mp4_meta(media, strict=True)
     return meta.select(
@@ -3282,7 +3282,7 @@ def q_media_mp4_meta(spark, sf_dir):
 )
 def q_media_flac_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_flac_payloads(docs, "doc_id")
+    clips = multimodal.synth_flac_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "audio")
     meta = multimodal.extract_flac_meta(media, strict=True)
     return meta.select(
@@ -3321,7 +3321,7 @@ def q_media_flac_meta(spark, sf_dir):
 )
 def q_media_aac_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_aac_payloads(docs, "doc_id")
+    clips = multimodal.synth_aac_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "audio")
     meta = multimodal.extract_aac_meta(media, strict=True)
     return meta.select(
@@ -3354,7 +3354,7 @@ def q_media_aac_meta(spark, sf_dir):
 )
 def q_media_webp_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_webp_payloads(docs, "doc_id")
+    clips = multimodal.synth_webp_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "image")
     meta = multimodal.extract_webp_meta(media, strict=True)
     return meta.select(
@@ -3388,7 +3388,7 @@ def q_media_webp_meta(spark, sf_dir):
 )
 def q_media_ogg_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_ogg_payloads(docs, "doc_id")
+    clips = multimodal.synth_ogg_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "audio")
     meta = multimodal.extract_ogg_meta(media, strict=True)
     return meta.select(
@@ -3458,7 +3458,7 @@ def q_media_ogg_meta(spark, sf_dir):
 )
 def q_media_sniff_catalog(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_mixed_media_payloads(docs, "doc_id")
+    clips = multimodal.synth_mixed_media_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "mixed")
     meta = multimodal.extract_media_catalog(media, strict=True)
     return meta.select(
@@ -3513,7 +3513,7 @@ def q_media_sniff_catalog(spark, sf_dir):
 )
 def q_pdf_text_extract(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    pdfs = multimodal.synth_pdf_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     return multimodal.extract_pdf_text(media, strict=True)
 
@@ -3562,7 +3562,7 @@ def q_pdf_text_extract(spark, sf_dir):
 )
 def q_pdf15_text_extract(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    pdfs = multimodal.synth_pdf15_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf15_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     return multimodal.extract_pdf_text(media, strict=True)
 
@@ -3605,7 +3605,7 @@ def q_pdf15_text_extract(spark, sf_dir):
 )
 def q_pdf_unicode_text_extract(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    pdfs = multimodal.synth_pdf_unicode_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf_unicode_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     return multimodal.extract_pdf_text(media, strict=True)
 
@@ -3656,7 +3656,7 @@ _PDF_PAGES_ORACLE = """
 )
 def q_pdf_lzw_text_extract(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    pdfs = multimodal.synth_pdf_lzw_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf_lzw_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     return multimodal.extract_pdf_text(media, strict=True)
 
@@ -3690,7 +3690,7 @@ def q_pdf_lzw_text_extract(spark, sf_dir):
 )
 def q_pdf_rc4_text_extract(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    pdfs = multimodal.synth_pdf_rc4_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf_rc4_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     return multimodal.extract_pdf_text(media, strict=True)
 
@@ -3717,7 +3717,7 @@ def q_pdf_rc4_text_extract(spark, sf_dir):
 )
 def q_pdf_filter_chain_text_extract(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    pdfs = multimodal.synth_pdf_filter_chain_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf_filter_chain_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     return multimodal.extract_pdf_text(media, strict=True)
 
@@ -4428,7 +4428,7 @@ def q_url_normalize_dedup(spark, sf_dir):
 )
 def q_media_webm_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_webm_payloads(docs, "doc_id")
+    clips = multimodal.synth_webm_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "video")
     meta = multimodal.extract_webm_meta(media, strict=True)
     return meta.select(
@@ -4460,10 +4460,10 @@ def q_media_webm_meta(spark, sf_dir):
 )
 def q_media_frame_plan(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clips = multimodal.synth_audio_payloads(docs, "doc_id")
+    clips = multimodal.synth_audio_payloads(docs)
     media = multimodal.to_media_column(clips, "media_id", "payload", "audio")
     meta = multimodal.extract_audio_meta(media, strict=True)
-    return multimodal.audio_frame_plan(meta, hop_ms=20).select(
+    return multimodal.audio_frame_plan(meta).select(
         "media_id", "frame_idx", "start_ms"
     )
 
@@ -5692,9 +5692,9 @@ def q_attribution_last_touch(spark, sf_dir):
 )
 def q_media_ahash_neardup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0)
-    originals = multimodal.synth_grid_image_payloads(docs, "doc_id")
+    originals = multimodal.synth_grid_image_payloads(docs)
     twins = multimodal.synth_grid_image_payloads(
-        docs, "doc_id", id_offset=1_000_000,
+        docs, id_offset=1_000_000,
         flip_bits=multimodal.GRID_FLIP_BITS,
     )
     corpus = originals.unionByName(twins)
@@ -7958,7 +7958,7 @@ def q_personalized_pagerank_parts(spark, sf_dir):
 )
 def q_media_exif_meta(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    jpegs = multimodal.synth_exif_jpeg_payloads(docs, "doc_id")
+    jpegs = multimodal.synth_exif_jpeg_payloads(docs)
     media = multimodal.to_media_column(jpegs, "media_id", "payload", "image")
     return multimodal.extract_exif_meta(media, strict=True)
 
@@ -10366,10 +10366,10 @@ def q_asof_nearest_purchase(spark, sf_dir):
 def q_media_phash_neardup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0)
     originals = multimodal.synth_grid_image_payloads(
-        docs, "doc_id", key="gridimg_p"
+        docs, key="gridimg_p"
     )
     twins = multimodal.synth_grid_image_payloads(
-        docs, "doc_id", id_offset=1_000_000, key="gridimg_p", fmt_shift=1
+        docs, id_offset=1_000_000, key="gridimg_p", fmt_shift=1
     )
     corpus = originals.unionByName(twins)
     hashes = multimodal.phash_images(corpus, strict=True).select(

@@ -187,7 +187,7 @@ def test_extract_video_meta_real_avi(spark):
     from etl_excel_csv_sql_spark.operators import multimodal
 
     ids = spark.range(0, 40).selectExpr("id AS doc_id")
-    clips = multimodal.synth_video_payloads(ids, "doc_id")
+    clips = multimodal.synth_video_payloads(ids)
     media = multimodal.to_media_column(clips, "media_id", "payload", "video")
     meta = multimodal.extract_video_meta(media, strict=True)
     rows = {r.media_id: r for r in meta.collect()}
@@ -228,8 +228,8 @@ def test_ahash_twins_within_hamming_ball(spark, sf_dir):
         F.col("doc_id") % 16 == 0
     )
     n_docs = docs.count()
-    originals = multimodal.synth_image_payloads(docs, "doc_id")
-    twins = multimodal.perturbed_image_payloads(docs, "doc_id")
+    originals = multimodal.synth_image_payloads(docs)
+    twins = multimodal.perturbed_image_payloads(docs)
     hashes = multimodal.ahash_images(originals.unionByName(twins)).select(
         F.col("media_id").alias("id"), F.col("ahash").alias("simhash")
     )
@@ -248,7 +248,7 @@ def test_ahash_identical_images_hash_equal(spark):
     from etl_excel_csv_sql_spark.operators import multimodal
 
     base = spark.createDataFrame([(7,), (7,)], "doc_id long")
-    payloads = multimodal.synth_image_payloads(base, "doc_id")
+    payloads = multimodal.synth_image_payloads(base)
     got = multimodal.ahash_images(payloads).collect()
     assert got[0]["ahash"] == got[1]["ahash"]
 
@@ -260,7 +260,7 @@ def test_ahash_distinguishes_inverted_pattern():
 
     grad = np.tile(np.arange(64, dtype=np.float64), (64, 1))
     inv = grad[:, ::-1]
-    a, b = _ahash_bits(grad, 8), _ahash_bits(inv, 8)
+    a, b = _ahash_bits(grad), _ahash_bits(inv)
     ham = bin((a ^ b) & ((1 << 64) - 1)).count("1")
     assert ham >= 32  # opposite layouts disagree on ~every cell
 
@@ -283,7 +283,7 @@ def test_extract_exif_meta_contract_and_nulls(spark):
     from etl_excel_csv_sql_spark.operators import codecs, multimodal
 
     docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    jpegs = multimodal.synth_exif_jpeg_payloads(docs, "doc_id")
+    jpegs = multimodal.synth_exif_jpeg_payloads(docs)
     media = multimodal.to_media_column(jpegs, "media_id", "payload", "image")
     got = {r.media_id: r for r in multimodal.extract_exif_meta(media).collect()}
     for mid in (0, 1, 7, 39):  # both byte orders (even=II, odd=MM)
@@ -314,7 +314,7 @@ def test_extract_exif_meta_truncated_app1_degrades_to_null(spark):
     import struct
 
     docs = spark.range(0, 2).withColumnRenamed("id", "doc_id")
-    intact = multimodal.synth_exif_jpeg_payloads(docs, "doc_id")
+    intact = multimodal.synth_exif_jpeg_payloads(docs)
     full = bytes(intact.select("payload").first()["payload"])
     # valid SOF (jpeg_meta succeeds) but the APP1 TIFF IFD is truncated:
     # the IFD entry count says 5 entries yet the buffer ends after the
@@ -381,8 +381,8 @@ def test_phash_neardup_full_recall_on_noise_twins(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 50 == 0
     )
-    originals = multimodal.synth_image_payloads(docs, "doc_id")
-    twins = multimodal.perturbed_image_payloads(docs, "doc_id")
+    originals = multimodal.synth_image_payloads(docs)
+    twins = multimodal.perturbed_image_payloads(docs)
     corpus = originals.unionByName(twins)
     hashes = multimodal.phash_images(corpus).select(
         F.col("media_id").alias("id"), F.col("phash").alias("simhash")
@@ -404,7 +404,7 @@ def test_phash_deterministic_across_runs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 100 == 0
     )
-    imgs = multimodal.synth_image_payloads(docs, "doc_id")
+    imgs = multimodal.synth_image_payloads(docs)
     h1 = {r["media_id"]: r["phash"] for r in multimodal.phash_images(imgs).collect()}
     h2 = {r["media_id"]: r["phash"] for r in multimodal.phash_images(imgs).collect()}
     assert h1 == h2 and all(v is not None for v in h1.values())
@@ -418,7 +418,7 @@ def test_extract_video_frames_mjpeg_goldens(spark):
     from etl_excel_csv_sql_spark.operators import multimodal
 
     ids = spark.range(0, 25).selectExpr("id AS doc_id")
-    clips = multimodal.synth_mjpeg_payloads(ids, "doc_id")
+    clips = multimodal.synth_mjpeg_payloads(ids)
     frames = multimodal.extract_video_frames(clips, strict=True)
     rows = [(r.media_id, r.frame_idx, r.kind, r.frame_width, r.frame_height)
             for r in frames.collect()]
@@ -435,7 +435,7 @@ def test_extract_video_frames_dib_and_lenient(spark):
     from etl_excel_csv_sql_spark.operators import multimodal
 
     ids = spark.range(3, 7).selectExpr("id AS doc_id")
-    clips = multimodal.synth_dib_video_payloads(ids, "doc_id")
+    clips = multimodal.synth_dib_video_payloads(ids)
     out = multimodal.extract_video_frames(clips, strict=True).collect()
     for r in out:
         w, h, _, n = multimodal.synth_dib_video_params(r.media_id)
@@ -461,9 +461,9 @@ def test_video_frame_ahash_twin_clips_match_framewise(spark):
     from etl_excel_csv_sql_spark.operators import dedup, multimodal
 
     ids = spark.range(0, 12).selectExpr("id AS doc_id")
-    originals = multimodal.synth_dib_video_payloads(ids, "doc_id")
+    originals = multimodal.synth_dib_video_payloads(ids)
     twins = multimodal.synth_dib_video_payloads(
-        ids, "doc_id", id_offset=1_000_000, perturb=True
+        ids, id_offset=1_000_000, perturb=True
     )
     hashes = multimodal.video_frame_ahash(originals.unionByName(twins))
     assert hashes.where(F.col("ahash").isNull()).count() == 0
@@ -484,7 +484,7 @@ def test_video_frame_ahash_twin_clips_match_framewise(spark):
     import pytest as _pt
 
     mj = multimodal.synth_mjpeg_payloads(
-        spark.range(0, 2).selectExpr("id AS doc_id"), "doc_id"
+        spark.range(0, 2).selectExpr("id AS doc_id")
     )
     assert multimodal.video_frame_ahash(mj, strict=False).count() == 0
     with _pt.raises(Exception):
@@ -501,9 +501,9 @@ def test_audio_fingerprint_twin_clips_match_framewise(spark):
     from etl_excel_csv_sql_spark.operators import dedup, multimodal
 
     ids = spark.range(0, 200, 10).selectExpr("id AS doc_id")  # 20 clips
-    originals = multimodal.synth_audio_fp_payloads(ids, "doc_id")
+    originals = multimodal.synth_audio_fp_payloads(ids)
     twins = multimodal.synth_audio_fp_payloads(
-        ids, "doc_id", id_offset=1_000_000, perturb=True
+        ids, id_offset=1_000_000, perturb=True
     )
     fps = multimodal.audio_fingerprints(originals.unionByName(twins))
     assert fps.where(F.col("fp").isNull()).count() == 0
@@ -1130,3 +1130,85 @@ def test_media_catalog_kernel_follows_mixed_contract(spark):
     row = multimodal.extract_media_catalog(doc_media, strict=True).collect()[0]
     assert (row.container, row.kind) == ("pdf", "doc")
     assert row.width is None and row.duration_ms is None
+
+
+# ---------------------------------------------------------------------------
+# One error contract per kernel shape: a one-row kernel answers a null or
+# undecodable payload with an all-null row, an exploding kernel with no
+# row; under strict both raise ValueError.
+# ---------------------------------------------------------------------------
+
+ONE_ROW_KERNELS = (
+    "extract_image_meta", "resize_images", "extract_audio_meta",
+    "extract_video_meta", "extract_exif_meta", "ahash_images",
+    "phash_images", "extract_mp3_meta",
+)
+EXPLODING_KERNELS = (
+    "extract_video_frames", "video_frame_ahash", "audio_fingerprints",
+)
+
+
+@pytest.mark.parametrize("kernel", ONE_ROW_KERNELS + EXPLODING_KERNELS)
+def test_kernel_error_contract(spark, kernel):
+    raw = spark.createDataFrame(
+        [(5, None), (6, bytearray(b"garbage!"))], "doc_id long, blob binary"
+    ).coalesce(1)
+    media = multimodal.to_media_column(raw, "doc_id", "blob", "image")
+    fn = getattr(multimodal, kernel)
+    rows = fn(media).collect()
+    if kernel in EXPLODING_KERNELS:
+        assert rows == []
+    else:
+        assert sorted(r.media_id for r in rows) == [5, 6]
+        carried = set(media.columns) - {"payload"}
+        for row in rows:
+            assert all(
+                row[c] is None for c in row.asDict() if c not in carried
+            ), row
+    for mid, want in ((5, "null payload"), (6, "")):
+        with pytest.raises(Exception, match=f"ValueError: {want}"):
+            fn(media.where(F.col("media_id") == mid), strict=True).collect()
+
+
+def test_lenient_ahash_keeps_64_bit_hash_next_to_null(spark):
+    """A null hash in the same Arrow batch must not turn the column into
+    float64, which would round a hash of magnitude ≥ 2^53."""
+    mid = next(
+        m for m in range(100)
+        if abs(h := _signed64(multimodal.grid_pattern64(m))) >= 2**53
+        and int(float(h)) != h
+    )
+    good = multimodal.synth_grid_image_payloads(
+        spark.createDataFrame([(mid,)], "doc_id long")
+    )
+    bad = spark.createDataFrame(
+        [(-1, bytearray(b"not an image"))], "media_id long, payload binary"
+    )
+    corpus = bad.unionByName(good).coalesce(1)
+    got = {r.media_id: r.ahash for r in multimodal.ahash_images(corpus).collect()}
+    assert got == {-1: None, mid: _signed64(multimodal.grid_pattern64(mid))}
+
+
+@pytest.mark.parametrize(
+    "scale, rate, n_frames, fps, duration_ms",
+    [(1001, 30000, 900, 29, 30030), (2, 1, 4, 0, 8000)],
+    ids=["ntsc_29.97", "half_fps"],
+)
+def test_avi_duration_is_exact_in_both_kernels(
+    spark, scale, rate, n_frames, fps, duration_ms
+):
+    """duration_ms comes from the exact strh rate/scale, not the floored
+    fps, in extract_video_meta and the media catalog alike."""
+    import struct
+
+    avi = bytearray(codecs.encode_avi(16, 16, 30, n_frames))
+    strh_at = avi.find(b"strh")
+    struct.pack_into("<II", avi, strh_at + 8 + 20, scale, rate)
+    raw = spark.createDataFrame([(1, avi)], "doc_id long, blob binary")
+    media = multimodal.to_media_column(raw, "doc_id", "blob", "video")
+    (meta,) = multimodal.extract_video_meta(media, strict=True).collect()
+    assert (meta.fps, meta.n_frames, meta.duration_ms) == (
+        fps, n_frames, duration_ms
+    )
+    (cat,) = multimodal.extract_media_catalog(media, strict=True).collect()
+    assert (cat.container, cat.duration_ms) == ("avi", duration_ms)

@@ -531,7 +531,7 @@ def test_extract_pdf_text_kernel_lenient_and_strict(spark):
     docs = spark.createDataFrame(
         [(0,), (1,), (2,), (5,)], "doc_id long"
     )
-    pdfs = multimodal.synth_pdf_payloads(docs, "doc_id")
+    pdfs = multimodal.synth_pdf_payloads(docs)
     media = multimodal.to_media_column(pdfs, "media_id", "payload", "doc")
     rows = {
         r["media_id"]: r
