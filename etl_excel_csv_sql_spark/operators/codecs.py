@@ -915,10 +915,11 @@ def encode_jpeg_progressive(
     return out + b"\xff\xd9"
 
 
-@_malformed_as_valueerror
-def jpeg_meta(payload: bytes) -> tuple[int, int]:
-    """(width, height) by walking JPEG marker segments to the first SOFn
-    frame header. Entropy decode is intentionally unsupported."""
+def _jpeg_segments(payload: bytes):
+    """(marker, body start, segment end) of each length-bearing JPEG
+    marker segment in order, up to EOI or the end of the data; the
+    entropy-coded data after SOS is not skipped, so callers stop at
+    the first segment they need."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     i = 2
@@ -929,14 +930,22 @@ def jpeg_meta(payload: bytes) -> tuple[int, int]:
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             i += 2  # standalone markers, no length
             continue
+        if marker == 0xD9:  # EOI
+            return
         (seg_len,) = struct.unpack_from(">H", payload, i + 2)
+        yield marker, i + 4, i + 2 + seg_len
+        i += 2 + seg_len
+
+
+@_malformed_as_valueerror
+def jpeg_meta(payload: bytes) -> tuple[int, int]:
+    """(width, height) by walking JPEG marker segments to the first SOFn
+    frame header. Entropy decode is intentionally unsupported."""
+    for marker, start, _ in _jpeg_segments(payload):
         # SOF0-SOF15 minus DHT(C4)/JPG(C8)/DAC(CC)
         if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h, w = struct.unpack_from(">HH", payload, i + 5)
+            h, w = struct.unpack_from(">HH", payload, start + 1)
             return w, h
-        if marker == 0xD9:  # EOI before any SOF
-            break
-        i += 2 + seg_len
     raise ValueError("no SOF frame header found")
 
 
@@ -1432,32 +1441,13 @@ def exif_meta(payload: bytes) -> dict[str, object]:
     exif_height} with None for absent fields; raises ValueError when the
     payload is not a JPEG or carries no EXIF APP1.
     """
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    i = 2
-    tiff = None
-    while i + 4 <= len(payload):
-        if payload[i] != 0xFF:
+    for marker, start, end in _jpeg_segments(payload):
+        if marker == 0xE1 and payload[start : start + 6] == b"Exif\x00\x00":
+            tiff = payload[start + 6 : end]
             break
-        marker = payload[i + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        (seg_len,) = struct.unpack_from(">H", payload, i + 2)
-        if marker == 0xE1 and payload[i + 4 : i + 10] == b"Exif\x00\x00":
-            tiff = payload[i + 10 : i + 2 + seg_len]
-            break
-        if marker == 0xD9:
-            break
-        i += 2 + seg_len
-    if tiff is None:
+    else:
         raise ValueError("no EXIF APP1 segment")
-    order = tiff[:2]
-    bo = "<" if order == b"II" else ">" if order == b"MM" else None
-    if bo is None or struct.unpack_from(bo + "H", tiff, 2)[0] != 42:
-        raise ValueError("corrupt TIFF header in EXIF")
-    (ifd0_off,) = struct.unpack_from(bo + "I", tiff, 4)
-    ifd0 = _walk_ifd(tiff, bo, ifd0_off)
+    bo, ifd0 = _tiff_ifd0(tiff)
     sub: dict[int, object] = {}
     if isinstance(ifd0.get(_EXIF_TAG_EXIF_IFD), int):
         sub = _walk_ifd(tiff, bo, ifd0[_EXIF_TAG_EXIF_IFD])
@@ -3098,7 +3088,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 p += 17 + nvals
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker in (0xC0, 0xC1):  # SOF0 baseline / SOF1 ext sequential
+        elif marker in (0xC0, 0xC1, 0xC2):
+            # SOF0 baseline / SOF1 extended sequential / SOF2 progressive
             prec, h_img, w_img, nc = struct.unpack_from(">BHHB", body, 0)
             if prec != 8:
                 raise ValueError(f"unsupported JPEG precision {prec}")
@@ -3109,18 +3100,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * ci)
                 comps.append((cid, hv >> 4, hv & 0x0F, tq))
             frame = (h_img, w_img, comps)
-        elif marker == 0xC2:  # SOF2 progressive
-            prec, h_img, w_img, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise ValueError(f"unsupported JPEG precision {prec}")
-            if len(body) < 6 + 3 * nc:
-                raise ValueError("truncated SOF component list")
-            comps = []
-            for ci in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * ci)
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-            frame = (h_img, w_img, comps)
-            progressive = True
+            if marker == 0xC2:
+                progressive = True
         elif 0xC3 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
             raise ValueError(f"unsupported JPEG frame type SOF{marker - 0xC0}")
         elif marker == 0xDA:  # SOS — entropy data follows

@@ -1739,14 +1739,20 @@ def synth_pdf_pages(media_id: int) -> list[str]:
     ]
 
 
-def _pdf_payload(mid: int) -> bytes:
-    from etl_excel_csv_sql_spark.operators import pdf
-
-    shows = [
+def _pdf_shows(mid: int) -> list:
+    """``synth_pdf_pages(mid)`` as show operators: each page a TJ
+    array show (kerning numbers between the string pieces) plus a Tj
+    show with escaped parens."""
+    return [
         [["doc ", -28, f"{mid} pa", 35, f"ge {k}"], "(ok)"]
         for k in range(1 + mid % 3)
     ]
-    return pdf.encode_pdf(shows)
+
+
+def _pdf_payload(mid: int) -> bytes:
+    from etl_excel_csv_sql_spark.operators import pdf
+
+    return pdf.encode_pdf(_pdf_shows(mid))
 
 
 def synth_pdf_payloads(df: DataFrame) -> DataFrame:
@@ -1811,11 +1817,7 @@ def synth_pdf_unicode_payloads(df: DataFrame) -> DataFrame:
 def _pdf15_payload(mid: int) -> bytes:
     from etl_excel_csv_sql_spark.operators import pdf
 
-    shows = [
-        [["doc ", -28, f"{mid} pa", 35, f"ge {k}"], "(ok)"]
-        for k in range(1 + mid % 3)
-    ]
-    return pdf.encode_pdf(shows, xref_stream=True, objstm=True)
+    return pdf.encode_pdf(_pdf_shows(mid), xref_stream=True, objstm=True)
 
 
 def synth_pdf15_payloads(df: DataFrame) -> DataFrame:
@@ -1829,11 +1831,7 @@ def synth_pdf15_payloads(df: DataFrame) -> DataFrame:
 def _pdf_lzw_payload(mid: int) -> bytes:
     from etl_excel_csv_sql_spark.operators import pdf
 
-    shows = [
-        [["doc ", -28, f"{mid} pa", 35, f"ge {k}"], "(ok)"]
-        for k in range(1 + mid % 3)
-    ]
-    return pdf.encode_pdf(shows, lzw=True)
+    return pdf.encode_pdf(_pdf_shows(mid), filters=["LZWDecode"])
 
 
 def synth_pdf_lzw_payloads(df: DataFrame) -> DataFrame:
@@ -1848,24 +1846,21 @@ def synth_pdf_lzw_payloads(df: DataFrame) -> DataFrame:
 def _pdf_rc4_payload(mid: int) -> bytes:
     from etl_excel_csv_sql_spark.operators import pdf
 
-    shows = [
-        [["doc ", -28, f"{mid} pa", 35, f"ge {k}"], "(ok)"]
-        for k in range(1 + mid % 3)
-    ]
+    shows = _pdf_shows(mid)
     # odd ids take the legacy 40-bit R=2/V=1 pair, even ids the common
     # R=3/V=2/128-bit pair; every third id stacks LZW under the cipher
     # (decrypt THEN defilter, the spec order); id % 5 == 4 ships the
     # PDF 1.5 encrypted layout (whole-ObjStm decrypt, unencrypted
     # XRef stream) — the combination mass-produced encrypted PDFs use
     if mid % 5 == 4:
-        return pdf.encode_pdf15_encrypted(
-            shows, r=2 if mid % 2 else 3
+        return pdf.encode_pdf_encrypted(
+            shows, r=2 if mid % 2 else 3, objstm=True
         )
     return pdf.encode_pdf_encrypted(
         shows,
         r=2 if mid % 2 else 3,
         title=f"doc {mid}",
-        lzw=(mid % 3 == 0),
+        filters=["LZWDecode"] if mid % 3 == 0 else None,
         seed=str(mid).encode(),
     )
 
@@ -1884,16 +1879,12 @@ def synth_pdf_rc4_payloads(df: DataFrame) -> DataFrame:
 def _pdf_filter_chain_payload(mid: int) -> bytes:
     from etl_excel_csv_sql_spark.operators import pdf
 
-    shows = [
-        [["doc ", -28, f"{mid} pa", 35, f"ge {k}"], "(ok)"]
-        for k in range(1 + mid % 3)
-    ]
     chain = (
         ["ASCII85Decode", "FlateDecode"],      # 7-bit-safe classic
         ["ASCIIHexDecode", "LZWDecode"],       # hex transport + LZW
         ["RunLengthDecode"],                   # legacy single filter
     )[mid % 3]
-    return pdf.encode_pdf(shows, filters=chain)
+    return pdf.encode_pdf(_pdf_shows(mid), filters=chain)
 
 
 def synth_pdf_filter_chain_payloads(df: DataFrame) -> DataFrame:

@@ -1,10 +1,9 @@
-"""PDF text extraction — the post-HTML corpus source (VERDICT r12 #4):
-after web crawl text, PDFs are the next biggest real training-corpus
-lane. Pure stdlib in the same style as the 15 media codecs: the object
-model is parsed from bytes (header, classic xref table(s), trailer,
-indirect objects, literal/hex strings, dicts/arrays/refs, streams with
-exact /Length framing), page content streams FlateDecode via zlib, and
-text assembles from the Tj / TJ / ' / " show operators inside BT..ET
+"""PDF text extraction — the document source beside web crawl text.
+Pure stdlib in the same style as the media codecs: the object model is
+parsed from bytes (header, classic xref table(s), trailer, indirect
+objects, literal/hex strings, dicts/arrays/refs, streams with exact
+/Length framing), page content streams are defiltered, and text
+assembles from the Tj / TJ / ' / " show operators inside BT..ET
 blocks.
 
 Extraction contract, deterministic and oracle-friendly:
@@ -14,41 +13,51 @@ Extraction contract, deterministic and oracle-friendly:
   take their string, " takes its string operand, TJ concatenates the
   STRING items of its array (kerning numbers are layout, not text);
 - a page's text is its fragments joined with a single space;
-- string bytes decode latin-1 (byte-transparent; the fixture contract
-  is ASCII + PDF escapes — full PDFDocEncoding/UTF-16BE text objects
-  are out of scope by design, like Rice-coded FLAC audio frames).
+- string bytes decode through the page font's /ToUnicode CMap or
+  /Differences encoding when it has one, UTF-16BE when they carry a
+  BOM, and latin-1 (byte-transparent) otherwise.
 
-Both cross-reference layouts parse (r13): classic xref tables with
+Both cross-reference layouts parse: classic xref tables with
 incremental-update /Prev chains AND PDF 1.5+ cross-reference STREAMS
 (/Type /XRef packed binary rows, /W field widths, /Index subsections,
 hybrid-reference /XRefStm side-loads) with objects compressed into
 object streams (/Type /ObjStm type-2 entries) — the layout
 mass-produced real-world PDFs actually ship.
 
-Filters: FlateDecode (zlib, with the PNG predictor family) and
-LZWDecode (r15, VERDICT r14 #4 — MSB-first variable 9..12-bit codes,
-Clear/EOD, /EarlyChange, the same predictor path) decode; other
-filters raise into the quarantine.
+Filters: FlateDecode (zlib, with the PNG predictor family), LZWDecode
+(MSB-first variable 9..12-bit codes, Clear/EOD, /EarlyChange, the same
+predictor path), ASCIIHexDecode, ASCII85Decode and RunLengthDecode
+decode, alone or as a /Filter chain; other filters raise into the
+quarantine.
 
-Encryption (r15): the standard security handler's EMPTY-USER-PASSWORD
-path decrypts — RC4 V=1/V=2, R=2/R=3 per spec Algorithms 2/4/5 (the
-bulk of "encrypted" PDFs in a crawl are permissions-only encryption
-with an empty user password). Strings and streams decrypt with the
-per-object MD5(file_key + objnum + gen) key; xref/Encrypt material and
+Encryption: the standard security handler's EMPTY-USER-PASSWORD path
+decrypts — RC4 V=1/V=2, R=2/R=3 per spec Algorithms 2/4/5 (the bulk of
+"encrypted" PDFs in a crawl are permissions-only encryption with an
+empty user password). Strings and streams decrypt with the per-object
+MD5(file_key + objnum + gen) key; xref/Encrypt material and
 ObjStm-inner strings are exempt per spec. PDFs that actually need a
 password, AES (/V >= 4 crypt filters), and non-Standard handlers raise
 DISTINCT ValueError messages so quarantine loss is measurable by
 class.
 
 Scope fences (each raises ValueError → the quarantine lane):
-password-protected/AES encryption and filters beyond Flate/LZW are out
-of scope; caps bound object count, xref chain length, page-tree
+password-protected/AES encryption and unknown filters are out of
+scope; caps bound object count, xref chain length, page-tree
 depth/size, and inflate output (decompression-bomb guard), so a
 hostile payload degrades to a null row instead of an executor OOM.
 
 Quarantine contract matches the media codecs: every malformed shape
 surfaces as ValueError only — the lenient extraction kernel catches
 exactly that; Spark surface is ``operators.multimodal.extract_pdf_text``.
+
+Fixture writers: ``encode_pdf`` (classic or 1.5 layout, any content
+filter chain), ``encode_pdf_unicode`` (CMap / Differences / UTF-16BE
+fonts) and ``encode_pdf_encrypted`` (RC4, classic or ObjStm layout)
+only render their pages and resources; one private serializer,
+``_ObjectTable``, numbers the objects, writes the page tree and
+catalog, runs the security-handler setup, seals encrypted strings and
+streams, and emits the classic xref table or the XRef stream (with or
+without an ObjStm, predictor 1 or 12).
 """
 
 from __future__ import annotations
@@ -1590,20 +1599,27 @@ def pdf_text_pages(payload: bytes) -> list[str]:
     return _extract_pages_text(_Document(payload))
 
 
-def _escape_string(s: str) -> bytes:
-    out = s.encode("latin-1")
+
+# --- fixture writers: one object table, one serializer ----------------
+
+
+def _literal(s: bytes) -> bytes:
+    """``s`` as a PDF literal string. CR is escaped too: a raw CR
+    inside a literal reads back as LF (PDF 32000-1 §7.3.4.2)."""
     return (
-        out.replace(b"\\", b"\\\\")
+        b"("
+        + s.replace(b"\\", b"\\\\")
         .replace(b"(", b"\\(")
         .replace(b")", b"\\)")
+        .replace(b"\r", b"\\r")
+        + b")"
     )
 
 
-def _fixture_encode_chain(
-    content: bytes, filters: list[str]
-) -> tuple[bytes, bytes]:
-    """Encode ``content`` for a /Filter chain — decode order is
-    first-to-last, so encoders apply in REVERSE."""
+def _encode_chain(data: bytes, filters: list[str]) -> tuple[bytes, bytes]:
+    """(``data`` encoded for the /Filter chain, the dict's /Filter
+    entry). Decode order is first-to-last, so encoders apply in
+    REVERSE; an empty chain leaves the stream raw."""
     import base64
 
     encoders = {
@@ -1614,53 +1630,225 @@ def _fixture_encode_chain(
         "RunLengthDecode": _runlength_encode,
     }
     for f in reversed(filters):
-        content = encoders[f](content)
+        data = encoders[f](data)
+    if not filters:
+        return data, b""
     if len(filters) == 1:
-        extra = b" /Filter /" + filters[0].encode()
-    else:
-        extra = (
-            b" /Filter ["
-            + b" ".join(b"/" + f.encode() for f in filters)
-            + b"]"
-        )
-    return content, extra
-
-
-def _render_content(
-    shows: list, compress: bool, lzw: bool = False,
-    filters: list[str] | None = None,
-) -> tuple[bytes, bytes]:
-    ops = [b"BT /F1 12 Tf 72 720 Td"]
-    for show in shows:
-        if isinstance(show, str):
-            ops.append(b"(" + _escape_string(show) + b") Tj")
-        else:
-            items = b" ".join(
-                b"(" + _escape_string(el) + b")"
-                if isinstance(el, str)
-                else str(el).encode()
-                for el in show
-            )
-            ops.append(b"[" + items + b"] TJ")
-        ops.append(b"0 -14 Td")
-    ops.append(b"ET")
-    content = b"\n".join(ops)
-    if filters:
-        return _fixture_encode_chain(content, filters)
-    if lzw:
-        return _lzw_encode(content), b" /Filter /LZWDecode"
-    if compress:
-        return zlib.compress(content, 6), b" /Filter /FlateDecode"
-    return content, b""
-
-
-def _escape_string_bytes(s: bytes) -> bytes:
-    return (
-        s.replace(b"\\", b"\\\\")
-        .replace(b"(", b"\\(")
-        .replace(b")", b"\\)")
-        .replace(b"\r", b"\\r")
+        return data, b" /Filter /" + filters[0].encode()
+    return data, (
+        b" /Filter [" + b" ".join(b"/" + f.encode() for f in filters) + b"]"
     )
+
+
+def _stream_obj(entries: bytes, data: bytes, extra: bytes) -> bytes:
+    """A stream object body: ``entries`` (each ending in a space) lead
+    the dict, ``extra`` follows /Length."""
+    return (
+        b"<< %s/Length %d%s >>\nstream\n" % (entries, len(data), extra)
+        + data
+        + b"\nendstream"
+    )
+
+
+class _ObjectTable:
+    """The serializer every fixture writer shares. Objects number from
+    1 in the order they are added; 1 is the catalog and 2 the page tree,
+    both written by ``serialize`` from the pages added with ``page``.
+
+    ``objstm`` packs every non-stream object into one /Type /ObjStm
+    with type-2 entries in a cross-reference STREAM (the PDF 1.5 layout
+    mass-produced PDFs ship). After ``secure``, ``seal`` RC4-encrypts
+    each stream body and each literal string of a file object under its
+    object's key; the ObjStm body is sealed as a whole, so the strings
+    packed inside it stay plain (the spec's ObjStm-inner exemption), and
+    the /Encrypt dict and the XRef stream are never sealed (spec
+    7.5.8.2)."""
+
+    def __init__(self, objstm: bool) -> None:
+        self.objects: list[bytes] = [b"", b""]
+        self.streams: set[int] = set()
+        self.kids: list[int] = []
+        self.objstm = objstm
+        self.key: bytes | None = None
+        self.encrypt = self.file_id = self.info = None
+
+    def add(self, body: bytes) -> int:
+        self.objects.append(body)
+        return len(self.objects)
+
+    def seal(self, num: int, data: bytes) -> bytes:
+        if self.key is None:
+            return data
+        return _rc4(_obj_key(self.key, num, 0), data)
+
+    def stream(self, entries: bytes, data: bytes, filters: list[str]) -> int:
+        num = len(self.objects) + 1
+        data, extra = _encode_chain(data, filters)
+        self.streams.add(num)
+        return self.add(_stream_obj(entries, self.seal(num, data), extra))
+
+    def literal(self, s: bytes) -> bytes:
+        """``s`` as a literal string inside the NEXT object added:
+        sealed under that object's number unless the ObjStm packs it."""
+        if not self.objstm:
+            s = self.seal(len(self.objects) + 1, s)
+        return _literal(s)
+
+    def page(self, entries: bytes, content: int) -> None:
+        self.kids.append(
+            self.add(
+                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+                + entries
+                + b"/Contents %d 0 R >>" % content
+            )
+        )
+
+    def secure(
+        self, r: int, owner_pwd: bytes, user_pwd: bytes, file_id: bytes
+    ) -> None:
+        """Standard security handler setup (spec Algorithms 2-5): /R 3
+        /V 2 128-bit, or the legacy 40-bit /R 2 /V 1 pair. Call before
+        any object is added."""
+        if r == 3:
+            v, nbytes, length_bits = 2, 16, 128
+        elif r == 2:
+            v, nbytes, length_bits = 1, 5, 40
+        else:
+            raise ValueError("fixture writer supports R=2 or R=3")
+        p = -44  # print allowed; modify/copy/annotate denied
+        o_entry = _std_owner_entry(owner_pwd, user_pwd, r, nbytes)
+        self.key = _std_file_key(user_pwd, o_entry, p, file_id, r, nbytes)
+        u_check = _std_user_check(self.key, file_id, r)
+        u_entry = u_check if r == 2 else u_check[:16] + bytes(16)
+        self.file_id = file_id
+        self.encrypt = (
+            b"<< /Filter /Standard /V %d /R %d /Length %d /P %d /O %s /U %s >>"
+            % (v, r, length_bits, p, _literal(o_entry), _literal(u_entry))
+        )
+
+    def serialize(
+        self, compress: bool, xref_stream: bool, predictor: int,
+        inherited: bytes,
+    ) -> bytes:
+        """The file with byte-exact offsets: a classic xref table, or
+        (``xref_stream`` or ``objstm``) a PDF 1.5 cross-reference
+        stream, Flate-compressed with ``compress`` and PNG-Up filtered
+        with ``predictor`` 12. ``inherited`` entries go on the /Pages
+        node, where every page inherits them (spec 7.7.3.4)."""
+        xref_stream = xref_stream or self.objstm
+        flate = ["FlateDecode"] if compress else []
+        self.objects[0] = b"<< /Type /Catalog /Pages 2 0 R >>"
+        self.objects[1] = (
+            b"<< /Type /Pages " + inherited + b"/Kids ["
+            + b" ".join(b"%d 0 R" % k for k in self.kids)
+            + b"] /Count %d >>" % len(self.kids)
+        )
+        # rows[num] = (type, field 2, field 3) in the /W [1 4 2] layout
+        rows: dict[int, tuple[int, int, int]] = {}
+        file_nums = list(range(1, len(self.objects) + 1))
+        if self.objstm:
+            packed = [n for n in file_nums if n not in self.streams]
+            file_nums = sorted(self.streams)
+            offs, body = [], bytearray()
+            for n in packed:
+                offs.append(len(body))
+                body += self.objects[n - 1] + b"\n"
+            header = b" ".join(
+                b"%d %d" % pair for pair in zip(packed, offs)
+            ) + b"\n"
+            stm = self.stream(
+                b"/Type /ObjStm /N %d /First %d " % (len(packed), len(header)),
+                header + bytes(body), flate,
+            )
+            file_nums.insert(0, stm)
+            for idx, n in enumerate(packed):
+                rows[n] = (2, stm, idx)
+        trailer = b"/Root 1 0 R"
+        if self.encrypt is not None:
+            enc = self.add(self.encrypt)
+            file_nums.append(enc)
+            trailer += b" /Encrypt %d 0 R" % enc
+        if self.info is not None:
+            trailer += b" /Info %d 0 R" % self.info
+        if self.file_id is not None:
+            hex_id = self.file_id.hex().encode()
+            trailer += b" /ID [<%s> <%s>]" % (hex_id, hex_id)
+
+        out = bytearray(b"%PDF-1.5\n" if xref_stream else b"%PDF-1.4\n")
+        for n in file_nums:
+            rows[n] = (1, len(out), 0)
+            out += b"%d 0 obj\n" % n + self.objects[n - 1] + b"\nendobj\n"
+        xref_off = len(out)
+        size = len(self.objects) + 1
+        if not xref_stream:
+            out += b"xref\n0 %d\n0000000000 65535 f \n" % size
+            for n in range(1, size):
+                out += b"%010d 00000 n \n" % rows[n][1]
+            out += b"trailer\n<< /Size %d %s >>\nstartxref\n%d\n%%%%EOF\n" % (
+                size, trailer, xref_off,
+            )
+            return bytes(out)
+
+        rows[0] = (0, 0, 0xFFFF)
+        rows[size] = (1, xref_off, 0)  # the XRef stream's own entry
+        data = b"".join(
+            bytes([t]) + f2.to_bytes(4, "big") + f3.to_bytes(2, "big")
+            for t, f2, f3 in (rows[n] for n in range(size + 1))
+        )
+        parms = b""
+        if predictor == 12:
+            # PNG Up over 7-byte rows — what real writers emit
+            filtered = bytearray()
+            prev = bytes(7)
+            for r0 in range(0, len(data), 7):
+                row = data[r0 : r0 + 7]
+                filtered.append(2)
+                filtered += bytes((row[i] - prev[i]) & 0xFF for i in range(7))
+                prev = row
+            data = bytes(filtered)
+            parms = b" /DecodeParms << /Predictor 12 /Columns 7 >>"
+        elif predictor != 1:
+            raise ValueError("fixture writer supports predictor 1 or 12")
+        if parms and not compress:
+            raise ValueError("a predictor requires the Flate lane")
+        data, extra = _encode_chain(data, flate)
+        out += b"%d 0 obj\n" % size + _stream_obj(
+            b"/Type /XRef /Size %d /W [1 4 2] %s " % (size + 1, trailer),
+            data, extra + parms,
+        ) + b"\nendobj\n"
+        out += b"startxref\n%d\n%%%%EOF\n" % xref_off
+        return bytes(out)
+
+
+def _text_pages(
+    table: _ObjectTable, pages: list[list], filters: list[str],
+    note: str | None,
+) -> None:
+    """Adds the shared Helvetica /F1 and one page per ``pages`` entry,
+    whose content stream (encoded for ``filters``) shows each element:
+    a ``str`` as one Tj, a ``list`` of str/int as one TJ (strings shown,
+    ints kerning). ``note`` plants a /Note literal in each page dict."""
+    font = table.add(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    for shows in pages:
+        ops = [b"BT /F1 12 Tf 72 720 Td"]
+        for show in shows:
+            if isinstance(show, str):
+                ops.append(_literal(show.encode("latin-1")) + b" Tj")
+            else:
+                items = b" ".join(
+                    _literal(el.encode("latin-1"))
+                    if isinstance(el, str)
+                    else str(el).encode()
+                    for el in show
+                )
+                ops.append(b"[" + items + b"] TJ")
+            ops.append(b"0 -14 Td")
+        ops.append(b"ET")
+        content = table.stream(b"", b"\n".join(ops), filters)
+        entries = b"/Resources << /Font << /F1 %d 0 R >> >> " % font
+        if note is not None:
+            entries += b"/Note " + table.literal(note.encode("latin-1")) + b" "
+        table.page(entries, content)
 
 
 def _cmap_stream_src(cmap: dict, width: int) -> bytes:
@@ -1692,8 +1880,9 @@ def encode_pdf_unicode(
     compress: bool = True,
     resources_on_pages_node: bool = False,
 ) -> bytes:
-    """Fixture writer for the Unicode lane (classic xref, byte-exact
-    offsets): ``fonts`` maps resource names to a spec —
+    """Fixture writer for the Unicode lane (classic xref, through the
+    shared ``_ObjectTable`` serializer): ``fonts`` maps resource names
+    to a spec —
     ``{"cmap": {code → str}, "width": 1|2}`` writes a /ToUnicode CMap
     stream, ``{"differences": {code → glyph_name}}`` writes a
     simple-font /Encoding dict, ``None`` a plain byte-transparent
@@ -1703,33 +1892,18 @@ def encode_pdf_unicode(
     ``resources_on_pages_node`` hoists the shared /Resources dict to
     the /Pages node (the inheritable form real writers emit, spec
     7.7.3.4) instead of repeating it per page. The decode twin of
-    the r14 Unicode layer in ``_page_text`` / ``_font_decoder``."""
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    cat_num = add(b"")   # 1: catalog
-    pages_num = add(b"")  # 2: pages node
+    the Unicode layer in ``_page_text`` / ``_font_decoder``."""
+    table = _ObjectTable(False)
+    flate = ["FlateDecode"] if compress else []
     font_nums: dict[str, int] = {}
+    base = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
     for name, spec in fonts.items():
-        base = (
-            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
-        )
         if spec is None:
-            font_nums[name] = add(base + b" >>")
+            font_nums[name] = table.add(base + b" >>")
         elif "cmap" in spec:
             src = _cmap_stream_src(spec["cmap"], spec.get("width", 2))
-            extra = b""
-            if compress:
-                src = zlib.compress(src, 6)
-                extra = b" /Filter /FlateDecode"
-            tou_num = add(
-                b"<< /Length %d%s >>\nstream\n" % (len(src), extra)
-                + src + b"\nendstream"
-            )
-            font_nums[name] = add(
+            tou_num = table.stream(b"", src, flate)
+            font_nums[name] = table.add(
                 base + b" /ToUnicode %d 0 R >>" % tou_num
             )
         elif "differences" in spec:
@@ -1738,15 +1912,21 @@ def encode_pdf_unicode(
                 parts.append(b"%d /%s" % (
                     code, spec["differences"][code].encode("latin-1")
                 ))
-            font_nums[name] = add(
+            font_nums[name] = table.add(
                 base
                 + b" /Encoding << /Type /Encoding /Differences ["
                 + b" ".join(parts) + b"] >> >>"
             )
         else:
             raise ValueError(f"unknown font spec for {name!r}")
-    kid_nums = []
-    res = b""
+    res = (
+        b"/Resources << /Font << "
+        + b" ".join(
+            b"/%s %d 0 R" % (n.encode("latin-1"), num)
+            for n, num in font_nums.items()
+        )
+        + b" >> >> "
+    )
     for shows in pages:
         ops = [b"BT"]
         for fname, payload in shows:
@@ -1754,56 +1934,14 @@ def encode_pdf_unicode(
                 ops.append(b"/%s 12 Tf" % fname.encode("latin-1"))
             if isinstance(payload, str):
                 payload = b"\xfe\xff" + payload.encode("utf-16-be")
-            ops.append(b"(" + _escape_string_bytes(payload) + b") Tj")
+            ops.append(_literal(payload) + b" Tj")
             ops.append(b"0 -14 Td")
         ops.append(b"ET")
-        content = b"\n".join(ops)
-        extra = b""
-        if compress:
-            content = zlib.compress(content, 6)
-            extra = b" /Filter /FlateDecode"
-        stream_num = add(
-            b"<< /Length %d%s >>\nstream\n" % (len(content), extra)
-            + content + b"\nendstream"
-        )
-        res = (
-            b"/Resources << /Font << "
-            + b" ".join(
-                b"/%s %d 0 R" % (n.encode("latin-1"), num)
-                for n, num in font_nums.items()
-            )
-            + b" >> >>"
-        )
-        kid_nums.append(
-            add(
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                + (b"" if resources_on_pages_node else res + b" ")
-                + b"/Contents %d 0 R >>" % stream_num
-            )
-        )
-    objects[cat_num - 1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objects[pages_num - 1] = (
-        b"<< /Type /Pages "
-        + (res + b" " if resources_on_pages_node else b"")
-        + b"/Kids ["
-        + b" ".join(b"%d 0 R" % k for k in kid_nums)
-        + b"] /Count %d >>" % len(pages)
+        content = table.stream(b"", b"\n".join(ops), flate)
+        table.page(b"" if resources_on_pages_node else res, content)
+    return table.serialize(
+        compress, False, 1, res if resources_on_pages_node else b""
     )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objects, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-    xref_off = len(out)
-    out += b"xref\n0 %d\n" % (len(objects) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objects) + 1, xref_off)
-    )
-    return bytes(out)
 
 
 def encode_pdf(
@@ -1812,166 +1950,29 @@ def encode_pdf(
     xref_stream: bool = False,
     objstm: bool = False,
     xref_predictor: int = 1,
-    lzw: bool = False,
     filters: list[str] | None = None,
 ) -> bytes:
     """Fixture writer whose page ``p`` content stream renders
     ``pages[p]`` — each element a ``str`` (one Tj show) or a ``list``
-    of str/int (one TJ show: strings shown, ints kerning) — with
-    byte-exact offsets, FlateDecode content (``compress``), and a
-    shared Helvetica /F1. The decode twin of ``pdf_text_pages``.
+    of str/int (one TJ show: strings shown, ints kerning) — with a
+    shared Helvetica /F1, serialized by ``_ObjectTable``. The decode
+    twin of ``pdf_text_pages``.
 
+    Content streams are FlateDecode (``compress``) or, with
+    ``filters``, encoded for that /Filter chain (e.g.
+    ``["LZWDecode"]`` or ``["ASCII85Decode", "FlateDecode"]``).
     ``xref_stream`` writes the PDF 1.5 layout: a /Type /XRef
-    cross-reference STREAM instead of the classic table; ``objstm``
-    (implies xref_stream) additionally packs every non-stream object
-    (catalog, pages node, font, page dicts) into one /Type /ObjStm with
-    type-2 xref entries — how mass-produced real-world PDFs actually
-    ship. ``lzw`` swaps content streams to /Filter /LZWDecode
-    (``_lzw_encode``, the r15 decode twin); structural streams
-    (ObjStm/XRef) stay Flate, as real mixed-filter writers do."""
-    if objstm:
-        xref_stream = True
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)  # 1-based object number
-
-    n_pages = len(pages)
-    cat_num = add(b"")      # 1: catalog (patched below)
-    pages_num = add(b"")    # 2: pages node (patched below)
-    font_num = add(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+    cross-reference STREAM (``xref_predictor`` 1 or 12) instead of
+    the classic table; ``objstm`` (implies xref_stream) additionally
+    packs every non-stream object (catalog, pages node, font, page
+    dicts) into one /Type /ObjStm with type-2 xref entries.
+    Structural streams (ObjStm/XRef) stay Flate under ``compress``
+    whatever the content filters, as real mixed-filter writers do."""
+    table = _ObjectTable(objstm)
+    _text_pages(
+        table, pages, filters or (["FlateDecode"] if compress else []), None
     )
-    kid_nums = []
-    stream_obj_nums = set()
-    for shows in pages:
-        content, extra = _render_content(shows, compress, lzw, filters)
-        stream_num = add(
-            b"<< /Length " + str(len(content)).encode() + extra
-            + b" >>\nstream\n" + content + b"\nendstream"
-        )
-        stream_obj_nums.add(stream_num)
-        kid_nums.append(
-            add(
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                b"/Resources << /Font << /F1 "
-                + str(font_num).encode()
-                + b" 0 R >> >> /Contents "
-                + str(stream_num).encode()
-                + b" 0 R >>"
-            )
-        )
-    objects[cat_num - 1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objects[pages_num - 1] = (
-        b"<< /Type /Pages /Kids ["
-        + b" ".join(b"%d 0 R" % k for k in kid_nums)
-        + b"] /Count " + str(n_pages).encode() + b" >>"
-    )
-
-    version = b"1.5" if xref_stream else b"1.4"
-    out = bytearray(b"%PDF-" + version + b"\n")
-    # entries[num] = ("file", off) | ("objstm", stm_num, idx)
-    entries: dict[int, tuple] = {}
-
-    if objstm:
-        packed = [
-            n for n in range(1, len(objects) + 1)
-            if n not in stream_obj_nums
-        ]
-        stm_num = len(objects) + 1
-        header = b" ".join(b"%d %d" % (0, 0) for _ in ())  # placeholder
-        offs, body = [], bytearray()
-        for n in packed:
-            offs.append(len(body))
-            body += objects[n - 1] + b"\n"
-        header = b" ".join(
-            b"%d %d" % (n, o) for n, o in zip(packed, offs)
-        ) + b"\n"
-        payload = header + bytes(body)
-        extra = b""
-        if compress:
-            payload = zlib.compress(payload, 6)
-            extra = b" /Filter /FlateDecode"
-        stm_body = (
-            b"<< /Type /ObjStm /N %d /First %d /Length %d%s >>\n"
-            b"stream\n" % (len(packed), len(header), len(payload), extra)
-            + payload + b"\nendstream"
-        )
-        for idx, n in enumerate(packed):
-            entries[n] = ("objstm", stm_num, idx)
-        entries[stm_num] = ("file", len(out))
-        out += b"%d 0 obj\n" % stm_num + stm_body + b"\nendobj\n"
-        for n in sorted(stream_obj_nums):
-            entries[n] = ("file", len(out))
-            out += b"%d 0 obj\n" % n + objects[n - 1] + b"\nendobj\n"
-        total = stm_num
-    else:
-        for i, body in enumerate(objects, start=1):
-            entries[i] = ("file", len(out))
-            out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-        total = len(objects)
-
-    xref_off = len(out)
-    if xref_stream:
-        xref_num = total + 1
-        size = xref_num + 1
-        rows = bytearray()
-        rows += (0).to_bytes(1, "big") + (0).to_bytes(4, "big") + (
-            0xFFFF
-        ).to_bytes(2, "big")
-        for n in range(1, xref_num):
-            e = entries[n]
-            if e[0] == "file":
-                rows += b"\x01" + e[1].to_bytes(4, "big") + b"\x00\x00"
-            else:
-                rows += (
-                    b"\x02" + e[1].to_bytes(4, "big")
-                    + e[2].to_bytes(2, "big")
-                )
-        rows += b"\x01" + xref_off.to_bytes(4, "big") + b"\x00\x00"
-        payload = bytes(rows)
-        parms = b""
-        if xref_predictor == 12:
-            # PNG Up over 7-byte rows — what real writers emit
-            row_w = 7
-            filtered = bytearray()
-            prev = bytes(row_w)
-            for r0 in range(0, len(payload), row_w):
-                row = payload[r0 : r0 + row_w]
-                filtered.append(2)
-                filtered += bytes(
-                    (row[i] - prev[i]) & 0xFF for i in range(row_w)
-                )
-                prev = row
-            payload = bytes(filtered)
-            parms = b" /DecodeParms << /Predictor 12 /Columns 7 >>"
-        elif xref_predictor != 1:
-            raise ValueError("fixture writer supports predictor 1 or 12")
-        extra = b""
-        if compress:
-            payload = zlib.compress(payload, 6)
-            extra = b" /Filter /FlateDecode"
-        elif parms:
-            raise ValueError("a predictor requires the Flate lane")
-        out += (
-            b"%d 0 obj\n<< /Type /XRef /Size %d /W [1 4 2] /Root 1 0 R "
-            b"/Length %d%s%s >>\nstream\n"
-            % (xref_num, size, len(payload), extra, parms)
-            + payload
-            + b"\nendstream\nendobj\n"
-        )
-        out += b"startxref\n%d\n%%%%EOF\n" % xref_off
-    else:
-        out += b"xref\n0 %d\n" % (total + 1)
-        out += b"0000000000 65535 f \n"
-        for n in range(1, total + 1):
-            out += b"%010d 00000 n \n" % entries[n][1]
-        out += (
-            b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-            % (total + 1, xref_off)
-        )
-    return bytes(out)
+    return table.serialize(compress, xref_stream, xref_predictor, b"")
 
 
 def encode_pdf_encrypted(
@@ -1979,253 +1980,37 @@ def encode_pdf_encrypted(
     r: int = 3,
     owner_pwd: bytes = b"fixture-owner",
     title: str | None = None,
-    lzw: bool = False,
+    filters: list[str] | None = None,
     user_pwd: bytes = b"",
     seed: bytes = b"",
-) -> bytes:
-    """Fixture writer for the r15 decryption lane: a classic-xref PDF
-    whose strings and stream bodies are RC4-encrypted under the
-    standard security handler with an EMPTY user password (spec
-    Algorithms 1/2/3/4/5) — /R 3 /V 2 /Length 128 by default, or the
-    legacy 40-bit /R 2 /V 1 pair. ``title`` plants an encrypted /Info
-    /Title string (the string-decrypt witness); ``lzw`` stacks the
-    LZW content filter under the cipher (decrypt THEN defilter, the
-    spec order). A non-empty ``user_pwd`` writes a PDF the reader
-    must refuse — the password-protected quarantine lane."""
-    if r == 3:
-        v, nbytes, length_bits = 2, 16, 128
-    elif r == 2:
-        v, nbytes, length_bits = 1, 5, 40
-    else:
-        raise ValueError("fixture writer supports R=2 or R=3")
-    p = -44  # print allowed; modify/copy/annotate denied
-    id0 = hashlib.md5(
-        b"pdf-encrypt-fixture" + seed + repr(pages).encode()
-    ).digest()
-    o_entry = _std_owner_entry(owner_pwd, user_pwd, r, nbytes)
-    file_key = _std_file_key(user_pwd, o_entry, p, id0, r, nbytes)
-    u_check = _std_user_check(file_key, id0, r)
-    u_entry = u_check if r == 2 else u_check[:16] + bytes(16)
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    cat_num = add(b"")
-    pages_num = add(b"")
-    font_num = add(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    )
-    kid_nums = []
-    for shows in pages:
-        content, extra = _render_content(shows, not lzw, lzw)
-        stream_num = len(objects) + 1
-        enc = _rc4(_obj_key(file_key, stream_num, 0), content)
-        add(
-            b"<< /Length %d%s >>\nstream\n" % (len(enc), extra)
-            + enc + b"\nendstream"
-        )
-        kid_nums.append(
-            add(
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                b"/Resources << /Font << /F1 %d 0 R >> >> "
-                b"/Contents %d 0 R >>" % (font_num, stream_num)
-            )
-        )
-    objects[cat_num - 1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objects[pages_num - 1] = (
-        b"<< /Type /Pages /Kids ["
-        + b" ".join(b"%d 0 R" % k for k in kid_nums)
-        + b"] /Count %d >>" % len(pages)
-    )
-    info_num = None
-    if title is not None:
-        info_num = len(objects) + 1
-        enc_title = _rc4(
-            _obj_key(file_key, info_num, 0), title.encode("latin-1")
-        )
-        add(
-            b"<< /Title (" + _escape_string_bytes(enc_title) + b") >>"
-        )
-    enc_num = add(
-        b"<< /Filter /Standard /V %d /R %d /Length %d /P %d "
-        b"/O (%s) /U (%s) >>"
-        % (
-            v, r, length_bits, p,
-            _escape_string_bytes(o_entry),
-            _escape_string_bytes(u_entry),
-        )
-    )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objects, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-    xref_off = len(out)
-    out += b"xref\n0 %d\n" % (len(objects) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    trailer = (
-        b"trailer\n<< /Size %d /Root 1 0 R /Encrypt %d 0 R "
-        % (len(objects) + 1, enc_num)
-    )
-    if info_num is not None:
-        trailer += b"/Info %d 0 R " % info_num
-    trailer += (
-        b"/ID [<%s> <%s>] >>\nstartxref\n%d\n%%%%EOF\n"
-        % (id0.hex().encode(), id0.hex().encode(), xref_off)
-    )
-    out += trailer
-    return bytes(out)
-
-
-def encode_pdf15_encrypted(
-    pages: list[list],
-    r: int = 3,
-    owner_pwd: bytes = b"fixture-owner",
+    objstm: bool = False,
     note: str | None = None,
 ) -> bytes:
-    """Fixture writer for the encryption × PDF 1.5 COMBINATION —
-    mass-produced real-world encrypted PDFs ship exactly this layout:
-    catalog/pages/font/page dicts packed into an ObjStm whose stream
-    body is RC4-encrypted AS A WHOLE (its inner objects are plaintext
-    after that one decrypt — the spec's ObjStm-inner exemption),
-    content streams encrypted per-object, and a cross-reference
-    STREAM that stays UNENCRYPTED (spec 7.5.8.2) carrying /Encrypt
-    and /ID in its dict. ``note`` plants a literal string inside a
-    packed page dict: it must surface VERBATIM (a reader that wrongly
-    re-decrypts ObjStm-inner strings garbles it)."""
-    if r == 3:
-        v, nbytes, length_bits = 2, 16, 128
-    elif r == 2:
-        v, nbytes, length_bits = 1, 5, 40
-    else:
-        raise ValueError("fixture writer supports R=2 or R=3")
-    p = -44
-    id0 = hashlib.md5(
-        b"pdf15-encrypt-fixture" + repr(pages).encode()
-    ).digest()
-    o_entry = _std_owner_entry(owner_pwd, b"", r, nbytes)
-    file_key = _std_file_key(b"", o_entry, p, id0, r, nbytes)
-    u_check = _std_user_check(file_key, id0, r)
-    u_entry = u_check if r == 2 else u_check[:16] + bytes(16)
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    cat_num = add(b"")
-    pages_num = add(b"")
-    font_num = add(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+    """Fixture writer for the decryption lane: ``encode_pdf``'s pages
+    with strings and stream bodies RC4-encrypted by the standard
+    security handler (``_ObjectTable.secure``) under an EMPTY user
+    password — /R 3 /V 2 /Length 128 by default, or the legacy 40-bit
+    /R 2 /V 1 pair. Content streams are Flate, or encoded for
+    ``filters`` under the cipher (decrypt THEN defilter, the spec
+    order). ``title`` plants an /Info /Title string (the string-decrypt
+    witness). ``objstm`` writes the PDF 1.5 layout encrypted PDFs ship:
+    the ObjStm body encrypted as a whole, content streams per object,
+    and an unencrypted XRef stream carrying /Encrypt and /ID. ``note``
+    plants a /Note literal in each page dict; inside the ObjStm it must
+    surface VERBATIM (a reader that wrongly re-decrypts ObjStm-inner
+    strings garbles it). ``seed`` varies the /ID. A non-empty
+    ``user_pwd`` writes a PDF the reader must refuse — the
+    password-protected quarantine lane."""
+    table = _ObjectTable(objstm)
+    table.secure(
+        r, owner_pwd, user_pwd,
+        hashlib.md5(
+            b"pdf-encrypt-fixture" + seed + repr(pages).encode()
+        ).digest(),
     )
-    kid_nums = []
-    stream_obj_nums = set()
-    for shows in pages:
-        content, extra = _render_content(shows, True)
-        stream_num = len(objects) + 1
-        enc = _rc4(_obj_key(file_key, stream_num, 0), content)
-        add(
-            b"<< /Length %d%s >>\nstream\n" % (len(enc), extra)
-            + enc + b"\nendstream"
+    _text_pages(table, pages, filters or ["FlateDecode"], note)
+    if title is not None:
+        table.info = table.add(
+            b"<< /Title " + table.literal(title.encode("latin-1")) + b" >>"
         )
-        stream_obj_nums.add(stream_num)
-        note_entry = b""
-        if note is not None:
-            note_entry = (
-                b"/Note (" + _escape_string_bytes(note.encode("latin-1"))
-                + b") "
-            )
-        kid_nums.append(
-            add(
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                b"/Resources << /Font << /F1 %d 0 R >> >> "
-                % font_num
-                + note_entry
-                + b"/Contents %d 0 R >>" % stream_num
-            )
-        )
-    objects[cat_num - 1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objects[pages_num - 1] = (
-        b"<< /Type /Pages /Kids ["
-        + b" ".join(b"%d 0 R" % k for k in kid_nums)
-        + b"] /Count %d >>" % len(pages)
-    )
-
-    out = bytearray(b"%PDF-1.5\n")
-    entries: dict[int, tuple] = {}
-    packed = [
-        n for n in range(1, len(objects) + 1)
-        if n not in stream_obj_nums
-    ]
-    stm_num = len(objects) + 1
-    offs, body = [], bytearray()
-    for n in packed:
-        offs.append(len(body))
-        body += objects[n - 1] + b"\n"
-    header = b" ".join(
-        b"%d %d" % (n, o) for n, o in zip(packed, offs)
-    ) + b"\n"
-    payload = zlib.compress(header + bytes(body), 6)
-    # the ObjStm stream body encrypts AS A WHOLE under its own number
-    payload = _rc4(_obj_key(file_key, stm_num, 0), payload)
-    stm_body = (
-        b"<< /Type /ObjStm /N %d /First %d /Length %d"
-        b" /Filter /FlateDecode >>\nstream\n"
-        % (len(packed), len(header), len(payload))
-        + payload + b"\nendstream"
-    )
-    for idx, n in enumerate(packed):
-        entries[n] = ("objstm", stm_num, idx)
-    entries[stm_num] = ("file", len(out))
-    out += b"%d 0 obj\n" % stm_num + stm_body + b"\nendobj\n"
-    for n in sorted(stream_obj_nums):
-        entries[n] = ("file", len(out))
-        out += b"%d 0 obj\n" % n + objects[n - 1] + b"\nendobj\n"
-    # the Encrypt dict is a FILE object, never ObjStm-packed (spec),
-    # and its own strings stay raw
-    enc_num = stm_num + 1
-    entries[enc_num] = ("file", len(out))
-    out += (
-        b"%d 0 obj\n<< /Filter /Standard /V %d /R %d /Length %d /P %d "
-        b"/O (%s) /U (%s) >>\nendobj\n"
-        % (
-            enc_num, v, r, length_bits, p,
-            _escape_string_bytes(o_entry),
-            _escape_string_bytes(u_entry),
-        )
-    )
-    xref_off = len(out)
-    xref_num = enc_num + 1
-    size = xref_num + 1
-    rows = bytearray()
-    rows += b"\x00" + (0).to_bytes(4, "big") + (0xFFFF).to_bytes(2, "big")
-    for n in range(1, xref_num):
-        e = entries[n]
-        if e[0] == "file":
-            rows += b"\x01" + e[1].to_bytes(4, "big") + b"\x00\x00"
-        else:
-            rows += (
-                b"\x02" + e[1].to_bytes(4, "big") + e[2].to_bytes(2, "big")
-            )
-    rows += b"\x01" + xref_off.to_bytes(4, "big") + b"\x00\x00"
-    # the cross-reference stream is NEVER encrypted (spec 7.5.8.2)
-    payload = zlib.compress(bytes(rows), 6)
-    out += (
-        b"%d 0 obj\n<< /Type /XRef /Size %d /W [1 4 2] /Root 1 0 R "
-        b"/Encrypt %d 0 R /ID [<%s> <%s>] /Length %d "
-        b"/Filter /FlateDecode >>\nstream\n"
-        % (
-            xref_num, size, enc_num,
-            id0.hex().encode(), id0.hex().encode(), len(payload),
-        )
-        + payload
-        + b"\nendstream\nendobj\n"
-    )
-    out += b"startxref\n%d\n%%%%EOF\n" % xref_off
-    return bytes(out)
+    return table.serialize(True, objstm, 1, b"")

@@ -417,7 +417,8 @@ def test_every_public_parser_wears_the_valueerror_decorator():
     for name in (
         "decode_bmp", "bmp_meta", "decode_png", "png_meta", "decode_ppm",
         "ppm_meta", "decode_gif", "gif_meta", "decode_jpeg", "jpeg_meta",
-        "decode_wav", "wav_meta", "avi_frames", "avi_meta", "exif_meta",
+        "decode_wav", "wav_meta", "avi_frames", "avi_header", "avi_meta",
+        "exif_meta",
         "image_meta", "decode_image", "decode_dib_frame", "tiff_meta",
         "decode_tiff", "mp3_meta", "mp4_meta", "flac_meta",
         "aac_adts_meta", "webm_meta", "webp_meta", "ogg_opus_meta",
@@ -443,7 +444,7 @@ def test_container_parsers_raise_only_valueerror_and_stay_fast():
     app1 = C.build_exif_app1(6, "Mk", "Mdl", "2024:01:02 03:04:05", 320, 240)
     base = C.encode_jpeg_baseline(np.zeros((16, 16, 3), np.uint8))
     exifed = base[:2] + app1 + base[2:]
-    fns = (C.decode_wav, C.wav_meta, C.avi_frames, C.avi_meta,
+    fns = (C.decode_wav, C.wav_meta, C.avi_frames, C.avi_header, C.avi_meta,
            C.exif_meta, C.jpeg_meta, C.mp3_meta, C.mp4_meta, C.flac_meta,
            C.aac_adts_meta, C.webm_meta, C.webp_meta, C.ogg_opus_meta)
     trials = quarantined = 0

@@ -128,7 +128,7 @@ DEPLOYMENT = {
     f"{PACKAGE}.io.warc:stream_warc(path_glob)": "path",
     f"{PACKAGE}.io.cdx:stream_cdx(path_glob)": "path",
     f"{PACKAGE}.operators.textstats:train_quality_classifier(model_dir)": "path",
-    f"{PACKAGE}.operators.pdf:encode_pdf15_encrypted(owner_pwd)": "credential",
+    f"{PACKAGE}.operators.pdf:encode_pdf_encrypted(owner_pwd)": "credential",
 }
 
 

@@ -41,6 +41,11 @@ def test_string_escapes_and_hex_strings():
     tricky = "back\\slash (nested (parens)) tab\there"
     payload = pdf.encode_pdf([[tricky]])
     assert pdf.pdf_text_pages(payload) == [tricky]
+    # a raw CR inside a literal reads back as LF in a conformant
+    # reader (PDF 32000-1 §7.3.4.2): the writer must emit the \r escape
+    raw = pdf.encode_pdf([["a\rb"]], compress=False)
+    assert b"(a\\rb)" in raw and b"a\rb" not in raw
+    assert pdf.pdf_text_pages(raw) == ["a\rb"]
     # hand-built content exercising hex strings and ' show
     lex_cases = [
         (b"(simple) Tj", "simple"),
@@ -610,7 +615,7 @@ def test_lzw_malformed_raises_valueerror():
 def test_lzw_pdf_roundtrip_and_earlychange_parm():
     data = pdf.encode_pdf(
         [[["doc ", -28, "7 pa", 35, "ge 0"], "(ok)"], ["second"]],
-        lzw=True,
+        filters=["LZWDecode"],
     )
     assert b"/LZWDecode" in data
     assert pdf.pdf_text_pages(data) == [
@@ -658,7 +663,7 @@ def test_rc4_empty_user_password_roundtrip_r2_and_r3():
 
 def test_rc4_with_lzw_stacked_under_cipher():
     """Decrypt THEN defilter — the spec order; both machines compose."""
-    data = _edoc(r=3, lzw=True)
+    data = _edoc(r=3, filters=["LZWDecode"])
     assert pdf.pdf_text_pages(data) == [
         "doc 7 page 0 (ok)", "doc 7 page 1 (ok)"
     ]
@@ -697,8 +702,8 @@ def test_encrypted_mutation_fuzz_raises_only_valueerror():
     truncations extract or raise ValueError — never another class."""
     rng = np.random.RandomState(1515)
     valids = [
-        pdf.encode_pdf([["lzw page"]], lzw=True),
-        _edoc(r=2), _edoc(r=3, lzw=True, title="t"),
+        pdf.encode_pdf([["lzw page"]], filters=["LZWDecode"]),
+        _edoc(r=2), _edoc(r=3, filters=["LZWDecode"], title="t"),
     ]
     trials = ok = quarantined = 0
     for payload in valids:
@@ -778,7 +783,9 @@ def test_encrypted_pdf15_objstm_layout_roundtrip():
     garbles it."""
     shows = [[["doc ", -28, "7 pa", 35, "ge 0"], "(ok)"], ["second"]]
     for r in (2, 3):
-        data = pdf.encode_pdf15_encrypted(shows, r=r, note="plain inner")
+        data = pdf.encode_pdf_encrypted(
+            shows, r=r, objstm=True, note="plain inner"
+        )
         assert pdf.pdf_text_pages(data) == [
             "doc 7 page 0 (ok)", "second"
         ]
@@ -787,15 +794,17 @@ def test_encrypted_pdf15_objstm_layout_roundtrip():
         page0 = doc.resolve(doc.resolve(root["Pages"])["Kids"][0])
         assert page0["Note"] == b"plain inner"
     # password fence holds in the 1.5 layout too
-    locked = pdf.encode_pdf15_encrypted(shows).replace(b"/P -44", b"/P -45")
+    locked = pdf.encode_pdf_encrypted(shows, objstm=True).replace(
+        b"/P -44", b"/P -45"
+    )
     with pytest.raises(ValueError):
         pdf.pdf_text_pages(locked)
 
 
 def test_encrypted_pdf15_mutation_fuzz_raises_only_valueerror():
     rng = np.random.RandomState(155)
-    payload = pdf.encode_pdf15_encrypted(
-        [[["doc ", -28, "7 pa", 35, "ge 0"], "(ok)"]], note="n"
+    payload = pdf.encode_pdf_encrypted(
+        [[["doc ", -28, "7 pa", 35, "ge 0"], "(ok)"]], objstm=True, note="n"
     )
     trials = ok = quarantined = 0
     for _ in range(150):
